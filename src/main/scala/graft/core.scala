@@ -92,13 +92,12 @@ object core {
       toExpr(a), toExpr(b)))
   }
 
-  /** Env-gated phase tracer (`GRAFT_TRACE`, also on under the poll loop's
-    * `GRAFT_POLL_DEBUG`): wall-times a driver-side phase to stderr. Used by
-    * the commit/export hot paths so a single profiled run shows where the
-    * non-job (driver) milliseconds go — guide §7.3's question, answered
-    * without thread dumps. Zero cost when the env is absent. */
-  val traceOn: Boolean =
-    sys.env.contains("GRAFT_TRACE") || sys.env.contains("GRAFT_POLL_DEBUG")
+  /** Env-gated phase tracer (`GRAFT_TRACE`): wall-times a driver-side phase
+    * to stderr. Used by the poll loop, commit and export hot paths so a
+    * single profiled run shows where the non-job (driver) milliseconds go —
+    * guide §7.3's question, answered without thread dumps. Zero cost when
+    * the env is absent. */
+  val traceOn: Boolean = sys.env.contains("GRAFT_TRACE")
   def trace[T](name: String)(f: => T): T =
     if (!traceOn) f else {
       val t0 = System.nanoTime(); val r = f

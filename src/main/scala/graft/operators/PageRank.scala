@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *    over the in-memory iterate, re-entered as a broadcast one-row side —
   *    the r8 A/B winner over a per-iteration driver collect (the broadcast
   *    stage overlaps the inflow shuffle inside one job; the collect blocks
-  *    between two jobs — graft.tools.PageRankAb, both variants kept);
+  *    between two jobs — SURVEY §4);
   *  - ranks are checkpointed per iteration to truncate lineage
   *    ([[Checkpointer]]: executor-local by default, reliable when a
   *    `checkpointDir` is given — the executor-loss-safe cluster mode).
@@ -37,24 +37,11 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   /** @param edges (src: long, dst: long); duplicates are collapsed.
-    * @param dangBroadcast dangling-mass mechanics: `true` (default, the r8
-    *        A/B winner — graft.tools.PageRankAb at sf0.1, interleaved
-    *        min-of-3: broadcast 4.80 s vs collect 5.19 s) re-enters the
-    *        one-row dangling aggregate via `crossJoin(broadcast(…))`, which
-    *        lets the scalar's stage overlap the inflow shuffle inside one
-    *        job DAG; `false` collects the Long per iteration and inlines it
-    *        as a literal (a zero mass then constant-folds away), but the
-    *        blocking collect serializes the iteration into two jobs — the
-    *        measured loss. The r7 driver run that graded this path `weak`
-    *        (11.7 s) does not reproduce under the A/B: host noise, not the
-    *        plan. Bit-exact either way (`sum DIV n` on all-positive ranks ≡
-    *        the collected Long division).
     * @return (node: long, rank_scaled: long) — ranks in units of 10^-12 of
     *         the total mass `scale`, every node present.
     */
   def run(edges: DataFrame, iters: Int, scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None,
-      dangBroadcast: Boolean = true): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, "iters must be positive")
     val ckpt = new Checkpointer(checkpointDir)
     val shufflePartitions = edges.sparkSession.conf
@@ -142,34 +129,21 @@ object PageRank {
     var ranks = ckpt(base.select(col("node"), lit(init).as("r"), col("is_dang")))
     for (_ <- 1 to iters) {
       // dangling mass: rank held by nodes with no out-edges, redistributed
-      // uniformly — a one-row aggregate either way (see `dangBroadcast`)
+      // uniformly — a one-row aggregate re-entered as a broadcast side (the
+      // r8 A/B winner over a per-iteration driver collect, SURVEY §4)
       val inflow = eDeg.join(ranks, eDeg("src") === ranks("node"))
         .select(col("dst"), expr("r DIV deg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("infl"))
       val prev = ranks
       val updated = ranks.join(inflow, ranks("node") === inflow("dst"), "left")
-      ranks = ckpt(if (dangBroadcast) {
-        val dang = ranks.filter(col("is_dang"))
-          .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-        updated.crossJoin(broadcast(dang))
-          .select(ranks("node"),
-            expr(s"CAST(${(15L * init) / 100L} AS BIGINT) + " +
-              s"(85 * (coalesce(infl, CAST(0 AS BIGINT)) + dang DIV CAST($n AS BIGINT))) DIV 100")
-              .as("r"),
-            ranks("is_dang"))
-      } else {
-        // O(1) driver scalar per iteration; dangShare == 0 (every symmetric
-        // graph) drops the term from the projection entirely
-        val dangVal = ranks.filter(col("is_dang"))
-          .agg(coalesce(sum(col("r")), lit(0L))).head.getLong(0)
-        val dangShare = dangVal / n
-        updated.select(ranks("node"),
+      val dang = ranks.filter(col("is_dang"))
+        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
+      ranks = ckpt(updated.crossJoin(broadcast(dang))
+        .select(ranks("node"),
           expr(s"CAST(${(15L * init) / 100L} AS BIGINT) + " +
-            s"(85 * (coalesce(infl, CAST(0 AS BIGINT))" +
-            (if (dangShare == 0L) "" else s" + CAST($dangShare AS BIGINT)") +
-            ")) DIV 100").as("r"),
-          ranks("is_dang"))
-      })
+            s"(85 * (coalesce(infl, CAST(0 AS BIGINT)) + dang DIV CAST($n AS BIGINT))) DIV 100")
+            .as("r"),
+          ranks("is_dang")))
       ckpt.retire(prev) // superseded iterate: files dead once ranks exists
     }
     ranks.select(col("node"), col("r").as("rank_scaled")).orderBy("node")

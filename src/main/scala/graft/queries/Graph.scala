@@ -19,7 +19,7 @@ object Graph {
 
   private val Iters = 4
   private val Scale = 1000000000000L
-  private[graft] val SuppOffset = 1000000L // shared with tools.PageRankAb
+  private[graft] val SuppOffset = 1000000L
 
   private[graft] def edges(s: SparkSession, d: String): DataFrame = {
     val li = table(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))

@@ -233,7 +233,7 @@ object Ingestion {
               s"""SELECT * FROM $jt WHERE "updated_us" > ${hwm()}""")
             .load()
           val n = delta.count()
-          if (n > 0) VersionedTable.upsertMorWithStats(
+          if (n > 0) VersionedTable.upsertMor(
             delta, p, Seq("event_id"), Seq("updated_us"))
           n
         }
@@ -319,7 +319,7 @@ object Ingestion {
               OR ("updated_us" = $hts AND "event_id" > $hid)""")
             .load()
           val n = delta.count()
-          if (n > 0) VersionedTable.upsertMorWithStats(delta, p, Seq("event_id"),
+          if (n > 0) VersionedTable.upsertMor(delta, p, Seq("event_id"),
             Seq("updated_us"), pairCols = Some(("updated_us", "event_id")))
           n
         }
@@ -980,7 +980,7 @@ object Ingestion {
         // delete manifests under a second, unpartitioned spec (spec-id 1,
         // the spec's model for partition-agnostic deletes — graft key
         // deletes apply table-wide). Chain: three per-band appendWithStats
-        // (degenerate band per dir) → a band-1-scoped upsertMorWithStats
+        // (degenerate band per dir) → a band-1-scoped upsertMor with stats
         // (updates + shifted inserts; the stats keep the dir exportable) →
         // a CROSS-band key delete → export → independent readback of the
         // merged current state from the metadata alone. The oracle's delete
@@ -999,7 +999,7 @@ object Ingestion {
           .unionByName(o.filter($"o_orderkey" % 997 === 0)
             .select(($"o_orderkey" * 3 + 90000001L).as("o_orderkey"),
               lit("1").as("band"), $"price_c")) // 90000001+3k ≡ 1 (mod 3)
-        VersionedTable.upsertMorWithStats(upd, p, Seq("o_orderkey"), Seq("band"))
+        VersionedTable.upsertMor(upd, p, Seq("o_orderkey"), Seq("band"))
         VersionedTable.deleteWhereKeys(
           o.filter($"o_orderkey" % 401 === 7).select($"o_orderkey"),
           p, Seq("o_orderkey"))
@@ -1023,7 +1023,7 @@ object Ingestion {
       "PARTITIONED Iceberg v2 MOR export + readback: identity spec-0 data " +
         "manifests beside GLOBAL equality-delete manifests under an " +
         "unpartitioned spec 1 — partition-scoped upserts stay exportable " +
-        "via upsertMorWithStats, cross-partition deletes stay global"),
+        "via upsertMor's statsCols, cross-partition deletes stay global"),
 
     "iceberg_export_incremental" -> Q(
       (s, d) => {

@@ -52,7 +52,7 @@ import org.apache.spark.sql.types._
   * matching how graft lays out partitioned tables: a partition column's
   * value for a dir is its recorded per-dir min==max bound
   * ([[VersionedTable.appendWithStats]] /
-  * [[VersionedTable.upsertMorWithStats]]), required to be degenerate — a
+  * [[VersionedTable.upsertMor]] with `statsCols`), required to be degenerate — a
   * dir spanning two partition values fails the export. Partitioned MOR
   * chains export too (r13): graft's equality deletes are partition-agnostic
   * (a key-set delete applies table-wide), so their faithful image is GLOBAL
@@ -435,7 +435,7 @@ object IcebergExport {
     // empty fields; the spec's model for global deletes), while data
     // manifests keep the identity spec 0. Every DATA dir still needs a
     // degenerate partition bound (write MOR upserts via
-    // VersionedTable.upsertMorWithStats so the upsert dirs carry stats).
+    // VersionedTable.upsertMor with statsCols so the upsert dirs carry stats).
     val hasDeletes = snaps.exists(_.deletes.nonEmpty)
     val globalDeleteSpec = hasDeletes &&
       (partitionCols.nonEmpty || hiddenPartition.nonEmpty)

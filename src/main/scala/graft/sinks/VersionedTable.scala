@@ -116,18 +116,9 @@ object VersionedTable {
     * recomputes its dir list against the winner's snapshot and retries, so
     * no append is ever silently dropped. Existing per-dir stats are carried;
     * the new dir has none, so pruned reads always include it. */
-  def append(df: DataFrame, path: String): Int = {
-    val d = writeDataDir(df, path)
-    commit(df.sparkSession, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> nextV(cur)),
-        cur.map(_.deletes).getOrElse(Nil),
-        cur.map(_.deleteKeys).getOrElse(Nil))
-    })
-  }
+  def append(df: DataFrame, path: String): Int =
+    commitAdd(df.sparkSession, path, df.columns.toSeq)(
+      Added(Some(writeDataDir(df, path)))).get
 
   /** Merge-on-read equality-field upsert (Iceberg v2 equality deletes — the
     * mechanism the reference's sink turns on with
@@ -141,63 +132,38 @@ object VersionedTable {
     * materializes the merge and clears the delete list — exactly the
     * Iceberg MOR/COW trade. Key columns are a table-level property; a
     * mismatch with an earlier MOR commit fails loudly (mixed equality
-    * fields would silently mis-merge). */
-  def upsertMor(df: DataFrame, path: String, keys: Seq[String]): Int = {
-    val spark = df.sparkSession
-    checkMorKeys(spark, path, keys) // fail fast before writing any dir
-    val d = writeDataDir(df, path)
-    val del = writeDataDir(
-      df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-    commit(spark, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      require(cur.forall(s => s.deleteKeys.isEmpty || s.deleteKeys == keys),
-        s"merge-on-read keys $keys conflict with the table's recorded " +
-          s"equality fields ${cur.map(_.deleteKeys).getOrElse(Nil)}")
-      val v = nextV(cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> v),
-        cur.map(_.deletes).getOrElse(Nil) :+ (del -> v),
-        keys)
-    })
-  }
-
-  /** [[upsertMor]] with per-dir column metrics on the DATA dir (the
-    * [[appendWithStats]] stats contract under merge-on-read): the upsert's
-    * new data dir records each tracked column's [min, max], so identity-
-    * partitioned MOR chains stay exportable ([[graft.sinks.IcebergExport]]
-    * needs a degenerate partition bound per data dir) and [[readPruned]]
-    * can skip MOR data dirs too. The delete dir is key-only and carries no
-    * stats — equality deletes are partition-agnostic by construction.
+    * fields would silently mis-merge).
+    *
+    * `statsCols` attaches per-dir column metrics to the DATA dir (the
+    * [[appendWithStats]] stats contract under merge-on-read), so
+    * identity-partitioned MOR chains stay exportable
+    * ([[graft.sinks.IcebergExport]] needs a degenerate partition bound per
+    * data dir) and [[readPruned]] can skip MOR data dirs too. The delete dir
+    * is key-only and carries no stats — equality deletes are
+    * partition-agnostic by construction.
     *
     * `pairCols = Some((c1, c2))` additionally records the batch's exact
     * LEXICOGRAPHIC (c1, c2) [min, max] under [[pairStatsKey]] — the
     * composite `timestamp+incrementing` CDC watermark's per-dir bound
     * (independent per-column bounds can NOT reconstruct it: the row with
-    * max c1 need not carry max c2), feeding [[manifestHwmPair]]. */
-  def upsertMorWithStats(df: DataFrame, path: String, keys: Seq[String],
-      statsCols: Seq[String], pairCols: Option[(String, String)] = None): Int = {
-    val spark = df.sparkSession
-    checkMorKeys(spark, path, keys)
-    val bounds = trackedBounds(df, statsCols, pairCols)
-    val d = writeDataDir(df, path)
-    val del = writeDataDir(
-      df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-    commit(spark, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      require(cur.forall(s => s.deleteKeys.isEmpty || s.deleteKeys == keys),
-        s"merge-on-read keys $keys conflict with the table's recorded " +
-          s"equality fields ${cur.map(_.deleteKeys).getOrElse(Nil)}")
-      val v = nextV(cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty) + (d -> bounds),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> v),
-        cur.map(_.deletes).getOrElse(Nil) :+ (del -> v),
-        keys)
-    })
-  }
+    * max c1 need not carry max c2), feeding [[manifestHwmPair]]. With no
+    * stats and no pair, no metrics job runs. */
+  def upsertMor(df: DataFrame, path: String, keys: Seq[String],
+      statsCols: Seq[String] = Nil, pairCols: Option[(String, String)] = None): Int =
+    morCommit(df, path, keys, None, statsCols, pairCols).get
+
+  /** The body [[upsertMor]] and [[upsertMorOnce]] share: metrics, data dir,
+    * key-set delete dir, one commit. */
+  private def morCommit(df: DataFrame, path: String, keys: Seq[String],
+      batchId: Option[Long], statsCols: Seq[String],
+      pairCols: Option[(String, String)]): Option[Int] =
+    commitAdd(df.sparkSession, path, df.columns.toSeq, Some(keys), batchId) {
+      val bounds = trackedBounds(df, statsCols, pairCols)
+      val d = writeDataDir(df, path)
+      val del = writeDataDir(
+        df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
+      Added(Some(d), bounds, delete = Some(del))
+    }
 
   /** The manifest key a composite (c1, c2) pair bound is stored under. The
     * `,` separator cannot appear in a parquet-writable column name, so
@@ -307,35 +273,8 @@ object VersionedTable {
     * [[manifestHwm]]/[[manifestHwmPair]] stay derivable without a scan. */
   def upsertMorOnce(df: DataFrame, path: String, keys: Seq[String], batchId: Long,
       statsCols: Seq[String] = Nil,
-      pairCols: Option[(String, String)] = None): Boolean = {
-    val spark = df.sparkSession
-    if (latest(spark, path).exists(_.lastBatch.exists(_ >= batchId))) return false
-    checkMorKeys(spark, path, keys)
-    val bounds = trackedBounds(df, statsCols, pairCols)
-    val d = writeDataDir(df, path)
-    val del = writeDataDir(
-      df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-    // exactly-once guard re-run IN the commit lock, like [[appendOnce]]:
-    // concurrent deliveries of one batch cannot both land
-    try {
-      commit(spark, path, cur => {
-        if (cur.exists(_.lastBatch.exists(_ >= batchId)))
-          throw new CommitAborted(s"batch $batchId already committed")
-        guardRenamedAway(df.columns.toSeq, cur)
-        require(cur.forall(s => s.deleteKeys.isEmpty || s.deleteKeys == keys),
-          s"merge-on-read keys $keys conflict with recorded ${cur.map(_.deleteKeys).getOrElse(Nil)}")
-        val v = nextV(cur)
-        Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-          cur.map(_.colStats).getOrElse(Map.empty) ++
-            (if (bounds.isEmpty) Map.empty else Map(d -> bounds)),
-          Some(batchId),
-          cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> v),
-          cur.map(_.deletes).getOrElse(Nil) :+ (del -> v),
-          keys)
-      })
-      true
-    } catch { case _: CommitAborted => false }
-  }
+      pairCols: Option[(String, String)] = None): Boolean =
+    morCommit(df, path, keys, Some(batchId), statsCols, pairCols).isDefined
 
   /** One CDC batch — upserts AND deletes — as a SINGLE exactly-once MOR
     * commit (r15, the Debezium-apply shape): the data dir carries the
@@ -348,54 +287,27 @@ object VersionedTable {
     * the [[appendOnce]] batch-id contract. Returns false on replay. */
   def applyCdcOnce(upserts: DataFrame, deleteKeysDf: DataFrame, path: String,
       keys: Seq[String], batchId: Long): Boolean = {
-    val spark = upserts.sparkSession
-    if (latest(spark, path).exists(_.lastBatch.exists(_ >= batchId))) return false
-    checkMorKeys(spark, path, keys)
     val keyCols = keys.map(org.apache.spark.sql.functions.col)
-    val d = writeDataDir(upserts, path)
-    val del = writeDataDir(
-      upserts.select(keyCols: _*)
-        .unionByName(deleteKeysDf.select(keyCols: _*)).distinct(), path)
-    try {
-      commit(spark, path, cur => {
-        if (cur.exists(_.lastBatch.exists(_ >= batchId)))
-          throw new CommitAborted(s"batch $batchId already committed")
-        guardRenamedAway(upserts.columns.toSeq, cur)
-        require(cur.forall(s => s.deleteKeys.isEmpty || s.deleteKeys == keys),
-          s"merge-on-read keys $keys conflict with recorded ${cur.map(_.deleteKeys).getOrElse(Nil)}")
-        val v = nextV(cur)
-        Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-          cur.map(_.colStats).getOrElse(Map.empty),
-          Some(batchId),
-          cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> v),
-          cur.map(_.deletes).getOrElse(Nil) :+ (del -> v),
-          keys)
-      })
-      true
-    } catch { case _: CommitAborted => false }
+    commitAdd(upserts.sparkSession, path, upserts.columns.toSeq, Some(keys), Some(batchId)) {
+      val d = writeDataDir(upserts, path)
+      val del = writeDataDir(
+        upserts.select(keyCols: _*)
+          .unionByName(deleteKeysDf.select(keyCols: _*)).distinct(), path)
+      Added(Some(d), delete = Some(del))
+    }.isDefined
   }
 
   /** Equality DELETE as a merge-on-read commit: rows whose key is in
     * `keysDf` disappear from subsequent reads without touching any data
     * file — an O(keys) write against a 100 TB table. Same read-time rule
     * and [[compact]] reclamation as [[upsertMor]]. */
-  def deleteWhereKeys(keysDf: DataFrame, path: String, keys: Seq[String]): Int = {
-    checkMorKeys(keysDf.sparkSession, path, keys) // fail fast before writing any dir
-    val del = writeDataDir(
-      keysDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-    commit(keysDf.sparkSession, path, cur => {
-      require(cur.forall(s => s.deleteKeys.isEmpty || s.deleteKeys == keys),
-        s"merge-on-read keys $keys conflict with the table's recorded " +
-          s"equality fields ${cur.map(_.deleteKeys).getOrElse(Nil)}")
-      val v = nextV(cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil),
-        cur.map(_.colStats).getOrElse(Map.empty),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty),
-        cur.map(_.deletes).getOrElse(Nil) :+ (del -> v),
-        keys)
-    })
-  }
+  def deleteWhereKeys(keysDf: DataFrame, path: String, keys: Seq[String]): Int =
+    // no data dir, so no column name for the renamed-away guard to check
+    commitAdd(keysDf.sparkSession, path, Nil, Some(keys)) {
+      val del = writeDataDir(
+        keysDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
+      Added(None, delete = Some(del))
+    }.get
 
   /** Rename a column as a METADATA-ONLY commit (Iceberg `ALTER TABLE …
     * RENAME COLUMN`, the operation field ids exist for): no data dir is
@@ -504,14 +416,69 @@ object VersionedTable {
       lastBatch = cur.flatMap(_.lastBatch)))
   }
 
-  /** Mixed equality fields would silently mis-merge; the commit-time require
-    * is authoritative (it sees the post-race snapshot), this pre-check just
-    * avoids writing dirs that commit would then refuse. */
-  private def checkMorKeys(spark: SparkSession, path: String, keys: Seq[String]): Unit =
-    latest(spark, path).foreach(s => require(
-      s.deleteKeys.isEmpty || s.deleteKeys == keys,
+  /** What one additive commit adds: a data dir (with its per-column bounds
+    * and optional declared sort order) and/or an equality-delete dir. */
+  private final case class Added(data: Option[String],
+      bounds: Map[String, ColBounds] = Map.empty,
+      sortOrder: Option[Seq[(String, String)]] = None,
+      delete: Option[String] = None)
+
+  /** The one commit path of every ADDITIVE write shape (the appends,
+    * [[upsertMor]], [[applyCdcOnce]], [[deleteWhereKeys]]): `write` stages
+    * the new dirs, and the commit lays them on top of whatever snapshot is
+    * current, carrying everything that snapshot records forward. The new
+    * data dir and the new delete dir both take this commit's sequence. Each
+    * safety check runs here and nowhere else:
+    *  - `batchId` (the [[appendOnce]] contract): an obvious replay is
+    *    skipped before `write` runs, and the guard re-runs inside the commit
+    *    lock, so of two concurrent deliveries of one batch only the first
+    *    lands;
+    *  - `keys` (the table's equality fields): checked before `write`, so a
+    *    conflicting commit writes no dir, and again in the lock, where the
+    *    post-race snapshot is authoritative;
+    *  - `columns` (the data dir's schema) may not re-use a renamed-away
+    *    name ([[guardRenamedAway]]).
+    * Returns the committed version, or None when `batchId` was a replay. */
+  private def commitAdd(spark: SparkSession, path: String, columns: Seq[String],
+      keys: Option[Seq[String]] = None, batchId: Option[Long] = None)(
+      write: => Added): Option[Int] = {
+    lazy val pre = graft.core.trace("table.precheck")(latest(spark, path))
+    if (batchId.exists(replayed(pre, _))) return None
+    keys.foreach(requireKeys(pre, _))
+    val added = graft.core.trace("table.write")(write)
+    try Some(graft.core.trace("table.commit")(commit(spark, path, { cur =>
+      batchId.foreach(guardBatch(cur, _))
+      guardRenamedAway(columns, cur)
+      keys.foreach(requireKeys(cur, _))
+      val v = nextV(cur)
+      val base = cur.getOrElse(Snapshot(0, Nil))
+      base.copy(version = 0,
+        dirs = base.dirs ++ added.data,
+        colStats = base.colStats ++ added.data.map(_ -> added.bounds),
+        lastBatch = batchId.orElse(base.lastBatch),
+        dataSeq = base.dataSeq ++ added.data.map(_ -> v),
+        deletes = base.deletes ++ added.delete.map(_ -> v),
+        deleteKeys = keys.getOrElse(base.deleteKeys),
+        sortOrders = base.sortOrders ++ added.data.zip(added.sortOrder))
+    })))
+    catch { case _: CommitAborted => None }
+  }
+
+  /** Whether `batchId` is at or below the snapshot's committed batch id. */
+  private def replayed(s: Option[Snapshot], batchId: Long): Boolean =
+    s.exists(_.lastBatch.exists(_ >= batchId))
+
+  /** The in-lock exactly-once guard: abandon the commit of a batch id the
+    * current snapshot already holds. */
+  private def guardBatch(cur: Option[Snapshot], batchId: Long): Unit =
+    if (replayed(cur, batchId)) throw new CommitAborted(s"batch $batchId already committed")
+
+  /** Mixed equality fields would silently mis-merge: `keys` must match the
+    * snapshot's recorded equality fields, if it has any. */
+  private def requireKeys(s: Option[Snapshot], keys: Seq[String]): Unit =
+    require(s.forall(x => x.deleteKeys.isEmpty || x.deleteKeys == keys),
       s"merge-on-read keys $keys conflict with the table's recorded " +
-        s"equality fields ${s.deleteKeys}"))
+        s"equality fields ${s.map(_.deleteKeys).getOrElse(Nil)}")
 
   /** Idempotent append keyed by a monotonically increasing batch id — the
     * sink half of Spark's exactly-once contract. `foreachBatch` delivery is
@@ -524,46 +491,17 @@ object VersionedTable {
     * Returns true when the batch was applied, false when it was a replay
     * (`batchId <=` the manifest's `lastBatch`). Batch ids must be applied in
     * ascending order — exactly what one streaming query produces; like
-    * [[upsert]], concurrent WRITERS must be externally serialized. */
-  /** Phase timer for the poll loop's hot commit path — same env gate as
-    * JdbcPollStream's [poll-debug] so one run shows both breakdowns. */
-  private def phased[T](name: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_POLL_DEBUG")) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[poll-debug]     append.$name ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-      r
-    }
-
-  /** @param knownCount the exact row count of `df` when the caller already
+    * [[upsert]], concurrent WRITERS must be externally serialized.
+    *
+    * @param knownCount the exact row count of `df` when the caller already
     *        holds it (the poll loop counts its page before appending): the
     *        row-count sidecar is then written directly instead of re-derived
     *        from the just-written parquet footers — the footer reads were a
     *        fixed ~50 ms of driver I/O on every 50 ms poll commit (r17). */
   def appendOnce(df: DataFrame, path: String, batchId: Long,
-      knownCount: Option[Long] = None): Boolean = {
-    val already = phased("precheck")(
-      latest(df.sparkSession, path).exists(_.lastBatch.exists(_ >= batchId)))
-    if (already) return false // replay: committed data already contains it
-    val d = phased("write")(writeDataDir(df, path, knownCount))
-    // The pre-check above is an optimization (skip the write on an obvious
-    // replay); the GUARD is re-run inside the commit lock — two concurrent
-    // deliveries of the same batch both pass the pre-check, but only the
-    // first can commit (the second aborts in-lock and reports false).
-    try {
-      phased("commit")(commit(df.sparkSession, path, { cur =>
-        if (cur.exists(_.lastBatch.exists(_ >= batchId)))
-          throw new CommitAborted(s"batch $batchId already committed")
-        guardRenamedAway(df.columns.toSeq, cur)
-        Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-          cur.map(_.colStats).getOrElse(Map.empty),
-          Some(batchId),
-          cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> nextV(cur)),
-          cur.map(_.deletes).getOrElse(Nil),
-          cur.map(_.deleteKeys).getOrElse(Nil))
-      }))
-      true
-    } catch { case _: CommitAborted => false }
-  }
+      knownCount: Option[Long] = None): Boolean =
+    commitAdd(df.sparkSession, path, df.columns.toSeq, batchId = Some(batchId))(
+      Added(Some(writeDataDir(df, path, knownCount)))).isDefined
 
   /** Idempotent equality-field upsert keyed by batch id — [[appendOnce]]'s
     * contract for the CDC-upsert sink shape ([[upsert]] semantics under
@@ -575,7 +513,7 @@ object VersionedTable {
       attempts += 1
       try {
         val planned = latest(spark, path)
-        if (planned.exists(_.lastBatch.exists(_ >= batchId))) return false
+        if (replayed(planned, batchId)) return false
         val merged = planned match {
           case None => df
           case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
@@ -585,8 +523,7 @@ object VersionedTable {
         // (concurrent redelivery) and the COW snapshot validation
         // (concurrent writer) — [[upsert]]'s protocol plus [[appendOnce]]'s
         commit(spark, path, { cur =>
-          if (cur.exists(_.lastBatch.exists(_ >= batchId)))
-            throw new CommitAborted(s"batch $batchId already committed")
+          guardBatch(cur, batchId)
           if (cur.map(_.version) != planned.map(_.version))
             throw new CommitAborted("table advanced during the COW merge")
           guardRenamedAway(df.columns.toSeq, cur)
@@ -613,19 +550,11 @@ object VersionedTable {
     * is the difference between listing every file and reading only the
     * ingest window a query touches. All-NULL columns get no bounds for the
     * dir (never pruned on that column). */
-  def appendWithStats(df: DataFrame, path: String, statsCols: Seq[String]): Int = {
-    val bounds = trackedBounds(df, statsCols, None)
-    val d = writeDataDir(df, path)
-    commit(df.sparkSession, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty) +
-          (d -> bounds), cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> nextV(cur)),
-        cur.map(_.deletes).getOrElse(Nil),
-        cur.map(_.deleteKeys).getOrElse(Nil))
-    })
-  }
+  def appendWithStats(df: DataFrame, path: String, statsCols: Seq[String]): Int =
+    commitAdd(df.sparkSession, path, df.columns.toSeq) {
+      val bounds = trackedBounds(df, statsCols, None)
+      Added(Some(writeDataDir(df, path)), bounds)
+    }.get
 
   /** Single-column convenience form of [[appendWithStats]]. */
   def appendWithStats(df: DataFrame, path: String, statsCol: String): Int =
@@ -667,19 +596,10 @@ object VersionedTable {
         }
       }
     }
-    val bounds = trackedBounds(sorted, statsCols, None)
-    val d = writeDataDir(sorted, path)
-    commit(df.sparkSession, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty) ++
-          (if (bounds.isEmpty) Map.empty else Map(d -> bounds)),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> nextV(cur)),
-        cur.map(_.deletes).getOrElse(Nil),
-        cur.map(_.deleteKeys).getOrElse(Nil),
-        sortOrders = Map(d -> sortCols))
-    })
+    commitAdd(df.sparkSession, path, df.columns.toSeq) {
+      val bounds = trackedBounds(sorted, statsCols, None)
+      Added(Some(writeDataDir(sorted, path)), bounds, Some(sortCols))
+    }.get
   }
 
   /** Append with HIDDEN-partitioning metrics — Iceberg's partition
@@ -698,21 +618,15 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{max, min}
     require(!df.columns.contains(name),
       s"hidden stats name $name collides with a data column; use appendWithStats")
-    val d = writeDataDir(df, path)
-    val row = df.agg(min(transform).cast("long").cast("string"),
-      max(transform).cast("long").cast("string")).head()
-    val bounds =
-      if (row.isNullAt(0)) Map.empty[String, ColBounds]
-      else Map(name -> ColBounds(row.getString(0), row.getString(1), "long"))
-    commit(df.sparkSession, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty) + (d -> bounds),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> nextV(cur)),
-        cur.map(_.deletes).getOrElse(Nil),
-        cur.map(_.deleteKeys).getOrElse(Nil))
-    })
+    commitAdd(df.sparkSession, path, df.columns.toSeq) {
+      val d = writeDataDir(df, path)
+      val row = df.agg(min(transform).cast("long").cast("string"),
+        max(transform).cast("long").cast("string")).head()
+      val bounds =
+        if (row.isNullAt(0)) Map.empty[String, ColBounds]
+        else Map(name -> ColBounds(row.getString(0), row.getString(1), "long"))
+      Added(Some(d), bounds)
+    }.get
   }
 
   /** Scan with manifest-level file skipping: only data dirs whose recorded
@@ -750,23 +664,16 @@ object VersionedTable {
   def appendWithBloom(df: DataFrame, path: String, column: String,
       expectedItems: Long = 1L << 20, fpp: Double = 0.01): Int = {
     val spark = df.sparkSession
-    val d = writeDataDir(df, path)
-    val filesystem = fs(spark, path)
-    val dirPath = new Path(path, d)
-    val bf = spark.read.parquet(dirPath.toString)
-      .stat.bloomFilter(column, expectedItems, fpp)
-    val out = filesystem.create(new Path(dirPath, s"_bloom_$column"), true)
-    bf.writeTo(out)
-    out.close()
-    commit(spark, path, cur => {
-      guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, cur.map(_.dirs).getOrElse(Nil) :+ d,
-        cur.map(_.colStats).getOrElse(Map.empty),
-        cur.flatMap(_.lastBatch),
-        cur.map(_.dataSeq).getOrElse(Map.empty) + (d -> nextV(cur)),
-        cur.map(_.deletes).getOrElse(Nil),
-        cur.map(_.deleteKeys).getOrElse(Nil))
-    })
+    commitAdd(spark, path, df.columns.toSeq) {
+      val d = writeDataDir(df, path)
+      val dirPath = new Path(path, d)
+      val bf = spark.read.parquet(dirPath.toString)
+        .stat.bloomFilter(column, expectedItems, fpp)
+      val out = fs(spark, path).create(new Path(dirPath, s"_bloom_$column"), true)
+      bf.writeTo(out)
+      out.close()
+      Added(Some(d))
+    }.get
   }
 
   /** The dirs a point lookup `column == value` must read: a dir whose bloom
@@ -1263,8 +1170,8 @@ object VersionedTable {
   private def writeDataDir(df: DataFrame, path: String,
       knownCount: Option[Long] = None): String = {
     val d = s"d-${System.nanoTime()}-${counter.incrementAndGet()}"
-    phased("write.parquet")(df.write.parquet(new Path(path, d).toString))
-    phased("write.sidecar")(knownCount match {
+    graft.core.trace("table.write.parquet")(df.write.parquet(new Path(path, d).toString))
+    graft.core.trace("table.write.sidecar")(knownCount match {
       case Some(n) => writeRowCountValue(df.sparkSession, new Path(path, d), n)
       case None    => writeRowCountSidecar(df.sparkSession, new Path(path, d))
     })
@@ -1606,9 +1513,22 @@ object VersionedTable {
     // any string literal in the (already-scoped) dirs array: local dirs are
     // "d-…", clone-borrowed dirs are absolute "/…/d-…" paths
     val dirs = "\"([^\"]+)\"".r.findAllMatchIn(dirsBody).map(_.group(1)).toSeq
-    val colStats = s"\\[$Lit,$Lit,$Lit,$Lit,$Lit\\]".r.findAllMatchIn(s).toSeq
-      .map(m => (unesc(m.group(1)), unesc(m.group(2)),
+    // colStats entries come ONLY from the "colStats":[...] array: any run of
+    // five string literals elsewhere (a five-dir "dirs" array, five equality
+    // keys) has the same shape and must not read as a bound. `\G` walks the
+    // array one entry at a time from its opening bracket (one regex over the
+    // whole array would recurse once per character and overflow the stack
+    // on a large manifest).
+    val colStatsOpen = "\"colStats\":["
+    val statsAt = s.indexOf(colStatsOpen)
+    val statsEntries = Seq.newBuilder[(String, String, ColBounds)]
+    if (statsAt >= 0) {
+      val m = s"\\G,?\\[$Lit,$Lit,$Lit,$Lit,$Lit\\]".r.pattern.matcher(s)
+      m.region(statsAt + colStatsOpen.length, s.length)
+      while (m.find()) statsEntries += ((unesc(m.group(1)), unesc(m.group(2)),
         ColBounds(unesc(m.group(4)), unesc(m.group(5)), m.group(3))))
+    }
+    val colStats = statsEntries.result()
       .groupBy(_._1)
       .map { case (d, es) => d -> es.map(e => e._2 -> e._3).toMap }
     val lastBatch = "\"lastBatch\":(-?\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)

@@ -119,12 +119,7 @@ object JdbcPollStream {
       val q = ticks.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (_: DataFrame, batchId: Long) =>
-          val dbg = sys.env.contains("GRAFT_POLL_DEBUG")
-          val w0 = System.currentTimeMillis()
-          if (dbg) System.err.println(s"[poll-debug] batch $batchId tick-start $w0")
-          if (onTick(batchId)) drained = true
-          if (dbg) System.err.println(
-            s"[poll-debug] batch $batchId tick-end ${System.currentTimeMillis()} (${System.currentTimeMillis() - w0} ms)")
+          if (graft.core.trace("poll.tick")(onTick(batchId))) drained = true
         }
         .trigger(Trigger.ProcessingTime(intervalMs))
         .start()
@@ -162,23 +157,15 @@ object JdbcPollStream {
     @volatile var pageSchema: Option[org.apache.spark.sql.types.StructType] = None
 
     def pollCycle(batchId: Long): Boolean = {
-      val dbg = sys.env.contains("GRAFT_POLL_DEBUG")
-      def ph[T](name: String)(f: => T): T = {
-        if (!dbg) f else {
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(f"[poll-debug]   $name ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-          r
-        }
-      }
-      val (offsets, lastCycle) = ph("state")(state.getOrElse {
+      val (offsets, lastCycle) = graft.core.trace("poll.state")(state.getOrElse {
         (committedOffsets(spark, cfg.tablePath, cfg.shardCol),
           committedCycle(spark, cfg.tablePath))
       })
       // continuous re-discovery: shards that appeared since the last cycle
       // enter at offset 0 (ColumnSource re-polls DISTINCT forever)
-      val shards = ph("discover")(ShardedIngest.discoverShardsJdbc(
+      val shards = graft.core.trace("poll.discover")(ShardedIngest.discoverShardsJdbc(
         spark, cfg.url, cfg.table, cfg.shardCol, cfg.dialect))
-      val page = ph("page") {
+      val page = graft.core.trace("poll.page") {
         val p = pageSchema match {
           case Some(sch) => ShardedIngest.viaJdbcResolved(spark, cfg.url, cfg.table,
             cfg.shardCol, cfg.sortCols, offsets, cfg.pageSize, shards, cfg.dialect, sch)
@@ -204,7 +191,7 @@ object JdbcPollStream {
         // form is a union of one single-partition scan per shard, in order;
         // viaJdbcResolved documents the same contract), so one count-only
         // pass over the cached blocks replaces the groupBy exchange.
-        val sizes = ph("counts") {
+        val sizes = graft.core.trace("poll.counts") {
           spark.sparkContext.runJob(page.rdd,
             (it: Iterator[org.apache.spark.sql.Row]) => {
               var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
@@ -223,7 +210,7 @@ object JdbcPollStream {
           (total + RowsPerFile - 1) / RowsPerFile)).toInt
         val cycle = lastCycle + 1
         cfg.beforeCommit(cycle)
-        val committed = ph("append")(VersionedTable.appendOnce(
+        val committed = graft.core.trace("poll.append")(VersionedTable.appendOnce(
           page.withColumn("cycle", lit(cycle)).coalesce(nFiles),
           cfg.tablePath, batchId,
           knownCount = Some(total))) // counted above: no footer re-read

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time individual `SparkEntry.queries` by name (warm-up +
   * timed run each, the same protocol as [[graft.Bench]]) without running the
   * whole headline set. `runMain graft.tools.QTime q1_pricing_summary ...`;
@@ -11,15 +9,8 @@ object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m") // as graft.Bench
       .getOrCreate()
     // ad-hoc experiments: SPARK_EXTRA_CONF="key=value;key=value"
     sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)

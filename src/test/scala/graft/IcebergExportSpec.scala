@@ -276,7 +276,7 @@ class IcebergExportSpec extends SparkSpec {
       for (_ <- 1 to ops) rnd.nextInt(3) match {
         case 0 => VersionedTable.appendWithStats(
           batch(15, parts(rnd.nextInt(3)), reuse = false), src, Seq("typ"))
-        case 1 => VersionedTable.upsertMorWithStats(
+        case 1 => VersionedTable.upsertMor(
           batch(10, parts(rnd.nextInt(3)), reuse = true), src, Seq("id"), Seq("typ"))
         case 2 => VersionedTable.deleteWhereKeys(
           batch(6, "px", reuse = true).select($"id").distinct(), src, Seq("id"))
@@ -438,7 +438,7 @@ class IcebergExportSpec extends SparkSpec {
       VersionedTable.appendWithStats(base.filter($"typ" === t), src, Seq("typ"))
     // MOR upsert scoped to ONE partition (dir stays degenerate on typ):
     // updates + new keys in t1
-    VersionedTable.upsertMorWithStats(
+    VersionedTable.upsertMor(
       ((3L to 30L by 3).map(i => (i, "t1", s"upd$i")) ++
         Seq((301L, "t1", "new301"), (304L, "t1", "new304")))
         .toDF("id", "typ", "v"), src, Seq("id"), Seq("typ"))

@@ -596,4 +596,96 @@ class VersionedTableSpec extends SparkSpec {
       VersionedTable.versions(spark, path).max)
     assert(VersionedTable.countFromMetadata(spark, clonePath) == Some(90L))
   }
+
+  test("every additive write shape carries the prior snapshot forward; every *Once shape refuses a committed batch id") {
+    val path = "/tmp/graft_tables/spec_vt_carry"
+    GraftTableWriter.drop(spark, path)
+    val keys = Seq("id")
+    var vCol = "v" // the value column's logical name; renamed midway
+    def rows(lo: Long, n: Int) =
+      (lo until lo + n).map(i => (i, s"s$i", i * 7 % 23)).toDF("id", vCol, "n")
+    def manifest(v: Int) = VersionedTable.readManifestForTest(spark, path, v)
+    def latestV = VersionedTable.versions(spark, path).last
+    var committed = Set.empty[Long]
+
+    // every batch id any shape committed is a replay for every *Once shape:
+    // each reports false and no version is added
+    def refuseCommitted(): Unit = {
+      val v0 = latestV
+      for (b <- committed) {
+        val df = rows(900, 2)
+        assert(!VersionedTable.appendOnce(df, path, b), s"appendOnce re-applied batch $b")
+        assert(!VersionedTable.upsertMorOnce(df, path, keys, b), s"upsertMorOnce re-applied batch $b")
+        assert(!VersionedTable.applyCdcOnce(df, df.select("id"), path, keys, b),
+          s"applyCdcOnce re-applied batch $b")
+        assert(!VersionedTable.upsertOnce(df, path, keys, b), s"upsertOnce re-applied batch $b")
+      }
+      assert(latestV == v0, "a refused replay committed a version")
+    }
+
+    // one commit of `label`; batch = the id a *Once shape commits
+    def step(label: String, batch: Option[Long] = None)(write: => Any): Unit = {
+      val before = VersionedTable.versions(spark, path).lastOption
+      write
+      val v = latestV
+      val cur = manifest(v)
+      before.foreach { pv =>
+        assert(v == pv + 1, s"$label must add exactly one version")
+        val prev = manifest(pv)
+        assert(cur.dirs.startsWith(prev.dirs), s"$label dropped or reordered dirs")
+        prev.dirs.foreach { d =>
+          assert(cur.dataSeq.get(d) == prev.dataSeq.get(d), s"$label changed the sequence of $d")
+          assert(cur.colStats.get(d) == prev.colStats.get(d), s"$label changed the bounds of $d")
+          assert(cur.sortOrders.get(d) == prev.sortOrders.get(d),
+            s"$label changed the sort order of $d")
+        }
+        assert(cur.deletes.startsWith(prev.deletes), s"$label dropped deletes")
+        if (prev.deleteKeys.nonEmpty)
+          assert(cur.deleteKeys == prev.deleteKeys, s"$label changed the equality fields")
+        if (label == "renameColumn")
+          assert(cur.renames.startsWith(prev.renames) && cur.renames.size == prev.renames.size + 1)
+        else assert(cur.renames == prev.renames, s"$label dropped the rename chain")
+        assert(cur.lastBatch == batch.orElse(prev.lastBatch), s"$label lost lastBatch")
+        // whatever this commit added sits at this commit's sequence
+        cur.dirs.drop(prev.dirs.size).foreach(d => assert(cur.dataSeq.get(d).contains(v)))
+        cur.deletes.drop(prev.deletes.size).foreach { case (_, sq) => assert(sq == v) }
+      }
+      committed ++= batch
+      refuseCommitted()
+    }
+
+    step("append")(VersionedTable.append(rows(0, 4), path))
+    step("appendWithStats")(VersionedTable.appendWithStats(rows(10, 4), path, Seq("n")))
+    step("appendSorted")(VersionedTable.appendSorted(rows(20, 4), path, Seq("n" -> "desc")))
+    step("upsertMor")(VersionedTable.upsertMor(rows(0, 2), path, keys))
+    step("appendOnce", Some(10L))(assert(VersionedTable.appendOnce(rows(30, 3), path, 10L)))
+    step("renameColumn")(VersionedTable.renameColumn(spark, path, "v", "w"))
+    vCol = "w"
+    step("appendWithHiddenStats")(VersionedTable.appendWithHiddenStats(rows(40, 3), path,
+      "n_bucket", ($"n" / 5).cast("long")))
+    step("appendWithBloom")(VersionedTable.appendWithBloom(rows(50, 3), path, "id"))
+    step("upsertMorOnce", Some(11L))(assert(VersionedTable.upsertMorOnce(rows(10, 2), path,
+      keys, 11L, statsCols = Seq("n"))))
+    step("applyCdcOnce", Some(12L))(assert(VersionedTable.applyCdcOnce(rows(20, 2),
+      Seq(Tuple1(30L)).toDF("id"), path, keys, 12L)))
+    step("deleteWhereKeys")(VersionedTable.deleteWhereKeys(
+      Seq(Tuple1(40L), Tuple1(50L)).toDF("id"), path, keys))
+
+    val ids = VersionedTable.read(spark, path).select("id").as[Long].collect().sorted.toSeq
+    assert(ids == Seq(0L, 1, 2, 3, 10, 11, 12, 13, 20, 21, 22, 23, 31, 32, 41, 42, 51, 52), ids)
+  }
+
+  test("a manifest holding five dirs or five equality keys parses no phantom column bounds") {
+    // five string literals in a row have the shape of one colStats entry
+    val path = "/tmp/graft_tables/spec_vt_five"
+    GraftTableWriter.drop(spark, path)
+    val cols = Seq("a", "b", "c", "d", "e")
+    def row(i: Long) = Seq((i, i, i, i, i)).toDF(cols: _*)
+    (1L to 5L).foreach(i => VersionedTable.append(row(i), path))
+    def latest = VersionedTable.readManifestForTest(spark, path,
+      VersionedTable.versions(spark, path).last)
+    assert(latest.dirs.size == 5 && latest.colStats.isEmpty, latest.colStats)
+    VersionedTable.deleteWhereKeys(row(1L), path, cols)
+    assert(latest.deleteKeys == cols && latest.colStats.isEmpty, latest.colStats)
+  }
 }
