@@ -219,6 +219,13 @@ object Ann {
     * the SemDeDup trade; soundness (every drop has a kept near-dup witness
     * in its cluster) is spec-checked against an independent replay.
     *
+    * The `(vec_id, embedding)` input is persisted once and k-means fits on
+    * it; each row's cluster is then computed ONCE from those rows with the
+    * fitted codebook (the same kernel and centroids as lloyd's own final
+    * assignment) and materialized, so the cluster sizes, both pair sides and
+    * the final anti-join read it instead of re-running the upstream plan.
+    * Neither persist outlives the call.
+    *
     * A skewed codebook is not allowed to re-create the N² problem: clusters
     * above `maxClusterSize` are sub-split by a secondary SRP banding
     * ([[clusterPairs]]), so per-task pair counts stay bounded by bucket
@@ -227,10 +234,14 @@ object Ann {
   def semanticDedup(vectors: DataFrame, minCosine: Double,
       k: Int = 8, iters: Int = 3, maxClusterSize: Int = 4096,
       subTables: Int = 8, subBits: Int = 4): DataFrame = {
-    val r = KMeans.lloyd(vectors, "vec_id", "embedding", k, iters,
+    val in = vectors.select(col("vec_id"), col("embedding"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val r = KMeans.lloyd(in, "vec_id", "embedding", k, iters,
       trackInertia = false)
-    val av = r.assignments.select(col("id").as("vec_id"), col("cluster"))
-      .join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
+    val av = in.withColumn("cluster",
+        nearest_centroid(col("embedding"), r.centroids).getField("cluster"))
+      .localCheckpoint()
+    in.unpersist(false)
     val pairs = clusterPairs(av, minCosine, maxClusterSize, subTables, subBits)
     val dropped = NearDup.connectedComponents(pairs)
       .filter(col("doc_id") =!= col("component_id"))
@@ -323,28 +334,34 @@ object Ann {
     * bucket) collision, exactly the [[lshPairs]] discipline. Every emitted
     * pair carries the TRUE cosine (verification is exact); recall inside an
     * oversized cluster is approximate, the same trade the LSH paths make.
+    *
+    * The O(k) cluster sizes are collected first, and the banded branch is
+    * built only when some cluster is oversized.
     */
   private[graft] def clusterPairs(av: DataFrame, minCosine: Double,
       maxClusterSize: Int, subTables: Int, subBits: Int): DataFrame = {
-    val sizes = av.groupBy("cluster").count() // O(k) rows — broadcast side
-    val sized = av.join(broadcast(sizes), "cluster")
-    val small = sized.filter(col("count") <= maxClusterSize).drop("count")
-    val big = sized.filter(col("count") > maxClusterSize).drop("count")
+    val big = av.groupBy("cluster").count()
+      .filter(col("count") > maxClusterSize).select("cluster")
+      .collect().map(_.get(0)).toSeq
+    val small = if (big.isEmpty) av else av.filter(!col("cluster").isin(big: _*))
     val a = small.select(col("cluster"), col("vec_id").as("id_a"), col("embedding").as("va"))
     val b = small.select(col("cluster"), col("vec_id").as("id_b"), col("embedding").as("vb"))
     val smallPairs = a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("va"), col("vb"))
-    val bucketed = big.select(col("cluster"), col("vec_id"), col("embedding"),
-        posexplode(array((0 until subTables).map(t =>
-          sign_random_projection(col("embedding"), subBits, seed = SemDedupSubSeed + t)): _*)))
-      .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
-    val bigPairs = bucketed.as("x").join(bucketed.as("y"), Seq("cluster", "tbl", "bucket"))
-      .filter(col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
-        col("x.embedding").as("va"), col("y.embedding").as("vb"))
-      .dropDuplicates("id_a", "id_b")
-    smallPairs.unionByName(bigPairs)
-      .select(col("id_a"), col("id_b"), cosine_sim(col("va"), col("vb")).as("cosine"))
+    val pairs = if (big.isEmpty) smallPairs else {
+      val bucketed = av.filter(col("cluster").isin(big: _*))
+        .select(col("cluster"), col("vec_id"), col("embedding"),
+          posexplode(array((0 until subTables).map(t =>
+            sign_random_projection(col("embedding"), subBits, seed = SemDedupSubSeed + t)): _*)))
+        .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
+      val bigPairs = bucketed.as("x").join(bucketed.as("y"), Seq("cluster", "tbl", "bucket"))
+        .filter(col("x.vec_id") < col("y.vec_id"))
+        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
+          col("x.embedding").as("va"), col("y.embedding").as("vb"))
+        .dropDuplicates("id_a", "id_b")
+      smallPairs.unionByName(bigPairs)
+    }
+    pairs.select(col("id_a"), col("id_b"), cosine_sim(col("va"), col("vb")).as("cosine"))
       .filter(col("cosine") >= minCosine)
   }
 

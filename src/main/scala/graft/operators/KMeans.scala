@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * Scale shape per iteration: centroids broadcast (O(k·d) — driver-held, the
   * same contract as Ann's centroid list), assignment is a per-row argmin over
   * the broadcast array (no join, no shuffle), and the centroid update is ONE
-  * shuffle: explode the d dimensions → groupBy (cluster, dim) partial-avg.
+  * shuffle: explode the d dimensions → groupBy (cluster, dim) partial-avg,
+  * whose k·d rows are collected and assembled into centroids on the driver.
   * Everything driver-side is O(k·d) per iteration; the data never leaves
   * executors. Deterministic end-to-end: init picks the k lowest-id vectors,
   * per-row distance arithmetic is a fixed-order fused kernel
@@ -73,16 +74,16 @@ object KMeans {
     for (_ <- 1 to iters) {
       val current = assigned()
       if (trackInertia) inertias += current.agg(sum($"dist_sq")).head().getDouble(0)
-      // ONE shuffle: (cluster, dim) partial means
+      // ONE shuffle: (cluster, dim) partial means, k·d rows collected and
+      // assembled into centroids on the driver
       val next = current
         .select($"cluster", posexplode($"vec".cast("array<double>")).as(Seq("dim", "x")))
         .groupBy($"cluster", $"dim").agg(avg($"x").as("m"))
-        .groupBy($"cluster")
-        .agg(transform(array_sort(collect_list(struct($"dim", $"m"))),
-          s => s.getField("m")).as("centroid"))
-        .as[(Int, Seq[Double])].collect()
+        .as[(Int, Int, Double)].collect()
       val updated = centroids.clone()
-      next.foreach { case (c, m) => updated(c) = m.toArray } // empty clusters keep their centroid
+      next.groupBy(_._1).foreach { case (c, ms) => // empty clusters keep their centroid
+        updated(c) = ms.sortBy(_._2).map(_._3)
+      }
       centroids = updated
     }
     // The returned assignments are lazy: unpersist now (non-blocking) so the
@@ -103,7 +104,9 @@ object KMeans {
     * scaled-integer PageRank discipline applied to clustering).
     *
     * Same per-iteration scale shape as [[lloyd]]: broadcast O(k·d) codebook,
-    * argmin in one fused kernel, ONE (cluster, dim) shuffle per update.
+    * argmin in one fused kernel, ONE (cluster, dim) shuffle per update whose
+    * k·d integer sums and counts are collected; the truncating mean is taken
+    * on the driver.
     * Quantization costs ≤ 0.5/scale per component — at scale=1000 the
     * centroids of any well-separated clustering agree with the float fit.
     */
@@ -136,14 +139,10 @@ object KMeans {
         .select($"cluster", posexplode($"vec").as(Seq("dim", "x")))
         .groupBy($"cluster", $"dim")
         .agg(sum($"x").cast("long").as("s"), count(lit(1)).as("n"))
-        .groupBy($"cluster")
-        .agg(transform(array_sort(collect_list(struct($"dim", $"s", $"n"))),
-          t => t.getField("s")).as("sums"),
-          first($"n").as("n"))
-        .as[(Int, Seq[Long], Long)].collect()
+        .as[(Int, Int, Long, Long)].collect()
       val updated = centroids.map(_.clone())
-      next.foreach { case (c, sums, n) =>
-        updated(c) = sums.map(s => (s / n).toDouble).toArray // trunc ≡ DuckDB //
+      next.groupBy(_._1).foreach { case (c, sn) =>
+        updated(c) = sn.sortBy(_._2).map { case (_, _, s, n) => (s / n).toDouble } // trunc ≡ DuckDB //
       }
       centroids = updated
     }

@@ -325,27 +325,35 @@ object NearDup {
     *
     * Classic distributed min-label propagation: each iteration joins labels
     * across edges and takes the per-node min, converging in O(diameter)
-    * rounds (near-dup clusters are tiny, so 2–3 in practice). Each iteration
-    * is a shuffle-join — no driver-side graph; a [[Checkpointer]] truncates
-    * the growing lineage between rounds (reliable when `checkpointDir` is
-    * set — the executor-loss-safe mode for cluster runs).
+    * rounds (near-dup clusters are tiny, so 2–3 in practice). The first hop
+    * is folded into the init: one `groupBy(src)` labels each node with
+    * `least(src, min(dst))`, the same single shuffle a `distinct` of the ids
+    * would cost, so the loop starts one round in. Each round is then one
+    * shuffle-join plus one min-aggregate that also carries the node's
+    * previous label (`own`), so the convergence test reads the
+    * just-materialized iterate with no shuffle. No driver-side graph; a
+    * [[Checkpointer]] truncates the growing lineage between rounds
+    * (reliable when `checkpointDir` is set — the executor-loss-safe mode for
+    * cluster runs).
     */
   def connectedComponents(pairs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
     val ckpt = new Checkpointer(checkpointDir)
     val edges = ckpt(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var changed = 1L
-    while (changed > 0) {
+    var labels = ckpt(edges.groupBy("src")
+      .agg(least(col("src"), min("dst")).as("label")).withColumnRenamed("src", "id"))
+    // neighbor rows carry no previous label; the placeholder takes the id type
+    val noOwn = lit(null).cast(labels.schema("label").dataType).as("own")
+    var changed = true
+    while (changed) {
       val viaNeighbor = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-      val next = ckpt(labels.unionByName(viaNeighbor)
-        .groupBy("id").agg(min("label").as("label")))
-      changed = next.as("n").join(labels.as("o"), "id")
-        .filter(col("n.label") < col("o.label")).count()
-      ckpt.retire(labels) // last consumer (the changed-count) is done
+        .select(edges("src").as("id"), col("label"), noOwn)
+      val next = ckpt(labels.select(col("id"), col("label"), col("label").as("own"))
+        .unionByName(viaNeighbor)
+        .groupBy("id").agg(min("label").as("label"), max("own").as("own")))
+      changed = !next.filter(col("label") < col("own")).isEmpty
+      ckpt.retire(labels) // last consumer (this round's join) is done
       labels = next
     }
     labels.select(col("id").as("doc_id"), col("label").as("component_id"))

@@ -169,6 +169,16 @@ class AnnSpec extends SparkSpec {
     kept.foreach { case (id, cl) => assert(assigns(id) == cl) }
   }
 
+  test("semantic dedup leaves no cached frame behind for the caller") {
+    // its input persist and lloyd's own cache are both released by the
+    // time the result is collected
+    spark.sharedState.cacheManager.clearCache()
+    val kept = Ann.semanticDedup(emb, 0.45, k = 8, iters = 3).collect()
+    assert(kept.nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "semanticDedup left a cached frame in the session's cache manager")
+  }
+
   test("quantized semantic dedup equals an independent local integer replay") {
     // the oracle-checked r8 variant: quantized Lloyd clusters + the
     // division-free integer cosine admission; replayed here with plain

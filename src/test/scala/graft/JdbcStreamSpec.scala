@@ -143,34 +143,6 @@ class JdbcStreamSpec extends SparkSpec {
     assert(JdbcPollStream.committedHwmInc(spark, table, "ts", "id") == ((20L, 25L)))
   }
 
-  /** Counts non-marker job starts, then uses one marker job as an ordering
-    * barrier: listener delivery is in-order, so once the marker's start has
-    * been observed every earlier job start has been delivered too. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var markerSeen = false
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        if (desc == "graft-hwm-marker") markerSeen = true
-        else jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      spark.sparkContext.setJobDescription("graft-hwm-marker")
-      try spark.range(1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job never observed — listener bus stalled")
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("hwm derivation is metadata-only: zero Spark jobs once dirs track the watermark") {
     val (table, _) = freshDirs("hwm_meta")
     // batch 0: plain mode bounds; batch 1 stages the pair trap — the row

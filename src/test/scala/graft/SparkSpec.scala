@@ -8,6 +8,35 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Counts the Spark jobs `body` launches. Non-marker job starts are
+    * counted, then one marker job serves as an ordering barrier: listener
+    * delivery is in-order, so once the marker's start has been observed
+    * every earlier job start has been delivered too. */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = false
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = Option(j.properties)
+          .map(_.getProperty("spark.job.description")).orNull
+        if (desc == "graft-job-count-marker") markerSeen = true
+        else jobs.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobDescription("graft-job-count-marker")
+      try spark.range(1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(markerSeen, "marker job never observed — listener bus stalled")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
