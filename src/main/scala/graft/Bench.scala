@@ -139,6 +139,21 @@ object Bench {
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
+  /** MEASUREMENT-HYGIENE FIX (r16, declared in OPTIMIZATION_r16.md): drop
+    * every cached plan and persistent RDD after each query invocation.
+    * Operators may persist REUSED intermediates within one action (a real
+    * optimization), but Spark's CacheManager substitutes cached data into
+    * ANY later plan with the same canonical form — so without this, round
+    * N+1 of a query would silently read round N's cached intermediates
+    * instead of recomputing from the parquet inputs (exactly the
+    * cross-run caching the bench must not do), and the leaked blocks
+    * degrade later queries in the shared JVM (storage-pool pressure).
+    * Every timed round computes from parquet; rounds are independent. */
+  def dropCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -150,23 +165,9 @@ object Bench {
     val baseRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
     val maxRounds = math.max(baseRounds, MaxRounds)
     val present = loadPins().filter { case (n, _) => qs.contains(n) }
-    // MEASUREMENT-HYGIENE FIX (r16, declared in OPTIMIZATION_r16.md): drop
-    // every cached plan and persistent RDD after each query invocation.
-    // Operators may persist REUSED intermediates within one action (a real
-    // optimization), but Spark's CacheManager substitutes cached data into
-    // ANY later plan with the same canonical form — so without this, round
-    // N+1 of a query would silently read round N's cached intermediates
-    // instead of recomputing from the parquet inputs (exactly the
-    // cross-run caching the bench must not do), and the leaked blocks
-    // degrade later queries in the shared JVM (storage-pool pressure).
-    // Every timed round computes from parquet; rounds are independent.
-    def dropCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     // warm-up pass: JIT + codegen + file listing, untimed
     val alive = present.filter { case (name, _) =>
-      try { qs(name)(spark, sfDir).count(); dropCaches(); true }
+      try { qs(name)(spark, sfDir).count(); dropCaches(spark); true }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
     }.map(_._1).toSet
@@ -189,7 +190,7 @@ object Bench {
           roundFailed += name
           System.err.println(s"[bench] $name round failed: ${e.getMessage}")
         }
-        dropCaches() // untimed: rounds stay independent (see above)
+        dropCaches(spark) // untimed: rounds stay independent (see above)
       }
     }
     def spreadOf(name: String): Double = {

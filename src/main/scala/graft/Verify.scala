@@ -21,11 +21,9 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // r16 measurement hygiene (see graft.Bench.dropCaches): operator
-        // persists are scoped to one action; don't let 429 queries'
-        // intermediates accumulate in one JVM
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        // r16 measurement hygiene: operator persists are scoped to one
+        // action; don't let 429 queries' intermediates accumulate in one JVM
+        Bench.dropCaches(spark)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

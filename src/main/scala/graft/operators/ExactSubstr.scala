@@ -35,13 +35,11 @@ import org.apache.spark.sql.functions._
   * not plagiarism). Everything ≥ n is found exactly, with exact boundaries.
   *
   * Scale: no all-pairs term anywhere; the big intermediate is the gram
-  * table at O(total tokens) rows. The production path (`hashGramKey=true`,
-  * the default) replaces the n-token gram STRING with its 128-bit hash —
+  * table at O(total tokens) rows. Each gram is keyed by its 128-bit hash —
   * two independent xxhash64 runs over the token-array window — so the one
   * big shuffle moves 16-byte keys instead of n-token strings (collision
-  * odds ~2^-64 corpus-wide). `hashGramKey=false` keeps the string-gram
-  * form as the oracle twin; ExactSubstrSpec proves the two paths emit the
-  * same span set.
+  * odds ~2^-64 corpus-wide). ExactSubstrSpec checks the spans against a
+  * sequential string-gram reference on a real corpus.
   */
 object ExactSubstr {
 
@@ -57,7 +55,7 @@ object ExactSubstr {
     * `n_dup_grams`, the count of duplicated n-gram windows merged into the
     * span. Deterministic: positions are unique within a doc.
     */
-  def duplicateSpans(docs: DataFrame, n: Int, hashGramKey: Boolean = true): DataFrame = {
+  def duplicateSpans(docs: DataFrame, n: Int): DataFrame = {
     require(n >= 2, s"span gram length must be >= 2, got $n")
     // spread before the tokenize → window-explode → hash kernel (r17,
     // [[graft.core.spread]]): a single-row-group corpus otherwise runs the
@@ -79,19 +77,13 @@ object ExactSubstr {
     // fraction of the input bytes and strictly cheaper to hold than to
     // recompute). MEMORY_AND_DISK: spills, never OOMs.
     val hits = {
-      val keyed =
-        if (hashGramKey)
-          windows.select(col("doc_id"), col("pg.p").as("p"),
-            xxhash64(col("pg.garr")).as("h1"),
-            xxhash64(lit(Seed2), col("pg.garr")).as("h2"))
-        else
-          windows.select(col("doc_id"), col("pg.p").as("p"),
-            concat_ws(" ", col("pg.garr")).as("g"))
-      val grams = keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val keyCols = if (hashGramKey) Seq("h1", "h2") else Seq("g")
-      val dup = grams.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > 1).select(keyCols.map(col): _*)
-      grams.join(dup, keyCols)
+      val grams = windows.select(col("doc_id"), col("pg.p").as("p"),
+          xxhash64(col("pg.garr")).as("h1"),
+          xxhash64(lit(Seed2), col("pg.garr")).as("h2"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dup = grams.groupBy(col("h1"), col("h2")).agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") > 1).select("h1", "h2")
+      grams.join(dup, Seq("h1", "h2"))
         .select(col("doc_id"), col("p"), (col("p") + (n - 1)).as("e"))
     }
 

@@ -1,11 +1,15 @@
 package graft.sinks
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** One-way export of a [[VersionedTable]] snapshot chain to GENUINE Apache
   * Iceberg format-v2 metadata — the external-engine interop the reference
@@ -243,17 +247,8 @@ object IcebergExport {
     * the incremental-export resume path recovers prior ManifestInfo from
     * the last manifest list instead of re-deriving (or re-writing) it. */
   private def readAvroRows(filesystem: FileSystem, path: Path): Seq[GenericRecord] = {
-    val in = filesystem.open(path)
-    val bytes =
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } finally in.close()
     val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-      new org.apache.avro.file.SeekableByteArrayInput(bytes),
+      new org.apache.avro.file.SeekableByteArrayInput(readBytes(filesystem, path)),
       new org.apache.avro.generic.GenericDatumReader[GenericRecord]())
     try {
       val rows = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
@@ -271,6 +266,155 @@ object IcebergExport {
     rows.foreach(w.append)
     w.close() // closes the stream
     filesystem.getFileStatus(path).getLen
+  }
+
+  /** One manifest as its manifest-list row describes it. */
+  private final case class ManifestInfo(path: String, length: Long, seq: Long,
+      content: Int, addedFiles: Int, addedRows: Long, specId: Int, snapshotId: Long)
+
+  /** The manifest-list row (spec field ids 500-517) of one manifest: every
+    * file in it ADDED at its own sequence, none existing or deleted. */
+  private def manifestListRow(m: ManifestInfo): GenericRecord = {
+    val r = new GenericData.Record(manifestListSchema)
+    r.put("manifest_path", m.path)
+    r.put("manifest_length", Long.box(m.length))
+    r.put("partition_spec_id", Int.box(m.specId))
+    r.put("content", Int.box(m.content)) // 0 = data, 1 = deletes
+    r.put("sequence_number", Long.box(m.seq))
+    r.put("min_sequence_number", Long.box(m.seq))
+    r.put("added_snapshot_id", Long.box(m.snapshotId))
+    r.put("added_files_count", Int.box(m.addedFiles))
+    r.put("existing_files_count", Int.box(0))
+    r.put("deleted_files_count", Int.box(0))
+    r.put("added_rows_count", Long.box(m.addedRows))
+    r.put("existing_rows_count", Long.box(0L))
+    r.put("deleted_rows_count", Long.box(0L))
+    r
+  }
+
+  /** One ADDED (status 1) `manifest_entry` for `file`, with its `data_file`
+    * struct: `content` 0 = data, 1 = position deletes, 2 = equality
+    * deletes, at sequence `seq`. `partition` holds the partition record's
+    * values by field name; `bounds` the per-column (field id, Iceberg
+    * type, lower, upper) stats, Nil for none (null bound maps). */
+  private def addedEntry(entrySchema: Schema, file: FileStatus, content: Int,
+      recordCount: Long, snapshotId: Long, seq: Long,
+      partition: Seq[(String, AnyRef)] = Nil,
+      bounds: Seq[(Int, String, String, String)] = Nil,
+      equalityIds: java.util.List[Integer] = null,
+      sortOrderId: Integer = null): GenericRecord = {
+    val dataFileSchema = entrySchema.getField("data_file").schema()
+    val part = new GenericData.Record(dataFileSchema.getField("partition").schema())
+    partition.foreach { case (n, v) => part.put(n, v) }
+    // Avro map-as-array of (key field-id 126/129, value 127/130) records
+    def boundsList(field: String, lower: Boolean): AnyRef =
+      if (bounds.isEmpty) null
+      else {
+        val recSchema = dataFileSchema.getField(field).schema().getTypes.get(1).getElementType
+        java.util.Arrays.asList(bounds.map { case (id, typ, lo, hi) =>
+          val r = new GenericData.Record(recSchema)
+          r.put("key", Int.box(id))
+          r.put("value", boundBytes(typ, if (lower) lo else hi))
+          r
+        }: _*)
+      }
+    val df = new GenericData.Record(dataFileSchema)
+    df.put("content", Int.box(content))
+    df.put("file_path", file.getPath.toString)
+    df.put("file_format", "PARQUET")
+    df.put("partition", part)
+    df.put("record_count", Long.box(recordCount))
+    df.put("file_size_in_bytes", Long.box(file.getLen))
+    df.put("lower_bounds", boundsList("lower_bounds", lower = true))
+    df.put("upper_bounds", boundsList("upper_bounds", lower = false))
+    df.put("equality_ids", equalityIds)
+    df.put("sort_order_id", sortOrderId)
+    val e = new GenericData.Record(entrySchema)
+    e.put("status", Int.box(1)) // ADDED
+    e.put("snapshot_id", Long.box(snapshotId))
+    e.put("sequence_number", Long.box(seq))
+    e.put("file_sequence_number", Long.box(seq))
+    e.put("data_file", df)
+    e
+  }
+
+  /** Write one manifest (`content` 0 = data, 1 = deletes) with the
+    * spec-required key-value metadata: the table `schema` AT this commit
+    * and the partition spec its entries are written under. */
+  private def writeManifest(filesystem: FileSystem, path: Path, entrySchema: Schema,
+      schemaJson: String, specJson: String, specId: Int, content: Int,
+      seq: Long, snapshotId: Long, entries: Seq[GenericRecord]): ManifestInfo = {
+    val len = writeAvro(filesystem, path, entrySchema, Map(
+      "schema" -> schemaJson,
+      "partition-spec" -> specJson,
+      "partition-spec-id" -> specId.toString,
+      "format-version" -> "2",
+      "content" -> (if (content == 0) "data" else "deletes")), entries)
+    ManifestInfo(path.toString, len, seq, content, entries.size,
+      entries.map(_.get("data_file").asInstanceOf[GenericRecord]
+        .get("record_count").asInstanceOf[Long]).sum, specId, snapshotId)
+  }
+
+  private val mapper = new ObjectMapper()
+
+  /** An export's committed state: the metadata version `version-hint.text`
+    * names, that metadata file, and its parsed JSON tree. */
+  private final case class Committed(version: Int, path: Path, root: ObjectNode)
+
+  /** The committed state of the export whose metadata lives in `metaDir`;
+    * None when nothing was committed there (no version hint). */
+  private def readCommitted(filesystem: FileSystem, metaDir: Path): Option[Committed] = {
+    val hint = new Path(metaDir, "version-hint.text")
+    if (!filesystem.exists(hint)) None
+    else {
+      val v = new String(readBytes(filesystem, hint), "UTF-8").trim.toInt
+      val md = new Path(metaDir, s"v$v.metadata.json")
+      Some(Committed(v, md, mapper.readTree(readBytes(filesystem, md)).asInstanceOf[ObjectNode]))
+    }
+  }
+
+  /** `<outPath>/metadata`, qualified: where an export's metadata lives. */
+  private def metadataDir(filesystem: FileSystem, outPath: String): Path =
+    new Path(filesystem.makeQualified(new Path(outPath)), "metadata")
+
+  /** [[readCommitted]] for the writers that amend an existing export. */
+  private def requireCommitted(filesystem: FileSystem, metaDir: Path,
+      outPath: String): Committed =
+    readCommitted(filesystem, metaDir).getOrElse(throw new IllegalArgumentException(
+      s"iceberg export: no existing export at $outPath (version-hint.text missing) " +
+        "— run export() first"))
+
+  /** Commit `root` as the export's next metadata version — the one commit
+    * step of every writer in this file:
+    *
+    *  1. its `metadata-log` (spec "Table Metadata" previous-files list)
+    *     becomes the PREVIOUS committed file's log plus that file — so the
+    *     log names exactly the files the hint once named, oldest first,
+    *     and never a file a crash left behind unreferenced;
+    *  2. the tree lands as a NEW `v<N>.metadata.json`, N from
+    *     [[nextMetadataVersion]] (at least `floor`, above every file
+    *     already in the dir);
+    *  3. only then does `version-hint.text` flip to N.
+    *
+    * A crash before step 3 leaves the previous state live. Returns the new
+    * metadata file's path. */
+  private def commitMetadata(filesystem: FileSystem, metaDir: Path,
+      prev: Option[Committed], floor: Int, root: ObjectNode): Path = {
+    val log = mapper.createArrayNode()
+    prev.foreach { p =>
+      Option(p.root.get("metadata-log")).foreach(_.elements().asScala.foreach(log.add))
+      log.addObject()
+        .put("timestamp-ms", filesystem.getFileStatus(p.path).getModificationTime)
+        .put("metadata-file", p.path.toString)
+    }
+    root.set[ArrayNode]("metadata-log", log)
+    val v = nextMetadataVersion(filesystem, metaDir, floor)
+    val path = new Path(metaDir, s"v$v.metadata.json")
+    val out = filesystem.create(path, true)
+    try out.write(mapper.writeValueAsBytes(root)) finally out.close()
+    val hint = filesystem.create(new Path(metaDir, "version-hint.text"), true)
+    try hint.write(v.toString.getBytes("UTF-8")) finally hint.close()
+    path
   }
 
   /** Parquet footer record count — metadata-only, no data scan. */
@@ -369,15 +513,22 @@ object IcebergExport {
 
   /** Export every snapshot of the graft table at `tablePath` as an Iceberg
     * v2 metadata chain under `outPath/metadata/`. Returns the path of the
-    * final metadata.json. Data files are referenced in place. */
-  /** @param sinceVersion export only snapshots ≥ this graft version — the
+    * final metadata.json. Data files are referenced in place.
+    *
+    * The metadata-log rule (shared by every writer in this file, see
+    * [[commitMetadata]]): the new metadata file's `metadata-log` is the
+    * log of the file `version-hint.text` named before this export, plus
+    * that file — empty on a first export. A metadata file a crash left
+    * behind without the hint ever naming it is never logged.
+    *
+    * @param sinceVersion export only snapshots ≥ this graft version — the
     *        recourse after a [[VersionedTable.compact]]/overwrite breaks
     *        the monotone chain: the suffix FROM the rewrite point is
     *        monotone again, its first snapshot enters with ALL its dirs as
     *        ADDED, and per-entry sequences stay the absolute graft
     *        sequences, so MOR delete application is unchanged under
-    *        slicing. */
-  /** @param resumeAfter versions ≤ this already have their manifests and
+    *        slicing.
+    * @param resumeAfter versions ≤ this already have their manifests and
     *        manifest lists on disk under `outPath/metadata` from a previous
     *        [[export]] — reuse them (their ManifestInfo is recovered from
     *        the LAST existing manifest list, one Avro read) and write only
@@ -386,8 +537,8 @@ object IcebergExport {
     *        footer counts + O(new manifests) writes + one manifest list
     *        per new snapshot — never re-reading or re-writing exported
     *        history (the schema fold's one-footer-per-dir pass stays
-    *        O(total dirs), the price of chain-stable field ids). */
-  /** @param hiddenPartition TRANSFORM partition fields (r14 — Iceberg hidden
+    *        O(total dirs), the price of chain-stable field ids).
+    * @param hiddenPartition TRANSFORM partition fields (r14 — Iceberg hidden
     *        partitioning; r15 extends day|hour to the full spec set):
     *        (fieldName, transform ∈ day|hour|month|year|bucket[N]|
     *        truncate[W], sourceCol).
@@ -401,6 +552,17 @@ object IcebergExport {
       partitionCols: Seq[String] = Nil, sinceVersion: Int = Int.MinValue,
       resumeAfter: Int = Int.MinValue,
       hiddenPartition: Seq[(String, String, String)] = Nil): String = {
+    val filesystem = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    exportOnto(spark, tablePath, outPath, partitionCols, sinceVersion, resumeAfter,
+      hiddenPartition, readCommitted(filesystem, metadataDir(filesystem, outPath)))
+  }
+
+  /** [[export]] onto the export's committed state `prev`, read once by the
+    * caller, so an incremental export's resume anchors and its metadata-log
+    * come from the same metadata file. */
+  private def exportOnto(spark: SparkSession, tablePath: String, outPath: String,
+      partitionCols: Seq[String], sinceVersion: Int, resumeAfter: Int,
+      hiddenPartition: Seq[(String, String, String)], prev: Option[Committed]): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     val filesystem = new Path(tablePath).getFileSystem(conf)
     val tableAbs = filesystem.makeQualified(new Path(tablePath)).toString
@@ -658,8 +820,6 @@ object IcebergExport {
     // a version adds, one DELETE manifest (content 1) for the equality-delete
     // dirs it adds — both entered as ADDED (status 1) at their graft
     // sequence, then carried by every later snapshot's manifest list.
-    final case class ManifestInfo(path: String, length: Long, seq: Long,
-        content: Int, addedFiles: Int, addedRows: Long, specId: Int)
     val manifests = scala.collection.mutable.ArrayBuffer.empty[ManifestInfo]
     val graftMeta = new Path(tableAbs, "_graft_meta")
     val eqIds: java.util.List[Integer] =
@@ -689,95 +849,51 @@ object IcebergExport {
         commitSchema: StructType): Seq[GenericRecord] = {
       // delete entries carry the GLOBAL (empty) partition under spec 1 on a
       // partitioned table; data entries the identity values under spec 0
-      val entrySchema = if (content == 0) dataEntrySchema else delEntrySchema
-      val dataFileSchema = entrySchema.getField("data_file").schema()
-      val partSchema = dataFileSchema.getField("partition").schema()
-      val entryPartCols = if (content == 0) partitionCols else Nil
-      val parts: Seq[AnyRef] = entryPartCols.map { c =>
-        partitionValue(snap, d, c, schema(schema.fieldIndex(c)).dataType)
-      }
-      // transform partition values from the dir's hidden stats (data only)
-      val hiddenVals: Seq[(String, AnyRef)] =
-        if (content == 0) hiddenPartition.map { case (n, t, src) =>
+      val isData = content == 0
+      val entrySchema = if (isData) dataEntrySchema else delEntrySchema
+      val partition: Seq[(String, AnyRef)] =
+        if (!isData) Nil
+        else partitionCols.map { c =>
+          c -> partitionValue(snap, d, c, schema(schema.fieldIndex(c)).dataType)
+        } ++ hiddenPartition.map { case (n, t, src) =>
+          // transform partition values from the dir's hidden stats
           n -> hiddenPartitionValue(snap, d, n, t,
             schema(schema.fieldIndex(src)).dataType)
-        } else Nil
+        }
       // per-FILE lower/upper bounds from the dir's recorded per-dir stats
       // (a dir-level [lo, hi] is a valid — loose — bound for every file in
       // it, so external file skipping stays a superset scan, exactly the
-      // VersionedTable.readPruned contract); Avro map-as-array of
-      // (key field-id 126/129, value 127/130) records per the spec
+      // VersionedTable.readPruned contract)
       // HIDDEN-transform stats (appendWithHiddenStats names) are partition
       // values, not column bounds — only schema columns enter the per-file
       // lower/upper bounds maps
-      val dirStats = snap.colStats.getOrElse(d, Map.empty)
-        .filter { case (c, _) => commitSchema.fields.exists(x => fin(x.name) == fin(c)) }
-      def boundsList(loSide: Boolean, recSchema: Schema): AnyRef =
-        if (content != 0 || dirStats.isEmpty) null
-        else {
-          val rows: Seq[GenericRecord] = dirStats.toSeq.sortBy(_._1).map { case (c, b) =>
-            val r = new GenericData.Record(recSchema)
-            r.put("key", Int.box(fieldId(c)))
-            // byte width follows the exported Iceberg type of the COLUMN
-            // (int → 4 bytes), not ColBounds.typ's integral-collapsed
-            // "long"; stats are recorded under PHYSICAL names, so resolve
-            // through the rename chain. The type is the COMMIT schema's —
-            // on a promoted chain, pre-promotion manifests keep the narrow
-            // encoding and the reader widens (spec Schema Evolution)
-            r.put("value", boundBytes(
-              icebergType(commitSchema.fields.find(x => fin(x.name) == fin(c))
-                .getOrElse(throw new IllegalArgumentException(
-                  s"iceberg export: stats column $c not in schema")).dataType),
-              if (loSide) b.lo else b.hi))
-            r
+      val bounds =
+        if (!isData) Nil
+        else snap.colStats.getOrElse(d, Map.empty).toSeq.sortBy(_._1).flatMap { case (c, b) =>
+          // byte width follows the exported Iceberg type of the COLUMN
+          // (int → 4 bytes), not ColBounds.typ's integral-collapsed
+          // "long"; stats are recorded under PHYSICAL names, so resolve
+          // through the rename chain. The type is the COMMIT schema's —
+          // on a promoted chain, pre-promotion manifests keep the narrow
+          // encoding and the reader widens (spec Schema Evolution)
+          commitSchema.fields.find(x => fin(x.name) == fin(c)).map { f =>
+            (fieldId(c), icebergType(f.dataType), b.lo, b.hi)
           }
-          java.util.Arrays.asList(rows: _*)
         }
-      val loSchema = dataFileSchema.getField("lower_bounds").schema()
-        .getTypes.get(1).getElementType
-      val hiSchema = dataFileSchema.getField("upper_bounds").schema()
-        .getTypes.get(1).getElementType
-      parquetFiles(d)
-        .map { st =>
-          val part = new GenericData.Record(partSchema)
-          entryPartCols.zip(parts).foreach { case (c, v) => part.put(c, v) }
-          hiddenVals.foreach { case (n, v) => part.put(n, v) }
-          val df = new GenericData.Record(dataFileSchema)
-          df.put("content", Int.box(content))
-          df.put("file_path", st.getPath.toString)
-          df.put("file_format", "PARQUET")
-          df.put("partition", part)
-          df.put("record_count", Long.box(fileCounts(st.getPath.toString)))
-          df.put("file_size_in_bytes", Long.box(st.getLen))
-          df.put("lower_bounds", boundsList(loSide = true, loSchema))
-          df.put("upper_bounds", boundsList(loSide = false, hiSchema))
-          df.put("equality_ids", if (content == 2) eqIds else null)
-          df.put("sort_order_id",
-            if (content == 0) Int.box(sortOrderIdOf(d)) else null)
-          val e = new GenericData.Record(entrySchema)
-          e.put("status", Int.box(1)) // ADDED
-          e.put("snapshot_id", Long.box(snapshotId))
-          e.put("sequence_number", Long.box(fileSeq))
-          e.put("file_sequence_number", Long.box(fileSeq))
-          e.put("data_file", df)
-          e: GenericRecord
-        }
+      parquetFiles(d).map { st =>
+        addedEntry(entrySchema, st, content, fileCounts(st.getPath.toString),
+          snapshotId, fileSeq, partition, bounds,
+          equalityIds = if (content == 2) eqIds else null,
+          sortOrderId = if (isData) Int.box(sortOrderIdOf(d)) else null)
+      }
     }
 
-    def writeManifest(path: Path, content: Int, seq: Long,
+    def writeCommitManifest(path: Path, content: Int, seq: Long,
         commitSchemaJson: String, entries: Seq[GenericRecord]): ManifestInfo = {
-      val (entrySchema, specJson, specId) =
-        if (content == 0 || !globalDeleteSpec) (if (content == 0) dataEntrySchema else delEntrySchema, tSpecJson, 0)
-        else (delEntrySchema, "[]", 1) // global equality deletes: empty spec 1
-      val len = writeAvro(filesystem, path, entrySchema, Map(
-        "schema" -> commitSchemaJson, // the schema AT this commit
-        "partition-spec" -> specJson,
-        "partition-spec-id" -> specId.toString,
-        "format-version" -> "2",
-        "content" -> (if (content == 0) "data" else "deletes")), entries)
-      ManifestInfo(path.toString, len, seq, content, entries.size,
-        entries.map(_.get("data_file").asInstanceOf[GenericRecord]
-          .get("record_count").asInstanceOf[Long]).sum, specId)
+      val global = content != 0 && globalDeleteSpec // global equality deletes: empty spec 1
+      writeManifest(filesystem, path, if (content == 0) dataEntrySchema else delEntrySchema,
+        commitSchemaJson, if (global) "[]" else tSpecJson, if (global) 1 else 0,
+        content, seq, snapshotId = seq, entries)
     }
 
     // incremental resume: recover the already-exported manifests' info from
@@ -796,7 +912,8 @@ object IcebergExport {
           r.get("content").asInstanceOf[Int],
           r.get("added_files_count").asInstanceOf[Int],
           r.get("added_rows_count").asInstanceOf[Long],
-          r.get("partition_spec_id").asInstanceOf[Int])
+          r.get("partition_spec_id").asInstanceOf[Int],
+          r.get("added_snapshot_id").asInstanceOf[Long])
       }
     }
 
@@ -822,35 +939,19 @@ object IcebergExport {
             fileSeq = snap.dataSeq.getOrElse(d, 0).toLong, snapshotId,
             snapSchemas(i))
         }
-        manifests += writeManifest(new Path(metaDir, f"m-$seq%05d.avro"), 0, seq,
+        manifests += writeCommitManifest(new Path(metaDir, f"m-$seq%05d.avro"), 0, seq,
           commitSchemaJson, dataEntries)
         val delEntries = snap.deletes.filterNot(prevDels).flatMap { case (d, dseq) =>
           entriesOf(snap, d, content = 2, fileSeq = dseq.toLong, snapshotId,
             snapSchemas(i))
         }
         if (delEntries.nonEmpty)
-          manifests += writeManifest(new Path(metaDir, f"d-$seq%05d.avro"), 1, seq,
+          manifests += writeCommitManifest(new Path(metaDir, f"d-$seq%05d.avro"), 1, seq,
             commitSchemaJson, delEntries)
 
         // manifest LIST for this snapshot: every manifest up to and incl. seq
-        val listRows = manifests.toSeq.map { m =>
-          val r = new GenericData.Record(manifestListSchema)
-          r.put("manifest_path", m.path)
-          r.put("manifest_length", Long.box(m.length))
-          r.put("partition_spec_id", Int.box(m.specId))
-          r.put("content", Int.box(m.content)) // 0 = data, 1 = deletes
-          r.put("sequence_number", Long.box(m.seq))
-          r.put("min_sequence_number", Long.box(m.seq))
-          r.put("added_snapshot_id", Long.box(m.seq))
-          r.put("added_files_count", Int.box(m.addedFiles))
-          r.put("existing_files_count", Int.box(0))
-          r.put("deleted_files_count", Int.box(0))
-          r.put("added_rows_count", Long.box(m.addedRows))
-          r.put("existing_rows_count", Long.box(0L))
-          r.put("deleted_rows_count", Long.box(0L))
-          r: GenericRecord
-        }
-        writeAvro(filesystem, listPath, manifestListSchema, Map.empty, listRows)
+        writeAvro(filesystem, listPath, manifestListSchema, Map.empty,
+          manifests.toSeq.map(manifestListRow))
         // delete-producing commits are "overwrite" in Iceberg's summary
         (snapshotId, seq, ts, listPath.toString,
           if (delEntries.nonEmpty) "overwrite" else "append", snapSchemaIds(i))
@@ -899,24 +1000,6 @@ object IcebergExport {
     // chain are written under — appended to the partition-specs list
     val globalSpecJson =
       if (globalDeleteSpec) ",{\"spec-id\":1,\"fields\":[]}" else ""
-    // metadata-log (spec "Table Metadata" previous-files list): every
-    // EARLIER vK.metadata.json already in the metadata dir, oldest first —
-    // populated by incremental exports, where each run leaves the prior
-    // metadata file as history exactly as a real Iceberg commit does
-    val mdV = nextMetadataVersion(filesystem, metaDir, versions.last)
-    val metadataLogJson = filesystem.listStatus(metaDir).toSeq
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("v") && n.endsWith(".metadata.json") &&
-          n.stripPrefix("v").stripSuffix(".metadata.json").toIntOption
-            .exists(_ != mdV)
-      }
-      .sortBy(p => p.getName.stripPrefix("v").stripSuffix(".metadata.json").toInt)
-      .map { p =>
-        val ts = filesystem.getFileStatus(p).getModificationTime
-        s"""{"timestamp-ms":$ts,"metadata-file":"${esc(p.toString)}"}"""
-      }.mkString("[", ",", "]")
     val metadataJson =
       s"""{"format-version":2,"table-uuid":"$uuid","location":"${esc(outAbs)}",
         "last-sequence-number":$lastSeq,"last-updated-ms":$lastTs,
@@ -929,18 +1012,10 @@ object IcebergExport {
         "current-snapshot-id":${snapshotEntries.last._1},
         "refs":$refsJson,
         "snapshots":$snapsJson,
-        "snapshot-log":$logJson,
-        "metadata-log":$metadataLogJson}"""
-    val mdPath = new Path(metaDir, s"v$mdV.metadata.json")
-    graft.core.trace("export.metadataJson") {
-      val out = filesystem.create(mdPath, true)
-      out.write(metadataJson.getBytes("UTF-8"))
-      out.close()
-      val hint = filesystem.create(new Path(metaDir, "version-hint.text"), true)
-      hint.write(mdV.toString.getBytes("UTF-8"))
-      hint.close()
-    }
-    mdPath.toString
+        "snapshot-log":$logJson}"""
+    graft.core.trace("export.metadataJson")(commitMetadata(filesystem, metaDir,
+      prev, versions.last,
+      mapper.readTree(metadataJson).asInstanceOf[ObjectNode])).toString
   }
 
   /** The next metadata.json version: strictly above every metadata file
@@ -975,12 +1050,8 @@ object IcebergExport {
   def exportIncremental(spark: SparkSession, tablePath: String, outPath: String,
       partitionCols: Seq[String] = Nil, sinceVersion: Int = Int.MinValue,
       hiddenPartition: Seq[(String, String, String)] = Nil): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val filesystem = new Path(outPath).getFileSystem(conf)
-    val hint = new Path(new Path(outPath, "metadata"), "version-hint.text")
-    require(filesystem.exists(hint),
-      s"iceberg export: no existing export at $outPath (version-hint.text missing) — run export() first")
-    val last = new String(readAvroBytes(filesystem, hint), "UTF-8").trim.toInt
+    val filesystem = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = requireCommitted(filesystem, metadataDir(filesystem, outPath), outPath)
     // resolve BOTH resume anchors from the current metadata's snapshot
     // list, not from the hint number: since r16 the metadata file version
     // is a collision-free counter that maintenance rewrites ([[exportExpire]])
@@ -991,20 +1062,12 @@ object IcebergExport {
     // the oldest snapshot still exported — an [[exportExpire]] may have
     // trimmed below it, and extending below would resurrect expired
     // snapshots.
-    val mdPath = new Path(new Path(outPath, "metadata"), s"v$last.metadata.json")
-    val (minSeq, maxSeq): (Int, Int) =
-      if (!filesystem.exists(mdPath)) (Int.MinValue, last)
-      else {
-        import scala.jdk.CollectionConverters._
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(readAvroBytes(filesystem, mdPath))
-        val seqs = root.get("snapshots").elements().asScala
-          .map(_.get("sequence-number").asInt()).toSeq
-        (seqs.minOption.getOrElse(Int.MinValue), seqs.maxOption.getOrElse(last))
-      }
-    export(spark, tablePath, outPath, partitionCols,
-      math.max(sinceVersion, minSeq), resumeAfter = maxSeq,
-      hiddenPartition = hiddenPartition)
+    val seqs = cur.root.get("snapshots").elements().asScala
+      .map(_.get("sequence-number").asInt()).toSeq
+    val (minSeq, maxSeq) =
+      (seqs.minOption.getOrElse(Int.MinValue), seqs.maxOption.getOrElse(cur.version))
+    exportOnto(spark, tablePath, outPath, partitionCols,
+      math.max(sinceVersion, minSeq), resumeAfter = maxSeq, hiddenPartition, Some(cur))
   }
 
   /** EXPIRE exported snapshots, keeping the newest `keep` (Iceberg's
@@ -1033,65 +1096,33 @@ object IcebergExport {
     * in-place rewrite. */
   def exportExpire(spark: SparkSession, outPath: String, keep: Int): String = {
     require(keep >= 1, "expire must keep at least the current snapshot")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val filesystem = new Path(outPath).getFileSystem(conf)
-    val outAbs = filesystem.makeQualified(new Path(outPath)).toString
-    val metaDir = new Path(outAbs, "metadata")
-    val hintPath = new Path(metaDir, "version-hint.text")
-    require(filesystem.exists(hintPath),
-      s"iceberg export: no existing export at $outPath — run export() first")
-    val curV = new String(readAvroBytes(filesystem, hintPath), "UTF-8").trim.toInt
-    val mdPath = new Path(metaDir, s"v$curV.metadata.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(readAvroBytes(filesystem, mdPath))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    import scala.jdk.CollectionConverters._
-    val snapsNode = root.get("snapshots")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-    val snaps = snapsNode.elements().asScala.toSeq
+    val filesystem = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val metaDir = metadataDir(filesystem, outPath)
+    val cur = requireCommitted(filesystem, metaDir, outPath)
+    val root = cur.root
+    val snaps = root.get("snapshots").elements().asScala.toSeq
       .sortBy(_.get("sequence-number").asLong())
-    if (snaps.size <= keep) return mdPath.toString // nothing to expire
+    if (snaps.size <= keep) return cur.path.toString // nothing to expire
     val dropped = snaps.dropRight(keep)
     val droppedIds = dropped.map(_.get("snapshot-id").asLong()).toSet
     val curId = root.get("current-snapshot-id").asLong()
     require(!droppedIds.contains(curId),
       "iceberg export: refusing to expire the current snapshot")
     // snapshots: kept only
-    val newSnaps = mapper.createArrayNode()
-    snaps.drop(dropped.size).foreach(newSnaps.add)
-    root.set("snapshots", newSnaps)
+    root.set[ArrayNode]("snapshots",
+      mapper.createArrayNode().addAll(snaps.drop(dropped.size).asJava))
     // refs: tags on expired snapshots go; main must survive (checked above)
-    val refsNode = root.get("refs")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val refsNode = root.get("refs").asInstanceOf[ObjectNode]
     val deadRefs = refsNode.properties().asScala
       .filter(e => droppedIds.contains(e.getValue.get("snapshot-id").asLong()))
       .map(_.getKey).toSeq
     deadRefs.foreach(refsNode.remove)
     // snapshot-log: expired entries go
-    val logNode = root.get("snapshot-log")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-    val newLog = mapper.createArrayNode()
-    logNode.elements().asScala
-      .filterNot(e => droppedIds.contains(e.get("snapshot-id").asLong()))
-      .foreach(newLog.add)
-    root.set("snapshot-log", newLog)
-    // prior metadata file becomes history (spec metadata-log), like every
-    // other writer in this file
-    val mlogNode = root.get("metadata-log")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-    val mlogEntry = mapper.createObjectNode()
-    mlogEntry.put("timestamp-ms", filesystem.getFileStatus(mdPath).getModificationTime)
-    mlogEntry.put("metadata-file", mdPath.toString)
-    mlogNode.add(mlogEntry)
+    root.set[ArrayNode]("snapshot-log", mapper.createArrayNode().addAll(
+      root.get("snapshot-log").elements().asScala
+        .filterNot(e => droppedIds.contains(e.get("snapshot-id").asLong())).toSeq.asJava))
     // durability order: new metadata → hint → only then the deletions
-    val newV = nextMetadataVersion(filesystem, metaDir, curV + 1)
-    val newMdPath = new Path(metaDir, s"v$newV.metadata.json")
-    val out = filesystem.create(newMdPath, true)
-    out.write(mapper.writeValueAsBytes(root))
-    out.close()
-    val hintOut = filesystem.create(hintPath, true)
-    hintOut.write(newV.toString.getBytes("UTF-8"))
-    hintOut.close()
+    val newMdPath = commitMetadata(filesystem, metaDir, Some(cur), cur.version + 1, root)
     // the expired snapshots' manifest LISTS are theirs alone — delete,
     // strictly after the trimmed metadata is durable and referenced
     dropped.foreach { s =>
@@ -1125,20 +1156,11 @@ object IcebergExport {
     import org.apache.spark.sql.functions.col
     val conf = spark.sparkContext.hadoopConfiguration
     val filesystem = new Path(outPath).getFileSystem(conf)
-    val outAbs = filesystem.makeQualified(new Path(outPath)).toString
-    val metaDir = new Path(outAbs, "metadata")
-    val hintPath = new Path(metaDir, "version-hint.text")
-    require(filesystem.exists(hintPath),
-      s"iceberg export: no existing export at $outPath — run export() first")
-    val curV = new String(readAvroBytes(filesystem, hintPath), "UTF-8").trim.toInt
-    val mdPath = new Path(metaDir, s"v$curV.metadata.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(readAvroBytes(filesystem, mdPath))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val metaDir = metadataDir(filesystem, outPath)
+    val cur = requireCommitted(filesystem, metaDir, outPath)
+    val root = cur.root
     require(root.get("format-version").asInt() == 2, "format-version 2 expected")
-    import scala.jdk.CollectionConverters._
-    val snapsNode = root.get("snapshots")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+    val snapsNode = root.get("snapshots").asInstanceOf[ArrayNode]
     val curId = root.get("current-snapshot-id").asLong()
     val curSnap = snapsNode.elements().asScala
       .find(_.get("snapshot-id").asLong() == curId)
@@ -1171,7 +1193,7 @@ object IcebergExport {
     val posDf = positions
       .select(col("file_path").cast("string").as("file_path", pathMeta),
         col("pos").cast("long").as("pos", posMeta))
-    val delDir = new Path(outAbs, f"delete-data/posdel-$newSeq%05d")
+    val delDir = new Path(metaDir.getParent, f"delete-data/posdel-$newSeq%05d")
     // DISTRIBUTED delete write (r16, VERDICT r15 weak #2): a 100 TB
     // compaction's position deletes are GBs, and the old coalesce(1)
     // serialized them through one task. repartitionByRange on
@@ -1209,16 +1231,12 @@ object IcebergExport {
     // content-1 manifest under an UNPARTITIONED spec: reuse an existing
     // empty spec (the global-delete spec of partitioned MOR exports, or an
     // unpartitioned spec 0); append a fresh empty spec otherwise
-    val specsNode = root.get("partition-specs")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+    val specsNode = root.get("partition-specs").asInstanceOf[ArrayNode]
     val emptySpecId = specsNode.elements().asScala
       .find(_.get("fields").size() == 0).map(_.get("spec-id").asInt())
       .getOrElse {
         val next = specsNode.elements().asScala.map(_.get("spec-id").asInt()).max + 1
-        val empty = mapper.createObjectNode()
-        empty.put("spec-id", next)
-        empty.set("fields", mapper.createArrayNode())
-        specsNode.add(empty)
+        specsNode.addObject().put("spec-id", next).putArray("fields")
         next
       }
     val schemasNode = root.get("schemas")
@@ -1227,53 +1245,16 @@ object IcebergExport {
       .find(_.get("schema-id").asInt() == curSchemaId)
       .map(_.toString).getOrElse(throw new IllegalStateException("no current schema"))
     val entrySchema = manifestEntrySchema(new StructType(), Nil)
-    val dataFileSchema = entrySchema.getField("data_file").schema()
     // one ADDED entry per task-written delete file, all in one manifest
-    var totalDelRows = 0L
-    val entries: Seq[GenericRecord] = delFiles.map { delFile =>
-      val rows = recordCount(conf, delFile.getPath)
-      totalDelRows += rows
-      val df = new GenericData.Record(dataFileSchema)
-      df.put("content", Int.box(1)) // POSITION deletes
-      df.put("file_path", delFile.getPath.toString)
-      df.put("file_format", "PARQUET")
-      df.put("partition", new GenericData.Record(
-        dataFileSchema.getField("partition").schema()))
-      df.put("record_count", Long.box(rows))
-      df.put("file_size_in_bytes", Long.box(delFile.getLen))
-      df.put("lower_bounds", null); df.put("upper_bounds", null)
-      df.put("equality_ids", null)
-      val entry = new GenericData.Record(entrySchema)
-      entry.put("status", Int.box(1)) // ADDED
-      entry.put("snapshot_id", Long.box(newId))
-      entry.put("sequence_number", Long.box(newSeq))
-      entry.put("file_sequence_number", Long.box(newSeq))
-      entry.put("data_file", df)
-      entry
+    val entries = delFiles.map { delFile =>
+      addedEntry(entrySchema, delFile, content = 1, // POSITION deletes
+        recordCount(conf, delFile.getPath), newId, newSeq)
     }
     val manifestPath = new Path(metaDir, f"pd-$newSeq%05d.avro")
-    val manifestLen = writeAvro(filesystem, manifestPath, entrySchema, Map(
-      "schema" -> curSchemaJson,
-      "partition-spec" -> "[]",
-      "partition-spec-id" -> emptySpecId.toString,
-      "format-version" -> "2",
-      "content" -> "deletes"), entries)
+    val manifest = writeManifest(filesystem, manifestPath, entrySchema, curSchemaJson,
+      "[]", emptySpecId, content = 1, newSeq, newId, entries)
 
     // manifest list = the current snapshot's rows + the new delete manifest
-    val listRow = new GenericData.Record(manifestListSchema)
-    listRow.put("manifest_path", manifestPath.toString)
-    listRow.put("manifest_length", Long.box(manifestLen))
-    listRow.put("partition_spec_id", Int.box(emptySpecId))
-    listRow.put("content", Int.box(1))
-    listRow.put("sequence_number", Long.box(newSeq))
-    listRow.put("min_sequence_number", Long.box(newSeq))
-    listRow.put("added_snapshot_id", Long.box(newId))
-    listRow.put("added_files_count", Int.box(delFiles.size))
-    listRow.put("existing_files_count", Int.box(0))
-    listRow.put("deleted_files_count", Int.box(0))
-    listRow.put("added_rows_count", Long.box(totalDelRows))
-    listRow.put("existing_rows_count", Long.box(0L))
-    listRow.put("deleted_rows_count", Long.box(0L))
     val newListPath = new Path(metaDir, f"snap-pd-$newId%05d.avro")
     // round-trip the existing rows through the WRITER schema so appended
     // foreign lists with extra optional fields re-serialize cleanly
@@ -1285,56 +1266,32 @@ object IcebergExport {
       c: GenericRecord
     }
     writeAvro(filesystem, newListPath, manifestListSchema, Map.empty,
-      carried :+ (listRow: GenericRecord))
+      carried :+ manifestListRow(manifest))
 
     // patch the metadata tree: new snapshot + log entries, bumped sequence,
     // main ref moved, prior metadata file preserved in the metadata-log
     val ts = filesystem.getFileStatus(manifestPath).getModificationTime
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", newId)
-    snapNode.put("sequence-number", newSeq)
-    snapNode.put("timestamp-ms", ts)
-    val summary = mapper.createObjectNode()
-    summary.put("operation", "delete")
-    snapNode.set("summary", summary)
-    snapNode.put("manifest-list", newListPath.toString)
-    snapNode.put("schema-id", curSchemaId)
-    snapsNode.add(snapNode)
-    val logNode = root.get("snapshot-log")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-    val logEntry = mapper.createObjectNode()
-    logEntry.put("timestamp-ms", ts)
-    logEntry.put("snapshot-id", newId)
-    logNode.add(logEntry)
+    snapsNode.addObject()
+      .put("snapshot-id", newId)
+      .put("sequence-number", newSeq)
+      .put("timestamp-ms", ts)
+      .set[ObjectNode]("summary", mapper.createObjectNode().put("operation", "delete"))
+      .put("manifest-list", newListPath.toString)
+      .put("schema-id", curSchemaId)
+    root.get("snapshot-log").asInstanceOf[ArrayNode].addObject()
+      .put("timestamp-ms", ts)
+      .put("snapshot-id", newId)
     root.put("last-sequence-number", newSeq)
     root.put("last-updated-ms", ts)
     root.put("current-snapshot-id", newId)
-    val refsNode = root.get("refs")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val mainRef = mapper.createObjectNode()
-    mainRef.put("snapshot-id", newId)
-    mainRef.put("type", "branch")
-    refsNode.set("main", mainRef)
-    val mlogNode = root.get("metadata-log")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-    val mlogEntry = mapper.createObjectNode()
-    mlogEntry.put("timestamp-ms", filesystem.getFileStatus(mdPath).getModificationTime)
-    mlogEntry.put("metadata-file", mdPath.toString)
-    mlogNode.add(mlogEntry)
-
-    val newV = nextMetadataVersion(filesystem, metaDir, curV + 1)
-    val newMdPath = new Path(metaDir, s"v$newV.metadata.json")
-    val out = filesystem.create(newMdPath, true)
-    out.write(mapper.writeValueAsBytes(root))
-    out.close()
-    val hint = filesystem.create(hintPath, true)
-    hint.write(newV.toString.getBytes("UTF-8"))
-    hint.close()
-    newMdPath.toString
+    root.get("refs").asInstanceOf[ObjectNode].putObject("main")
+      .put("snapshot-id", newId)
+      .put("type", "branch")
+    commitMetadata(filesystem, metaDir, Some(cur), cur.version + 1, root).toString
   }
 
   /** Raw bytes of a small metadata file. */
-  private def readAvroBytes(filesystem: FileSystem, p: Path): Array[Byte] = {
+  private def readBytes(filesystem: FileSystem, p: Path): Array[Byte] = {
     val in = filesystem.open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()

@@ -226,7 +226,7 @@ object ShardedIngest {
     * connection for a schema-probe round-trip and plans a one-relation
     * scan, and a poll loop pays all of that EVERY cycle even though the
     * page schema cannot change mid-run. Here the caller passes the schema
-    * captured from the first (generic) cycle, and each shard becomes one
+    * resolved once ([[tableSchema]]), and each shard becomes one
     * partition of ONE RDD — still exactly one page query per shard,
     * executed on executors in parallel (the keyed-Flink-subtask analogue
     * is unchanged; nothing row-sized touches the driver), with partition i
@@ -261,6 +261,16 @@ object ShardedIngest {
     }
     jdbcScan(spark, url, sqls, schema, fetchSize)
   }
+
+  /** The schema of `SELECT * FROM table`, from the Spark JDBC source's own
+    * schema probe (one `WHERE 1=0` round-trip, no Spark job).
+    * Every page and delta query of the poll loops selects all columns of
+    * one table, so this is the schema [[viaJdbcResolved]] and [[jdbcScan]]
+    * read them under — resolved once per run, before the first cycle. */
+  def tableSchema(spark: SparkSession, url: String,
+      table: String): org.apache.spark.sql.types.StructType =
+    spark.read.format("jdbc").option("url", url)
+      .option("query", s"SELECT * FROM $table").load().schema
 
   /** One arbitrary SQL query per partition against `url`, converted to a
     * DataFrame under a KNOWN schema — the schema-probe-free executor-side

@@ -11,8 +11,9 @@ import org.apache.spark.sql.streaming.Trigger
   * — shard re-discovery (`SELECT DISTINCT shard`, ColumnSource.java:39-54's
   * forever interval loop), then one pushed-down page per shard
   * (`… WHERE shard = ? ORDER BY sortCols OFFSET … FETCH …`,
-  * SnowflakeProcessFunction.java:88-122) via [[ShardedIngest.viaJdbc]], then
-  * an exactly-once append into the managed table.
+  * SnowflakeProcessFunction.java:88-122) via
+  * [[ShardedIngest.viaJdbcResolved]], then an exactly-once append into the
+  * managed table.
   *
   * State design (the kill/restart contract): the per-shard offset map is NOT
   * a second durable store that could diverge from the data — the COMMITTED
@@ -151,10 +152,9 @@ object JdbcPollStream {
     // steady-state driver state (re-derived from the table when None):
     // the reference's per-shard ValueState offsets + the cycle counter
     @volatile var state: Option[(Map[String, Long], Long)] = None
-    // page schema, resolved by the FIRST cycle's generic JDBC read and
-    // reused by every later cycle (r16): the schema cannot change mid-run,
-    // so re-probing it per shard per 50 ms tick was pure fixed cost
-    @volatile var pageSchema: Option[org.apache.spark.sql.types.StructType] = None
+    // page schema, resolved once per run (r16): the schema cannot change
+    // mid-run, so re-probing it per shard per 50 ms tick was pure fixed cost
+    val pageSchema = ShardedIngest.tableSchema(spark, cfg.url, cfg.table)
 
     def pollCycle(batchId: Long): Boolean = {
       val (offsets, lastCycle) = graft.core.trace("poll.state")(state.getOrElse {
@@ -165,16 +165,8 @@ object JdbcPollStream {
       // enter at offset 0 (ColumnSource re-polls DISTINCT forever)
       val shards = graft.core.trace("poll.discover")(ShardedIngest.discoverShardsJdbc(
         spark, cfg.url, cfg.table, cfg.shardCol, cfg.dialect))
+      if (shards.isEmpty) return true // an empty source table is drained
       val page = graft.core.trace("poll.page") {
-        val p = pageSchema match {
-          case Some(sch) => ShardedIngest.viaJdbcResolved(spark, cfg.url, cfg.table,
-            cfg.shardCol, cfg.sortCols, offsets, cfg.pageSize, shards, cfg.dialect, sch)
-          case None =>
-            val generic = ShardedIngest.viaJdbc(spark, cfg.url, cfg.table, cfg.shardCol,
-              cfg.sortCols, offsets, cfg.pageSize, shards, cfg.dialect)
-            pageSchema = Some(generic.schema)
-            generic
-        }
         // ONE database pass shared by the counts job and the append write:
         // persisted (spillable) instead of the former eager localCheckpoint
         // — the counts job below is what fills the cache, so this phase no
@@ -183,14 +175,15 @@ object JdbcPollStream {
         // block is exactly-once-safe: each shard page is a total-ORDER-BY
         // OFFSET/FETCH query, deterministic by construction. The cycle
         // unpersists before returning.
-        p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        ShardedIngest.viaJdbcResolved(spark, cfg.url, cfg.table, cfg.shardCol,
+          cfg.sortCols, offsets, cfg.pageSize, shards, cfg.dialect, pageSchema)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
       try {
-        // per-shard page counts WITHOUT a shuffle (r16): both page forms
-        // guarantee partition i holds shard shards(i)'s page (the generic
-        // form is a union of one single-partition scan per shard, in order;
-        // viaJdbcResolved documents the same contract), so one count-only
-        // pass over the cached blocks replaces the groupBy exchange.
+        // per-shard page counts WITHOUT a shuffle (r16): viaJdbcResolved
+        // guarantees partition i holds shard shards(i)'s page, so one
+        // count-only pass over the cached blocks replaces the groupBy
+        // exchange.
         val sizes = graft.core.trace("poll.counts") {
           spark.sparkContext.runJob(page.rdd,
             (it: Iterator[org.apache.spark.sql.Row]) => {
@@ -299,9 +292,9 @@ object JdbcPollStream {
     * the same restart/exactly-once contract as [[runUntilDrained]]. */
   def runCdcUntilDrained(spark: SparkSession, cfg: CdcConfig): Unit = {
     @volatile var cycles = 0L
-    // delta schema resolved once by the first cycle's generic read (r16):
-    // same per-cycle fixed-cost removal as [[runUntilDrained]]'s pageSchema
-    @volatile var deltaSchema: Option[org.apache.spark.sql.types.StructType] = None
+    // delta schema resolved once per run (r16): same per-cycle fixed-cost
+    // removal as [[runUntilDrained]]'s pageSchema
+    val deltaSchema = ShardedIngest.tableSchema(spark, cfg.url, cfg.table)
     def pollCycle(batchId: Long): Boolean = {
       val predicate = cfg.incCol match {
         case None =>
@@ -312,14 +305,8 @@ object JdbcPollStream {
           s""""${cfg.tsCol}" > $hts OR ("${cfg.tsCol}" = $hts AND "$inc" > $hid)"""
       }
       val deltaSql = s"SELECT * FROM ${cfg.table} WHERE $predicate"
-      val delta = (deltaSchema match {
-        case Some(sch) => ShardedIngest.jdbcScan(spark, cfg.url, Seq(deltaSql), sch)
-        case None =>
-          val generic = spark.read.format("jdbc").option("url", cfg.url)
-            .option("query", deltaSql).load()
-          deltaSchema = Some(generic.schema)
-          generic
-      }).localCheckpoint(true) // pull once; feeds count + upsert
+      val delta = ShardedIngest.jdbcScan(spark, cfg.url, Seq(deltaSql), deltaSchema)
+        .localCheckpoint(true) // pull once; feeds count + upsert
       if (delta.isEmpty) return true // quiescent
       // track the watermark column(s) in the commit's manifest metrics so
       // the NEXT cycle's hwm derivation is metadata-only (no table scan)

@@ -26,18 +26,13 @@ object QTime {
     })
     val verbose = sys.env.contains("QTIME_JOBS")
     val qs = graft.SparkEntry.queries
-    // mirror graft.Bench's r16 measurement hygiene: no cached plan or
-    // persistent RDD survives between invocations, so the timed run cannot
-    // read the warm-up run's persisted intermediates
-    def dropCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     args.foreach { name =>
       qs.get(name) match {
         case Some(fn) =>
           fn(spark, sfDir).count()
-          dropCaches()
+          // graft.Bench's r16 measurement hygiene: the timed run cannot read
+          // the warm-up run's persisted intermediates
+          graft.Bench.dropCaches(spark)
           durs.clear()
           val t0 = System.nanoTime()
           val n = fn(spark, sfDir).count()
@@ -47,7 +42,7 @@ object QTime {
           println(f"QTIME $name%-35s $secs%8.3f s  ($n rows, ${ds.length} jobs, " +
             f"job-time ${ds.sum}%.2f s)")
           if (verbose) println("  jobs: " + ds.map(d => f"$d%.2f").mkString(", "))
-          dropCaches()
+          graft.Bench.dropCaches(spark)
         case None => println(s"QTIME $name UNKNOWN")
       }
     }

@@ -95,17 +95,6 @@ class ExactSubstrSpec extends SparkSpec {
     assert(scrub == Seq((1L, 2L, 0L, 1.0), (2L, 9L, 9L, 0.0), (3L, 9L, 9L, 0.0)))
   }
 
-  test("128-bit hash-key path emits exactly the string-gram path's spans") {
-    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    def spans(hashed: Boolean) =
-      ExactSubstr.duplicateSpans(docs, 8, hashGramKey = hashed)
-        .orderBy("doc_id", "span_start").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val hashedSpans = spans(true)
-    assert(hashedSpans == spans(false))
-    assert(hashedSpans.nonEmpty)
-  }
-
   test("scrub stats reconcile with the span table on the real corpus") {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val spans = ExactSubstr.duplicateSpans(docs, 8)

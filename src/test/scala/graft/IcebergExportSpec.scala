@@ -1093,6 +1093,82 @@ class IcebergExportSpec extends SparkSpec {
     assert(got == want, s"expired+amended readback wrong: ${got.size} vs ${want.size}")
   }
 
+  private def metaFs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+
+  private def readText(path: String): String = {
+    val in = metaFs.open(new org.apache.hadoop.fs.Path(path))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def hintOf(out: String): Int = readText(s"$out/metadata/version-hint.text").trim.toInt
+
+  /** The `metadata-file` entries of a metadata.json's metadata-log, in order. */
+  private def metadataLog(mdPath: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(readText(mdPath))
+      .get("metadata-log").elements().asScala.map(_.get("metadata-file").asText()).toSeq
+  }
+
+  test("a metadata file a crash left unreferenced is skipped and never logged") {
+    // a crash between the metadata write and the hint flip leaves
+    // v<N+1>.metadata.json on disk with the hint still at N: the next
+    // commit must not log it (it was never committed) and must not reuse
+    // its version number
+    val src = freshDir("orphan_src"); val out = freshDir("orphan_out")
+    VersionedTable.append((1L to 20L).map(i => (i, i * 2)).toDF("id", "v"), src) // v1
+    VersionedTable.append((21L to 40L).map(i => (i, i * 2)).toDF("id", "v"), src) // v2
+    val committed = IcebergExport.export(spark, src, out)
+    val n = hintOf(out)
+    assert(committed.endsWith(s"/v$n.metadata.json"))
+    val orphan = committed.replace(s"/v$n.metadata.json", s"/v${n + 1}.metadata.json")
+    org.apache.hadoop.fs.FileUtil.copy(metaFs, new org.apache.hadoop.fs.Path(committed),
+      metaFs, new org.apache.hadoop.fs.Path(orphan), false, spark.sparkContext.hadoopConfiguration)
+    assert(hintOf(out) == n)
+    VersionedTable.append((41L to 60L).map(i => (i, i * 2)).toDF("id", "v"), src) // v3
+    val md = IcebergExport.exportIncremental(spark, src, out)
+    assert(hintOf(out) == n + 2, "the new version must skip the orphan's number")
+    assert(md.endsWith(s"/v${n + 2}.metadata.json"))
+    assert(metadataLog(md) == Seq(committed), "the log must list only committed files")
+    assert(IcebergRead.read(spark, out).select($"id").as[Long].collect().toSet ==
+      (1L to 60L).toSet)
+  }
+
+  test("every writer commits through one path: log = previous log + previous file") {
+    // export → exportIncremental → exportExpire → exportIncremental →
+    // exportPositionDeletes: after each commit the hint names the returned
+    // file, its metadata-log extends the previous file's log by that file,
+    // and the independent reader sees the expected rows
+    val src = freshDir("chain_src"); val out = freshDir("chain_out")
+    def batch(lo: Long, hi: Long) = (lo to hi).map(i => (i, i * 3)).toDF("id", "v")
+    var prev: Option[String] = None
+    def checkCommit(md: String, wantIds: Set[Long]): Unit = {
+      assert(md.endsWith(s"/v${hintOf(out)}.metadata.json"), s"hint does not name $md")
+      assert(IcebergRead.currentMetadataPath(spark, out) == md)
+      assert(metadataLog(md) == prev.map(p => metadataLog(p) :+ p).getOrElse(Nil),
+        s"metadata-log of $md")
+      assert(IcebergRead.read(spark, out).select($"id").as[Long].collect().toSet == wantIds)
+      prev = Some(md)
+    }
+    VersionedTable.append(batch(1, 20), src)  // v1
+    VersionedTable.append(batch(21, 40), src) // v2
+    checkCommit(IcebergExport.export(spark, src, out), (1L to 40L).toSet)
+    VersionedTable.append(batch(41, 60), src) // v3
+    checkCommit(IcebergExport.exportIncremental(spark, src, out), (1L to 60L).toSet)
+    checkCommit(IcebergExport.exportExpire(spark, out, keep = 2), (1L to 60L).toSet)
+    VersionedTable.append(batch(61, 80), src) // v4
+    checkCommit(IcebergExport.exportIncremental(spark, src, out), (1L to 80L).toSet)
+    val meta = IcebergRead.tableMeta(spark, IcebergRead.currentMetadataPath(spark, out))
+    assert(meta.snapshots.map(_.sequenceNumber) == Seq(2L, 3L, 4L))
+    val paths = IcebergRead.dataFiles(spark, meta, meta.currentSnapshotId).map(_.path)
+    val positions = spark.read.parquet(paths: _*)
+      .select(col("_metadata.file_path").as("file_path"),
+        col("_metadata.row_index").as("pos"), $"id")
+      .filter($"id" % 10 === 0).select($"file_path", $"pos")
+    checkCommit(IcebergExport.exportPositionDeletes(spark, out, positions),
+      (1L to 80L).filterNot(_ % 10 == 0).toSet)
+    assert(metadataLog(prev.get).size == 4)
+  }
+
   test("IcebergTransforms properties: bucket range/stability, truncate algebra, ordinal monotonicity (r15)") {
     import graft.sources.IcebergTransforms._
     val rnd = new scala.util.Random(42)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sinks.VersionedTable
+import graft.sources.ShardedIngest
 import graft.streaming.JdbcPollStream
 import org.apache.spark.sql.{SaveMode, DataFrame}
 import org.apache.spark.sql.functions._
@@ -24,13 +25,14 @@ class JdbcStreamSpec extends SparkSpec {
     (s"$base/table", s"$base/ck")
   }
 
-  /** Two shards × 25 rows each, ordered by `ord`. */
-  private def stage(url: String): DataFrame = {
+  /** Two shards × 25 rows each, ordered by `ord`; `mode` Append inserts
+    * them into an existing table. */
+  private def stage(url: String, mode: SaveMode = SaveMode.Overwrite): DataFrame = {
     val df = (for { sh <- Seq("a", "b"); i <- 1 to 25 }
       yield (sh, i.toLong)).toDF("shard", "ord")
     df.write.format("jdbc").option("url", url).option("dbtable", "t")
       .option("createTableColumnTypes", "shard VARCHAR(32)")
-      .mode(SaveMode.Overwrite).save()
+      .mode(mode).save()
     df
   }
 
@@ -58,6 +60,27 @@ class JdbcStreamSpec extends SparkSpec {
     // one commit per non-empty cycle: 3 pages per shard, aligned cycles
     assert(VersionedTable.versions(spark, table).size == 3)
     // the recovery invariant: committed per-shard counts ARE the offsets
+    assert(JdbcPollStream.committedOffsets(spark, table, "shard") ==
+      Map("a" -> 25L, "b" -> 25L))
+  }
+
+  test("an empty source table drains with no restart and no commit; rows inserted later drain on the next run") {
+    val url = "jdbc:derby:memory:jps_empty;create=true"
+    val (table, ck) = freshDirs("empty")
+    Seq.empty[(String, Long)].toDF("shard", "ord")
+      .write.format("jdbc").option("url", url).option("dbtable", "t")
+      .option("createTableColumnTypes", "shard VARCHAR(32)")
+      .mode(SaveMode.Overwrite).save()
+    // maxRestarts = 0: a failing cycle propagates instead of restarting
+    JdbcPollStream.runUntilDrained(spark, cfg(url, table, ck).copy(maxRestarts = 0))
+    assert(VersionedTable.versions(spark, table).isEmpty, "an empty source must commit nothing")
+    stage(url, SaveMode.Append)
+    // the once-per-run schema probe resolves the generic page read's schema
+    val shards = ShardedIngest.discoverShardsJdbc(spark, url, "t", "shard")
+    assert(ShardedIngest.tableSchema(spark, url, "t") ==
+      ShardedIngest.viaJdbc(spark, url, "t", "shard", Seq("ord"), Map.empty, 10L, shards).schema)
+    JdbcPollStream.runUntilDrained(spark, cfg(url, table, ck).copy(maxRestarts = 0))
+    assert(readBack(table) == expected.sorted)
     assert(JdbcPollStream.committedOffsets(spark, table, "shard") ==
       Map("a" -> 25L, "b" -> 25L))
   }
