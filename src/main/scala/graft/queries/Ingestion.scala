@@ -2040,9 +2040,10 @@ object Ingestion {
       (s, d) => {
         import s.implicits._
         // Iceberg's COUNT(*) aggregate pushdown: every data dir carries a
-        // _rowcount sidecar summed from its parquet FOOTERS at write time
-        // (driver-side, no Spark job), so the count of a 100 TB table is
-        // answered from O(dirs) tiny files — no data pages, no executors.
+        // _rowcount sidecar holding the row count its write observed (in
+        // the write job itself, no extra Spark job), so the count of a
+        // 100 TB table is answered from O(dirs) tiny files — no data
+        // pages, no executors.
         // VersionedTableSpec proves the no-data-read claim by physically
         // moving the data dirs away and counting anyway, and that
         // outstanding MOR deletes refuse the metadata path (row liveness
@@ -2056,7 +2057,7 @@ object Ingestion {
           .getOrElse(sys.error("metadata count unavailable"))).toDF("n_rows")
       },
       Some("SELECT count(*) AS n_rows FROM orders"),
-      "Metadata-only COUNT(*): per-dir footer-summed _rowcount sidecars, " +
+      "Metadata-only COUNT(*): per-dir _rowcount sidecars counted by each write, " +
         "O(dirs) driver I/O, zero data files opened."),
 
     "table_files" -> Q(

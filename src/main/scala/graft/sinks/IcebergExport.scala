@@ -1066,6 +1066,8 @@ object IcebergExport {
       .map(_.get("sequence-number").asInt()).toSeq
     val (minSeq, maxSeq) =
       (seqs.minOption.getOrElse(Int.MinValue), seqs.maxOption.getOrElse(cur.version))
+    // nothing committed since the export: keep the current metadata file
+    if (VersionedTable.versions(spark, tablePath).forall(_ <= maxSeq)) return cur.path.toString
     exportOnto(spark, tablePath, outPath, partitionCols,
       math.max(sinceVersion, minSeq), resumeAfter = maxSeq, hiddenPartition, Some(cur))
   }

@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.operators.Upsert
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Snapshot-versioned table format over parquet: the mechanics the reference
   * gets from Iceberg format v2 (IcebergTableManager.java:83-90 — snapshots,
@@ -104,7 +104,7 @@ object VersionedTable {
   /** Create version 1 or replace the visible contents with a new snapshot
     * (prior snapshots stay readable via [[readVersion]] until expired). */
   def overwrite(df: DataFrame, path: String): Int = {
-    val d = writeDataDir(df, path)
+    val d = writeDataDir(df, path).dir
     commit(df.sparkSession, path, cur => {
       guardRenamedAway(df.columns.toSeq, cur)
       Snapshot(0, Seq(d))
@@ -117,8 +117,7 @@ object VersionedTable {
     * no append is ever silently dropped. Existing per-dir stats are carried;
     * the new dir has none, so pruned reads always include it. */
   def append(df: DataFrame, path: String): Int =
-    commitAdd(df.sparkSession, path, df.columns.toSeq)(
-      Added(Some(writeDataDir(df, path)))).get
+    commitAdd(df.sparkSession, path, df.columns.toSeq)(writeDataDir(df, path).added()).get
 
   /** Merge-on-read equality-field upsert (Iceberg v2 equality deletes — the
     * mechanism the reference's sink turns on with
@@ -152,17 +151,16 @@ object VersionedTable {
       statsCols: Seq[String] = Nil, pairCols: Option[(String, String)] = None): Int =
     morCommit(df, path, keys, None, statsCols, pairCols).get
 
-  /** The body [[upsertMor]] and [[upsertMorOnce]] share: metrics, data dir,
-    * key-set delete dir, one commit. */
+  /** The body [[upsertMor]] and [[upsertMorOnce]] share: data dir with its
+    * observed metrics, key-set delete dir, one commit. */
   private def morCommit(df: DataFrame, path: String, keys: Seq[String],
       batchId: Option[Long], statsCols: Seq[String],
       pairCols: Option[(String, String)]): Option[Int] =
     commitAdd(df.sparkSession, path, df.columns.toSeq, Some(keys), batchId) {
-      val bounds = trackedBounds(df, statsCols, pairCols)
-      val d = writeDataDir(df, path)
+      val added = writeTracked(df, path, statsCols, pairCols.toSeq)
       val del = writeDataDir(
         df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-      Added(Some(d), bounds, delete = Some(del))
+      added.copy(delete = Some(del.dir), rows = added.rows + del.rows)
     }
 
   /** The manifest key a composite (c1, c2) pair bound is stored under. The
@@ -170,44 +168,46 @@ object VersionedTable {
     * the key can never shadow a real column in [[readPruned]] lookups. */
   private[graft] def pairStatsKey(c1: String, c2: String): String = s"$c1,$c2"
 
-  /** One aggregate over the batch: per-column [min, max] for `statsCols`
-    * (the [[appendWithStats]] typing rules — integral bounds as numbers,
-    * string bounds lexicographic) plus, when `pairCols` is set, the exact
-    * lexicographic (c1, c2) [min, max] (both columns integral), encoded
-    * `"v1:v2"` under [[pairStatsKey]]. All-NULL columns get no entry. */
-  private def trackedBounds(df: DataFrame, statsCols: Seq[String],
-      pairCols: Option[(String, String)]): Map[String, ColBounds] = {
-    import org.apache.spark.sql.functions.{col, max, min, struct}
+  /** A stats column's bound kind: `"long"` (integral, numeric compare),
+    * `"string"` (lexicographic), or none for any other type. */
+  private def boundKind(df: DataFrame, c: String): Option[String] = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    def integral(c: String): Boolean = df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _                                             => false
+    df.schema(c).dataType match {
+      case LongType | IntegerType | ShortType | ByteType => Some("long")
+      case StringType                                    => Some("string")
+      case _                                             => None
     }
-    val typs = statsCols.map { c =>
-      df.schema(c).dataType match {
-        case _ if integral(c) => c -> "long"
-        case StringType       => c -> "string"
-        case other => throw new IllegalArgumentException(
-          s"stats column $c: unsupported type $other (integral and string only)")
-      }
-    }.toMap
+  }
+
+  /** Write `df` as a data dir whose observed write also records per-column
+    * [min, max] for `statsCols` (the [[appendWithStats]] typing rules, see
+    * [[boundKind]]) plus, for each of `pairCols`, the exact lexicographic
+    * (c1, c2) [min, max] (both columns integral), encoded `"v1:v2"` under
+    * [[pairStatsKey]]. All-NULL columns get no entry. The bounds come from
+    * the write job itself, so no second pass over the input runs. */
+  private def writeTracked(df: DataFrame, path: String, statsCols: Seq[String],
+      pairCols: Seq[(String, String)]): Added = {
+    import org.apache.spark.sql.functions.{col, max, min, struct}
+    val typs = statsCols.map(c => c -> boundKind(df, c).getOrElse(
+      throw new IllegalArgumentException(
+        s"stats column $c: unsupported type ${df.schema(c).dataType} (integral and string only)")))
     pairCols.foreach { case (a, b) =>
-      require(integral(a) && integral(b),
+      require(boundKind(df, a).contains("long") && boundKind(df, b).contains("long"),
         s"pair bound columns ($a, $b) must both be integral")
     }
     val aggs = statsCols.flatMap(c => Seq(min(col(c)).cast("string"), max(col(c)).cast("string"))) ++
-      pairCols.toSeq.flatMap { case (a, b) =>
+      pairCols.flatMap { case (a, b) =>
         val p = struct(col(a).cast("long"), col(b).cast("long"))
         Seq(min(p), max(p))
       }
-    if (aggs.isEmpty) return Map.empty
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val colBounds = statsCols.zipWithIndex.flatMap { case (c, i) =>
+    val w = writeDataDir(df, path, aggs)
+    val row = w.observed
+    val colBounds = typs.zipWithIndex.flatMap { case ((c, typ), i) =>
       if (row.isNullAt(2 * i)) None
-      else Some(c -> ColBounds(row.getString(2 * i), row.getString(2 * i + 1), typs(c)))
-    }.toMap
-    val pairBounds = pairCols.flatMap { case (a, b) =>
-      val base = 2 * statsCols.size
+      else Some(c -> ColBounds(row.getString(2 * i), row.getString(2 * i + 1), typ))
+    }
+    val pairBounds = pairCols.zipWithIndex.flatMap { case ((a, b), j) =>
+      val base = 2 * (statsCols.size + j)
       if (row.isNullAt(base)) None
       else {
         def enc(i: Int): String = {
@@ -216,7 +216,7 @@ object VersionedTable {
         Some(pairStatsKey(a, b) -> ColBounds(enc(base), enc(base + 1), "string"))
       }
     }
-    colBounds ++ pairBounds
+    w.added((colBounds ++ pairBounds).toMap)
   }
 
   /** METADATA-ONLY high watermark: the max over the current snapshot's data
@@ -266,9 +266,10 @@ object VersionedTable {
     * dirs, so an at-least-once foreachBatch redelivery is recognized and
     * skipped. This is the reference's sink verbatim — a streaming upsert
     * into an Iceberg-v2 table IS equality-delete MOR guarded by
-    * max-committed-checkpoint-id. Returns false on replay.
+    * max-committed-checkpoint-id. Returns false on replay, and on an empty
+    * batch, which commits nothing ([[appendOnce]]'s rule).
     *
-    * `statsCols`/`pairCols` attach [[trackedBounds]] metrics to the data
+    * `statsCols`/`pairCols` attach [[writeTracked]] metrics to the data
     * dir — the CDC poll loop passes its watermark columns here so
     * [[manifestHwm]]/[[manifestHwmPair]] stay derivable without a scan. */
   def upsertMorOnce(df: DataFrame, path: String, keys: Seq[String], batchId: Long,
@@ -284,7 +285,8 @@ object VersionedTable {
     * new image). Splitting the batch into upsertMorOnce + deleteWhereKeys
     * would be TWO commits — a crash between them replays into a
     * half-applied batch — so the whole batch is one atomic snapshot under
-    * the [[appendOnce]] batch-id contract. Returns false on replay. */
+    * the [[appendOnce]] batch-id contract. Returns false on replay, and when
+    * both sides are empty, which commits nothing ([[appendOnce]]'s rule). */
   def applyCdcOnce(upserts: DataFrame, deleteKeysDf: DataFrame, path: String,
       keys: Seq[String], batchId: Long): Boolean = {
     val keyCols = keys.map(org.apache.spark.sql.functions.col)
@@ -293,7 +295,7 @@ object VersionedTable {
       val del = writeDataDir(
         upserts.select(keyCols: _*)
           .unionByName(deleteKeysDf.select(keyCols: _*)).distinct(), path)
-      Added(Some(d), delete = Some(del))
+      d.added().copy(delete = Some(del.dir), rows = d.rows + del.rows)
     }.isDefined
   }
 
@@ -306,7 +308,7 @@ object VersionedTable {
     commitAdd(keysDf.sparkSession, path, Nil, Some(keys)) {
       val del = writeDataDir(
         keysDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-      Added(None, delete = Some(del))
+      Added(None, delete = Some(del.dir), rows = del.rows)
     }.get
 
   /** Rename a column as a METADATA-ONLY commit (Iceberg `ALTER TABLE …
@@ -417,11 +419,13 @@ object VersionedTable {
   }
 
   /** What one additive commit adds: a data dir (with its per-column bounds
-    * and optional declared sort order) and/or an equality-delete dir. */
+    * and optional declared sort order) and/or an equality-delete dir, and
+    * the rows their writes observed. */
   private final case class Added(data: Option[String],
       bounds: Map[String, ColBounds] = Map.empty,
       sortOrder: Option[Seq[(String, String)]] = None,
-      delete: Option[String] = None)
+      delete: Option[String] = None,
+      rows: Long = 0L)
 
   /** The one commit path of every ADDITIVE write shape (the appends,
     * [[upsertMor]], [[applyCdcOnce]], [[deleteWhereKeys]]): `write` stages
@@ -438,7 +442,10 @@ object VersionedTable {
     *    post-race snapshot is authoritative;
     *  - `columns` (the data dir's schema) may not re-use a renamed-away
     *    name ([[guardRenamedAway]]).
-    * Returns the committed version, or None when `batchId` was a replay. */
+    * A `batchId` commit whose staged dirs hold zero observed rows deletes
+    * them and commits nothing (an empty batch advances no batch id).
+    * Returns the committed version, or None when `batchId` was a replay or
+    * the batch was empty. */
   private def commitAdd(spark: SparkSession, path: String, columns: Seq[String],
       keys: Option[Seq[String]] = None, batchId: Option[Long] = None)(
       write: => Added): Option[Int] = {
@@ -446,6 +453,10 @@ object VersionedTable {
     if (batchId.exists(replayed(pre, _))) return None
     keys.foreach(requireKeys(pre, _))
     val added = graft.core.trace("table.write")(write)
+    if (batchId.isDefined && added.rows == 0L) {
+      (added.data ++ added.delete).foreach(d => fs(spark, path).delete(new Path(path, d), true))
+      return None
+    }
     try Some(graft.core.trace("table.commit")(commit(spark, path, { cur =>
       batchId.foreach(guardBatch(cur, _))
       guardRenamedAway(columns, cur)
@@ -493,15 +504,27 @@ object VersionedTable {
     * ascending order — exactly what one streaming query produces; like
     * [[upsert]], concurrent WRITERS must be externally serialized.
     *
-    * @param knownCount the exact row count of `df` when the caller already
-    *        holds it (the poll loop counts its page before appending): the
-    *        row-count sidecar is then written directly instead of re-derived
-    *        from the just-written parquet footers — the footer reads were a
-    *        fixed ~50 ms of driver I/O on every 50 ms poll commit (r17). */
-  def appendOnce(df: DataFrame, path: String, batchId: Long,
-      knownCount: Option[Long] = None): Boolean =
-    commitAdd(df.sparkSession, path, df.columns.toSeq, batchId = Some(batchId))(
-      Added(Some(writeDataDir(df, path, knownCount)))).isDefined
+    * An EMPTY batch (its write observed zero rows) commits nothing and
+    * returns false: its staged dir is deleted, and its batch id is not
+    * recorded, so a later delivery of the same id can still commit rows. */
+  def appendOnce(df: DataFrame, path: String, batchId: Long): Boolean =
+    appendOnceObserved(df, path, batchId, Nil)._1
+
+  /** [[appendOnce]] that also returns what its write observed: the values of
+    * `observe` (aggregates over the written rows, evaluated in the write
+    * job's result stage), or None when the batch id was refused before any
+    * write ran. The poll loop passes its per-shard counts here, so the
+    * offsets it advances are the counts of the committed files. */
+  private[graft] def appendOnceObserved(df: DataFrame, path: String, batchId: Long,
+      observe: Seq[Column]): (Boolean, Option[Row]) = {
+    var seen: Option[Row] = None
+    val committed = commitAdd(df.sparkSession, path, df.columns.toSeq, batchId = Some(batchId)) {
+      val w = writeDataDir(df, path, observe)
+      seen = Some(w.observed)
+      w.added()
+    }
+    (committed.isDefined, seen)
+  }
 
   /** Idempotent equality-field upsert keyed by batch id — [[appendOnce]]'s
     * contract for the CDC-upsert sink shape ([[upsert]] semantics under
@@ -518,7 +541,7 @@ object VersionedTable {
           case None => df
           case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
         }
-        val d = writeDataDir(merged, path)
+        val d = writeDataDir(merged, path).dir
         // both guards re-run IN the lock: the exactly-once high-water mark
         // (concurrent redelivery) and the COW snapshot validation
         // (concurrent writer) — [[upsert]]'s protocol plus [[appendOnce]]'s
@@ -542,8 +565,8 @@ object VersionedTable {
   }
 
   /** Append with per-dir column metrics (Iceberg's file-level min/max
-    * stats, IcebergTableManager.java:22-25 metrics config): one agg over the
-    * batch records each tracked column's [min, max] in the manifest
+    * stats, IcebergTableManager.java:22-25 metrics config): the write's own
+    * observation records each tracked column's [min, max] in the manifest
     * (integral columns as numeric bounds, string columns as lexicographic
     * bounds), and [[readPruned]] later skips the dir when a scan range can't
     * overlap it. This is the metadata half of scan planning — at 100 TB it
@@ -551,10 +574,8 @@ object VersionedTable {
     * ingest window a query touches. All-NULL columns get no bounds for the
     * dir (never pruned on that column). */
   def appendWithStats(df: DataFrame, path: String, statsCols: Seq[String]): Int =
-    commitAdd(df.sparkSession, path, df.columns.toSeq) {
-      val bounds = trackedBounds(df, statsCols, None)
-      Added(Some(writeDataDir(df, path)), bounds)
-    }.get
+    commitAdd(df.sparkSession, path, df.columns.toSeq)(
+      writeTracked(df, path, statsCols, Nil)).get
 
   /** Single-column convenience form of [[appendWithStats]]. */
   def appendWithStats(df: DataFrame, path: String, statsCol: String): Int =
@@ -587,19 +608,9 @@ object VersionedTable {
       case (c, "asc") => col(c).asc
       case (c, _)     => col(c).desc
     }: _*)
-    val statsCols = {
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-      sortCols.map(_._1).filter { c =>
-        df.schema(c).dataType match {
-          case LongType | IntegerType | ShortType | ByteType | StringType => true
-          case _                                                          => false
-        }
-      }
-    }
-    commitAdd(df.sparkSession, path, df.columns.toSeq) {
-      val bounds = trackedBounds(sorted, statsCols, None)
-      Added(Some(writeDataDir(sorted, path)), bounds, Some(sortCols))
-    }.get
+    val statsCols = sortCols.map(_._1).filter(boundKind(df, _).isDefined)
+    commitAdd(df.sparkSession, path, df.columns.toSeq)(
+      writeTracked(sorted, path, statsCols, Nil).copy(sortOrder = Some(sortCols))).get
   }
 
   /** Append with HIDDEN-partitioning metrics — Iceberg's partition
@@ -619,13 +630,12 @@ object VersionedTable {
     require(!df.columns.contains(name),
       s"hidden stats name $name collides with a data column; use appendWithStats")
     commitAdd(df.sparkSession, path, df.columns.toSeq) {
-      val d = writeDataDir(df, path)
-      val row = df.agg(min(transform).cast("long").cast("string"),
-        max(transform).cast("long").cast("string")).head()
-      val bounds =
-        if (row.isNullAt(0)) Map.empty[String, ColBounds]
-        else Map(name -> ColBounds(row.getString(0), row.getString(1), "long"))
-      Added(Some(d), bounds)
+      val w = writeDataDir(df, path,
+        Seq(min(transform), max(transform)).map(_.cast("long").cast("string")))
+      val row = w.observed
+      w.added(
+        if (row.isNullAt(0)) Map.empty
+        else Map(name -> ColBounds(row.getString(0), row.getString(1), "long")))
     }.get
   }
 
@@ -665,14 +675,14 @@ object VersionedTable {
       expectedItems: Long = 1L << 20, fpp: Double = 0.01): Int = {
     val spark = df.sparkSession
     commitAdd(spark, path, df.columns.toSeq) {
-      val d = writeDataDir(df, path)
-      val dirPath = new Path(path, d)
+      val w = writeDataDir(df, path)
+      val dirPath = new Path(path, w.dir)
       val bf = spark.read.parquet(dirPath.toString)
         .stat.bloomFilter(column, expectedItems, fpp)
       val out = fs(spark, path).create(new Path(dirPath, s"_bloom_$column"), true)
       bf.writeTo(out)
       out.close()
-      Added(Some(d))
+      w.added()
     }.get
   }
 
@@ -749,7 +759,7 @@ object VersionedTable {
           case None => df
           case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
         }
-        val d = writeDataDir(merged, path)
+        val d = writeDataDir(merged, path).dir
         return commit(spark, path, { cur =>
           if (cur.map(_.version) != planned.map(_.version))
             throw new CommitAborted(s"table advanced past " +
@@ -796,7 +806,11 @@ object VersionedTable {
     * tiny micro-batch appends. Like [[upsert]], the rewrite is computed
     * against the snapshot current at call time and committed under
     * VALIDATED optimistic retry — a concurrent commit aborts the attempt
-    * in-lock and the rewrite re-plans, so nothing is silently dropped. */
+    * in-lock and the rewrite re-plans, so nothing is silently dropped. The
+    * rewritten dir's write re-records the bounds of every column and
+    * [[pairStatsKey]] pair the replaced snapshot tracked that it can
+    * recompute (the column is still in the data, under that name), so
+    * [[manifestHwm]]/[[manifestHwmPair]] stay metadata-only afterwards. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     var attempts = 0
@@ -807,7 +821,15 @@ object VersionedTable {
           throw new IllegalStateException(s"no snapshots at $path"))
         val data = readSnapshot(spark, path, snap)
         val parts = math.max(1L, (data.count() + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-        val d = writeDataDir(data.repartition(parts), path)
+        // re-record every bound the replaced snapshot tracked that the
+        // rewrite can recompute (a pair key only matches as a pair)
+        val tracked = snap.colStats.values.flatMap(_.keys).toSeq.distinct.sorted
+        def kind(c: String) = if (data.columns.contains(c)) boundKind(data, c) else None
+        val pairs = tracked.map(_.split(',')).collect {
+          case Array(a, b) if kind(a).contains("long") && kind(b).contains("long") => (a, b)
+        }
+        val w = writeTracked(data.repartition(parts), path,
+          tracked.filter(kind(_).isDefined), pairs)
         // full rewrite replaces every dir and materializes every delete —
         // valid only against the EXACT snapshot it read. A concurrent
         // commit (whose dirs/deletes the rewrite doesn't contain) aborts
@@ -816,7 +838,8 @@ object VersionedTable {
           if (cur.map(_.version) != Some(snap.version))
             throw new CommitAborted(s"table advanced past v${snap.version} " +
               "during the rewrite")
-          Snapshot(0, Seq(d), lastBatch = cur.flatMap(_.lastBatch))
+          Snapshot(0, w.data.toSeq, w.data.map(_ -> w.bounds).toMap,
+            lastBatch = cur.flatMap(_.lastBatch))
         })
       } catch {
         case _: CommitAborted if attempts < 10 => // re-plan
@@ -835,8 +858,9 @@ object VersionedTable {
     * This is the compaction a 100 TB table actually runs: streaming sinks
     * deposit one small dir per micro-batch, and collecting that debris must
     * cost O(debris), never an O(table) rewrite ([[compact]] is the full
-    * rewrite). Row counts come from parquet footers (count-only scans), so
-    * planning is metadata-cheap. No-op — current version returned, no
+    * rewrite). Row counts come from the dirs' `_rowcount` sidecars, so
+    * planning launches no Spark job (a dir without one is counted by a
+    * count-only scan). No-op — current version returned, no
     * commit — when fewer than two dirs qualify. Refuses MOR tables:
     * outstanding equality deletes change row liveness per-dir, so
     * [[compact]] must materialize them first. Dirs appended concurrently
@@ -850,8 +874,9 @@ object VersionedTable {
       throw new IllegalStateException(s"no snapshots at $path"))
     require(snap.deletes.isEmpty,
       s"compactSmall on a MOR table with outstanding deletes: run compact() first")
-    val counts = snap.dirs.map(d =>
-      d -> spark.read.parquet(new Path(path, d).toString).count())
+    val filesystem = fs(spark, path)
+    val counts = snap.dirs.map(d => d -> readRowCountSidecar(filesystem, path, d).getOrElse(
+      spark.read.parquet(new Path(path, d).toString).count()))
     val small = counts.filter(_._2 < smallThresholdRows).map(_._1)
     if (small.size < 2) return snap.version
     val smallSet = small.toSet
@@ -869,7 +894,7 @@ object VersionedTable {
       .parquet(small.map(d => new Path(path, d).toString): _*)
     val merged =
       if (snap.renames.isEmpty) raw else coalesceAliases(raw, snap.renames)
-    val d = writeDataDir(merged.repartition(parts), path)
+    val d = writeDataDir(merged.repartition(parts), path).dir
     try {
       commit(spark, path, { cur =>
         val c = cur.getOrElse(snap)
@@ -1167,50 +1192,35 @@ object VersionedTable {
 
   // ---- internals ---------------------------------------------------------
 
-  private def writeDataDir(df: DataFrame, path: String,
-      knownCount: Option[Long] = None): String = {
-    val d = s"d-${System.nanoTime()}-${counter.incrementAndGet()}"
-    graft.core.trace("table.write.parquet")(df.write.parquet(new Path(path, d).toString))
-    graft.core.trace("table.write.sidecar")(knownCount match {
-      case Some(n) => writeRowCountValue(df.sparkSession, new Path(path, d), n)
-      case None    => writeRowCountSidecar(df.sparkSession, new Path(path, d))
-    })
-    d
+  /** A written dir, its row count and the caller's observed aggregates. */
+  private final case class Written(dir: String, rows: Long, observed: Row) {
+    def added(bounds: Map[String, ColBounds] = Map.empty): Added =
+      Added(Some(dir), bounds, rows = rows)
   }
 
-  /** Per-dir record-count sidecar (`_rowcount`), the Iceberg
-    * `record_count` file metric: summed from the parquet FOOTERS of the
-    * just-written dir on the driver — a few KB of I/O per file, NO Spark
-    * job, no data pages touched. Data dirs are immutable, so the count
-    * never needs maintenance, rides along when a clone references the dir
-    * absolutely, and [[countFromMetadata]] can answer COUNT(*) without
-    * opening any data file. Failure to write the sidecar is non-fatal —
-    * it is an optimization, and readers treat a missing sidecar as
-    * "metadata cannot answer". */
-  private def writeRowCountSidecar(spark: SparkSession, dir: Path): Unit =
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val filesystem = dir.getFileSystem(conf)
-      val total = filesystem.listStatus(dir)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-      val out = filesystem.create(new Path(dir, RowCountFile), true)
-      try out.write(total.toString.getBytes("UTF-8")) finally out.close()
-    } catch { case _: Exception => () }
-
-  /** [[writeRowCountSidecar]] with the count already in hand (caller-side
-    * exact count, e.g. the poll loop's per-cycle page count): one tiny file
-    * write, zero footer reads. Same non-fatal contract. */
-  private def writeRowCountValue(spark: SparkSession, dir: Path, n: Long): Unit =
-    try {
-      val filesystem = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = filesystem.create(new Path(dir, RowCountFile), true)
-      try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-    } catch { case _: Exception => () }
+  /** Write `df` as a fresh data dir — the one place a commit learns what a
+    * dir holds. One `Observation` directly above the write counts the rows
+    * and evaluates `observe` in the write job's result stage, so the numbers
+    * are those of the committed files (a failed task attempt contributes
+    * nothing) and no second pass over the input runs. The count becomes the
+    * dir's `_rowcount` sidecar (Iceberg's `record_count`, read by
+    * [[countFromMetadata]]); failing to write it is non-fatal. */
+  private def writeDataDir(df: DataFrame, path: String,
+      observe: Seq[Column] = Nil): Written = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val d = s"d-${System.nanoTime()}-${counter.incrementAndGet()}"
+    val obs = org.apache.spark.sql.Observation()
+    val metrics = (count(lit(1)) +: observe).zipWithIndex.map { case (c, i) => c.as(s"m$i") }
+    graft.core.trace("table.write.parquet")(df.observe(obs, metrics.head, metrics.tail: _*)
+      .write.parquet(new Path(path, d).toString))
+    val got = obs.get
+    val rows = got("m0").asInstanceOf[Long]
+    graft.core.trace("table.write.sidecar")(try {
+      val out = fs(df.sparkSession, path).create(new Path(new Path(path, d), RowCountFile), true)
+      try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
+    } catch { case _: Exception => () })
+    Written(d, rows, Row.fromSeq(observe.indices.map(i => got(s"m${i + 1}"))))
+  }
 
   private val RowCountFile = "_rowcount"
 

@@ -21,7 +21,8 @@ import org.apache.spark.sql.streaming.Trigger
   * [[VersionedTable.appendOnce]] (batch id committed atomically with the
   * rows), and a shard's offset is, by construction, the number of its rows
   * already committed. In steady state the driver advances an in-memory map
-  * by `+= rowCount` after each commit (the reference's ValueState update,
+  * by `+= rowCount` after each commit, the count observed on the rows that
+  * commit wrote (the reference's ValueState update,
   * SnowflakeProcessFunction.java:113); at (re)start — and whenever a
   * replayed batch id is detected — the map is re-derived from the committed
   * table with one per-shard count aggregate. So:
@@ -53,7 +54,7 @@ object JdbcPollStream {
     * sizing): pages are narrow event rows, so ~4 M rows lands a file in the
     * 100 MB–1 GB band. Small cycles collapse to one file; a cycle paging
     * more than this per shard keeps its per-shard write parallelism (the
-    * coalesce is capped at the shard count). */
+    * file count is capped at the shard count). */
   private val RowsPerFile = 4L << 20
 
   /** @param afterCommit driver-side hook run after each successful page
@@ -61,7 +62,9 @@ object JdbcPollStream {
     *        inject crashes (throw ⇒ the streaming query fails and the
     *        caller's restart loop exercises recovery) and where live-source
     *        mutations (late shard arrival) are staged.
-    * @param beforeCommit same seam, before the commit — a throw here models
+    * @param beforeCommit same seam, run before each cycle's page is read
+    *        and written (the read happens inside the write) and committed —
+    *        also on the cycle that turns out drained; a throw here models
     *        the crash-before-sink-commit replay path. */
   final case class Config(
       url: String,
@@ -120,7 +123,8 @@ object JdbcPollStream {
       val q = ticks.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (_: DataFrame, batchId: Long) =>
-          if (graft.core.trace("poll.tick")(onTick(batchId))) drained = true
+          // a tick that fires before the loop below stops the query polls nothing
+          if (!drained && graft.core.trace("poll.tick")(onTick(batchId))) drained = true
         }
         .trigger(Trigger.ProcessingTime(intervalMs))
         .start()
@@ -166,59 +170,40 @@ object JdbcPollStream {
       val shards = graft.core.trace("poll.discover")(ShardedIngest.discoverShardsJdbc(
         spark, cfg.url, cfg.table, cfg.shardCol, cfg.dialect))
       if (shards.isEmpty) return true // an empty source table is drained
-      val page = graft.core.trace("poll.page") {
-        // ONE database pass shared by the counts job and the append write:
-        // persisted (spillable) instead of the former eager localCheckpoint
-        // — the counts job below is what fills the cache, so this phase no
-        // longer pays its own materialization job (r17; was one job to
-        // checkpoint + one to count, per 50 ms cycle). Recompute on a lost
-        // block is exactly-once-safe: each shard page is a total-ORDER-BY
-        // OFFSET/FETCH query, deterministic by construction. The cycle
-        // unpersists before returning.
+      // Output file sizing (guide §6): a page is often far below one data
+      // file, so collapse it to ceil(rows/RowsPerFile) files, rows bounded
+      // by the page size (the page is only read inside its write). The
+      // coalesce runs merged shards' page queries one after another in one
+      // task; on 2000-row pages over 8 shards that drained faster than a
+      // round-robin exchange querying them in parallel.
+      val nFiles = math.max(1L, math.min(shards.size.toLong,
+        (cfg.pageSize * shards.size + RowsPerFile - 1) / RowsPerFile)).toInt
+      val cycle = lastCycle + 1
+      val page = graft.core.trace("poll.page")(
         ShardedIngest.viaJdbcResolved(spark, cfg.url, cfg.table, cfg.shardCol,
           cfg.sortCols, offsets, cfg.pageSize, shards, cfg.dialect, pageSchema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      try {
-        // per-shard page counts WITHOUT a shuffle (r16): viaJdbcResolved
-        // guarantees partition i holds shard shards(i)'s page, so one
-        // count-only pass over the cached blocks replaces the groupBy
-        // exchange.
-        val sizes = graft.core.trace("poll.counts") {
-          spark.sparkContext.runJob(page.rdd,
-            (it: Iterator[org.apache.spark.sql.Row]) => {
-              var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
-            })
-        }
-        val counts = shards.zip(sizes).filter(_._2 > 0L).toMap
-        if (counts.isEmpty) return true // drained
-        val total = sizes.sum
-        // Output file sizing (guide §6): a cycle's page is often far below
-        // one sensible data file (sf0.1: ~3.5 k rows across 5 shard
-        // partitions) — collapse to ceil(rows/RowsPerFile) files instead of
-        // one-tiny-file-per-shard, capped at the shard count so a genuinely
-        // large cycle keeps its per-shard write parallelism. coalesce is
-        // narrow (no shuffle) over the cached page.
-        val nFiles = math.max(1L, math.min(shards.size.toLong,
-          (total + RowsPerFile - 1) / RowsPerFile)).toInt
-        val cycle = lastCycle + 1
-        cfg.beforeCommit(cycle)
-        val committed = graft.core.trace("poll.append")(VersionedTable.appendOnce(
-          page.withColumn("cycle", lit(cycle)).coalesce(nFiles),
-          cfg.tablePath, batchId,
-          knownCount = Some(total))) // counted above: no footer re-read
-        if (committed) {
-          // the reference's offset += rowCount (ValueState update)
-          val advanced = (offsets.keySet ++ counts.keySet).map(k =>
-            k -> (offsets.getOrElse(k, 0L) + counts.getOrElse(k, 0L))).toMap
-          state = Some((advanced, cycle))
-          cfg.afterCommit(cycle)
-        } else {
-          // replayed batch id: the committed table is the truth — re-derive
-          state = None
-        }
+          .withColumn("cycle", lit(cycle)).coalesce(nFiles))
+      cfg.beforeCommit(cycle)
+      // The page is read once, by its write, which observes the per-shard
+      // counts: offsets advance by exactly what the commit holds.
+      val (committed, observed) = graft.core.trace("poll.append")(
+        VersionedTable.appendOnceObserved(page, cfg.tablePath, batchId,
+          shards.map(s => count_if(col(cfg.shardCol) === s))))
+      val counts = observed.toSeq.flatMap(r => shards.indices.map(i => shards(i) -> r.getLong(i)))
+        .filter(_._2 > 0L).toMap
+      if (committed) {
+        // the reference's offset += rowCount (ValueState update)
+        val advanced = (offsets.keySet ++ counts.keySet).map(k =>
+          k -> (offsets.getOrElse(k, 0L) + counts.getOrElse(k, 0L))).toMap
+        state = Some((advanced, cycle))
+        cfg.afterCommit(cycle)
         false
-      } finally page.unpersist(false)
+      } else if (observed.isDefined && counts.isEmpty) true // every page empty: drained
+      else {
+        // replayed batch id: the committed table is the truth — re-derive
+        state = None
+        false
+      }
     }
 
     runTickLoop(spark, cfg.checkpointDir, cfg.intervalMs, cfg.timeoutMs,

@@ -347,6 +347,27 @@ class IcebergExportSpec extends SparkSpec {
     assert(e.getMessage.contains("version-hint"), e.getMessage)
   }
 
+  test("idle incremental exports commit no metadata version; the next commit extends the chain") {
+    val src = freshDir("idle_src"); val out = freshDir("idle_out")
+    VersionedTable.append((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), src)
+    VersionedTable.append((21L to 30L).map(i => (i, s"v$i")).toDF("id", "v"), src)
+    val first = IcebergExport.export(spark, src, out)
+    val metaDir = java.nio.file.Paths.get(out.stripPrefix("file:"), "metadata")
+    def hint(): String =
+      new String(java.nio.file.Files.readAllBytes(metaDir.resolve("version-hint.text")), "UTF-8")
+    def mdFiles(): Set[String] =
+      metaDir.toFile.list().filter(_.endsWith(".metadata.json")).toSet
+    val (hint0, files0) = (hint(), mdFiles())
+    for (_ <- 1 to 2)
+      assert(IcebergExport.exportIncremental(spark, src, out) == first)
+    assert(hint() == hint0, "an idle export flipped the version hint")
+    assert(mdFiles() == files0, s"an idle export wrote metadata: ${mdFiles() -- files0}")
+    VersionedTable.append((31L to 35L).map(i => (i, s"v$i")).toDF("id", "v"), src)
+    val md = IcebergExport.exportIncremental(spark, src, out)
+    assert(mdFiles().size == files0.size + 1)
+    assert(IcebergRead.tableMeta(spark, md).snapshots.map(_.snapshotId) == Seq(1L, 2L, 3L))
+  }
+
   test("sinceVersion exports the post-compaction suffix faithfully") {
     // compact is a full rewrite (drops every dir) — the full chain rightly
     // fails the monotone check, and sinceVersion is the recourse: the

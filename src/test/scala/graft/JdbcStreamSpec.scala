@@ -104,6 +104,39 @@ class JdbcStreamSpec extends SparkSpec {
     assert(VersionedTable.versions(spark, table).size == 3)
   }
 
+  test("exactly-once when the source grows under a page and its blocks are lost") {
+    // the live-source fault: rows land at the tail of a shard whose page is
+    // short, and any cached page block is evicted, between the page's
+    // planning and its commit. A page that is counted once and written from
+    // a second read commits more rows than its offsets advance by, and the
+    // next cycle re-reads them; the offsets must be the counts of the rows
+    // the commit holds.
+    val url = "jdbc:derby:memory:jps_grow;create=true"
+    val (table, ck) = freshDirs("grow")
+    stage(url)
+    spark.sharedState.cacheManager.clearCache() // earlier suites share the session
+    val tail = (26 to 28).map(i => ("a", i.toLong))
+    @volatile var injected = false
+    JdbcPollStream.runUntilDrained(spark, cfg(url, table, ck).copy(
+      beforeCommit = { cycle =>
+        if (cycle == 3L && !injected) {
+          injected = true
+          tail.toDF("shard", "ord").write.format("jdbc").option("url", url)
+            .option("dbtable", "t").mode(SaveMode.Append).save()
+          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        }
+      }))
+    assert(injected)
+    val source = (for { sh <- Seq("a", "b"); i <- 1 to 25 } yield (sh, i.toLong)) ++ tail
+    val got = VersionedTable.read(spark, table).select($"shard", $"ord")
+      .as[(String, Long)].collect().toSeq
+    assert(got.size == got.distinct.size, s"${got.size - got.distinct.size} duplicated rows")
+    assert(got.sorted == source.sorted)
+    assert(JdbcPollStream.committedOffsets(spark, table, "shard") ==
+      Map("a" -> 28L, "b" -> 25L))
+    assert(spark.sharedState.cacheManager.isEmpty, "the poll loop left a cached frame")
+  }
+
   test("hard kill + cold restart: a fresh run over the same checkpoint finishes exactly-once") {
     val url = "jdbc:derby:memory:jps_kill;create=true"
     val (table, ck) = freshDirs("kill")
@@ -196,6 +229,30 @@ class JdbcStreamSpec extends SparkSpec {
     val r = VersionedTable.read(spark, table)
       .agg(max(struct($"ts", $"id"))).head.getStruct(0)
     assert((r.getLong(0), r.getLong(1)) == hp)
+  }
+
+  test("compact keeps the watermark bounds: hwm derivation stays metadata-only") {
+    val (table, _) = freshDirs("hwm_compact")
+    assert(VersionedTable.upsertMorOnce(
+      Seq((1L, 10L, 1L), (2L, 20L, 2L)).toDF("id", "ts", "v"), table, Seq("id"), 0L,
+      statsCols = Seq("ts", "id"), pairCols = Some(("ts", "id"))))
+    assert(VersionedTable.upsertMorOnce(
+      Seq((3L, 30L, 3L), (9L, 25L, 9L), (2L, 26L, 5L)).toDF("id", "ts", "v"),
+      table, Seq("id"), 1L, statsCols = Seq("ts", "id"), pairCols = Some(("ts", "id"))))
+    VersionedTable.compact(spark, table, targetRowsPerFile = 1000L)
+    import org.apache.spark.sql.functions.{max, struct}
+    val merged = VersionedTable.read(spark, table)
+    val scanTs = merged.agg(max($"ts")).head.getLong(0)
+    val r = merged.agg(max(struct($"ts", $"id"))).head.getStruct(0)
+    var h = 0L
+    var hp = (0L, 0L)
+    val n = jobsLaunchedBy {
+      h = JdbcPollStream.committedHwm(spark, table, "ts")
+      hp = JdbcPollStream.committedHwmInc(spark, table, "ts", "id")
+    }
+    assert(n == 0, s"hwm derivation after compact launched $n Spark jobs")
+    assert(h == scanTs && h == 30L)
+    assert(hp == ((r.getLong(0), r.getLong(1))) && hp == ((30L, 3L)))
   }
 
   test("hwm falls back to the scan when a dir is untracked, and stays correct") {

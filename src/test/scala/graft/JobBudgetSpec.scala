@@ -1,6 +1,10 @@
 package graft
 
 import graft.operators.{Ann, NearDup}
+import graft.sinks.{GraftTableWriter, VersionedTable}
+import graft.streaming.JdbcPollStream
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions.col
 
 /** Recorded Spark-job counts for operators whose plan is known: the jobs
   * launched while each call runs and its result is collected, in this
@@ -24,5 +28,56 @@ class JobBudgetSpec extends SparkSpec {
     val emb = core.table(spark, sf("sf0.01"), "embeddings")
     val jobs = jobsLaunchedBy(Ann.semanticDedup(emb, 0.45, k = 8, iters = 3).collect())
     assert(jobs <= 26, s"semanticDedup launched $jobs jobs, budget 26")
+  }
+
+  private def freshTable(name: String): String = {
+    val p = s"/tmp/graft_tables/job_budget_$name"
+    GraftTableWriter.drop(spark, p)
+    p
+  }
+
+  private def rows = (1L to 200L).map(i => (i, i * 3, s"s${i % 17}")).toDF("id", "ts", "k")
+
+  // The stats-tracking writes take their bounds from the observation on the
+  // data-dir write itself, so they launch only their dir writes: a plain
+  // append is 1 job, and a sorted write or an upsertMorOnce (data dir plus
+  // key-set delete dir) 3. The plans with a separate bounds aggregate took
+  // 2 more jobs each (3, 3, 5 and 5).
+  test("stats-tracking writes launch no job besides their dir writes") {
+    val stats = jobsLaunchedBy(
+      VersionedTable.appendWithStats(rows, freshTable("stats"), Seq("ts", "k")))
+    assert(stats <= 1, s"appendWithStats launched $stats jobs, budget 1")
+    val hidden = jobsLaunchedBy(VersionedTable.appendWithHiddenStats(
+      rows, freshTable("hidden"), "ts_bucket", (col("ts") / 10).cast("long")))
+    assert(hidden <= 1, s"appendWithHiddenStats launched $hidden jobs, budget 1")
+    val sorted = jobsLaunchedBy(
+      VersionedTable.appendSorted(rows, freshTable("sorted"), Seq("ts" -> "desc")))
+    assert(sorted <= 3, s"appendSorted launched $sorted jobs, budget 3")
+    val mor = jobsLaunchedBy(VersionedTable.upsertMorOnce(rows, freshTable("mor"),
+      Seq("id"), 0L, statsCols = Seq("ts", "id"), pairCols = Some(("ts", "id"))))
+    assert(mor <= 3, s"upsertMorOnce with stats launched $mor jobs, budget 3")
+  }
+
+  test("one non-empty poll cycle: its page is read only by its write") {
+    // the run stops at the first commit (a throw in afterCommit with no
+    // restart allowed), so exactly one non-empty cycle is counted. The plan
+    // that persisted the page and counted it with its own job took 2.
+    val url = "jdbc:derby:memory:job_budget_poll;create=true"
+    val base = "/tmp/graft_stream/job_budget_poll"
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    (for { sh <- Seq("a", "b"); i <- 1 to 5 } yield (sh, i.toLong)).toDF("shard", "ord")
+      .write.format("jdbc").option("url", url).option("dbtable", "t")
+      .option("createTableColumnTypes", "shard VARCHAR(32)").mode(SaveMode.Overwrite).save()
+    val jobs = jobsLaunchedBy {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        JdbcPollStream.runUntilDrained(spark, JdbcPollStream.Config(
+          url = url, table = "t", shardCol = "shard", sortCols = Seq("ord"), pageSize = 10L,
+          tablePath = s"$base/table", checkpointDir = s"$base/ck", maxRestarts = 0,
+          afterCommit = _ => throw new RuntimeException("stop after the first commit")))
+      }
+    }
+    assert(VersionedTable.read(spark, s"$base/table").count() == 10L)
+    assert(jobs <= 1, s"one non-empty poll cycle launched $jobs jobs, budget 1")
   }
 }

@@ -398,6 +398,31 @@ class VersionedTableSpec extends SparkSpec {
       .sameElements(Array(1L, 2L, 3L, 4L)))
   }
 
+  test("an empty batch-id batch commits nothing, leaves no dir, and does not consume its id") {
+    val path = "/tmp/graft_tables/spec_empty_once"
+    GraftTableWriter.drop(spark, path)
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def dataDirs(): Set[String] =
+      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) Set.empty
+      else fs.listStatus(new org.apache.hadoop.fs.Path(path)).map(_.getPath.getName)
+        .filter(_.startsWith("d-")).toSet
+    assert(!VersionedTable.appendOnce(empty, path, batchId = 0))
+    assert(!VersionedTable.upsertMorOnce(empty, path, Seq("id"), batchId = 0))
+    assert(!VersionedTable.applyCdcOnce(empty, empty.select("id"), path, Seq("id"), batchId = 0))
+    assert(VersionedTable.versions(spark, path).isEmpty)
+    assert(dataDirs().isEmpty, s"empty batches left dirs behind: ${dataDirs()}")
+    // the id an empty delivery carried is still free for rows
+    assert(VersionedTable.appendOnce(Seq((1L, "a")).toDF("id", "v"), path, batchId = 0))
+    assert(!VersionedTable.upsertMorOnce(empty, path, Seq("id"), batchId = 1))
+    // a pure-delete CDC batch holds rows in its delete dir, so it commits
+    assert(VersionedTable.applyCdcOnce(empty, Seq(Tuple1(1L)).toDF("id"), path, Seq("id"), 1))
+    assert(VersionedTable.read(spark, path).count() == 0L)
+    assert(VersionedTable.versions(spark, path).size == 2)
+    // the append's dir, plus the CDC batch's (empty) data dir and delete dir
+    assert(dataDirs().size == 3, dataDirs().toString)
+  }
+
   test("upsertMorOnce skips a replayed batch; the applied batch merges by sequence") {
     val path = "/tmp/graft_tables/spec_vt_moronce"
     GraftTableWriter.drop(spark, path)
@@ -494,6 +519,32 @@ class VersionedTableSpec extends SparkSpec {
     }
     assert(VersionedTable.countFromMetadata(spark, path) == Some(100L),
       "count must come from sidecars alone, not from data files")
+  }
+
+  test("compactSmall plans from the _rowcount sidecars: no count job per dir") {
+    val path = "/tmp/graft_tables/spec_compact_small_plan"
+    GraftTableWriter.drop(spark, path)
+    for (i <- 0 until 6)
+      VersionedTable.append(spark.range(i * 50L, i * 50L + 50L).toDF("id"), path)
+    val v = VersionedTable.versions(spark, path).max
+    // no dir is below the threshold: planning alone decides, and it reads
+    // only the sidecars
+    var got = 0
+    val n = jobsLaunchedBy {
+      got = VersionedTable.compactSmall(spark, path, smallThresholdRows = 10, targetRowsPerFile = 1000)
+    }
+    assert(got == v)
+    assert(n == 0, s"planning a 6-dir table launched $n jobs")
+    // a dir without a sidecar falls back to a count scan
+    val anyDir = VersionedTable.readManifestForTest(spark, path, v).dirs.head
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, anyDir, "_rowcount"))
+    val m = jobsLaunchedBy(VersionedTable.compactSmall(spark, path, 10, 1000))
+    assert(m >= 1, "a sidecar-less dir must be counted from its data")
+    // every dir below the threshold: the rewrite binpacks them into one
+    assert(VersionedTable.compactSmall(spark, path, 100, 1000) == v + 1)
+    assert(VersionedTable.readManifestForTest(spark, path, v + 1).dirs.size == 1)
+    assert(VersionedTable.read(spark, path).count() == 300L)
+    assert(VersionedTable.countFromMetadata(spark, path) == Some(300L))
   }
 
   test("countFromMetadata refuses while MOR deletes are outstanding, answers after compact") {
