@@ -51,9 +51,11 @@ object KTruss {
       rounds += 1
       require(rounds <= maxRounds,
         s"k-truss did not converge in $maxRounds peeling rounds")
-      val next = ckpt(e.join(edgeSupport(e), Seq("u", "v"))
+      val (support, oriented) = edgeSupport(e)
+      val next = ckpt(e.join(support, Seq("u", "v"))
         .filter(col("cnt") >= (k - 2).toLong)
         .select(col("u"), col("v")))
+      oriented.unpersist(false) // next is materialized; the round's wedges are done
       val n2 = next.count()
       ckpt.retire(e)
       converged = n2 == n || n2 == 0
@@ -65,8 +67,10 @@ object KTruss {
 
   /** Per-edge triangle support over canonical edges (u < v): the
     * degree-ordered wedge join, each triangle exploding to its three
-    * canonical edges, counted. Only edges with support ≥ 1 appear. */
-  private def edgeSupport(e: DataFrame): DataFrame = {
+    * canonical edges, counted. Only edges with support ≥ 1 appear. Also
+    * returns the persisted oriented-edge frame both wedge sides read; the
+    * caller releases it once the support is materialized. */
+  private def edgeSupport(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val oriented = e
@@ -86,11 +90,12 @@ object KTruss {
         least(col("a.t"), col("b.t")).as("u"),
         greatest(col("a.t"), col("b.t")).as("v"))
     val tri = wedges.join(e, Seq("u", "v"))
-    tri.select(explode(array(
+    val support = tri.select(explode(array(
         struct(least(col("c"), col("u")).as("u"), greatest(col("c"), col("u")).as("v")),
         struct(least(col("c"), col("v")).as("u"), greatest(col("c"), col("v")).as("v")),
         struct(col("u").as("u"), col("v").as("v")))).as("ed"))
       .select(col("ed.u").as("u"), col("ed.v").as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
+    (support, oriented)
   }
 }

@@ -3,6 +3,8 @@ package graft.sinks
 import graft.operators.Upsert
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Snapshot-versioned table format over parquet: the mechanics the reference
   * gets from Iceberg format v2 (IcebergTableManager.java:83-90 — snapshots,
@@ -23,8 +25,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   * and read only the dirs it lists, so they are isolated from concurrent
   * commits. [[append]] adds one data dir and re-lists the old ones — an
   * append to a 100 TB table writes only the new rows plus a manifest of
-  * O(dirs) strings. Schema evolution across snapshots is handled at read
-  * time via parquet `mergeSchema`.
+  * O(dirs) strings. The manifest records the schema each dir was written
+  * with (Iceberg's `schemas` list plus a schema id per dir), so readers
+  * take the schema from metadata and never infer it; schema evolution
+  * across snapshots is the fold of the recorded schemas at read time.
   */
 object VersionedTable {
 
@@ -92,6 +96,11 @@ object VersionedTable {
     * chain to each data dir — a dir written before the rename surfaces its
     * physical column under the current logical name. Time travel uses the
     * chain AS OF the read snapshot, so v1 still shows the old name. */
+  /** `schemas` maps each data and delete dir to the Spark schema its write
+    * held (`df.schema`, which equals the schema the writer embeds in the
+    * dir's parquet footers). Like `renames` and `sortOrders` it is carried
+    * centrally in the commit path. A dir committed before schemas were
+    * recorded has no entry; [[dirSchema]] falls back to its footer. */
   final case class Snapshot(version: Int, dirs: Seq[String],
       colStats: Map[String, Map[String, ColBounds]] = Map.empty,
       lastBatch: Option[Long] = None,
@@ -99,15 +108,16 @@ object VersionedTable {
       deletes: Seq[(String, Int)] = Nil,
       deleteKeys: Seq[String] = Nil,
       renames: Seq[(String, String)] = Nil,
-      sortOrders: Map[String, Seq[(String, String)]] = Map.empty)
+      sortOrders: Map[String, Seq[(String, String)]] = Map.empty,
+      schemas: Map[String, StructType] = Map.empty)
 
   /** Create version 1 or replace the visible contents with a new snapshot
     * (prior snapshots stay readable via [[readVersion]] until expired). */
   def overwrite(df: DataFrame, path: String): Int = {
-    val d = writeDataDir(df, path).dir
+    val w = writeDataDir(df, path)
     commit(df.sparkSession, path, cur => {
       guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, Seq(d))
+      Snapshot(0, Seq(w.dir), schemas = w.schemas)
     })
   }
 
@@ -157,10 +167,8 @@ object VersionedTable {
       batchId: Option[Long], statsCols: Seq[String],
       pairCols: Option[(String, String)]): Option[Int] =
     commitAdd(df.sparkSession, path, df.columns.toSeq, Some(keys), batchId) {
-      val added = writeTracked(df, path, statsCols, pairCols.toSeq)
-      val del = writeDataDir(
-        df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-      added.copy(delete = Some(del.dir), rows = added.rows + del.rows)
+      writeTracked(df, path, statsCols, pairCols.toSeq).withDelete(writeDataDir(
+        df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path))
     }
 
   /** The manifest key a composite (c1, c2) pair bound is stored under. The
@@ -291,11 +299,9 @@ object VersionedTable {
       keys: Seq[String], batchId: Long): Boolean = {
     val keyCols = keys.map(org.apache.spark.sql.functions.col)
     commitAdd(upserts.sparkSession, path, upserts.columns.toSeq, Some(keys), Some(batchId)) {
-      val d = writeDataDir(upserts, path)
-      val del = writeDataDir(
+      writeDataDir(upserts, path).added().withDelete(writeDataDir(
         upserts.select(keyCols: _*)
-          .unionByName(deleteKeysDf.select(keyCols: _*)).distinct(), path)
-      d.added().copy(delete = Some(del.dir), rows = d.rows + del.rows)
+          .unionByName(deleteKeysDf.select(keyCols: _*)).distinct(), path))
     }.isDefined
   }
 
@@ -306,9 +312,8 @@ object VersionedTable {
   def deleteWhereKeys(keysDf: DataFrame, path: String, keys: Seq[String]): Int =
     // no data dir, so no column name for the renamed-away guard to check
     commitAdd(keysDf.sparkSession, path, Nil, Some(keys)) {
-      val del = writeDataDir(
-        keysDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path)
-      Added(None, delete = Some(del.dir), rows = del.rows)
+      Added(None).withDelete(writeDataDir(
+        keysDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path))
     }.get
 
   /** Rename a column as a METADATA-ONLY commit (Iceberg `ALTER TABLE …
@@ -364,23 +369,17 @@ object VersionedTable {
     }
   }
 
-  /** Apply a rename chain to one dir's frame: each (from, to) in commit
-    * order, skipping pairs whose physical name this dir never carried. */
-  private def applyRenames(df: DataFrame,
-      renames: Seq[(String, String)]): DataFrame =
-    renames.foldLeft(df) { case (d, (f, t)) =>
-      if (d.columns.contains(f)) d.withColumnRenamed(f, t) else d
-    }
-
   /** Fold a merged-scan frame's physical ALIAS columns (one per name a
     * field ever had under `renames`) into single logical columns:
     * coalesce(newest … oldest alias). Correct because a data file carries
     * exactly one alias of a field, so at most one alias is non-null per
     * row — and a genuinely-NULL value has every alias NULL. Keeps the
-    * single multi-path scan plan (no per-dir union). */
+    * single multi-path scan plan (no per-dir union). With no renames the
+    * frame is returned as it is. */
   private def coalesceAliases(df: DataFrame,
       renames: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col}
+    if (renames.isEmpty) return df
     def fin(n: String): String =
       renames.foldLeft(n) { case (x, (f, t)) => if (x == f) t else x }
     val present = df.columns.toSeq
@@ -425,7 +424,12 @@ object VersionedTable {
       bounds: Map[String, ColBounds] = Map.empty,
       sortOrder: Option[Seq[(String, String)]] = None,
       delete: Option[String] = None,
-      rows: Long = 0L)
+      rows: Long = 0L,
+      schemas: Map[String, StructType] = Map.empty) {
+    /** This commit plus `del` as its equality-delete dir. */
+    def withDelete(del: Written): Added =
+      copy(delete = Some(del.dir), rows = rows + del.rows, schemas = schemas ++ del.schemas)
+  }
 
   /** The one commit path of every ADDITIVE write shape (the appends,
     * [[upsertMor]], [[applyCdcOnce]], [[deleteWhereKeys]]): `write` stages
@@ -470,7 +474,8 @@ object VersionedTable {
         dataSeq = base.dataSeq ++ added.data.map(_ -> v),
         deletes = base.deletes ++ added.delete.map(_ -> v),
         deleteKeys = keys.getOrElse(base.deleteKeys),
-        sortOrders = base.sortOrders ++ added.data.zip(added.sortOrder))
+        sortOrders = base.sortOrders ++ added.data.zip(added.sortOrder),
+        schemas = base.schemas ++ added.schemas)
     })))
     catch { case _: CommitAborted => None }
   }
@@ -531,17 +536,16 @@ object VersionedTable {
     * at-least-once foreachBatch delivery). */
   def upsertOnce(df: DataFrame, path: String, keys: Seq[String], batchId: Long): Boolean = {
     val spark = df.sparkSession
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        val planned = latest(spark, path)
-        if (replayed(planned, batchId)) return false
+    // a concurrent redelivery aborts the commit in-lock; its re-plan then
+    // sees the batch as replayed and returns false
+    replanning("upsertOnce", path) {
+      val planned = latest(spark, path)
+      !replayed(planned, batchId) && {
         val merged = planned match {
           case None => df
           case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
         }
-        val d = writeDataDir(merged, path).dir
+        val w = writeDataDir(merged, path)
         // both guards re-run IN the lock: the exactly-once high-water mark
         // (concurrent redelivery) and the COW snapshot validation
         // (concurrent writer) — [[upsert]]'s protocol plus [[appendOnce]]'s
@@ -550,18 +554,11 @@ object VersionedTable {
           if (cur.map(_.version) != planned.map(_.version))
             throw new CommitAborted("table advanced during the COW merge")
           guardRenamedAway(df.columns.toSeq, cur)
-          Snapshot(0, Seq(d), Map.empty, Some(batchId))
+          Snapshot(0, Seq(w.dir), Map.empty, Some(batchId), schemas = w.schemas)
         })
-        return true
-      } catch {
-        case a: CommitAborted =>
-          if (a.why.contains("already committed")) return false
-          if (attempts >= 10) throw new IllegalStateException(
-            s"upsertOnce lost the optimistic race $attempts times at $path")
-        case e: Throwable if isStaleRead(e) && attempts < 10 => // re-plan
+        true
       }
     }
-    false // unreachable
   }
 
   /** Append with per-dir column metrics (Iceberg's file-level min/max
@@ -677,7 +674,7 @@ object VersionedTable {
     commitAdd(spark, path, df.columns.toSeq) {
       val w = writeDataDir(df, path)
       val dirPath = new Path(path, w.dir)
-      val bf = spark.read.parquet(dirPath.toString)
+      val bf = spark.read.schema(w.schema).parquet(dirPath.toString)
         .stat.bloomFilter(column, expectedItems, fpp)
       val out = fs(spark, path).create(new Path(dirPath, s"_bloom_$column"), true)
       bf.writeTo(out)
@@ -750,27 +747,37 @@ object VersionedTable {
     * level a COW rewrite should fail loudly rather than starve. */
   def upsert(df: DataFrame, path: String, keys: Seq[String]): Int = {
     val spark = df.sparkSession
+    replanning("upsert", path) {
+      val planned = latest(spark, path)
+      val merged = planned match {
+        case None => df
+        case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
+      }
+      val w = writeDataDir(merged, path)
+      commit(spark, path, { cur =>
+        if (cur.map(_.version) != planned.map(_.version))
+          throw new CommitAborted(s"table advanced past " +
+            s"v${planned.map(_.version).getOrElse(0)} during the COW merge")
+        guardRenamedAway(df.columns.toSeq, cur)
+        Snapshot(0, Seq(w.dir), lastBatch = cur.flatMap(_.lastBatch), schemas = w.schemas)
+      })
+    }
+  }
+
+  /** Run one planned attempt of a VALIDATED optimistic rewrite ([[upsert]],
+    * [[upsertOnce]], [[compact]]) and re-plan it when its commit aborts in
+    * the lock (the table advanced past the planned snapshot) or its
+    * planning read went stale. Bounded: at some contention level a rewrite
+    * should fail loudly rather than starve. */
+  private def replanning[T](op: String, path: String)(attempt: => T): T = {
     var attempts = 0
     while (true) {
       attempts += 1
-      try {
-        val planned = latest(spark, path)
-        val merged = planned match {
-          case None => df
-          case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
-        }
-        val d = writeDataDir(merged, path).dir
-        return commit(spark, path, { cur =>
-          if (cur.map(_.version) != planned.map(_.version))
-            throw new CommitAborted(s"table advanced past " +
-              s"v${planned.map(_.version).getOrElse(0)} during the COW merge")
-          guardRenamedAway(df.columns.toSeq, cur)
-          Snapshot(0, Seq(d), lastBatch = cur.flatMap(_.lastBatch))
-        })
-      } catch {
+      try return attempt
+      catch {
         case _: CommitAborted if attempts < 10 => // re-plan against the new state
         case e: CommitAborted => throw new IllegalStateException(
-          s"upsert lost the optimistic race $attempts times at $path: ${e.why}")
+          s"$op lost the optimistic race $attempts times at $path: ${e.why}")
         // A planning read can see its snapshot's dirs vanish mid-merge when
         // concurrent rewrites + expire outpace it (retention < merge
         // duration — Iceberg's VACUUM-vs-reader caveat). For a WRITER the
@@ -778,7 +785,7 @@ object VersionedTable {
         case e: Throwable if isStaleRead(e) && attempts < 10 =>
       }
     }
-    -1 // unreachable
+    throw new IllegalStateException("unreachable")
   }
 
   /** A read that failed because a planned snapshot's data dirs were
@@ -813,42 +820,32 @@ object VersionedTable {
     * [[manifestHwm]]/[[manifestHwmPair]] stay metadata-only afterwards. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        val snap = latest(spark, path).getOrElse(
-          throw new IllegalStateException(s"no snapshots at $path"))
-        val data = readSnapshot(spark, path, snap)
-        val parts = math.max(1L, (data.count() + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-        // re-record every bound the replaced snapshot tracked that the
-        // rewrite can recompute (a pair key only matches as a pair)
-        val tracked = snap.colStats.values.flatMap(_.keys).toSeq.distinct.sorted
-        def kind(c: String) = if (data.columns.contains(c)) boundKind(data, c) else None
-        val pairs = tracked.map(_.split(',')).collect {
-          case Array(a, b) if kind(a).contains("long") && kind(b).contains("long") => (a, b)
-        }
-        val w = writeTracked(data.repartition(parts), path,
-          tracked.filter(kind(_).isDefined), pairs)
-        // full rewrite replaces every dir and materializes every delete —
-        // valid only against the EXACT snapshot it read. A concurrent
-        // commit (whose dirs/deletes the rewrite doesn't contain) aborts
-        // this attempt; the rewrite re-plans against the new state.
-        return commit(spark, path, { cur =>
-          if (cur.map(_.version) != Some(snap.version))
-            throw new CommitAborted(s"table advanced past v${snap.version} " +
-              "during the rewrite")
-          Snapshot(0, w.data.toSeq, w.data.map(_ -> w.bounds).toMap,
-            lastBatch = cur.flatMap(_.lastBatch))
-        })
-      } catch {
-        case _: CommitAborted if attempts < 10 => // re-plan
-        case e: CommitAborted => throw new IllegalStateException(
-          s"compact lost the optimistic race $attempts times at $path: ${e.why}")
-        case e: Throwable if isStaleRead(e) && attempts < 10 => // re-plan
+    replanning("compact", path) {
+      val snap = latest(spark, path).getOrElse(
+        throw new IllegalStateException(s"no snapshots at $path"))
+      val data = readSnapshot(spark, path, snap)
+      val parts = math.max(1L, (data.count() + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+      // re-record every bound the replaced snapshot tracked that the
+      // rewrite can recompute (a pair key only matches as a pair)
+      val tracked = snap.colStats.values.flatMap(_.keys).toSeq.distinct.sorted
+      def kind(c: String) = if (data.columns.contains(c)) boundKind(data, c) else None
+      val pairs = tracked.map(_.split(',')).collect {
+        case Array(a, b) if kind(a).contains("long") && kind(b).contains("long") => (a, b)
       }
+      val w = writeTracked(data.repartition(parts), path,
+        tracked.filter(kind(_).isDefined), pairs)
+      // full rewrite replaces every dir and materializes every delete —
+      // valid only against the EXACT snapshot it read. A concurrent
+      // commit (whose dirs/deletes the rewrite doesn't contain) aborts
+      // this attempt; the rewrite re-plans against the new state.
+      commit(spark, path, { cur =>
+        if (cur.map(_.version) != Some(snap.version))
+          throw new CommitAborted(s"table advanced past v${snap.version} " +
+            "during the rewrite")
+        Snapshot(0, w.data.toSeq, w.data.map(_ -> w.bounds).toMap,
+          lastBatch = cur.flatMap(_.lastBatch), schemas = w.schemas)
+      })
     }
-    -1 // unreachable
   }
 
   /** Selective small-file compaction (Iceberg's binpack
@@ -860,7 +857,7 @@ object VersionedTable {
     * cost O(debris), never an O(table) rewrite ([[compact]] is the full
     * rewrite). Row counts come from the dirs' `_rowcount` sidecars, so
     * planning launches no Spark job (a dir without one is counted by a
-    * count-only scan). No-op — current version returned, no
+    * count-only read of that dir). No-op — current version returned, no
     * commit — when fewer than two dirs qualify. Refuses MOR tables:
     * outstanding equality deletes change row liveness per-dir, so
     * [[compact]] must materialize them first. Dirs appended concurrently
@@ -876,25 +873,22 @@ object VersionedTable {
       s"compactSmall on a MOR table with outstanding deletes: run compact() first")
     val filesystem = fs(spark, path)
     val counts = snap.dirs.map(d => d -> readRowCountSidecar(filesystem, path, d).getOrElse(
-      spark.read.parquet(new Path(path, d).toString).count()))
+      readSnapshot(spark, path, snap.copy(dirs = Seq(d))).count()))
     val small = counts.filter(_._2 < smallThresholdRows).map(_._1)
     if (small.size < 2) return snap.version
     val smallSet = small.toSet
     val total = counts.collect { case (d, n) if smallSet(d) => n }.sum
     val parts = math.max(1L, (total + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    // Fold the snapshot's rename chain into the merged frame BEFORE writing:
-    // small dirs spanning a rename surface BOTH aliases of a field under the
-    // raw mergeSchema scan, and writing that two-alias frame would produce a
-    // single file physically carrying both names — graft reads stay correct
-    // (per row only one alias is non-null) but IcebergExport would map both
-    // columns of one file to the same field id and the exported table becomes
-    // unreadable. compact() gets this for free by reading via readSnapshot;
-    // this is the same fold (compacted files carry only logical names).
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(small.map(d => new Path(path, d).toString): _*)
-    val merged =
-      if (snap.renames.isEmpty) raw else coalesceAliases(raw, snap.renames)
-    val d = writeDataDir(merged.repartition(parts), path).dir
+    // Read through readSnapshot so the rename chain is folded BEFORE
+    // writing: small dirs spanning a rename carry BOTH aliases of a field,
+    // and writing that two-alias frame would produce a single file
+    // physically carrying both names — graft reads stay correct (per row
+    // only one alias is non-null) but IcebergExport would map both columns
+    // of one file to the same field id and the exported table becomes
+    // unreadable. Compacted files carry only logical names.
+    val w = writeDataDir(
+      readSnapshot(spark, path, snap.copy(dirs = small)).repartition(parts), path)
+    val d = w.dir
     try {
       commit(spark, path, { cur =>
         val c = cur.getOrElse(snap)
@@ -915,7 +909,7 @@ object VersionedTable {
           c.colStats.filter { case (dir, _) => !smallSet(dir) },
           c.lastBatch,
           c.dataSeq.filter { case (dir, _) => !smallSet(dir) } + (d -> nextV(cur)),
-          c.deletes, c.deleteKeys)
+          c.deletes, c.deleteKeys, schemas = w.schemas)
       })
     } catch { case _: CommitAborted =>
       latest(spark, path).map(_.version).getOrElse(snap.version)
@@ -969,24 +963,11 @@ object VersionedTable {
     * null-safe); keys must identify rows uniquely in both snapshots. */
   def changes(spark: SparkSession, path: String, fromV: Int, toV: Int,
       keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, struct, when}
-    val a = readVersion(spark, path, fromV)
-    val b = readVersion(spark, path, toV)
-    require(a.columns.toSeq == b.columns.toSeq,
-      s"changes(v$fromV -> v$toV): snapshots have different columns " +
-        s"(${a.columns.mkString(",")} vs ${b.columns.mkString(",")}) - diff after " +
-        "projecting to the common columns")
-    val nonKeys = a.columns.filterNot(keys.contains).toSeq
-    val ka = a.select(keys.map(col) :+ struct(nonKeys.map(col): _*).as("__a"): _*)
-    val kb = b.select(keys.map(col) :+ struct(nonKeys.map(col): _*).as("__b"): _*)
-    ka.join(kb, keys, "full_outer")
-      .withColumn("__op",
-        when(col("__a").isNull, "I")
-          .when(col("__b").isNull, "D")
-          .when(col("__a") =!= col("__b"), "U"))
-      .filter(col("__op").isNotNull)
-      .select(col("__op").as("op") +: keys.map(col) ++:
-        nonKeys.map(c => coalesce(col(s"__b.$c"), col(s"__a.$c")).as(c)): _*)
+    import org.apache.spark.sql.functions.{coalesce, col}
+    val ch = changesWithImages(spark, path, fromV, toV, keys)
+    val nonKeys = ch.schema("after").dataType.asInstanceOf[StructType].fieldNames.toSeq
+    ch.select(col("op") +: keys.map(col) ++:
+      nonKeys.map(c => coalesce(col(s"after.$c"), col(s"before.$c")).as(c)): _*)
   }
 
   /** [[changes]] with BOTH row images — the Iceberg/Delta change-data-feed
@@ -1002,7 +983,9 @@ object VersionedTable {
     val a = readVersion(spark, path, fromV)
     val b = readVersion(spark, path, toV)
     require(a.columns.toSeq == b.columns.toSeq,
-      s"changesWithImages(v$fromV -> v$toV): snapshots have different columns")
+      s"changes(v$fromV -> v$toV): snapshots have different columns " +
+        s"(${a.columns.mkString(",")} vs ${b.columns.mkString(",")}) - diff after " +
+        "projecting to the common columns")
     val nonKeys = a.columns.filterNot(keys.contains).toSeq
     val ka = a.select(keys.map(col) :+ struct(nonKeys.map(col): _*).as("before"): _*)
     val kb = b.select(keys.map(col) :+ struct(nonKeys.map(col): _*).as("after"): _*)
@@ -1108,17 +1091,23 @@ object VersionedTable {
     * clone's committed version.
     */
   def cloneAt(spark: SparkSession, srcPath: String, dstPath: String, version: Int): Int = {
-    val filesystem = fs(spark, srcPath)
     val snap = snapshot(spark, srcPath, version).getOrElse(
       throw new IllegalArgumentException(s"no snapshot v$version at $srcPath"))
-    val srcAbs = filesystem.makeQualified(new Path(srcPath)).toUri.getPath
-    def abs(d: String): String = if (d.startsWith("/")) d else s"$srcAbs/$d"
-    commit(spark, dstPath, _ => Snapshot(0, snap.dirs.map(abs),
-      snap.colStats.map { case (d, m) => abs(d) -> m }, None,
-      snap.dataSeq.map { case (d, s) => abs(d) -> s },
-      snap.deletes.map { case (d, s) => abs(d) -> s },
-      snap.deleteKeys,
-      snap.renames)) // the borrowed dirs' physical names need the SOURCE chain
+    commit(spark, dstPath, _ => borrowed(spark, srcPath, snap))
+  }
+
+  /** `snap` of the table at `path` as another table commits it: every dir
+    * referenced by ABSOLUTE path (no data moves), with its bounds,
+    * sequences, deletes and schema, and `snap`'s rename chain — the
+    * borrowed dirs' physical names need the chain of the table that wrote
+    * them. Shared by [[cloneAt]] and [[publish]]. */
+  private def borrowed(spark: SparkSession, path: String, snap: Snapshot): Snapshot = {
+    val pathAbs = fs(spark, path).makeQualified(new Path(path)).toUri.getPath
+    def abs(d: String): String = if (d.startsWith("/")) d else s"$pathAbs/$d"
+    def byAbs[V](m: Map[String, V]): Map[String, V] = m.map { case (d, x) => abs(d) -> x }
+    Snapshot(0, snap.dirs.map(abs), byAbs(snap.colStats), None, byAbs(snap.dataSeq),
+      snap.deletes.map { case (d, s) => abs(d) -> s }, snap.deleteKeys, snap.renames,
+      schemas = byAbs(snap.schemas))
   }
 
   /** Write-audit-publish fast-forward (Iceberg's WAP / `fast_forward`
@@ -1138,23 +1127,14 @@ object VersionedTable {
     */
   def publish(spark: SparkSession, branchPath: String, mainPath: String,
       expectedMainVersion: Int): Int = {
-    val filesystem = fs(spark, branchPath)
     val snap = latest(spark, branchPath).getOrElse(
       throw new IllegalArgumentException(s"publish: no snapshot at $branchPath"))
-    val brAbs = filesystem.makeQualified(new Path(branchPath)).toUri.getPath
-    def abs(d: String): String = if (d.startsWith("/")) d else s"$brAbs/$d"
     commit(spark, mainPath, { cur =>
       val curV = cur.map(_.version).getOrElse(0)
       if (curV != expectedMainVersion)
         throw new IllegalStateException(s"publish conflict: $mainPath is at " +
           s"v$curV but the branch was cut from v$expectedMainVersion")
-      Snapshot(0, snap.dirs.map(abs),
-        snap.colStats.map { case (d, m) => abs(d) -> m },
-        cur.flatMap(_.lastBatch),
-        snap.dataSeq.map { case (d, s) => abs(d) -> s },
-        snap.deletes.map { case (d, s) => abs(d) -> s },
-        snap.deleteKeys,
-        snap.renames) // the branch's chain governs its dirs' physical names
+      borrowed(spark, branchPath, snap).copy(lastBatch = cur.flatMap(_.lastBatch))
     })
   }
 
@@ -1192,10 +1172,13 @@ object VersionedTable {
 
   // ---- internals ---------------------------------------------------------
 
-  /** A written dir, its row count and the caller's observed aggregates. */
-  private final case class Written(dir: String, rows: Long, observed: Row) {
+  /** A written dir, its row count, the caller's observed aggregates and
+    * the schema the write held. */
+  private final case class Written(dir: String, rows: Long, observed: Row,
+      schema: StructType) {
+    def schemas: Map[String, StructType] = Map(dir -> schema)
     def added(bounds: Map[String, ColBounds] = Map.empty): Added =
-      Added(Some(dir), bounds, rows = rows)
+      Added(Some(dir), bounds, rows = rows, schemas = schemas)
   }
 
   /** Write `df` as a fresh data dir — the one place a commit learns what a
@@ -1204,7 +1187,8 @@ object VersionedTable {
     * are those of the committed files (a failed task attempt contributes
     * nothing) and no second pass over the input runs. The count becomes the
     * dir's `_rowcount` sidecar (Iceberg's `record_count`, read by
-    * [[countFromMetadata]]); failing to write it is non-fatal. */
+    * [[countFromMetadata]]); failing to write it is non-fatal. The
+    * written schema is `df.schema`, which the commit records. */
   private def writeDataDir(df: DataFrame, path: String,
       observe: Seq[Column] = Nil): Written = {
     import org.apache.spark.sql.functions.{count, lit}
@@ -1219,7 +1203,7 @@ object VersionedTable {
       val out = fs(df.sparkSession, path).create(new Path(new Path(path, d), RowCountFile), true)
       try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
     } catch { case _: Exception => () })
-    Written(d, rows, Row.fromSeq(observe.indices.map(i => got(s"m${i + 1}"))))
+    Written(d, rows, Row.fromSeq(observe.indices.map(i => got(s"m${i + 1}"))), df.schema)
   }
 
   private val RowCountFile = "_rowcount"
@@ -1367,14 +1351,16 @@ object VersionedTable {
       val withRenames = if (built.renames.isEmpty)
         built.copy(renames = cur.map(_.renames).getOrElse(Nil))
       else built
-      // per-dir SORT ORDERS are carried centrally too (r16): every commit
-      // keeps the recorded layout of the dirs it retains — a write shape
-      // that doesn't know about sort orders cannot silently strip the
-      // declared layout of existing dirs ([[appendSorted]] extends the map)
-      val carriedSorts = cur.map(_.sortOrders).getOrElse(Map.empty) ++
-        withRenames.sortOrders
-      val snap = withRenames.copy(
-        sortOrders = carriedSorts.filter { case (d, _) => withRenames.dirs.contains(d) })
+      // per-dir SORT ORDERS (r16) and SCHEMAS are carried centrally too:
+      // every commit keeps the recorded layout and schema of the dirs it
+      // retains — a write shape that doesn't know about them cannot
+      // silently strip them from existing dirs (each shape adds only its
+      // new dirs' entries)
+      val live = (built.dirs ++ built.deletes.map(_._1)).toSet
+      def carried[V](f: Snapshot => Map[String, V]): Map[String, V] =
+        (cur.map(f).getOrElse(Map.empty) ++ f(built)).filter { case (d, _) => live(d) }
+      val snap = withRenames.copy(sortOrders = carried(_.sortOrders),
+        schemas = carried(_.schemas))
       if (catalog.commitTable(spark, path, v - 1, manifestJson(v, snap)))
         return v
       attempt += 1
@@ -1383,54 +1369,98 @@ object VersionedTable {
     -1 // unreachable
   }
 
+  /** The one read path of every snapshot. The data dirs are ONE
+    * multi-path scan under the fold of their recorded schemas
+    * ([[dirSchema]], [[foldSchemas]]), so building the read launches no
+    * schema-inference job; the rename chain's physical aliases fold into
+    * logical columns ([[coalesceAliases]]). Merge-on-read: each row takes
+    * the sequence of its file's dir, the delete dirs are one key-schema
+    * scan collapsed to (key -> max delete sequence), and a row survives iff
+    * no strictly-later delete covers its key. ONE key-hash join at read
+    * time — the cost [[upsertMor]] deferred; [[compact]] materializes it
+    * away. */
   private def readSnapshot(spark: SparkSession, path: String, snap: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, concat, lit, max, raise_error,
+      regexp_replace, typedLit}
     require(snap.dirs.nonEmpty, s"snapshot v${snap.version} is empty")
-    if (snap.deletes.isEmpty && snap.renames.isEmpty && snap.dirs.size == 1)
-      // single-dir snapshot (every fresh overwrite, the staging shape the
-      // CDC/IVM rows read 4× each): one writeDataDir job wrote the dir, so
-      // all its files share one schema — plain read, no mergeSchema. This
-      // skips the distributed footer-merge JOB mergeSchema launches per
-      // read (r17: ~4 jobs per incremental_join_maintenance invocation).
-      spark.read.parquet(new Path(path, snap.dirs.head).toString)
-    else if (snap.deletes.isEmpty && snap.renames.isEmpty)
-      spark.read.option("mergeSchema", "true")
-        .parquet(snap.dirs.map(d => new Path(path, d).toString): _*)
-    else if (snap.deletes.isEmpty) {
-      // rename chain active: ONE multi-path mergeSchema scan still works —
-      // it surfaces every physical alias as its own column (NULL where a
-      // file lacks it), and since a file carries exactly one alias of a
-      // field, folding the alias group with coalesce(newest..oldest)
-      // reconstructs the logical column exactly (a genuinely-NULL value
-      // stays NULL: every alias is NULL for that row). This keeps the
-      // renamed read at the SAME single-scan plan shape as the rename-free
-      // path — the per-dir-union alternative measured a flat ~1.5 s of
-      // per-dir plan overhead at 20 dirs (ScaleBench rename_read_scale).
-      coalesceAliases(
-        spark.read.option("mergeSchema", "true")
-          .parquet(snap.dirs.map(d => new Path(path, d).toString): _*),
-        snap.renames)
-    } else {
-      // merge-on-read scan: each data dir is stamped with its sequence, the
-      // delete dirs collapse to (key -> max delete sequence), and a row
-      // survives iff no strictly-later delete covers its key. ONE key-hash
-      // join at read time — the cost [[upsertMor]] deferred; [[compact]]
-      // materializes it away.
-      import org.apache.spark.sql.functions.{col, lit, max}
-      val data = snap.dirs.map { d =>
-        applyRenames(
-          spark.read.option("mergeSchema", "true").parquet(new Path(path, d).toString),
-          snap.renames)
-          .withColumn("__seq", lit(snap.dataSeq.getOrElse(d, 0)))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      val dels = snap.deletes.map { case (d, s) =>
-        spark.read.parquet(new Path(path, d).toString).withColumn("__dseq", lit(s))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      val delMax = dels.groupBy(snap.deleteKeys.map(col): _*)
+    val filesystem = fs(spark, path)
+    def scan(dirs: Seq[String]): DataFrame =
+      spark.read.schema(foldSchemas(dirs.map(dirSchema(filesystem, path, snap, _))))
+        .parquet(dirs.map(d => new Path(path, d).toString): _*)
+    // a row's sequence, looked up by the FULL path of its file's dir: a
+    // clone's borrowed absolute dirs and its local dirs share one name space.
+    // Scheme and authority are cut from both sides (the scan reports local
+    // files as file:/… while a qualified path prints file:///…)
+    def withSeq(df: DataFrame, name: String, seqs: Seq[(String, Int)]): DataFrame = {
+      val byDir = typedLit(seqs.map { case (d, sq) =>
+        filesystem.makeQualified(new Path(path, d)).toUri.getRawPath -> sq }.toMap)
+      val dir = regexp_replace(df.metadataColumn("_metadata").getField("file_path"),
+        "^[a-zA-Z][-a-zA-Z0-9+.]*:(//[^/]*)?|/[^/]*$", "")
+      df.withColumn(name, coalesce(byDir(dir),
+        raise_error(concat(lit("no sequence recorded for "), dir))))
+    }
+    if (snap.deletes.isEmpty) coalesceAliases(scan(snap.dirs), snap.renames)
+    else {
+      val data = coalesceAliases(withSeq(scan(snap.dirs), "__seq",
+        snap.dirs.map(d => d -> snap.dataSeq.getOrElse(d, 0))), snap.renames)
+      val delMax = withSeq(scan(snap.deletes.map(_._1)), "__dseq", snap.deletes)
+        .groupBy(snap.deleteKeys.map(col): _*)
         .agg(max(col("__dseq")).as("__dseq"))
       data.join(delMax, snap.deleteKeys, "left_outer")
         .filter(col("__dseq").isNull || col("__dseq") <= col("__seq"))
         .drop("__seq", "__dseq")
     }
+  }
+
+  /** The schema `dir` was written with: the snapshot's record, or, for a
+    * dir committed before schemas were recorded, the one its parquet
+    * footer embeds ([[footerSchema]]). */
+  private[sinks] def dirSchema(filesystem: FileSystem, path: String, snap: Snapshot,
+      dir: String): StructType =
+    snap.schemas.getOrElse(dir, footerSchema(filesystem, new Path(path, dir)))
+
+  /** A dir's Spark schema from ONE raw parquet footer (~2 ms, no Spark
+    * job) — NOT via `spark.read.parquet(dir).schema`, whose DataFrame setup
+    * costs ~45 ms per call and launches an inference job. The file is the
+    * dir's first data file by Spark's rule (names starting with `_` or `.`
+    * are not data). Prefers the exact Spark schema the writer embedded in
+    * the footer key-value metadata; falls back to Spark's own parquet-type
+    * converter. */
+  private def footerSchema(filesystem: FileSystem, dir: Path): StructType = {
+    val first = filesystem.listStatus(dir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).headOption.getOrElse(
+        throw new IllegalArgumentException(s"no data files in $dir"))
+    val conf = filesystem.getConf
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first.getPath, conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val md = r.getFooter.getFileMetaData
+      Option(md.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+        .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(conf).convert(md.getSchema))
+    } finally r.close()
+  }
+
+  /** The read schema of several dirs: their schemas folded by field name
+    * in first-appearance order, new fields appended — the rule of Spark's
+    * parquet schema merge. A field recorded with two types fails loudly, as
+    * that merge does. */
+  private def foldSchemas(schemas: Seq[StructType]): StructType =
+    schemas.distinct.reduce(mergeType(_, _).asInstanceOf[StructType])
+
+  private def mergeType(a: DataType, b: DataType): DataType = (a, b) match {
+    case (x: StructType, y: StructType) =>
+      val merged = x.fields.map(f => y.fields.find(_.name == f.name).fold(f)(g =>
+        f.copy(dataType = mergeType(f.dataType, g.dataType), nullable = f.nullable || g.nullable)))
+      StructType(merged ++ y.fields.filterNot(g => x.fieldNames.contains(g.name)))
+    case (ArrayType(x, n), ArrayType(y, m))     => ArrayType(mergeType(x, y), n || m)
+    case (MapType(k, v, n), MapType(k2, v2, m)) => MapType(mergeType(k, k2), mergeType(v, v2), n || m)
+    case _ if a == b                            => a
+    case _ => throw new IllegalArgumentException(
+      s"cannot merge incompatible data types $a and $b across data dirs")
   }
 
   private def latest(spark: SparkSession, path: String): Option[Snapshot] =
@@ -1456,118 +1486,96 @@ object VersionedTable {
   private def readManifest(filesystem: FileSystem, path: String, v: Int): Snapshot = {
     val p = new Path(new Path(path, MetaDir), manifestName(v))
     val in = filesystem.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
-    parseManifest(new String(bytes, "UTF-8"))
+    try parseManifest(new String(in.readAllBytes(), "UTF-8")) finally in.close()
   }
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-  // one JSON string literal body: any run of non-quote chars or escaped chars
-  private val Lit = "\"((?:[^\"\\\\]|\\\\.)*)\""
-
-  /** Manifest JSON — flat, order-fixed, written and parsed locally so the
-    * format has zero library dependencies:
+  /** Manifest JSON — one object per snapshot, order-fixed:
     * `{"version":3,"dirs":["d-...","d-..."],
-    *   "colStats":[["d-...","col","long|string","lo","hi"],...]}`
-    * (colStats/lastBatch optional; bound values are JSON-escaped strings
-    * compared per their recorded type at read time). */
+    *   "colStats":[["d-...","col","long|string","lo","hi"],...],
+    *   "lastBatch":7,"seqs":[["d-...",2],...],
+    *   "deletes":[["d-...",3],...],"deleteKeys":["id"],
+    *   "renames":[["from","to"],...],"sortOrders":[["d-...","c1 asc,c2 desc"],...],
+    *   "schemaIds":[["d-...",0],...],"schemas":[{"type":"struct",...},...]}`
+    * Every field after dirs is optional; bound values are strings compared
+    * per their recorded type at read time. `schemas` lists each distinct
+    * dir schema once, as Spark's schema JSON, and `schemaIds` gives each
+    * data and delete dir its index in that list — Iceberg's `schemas` +
+    * schema-id shape, O(dirs) small entries. */
   private def manifestJson(v: Int, snap: Snapshot): String = {
-    val dirs = s""""dirs":[${snap.dirs.map(d => "\"" + d + "\"").mkString(",")}]"""
-    val entries = for {
+    val root = manifestMapper.createObjectNode().put("version", v)
+    // an array of rows of strings and ints, omitted when empty
+    def rows(field: String, rs: Seq[Seq[Any]]): Unit = if (rs.nonEmpty) {
+      val arr = root.putArray(field)
+      rs.foreach { r =>
+        val row = arr.addArray()
+        r.foreach { case i: Int => row.add(i); case x => row.add(x.toString) }
+      }
+    }
+    val dirs = root.putArray("dirs")
+    snap.dirs.foreach(d => dirs.add(d))
+    rows("colStats", for {
       d <- snap.dirs; (c, b) <- snap.colStats.getOrElse(d, Map.empty).toSeq.sortBy(_._1)
-    } yield s"""["${esc(d)}","${esc(c)}","${b.typ}","${esc(b.lo)}","${esc(b.hi)}"]"""
-    val stats = if (entries.isEmpty) "" else s""","colStats":[${entries.mkString(",")}]"""
-    val lastBatch = snap.lastBatch.map(b => s""","lastBatch":$b""").getOrElse("")
-    val seqs =
-      if (snap.dataSeq.isEmpty) ""
-      else s""","seqs":[${snap.dataSeq.toSeq.sortBy(_._1)
-        .map { case (d, sq) => s"""["${esc(d)}",$sq]""" }.mkString(",")}]"""
-    val dels =
-      if (snap.deletes.isEmpty) ""
-      else s""","deletes":[${snap.deletes
-        .map { case (d, sq) => s"""["${esc(d)}",$sq]""" }.mkString(",")}]""" +
-        s""","deleteKeys":[${snap.deleteKeys.map(k => "\"" + esc(k) + "\"").mkString(",")}]"""
-    val rens =
-      if (snap.renames.isEmpty) ""
-      else s""","renames":[${snap.renames
-        .map { case (f, t) => s"""["${esc(f)}","${esc(t)}"]""" }.mkString(",")}]"""
+    } yield Seq(d, c, b.typ, b.lo, b.hi))
+    snap.lastBatch.foreach(b => root.put("lastBatch", b))
+    rows("seqs", snap.dataSeq.toSeq.sortBy(_._1).map { case (d, sq) => Seq(d, sq) })
+    rows("deletes", snap.deletes.map { case (d, sq) => Seq(d, sq) })
+    if (snap.deletes.nonEmpty) {
+      val keys = root.putArray("deleteKeys")
+      snap.deleteKeys.foreach(k => keys.add(k))
+    }
+    rows("renames", snap.renames.map { case (f, t) => Seq(f, t) })
     // per-dir sort orders (r16): [dir, "col1 asc,col2 desc"] pairs —
     // column names are validated comma/space-free at appendSorted time,
     // so the joined spec string round-trips unambiguously
-    val sorts =
-      if (snap.sortOrders.isEmpty) ""
-      else s""","sortOrders":[${snap.sortOrders.toSeq.sortBy(_._1)
-        .map { case (d, o) =>
-          s"""["${esc(d)}","${esc(o.map { case (c, dir) => s"$c $dir" }.mkString(","))}"]"""
-        }.mkString(",")}]"""
-    s"""{"version":$v,$dirs$stats$lastBatch$seqs$dels$rens$sorts}"""
+    rows("sortOrders", snap.sortOrders.toSeq.sortBy(_._1).map { case (d, o) =>
+      Seq(d, o.map { case (c, dir) => s"$c $dir" }.mkString(","))
+    })
+    val recorded = (snap.dirs ++ snap.deletes.map(_._1)).flatMap(d => snap.schemas.get(d).map(d -> _))
+    val distinct = recorded.map(_._2).distinct
+    val id = distinct.zipWithIndex.toMap
+    rows("schemaIds", recorded.map { case (d, sc) => Seq(d, id(sc)) })
+    if (distinct.nonEmpty) {
+      val schemas = root.putArray("schemas")
+      distinct.foreach(sc => schemas.add(manifestMapper.readTree(sc.json)))
+    }
+    manifestMapper.writeValueAsString(root)
   }
 
-  private def parseManifest(s: String): Snapshot = {
-    val v = "\"version\":(\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new java.io.IOException(s"bad manifest: $s"))
-    // dirs come ONLY from the "dirs":[...] array — the colStats entries also
-    // carry dir names, so the scan must not run over the whole document
-    val dirsBody = "\"dirs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1))
-      .getOrElse(throw new java.io.IOException(s"bad manifest (no dirs): $s"))
-    // any string literal in the (already-scoped) dirs array: local dirs are
-    // "d-…", clone-borrowed dirs are absolute "/…/d-…" paths
-    val dirs = "\"([^\"]+)\"".r.findAllMatchIn(dirsBody).map(_.group(1)).toSeq
-    // colStats entries come ONLY from the "colStats":[...] array: any run of
-    // five string literals elsewhere (a five-dir "dirs" array, five equality
-    // keys) has the same shape and must not read as a bound. `\G` walks the
-    // array one entry at a time from its opening bracket (one regex over the
-    // whole array would recurse once per character and overflow the stack
-    // on a large manifest).
-    val colStatsOpen = "\"colStats\":["
-    val statsAt = s.indexOf(colStatsOpen)
-    val statsEntries = Seq.newBuilder[(String, String, ColBounds)]
-    if (statsAt >= 0) {
-      val m = s"\\G,?\\[$Lit,$Lit,$Lit,$Lit,$Lit\\]".r.pattern.matcher(s)
-      m.region(statsAt + colStatsOpen.length, s.length)
-      while (m.find()) statsEntries += ((unesc(m.group(1)), unesc(m.group(2)),
-        ColBounds(unesc(m.group(4)), unesc(m.group(5)), m.group(3))))
-    }
-    val colStats = statsEntries.result()
-      .groupBy(_._1)
-      .map { case (d, es) => d -> es.map(e => e._2 -> e._3).toMap }
-    val lastBatch = "\"lastBatch\":(-?\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    // (dir, seq) pair arrays, each scoped to its own named array body
-    def pairList(field: String): Seq[(String, Int)] =
-      (s"\"$field\":\\[(.*?\\])\\]").r.findFirstMatchIn(s).map(_.group(1)).toSeq
-        .flatMap(body => s"\\[$Lit,(\\d+)\\]".r.findAllMatchIn(body)
-          .map(m => (unesc(m.group(1)), m.group(2).toInt)).toSeq)
-    val dataSeq = pairList("seqs").toMap
-    val deletes = pairList("deletes")
-    val deleteKeys = "\"deleteKeys\":\\[([^\\]]*)\\]".r.findFirstMatchIn(s).map(_.group(1)).toSeq
-      .flatMap(body => "\"([^\"]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq)
-    // (from, to) string-pair arrays, scoped to the renames array body
-    val renames = "\"renames\":\\[(.*?\\])\\]".r.findFirstMatchIn(s).map(_.group(1)).toSeq
-      .flatMap(body => s"\\[$Lit,$Lit\\]".r.findAllMatchIn(body)
-        .map(m => (unesc(m.group(1)), unesc(m.group(2)))).toSeq)
-    // (dir, "col asc,col desc") pairs, scoped to the sortOrders array body
-    val sortOrders = "\"sortOrders\":\\[(.*?\\])\\]".r.findFirstMatchIn(s).map(_.group(1)).toSeq
-      .flatMap(body => s"\\[$Lit,$Lit\\]".r.findAllMatchIn(body)
-        .map { m =>
-          val spec = unesc(m.group(2)).split(",").toSeq.map { part =>
-            val Array(c, dir) = part.split(" ", 2)
-            (c, dir)
-          }
-          (unesc(m.group(1)), spec)
-        }.toSeq).toMap
-    Snapshot(v, dirs, colStats, lastBatch, dataSeq, deletes, deleteKeys, renames,
-      sortOrders)
+  private def parseManifest(doc: String): Snapshot = {
+    import com.fasterxml.jackson.databind.JsonNode
+    val root = manifestMapper.readTree(doc)
+    if (root == null || !root.has("version") || !root.has("dirs"))
+      throw new java.io.IOException(s"bad manifest: $doc")
+    def rows(field: String): Seq[IndexedSeq[JsonNode]] = Option(root.get(field)).toSeq
+      .flatMap(_.elements().asScala.map(_.elements().asScala.toIndexedSeq))
+    def strings(field: String): Seq[String] =
+      Option(root.get(field)).toSeq.flatMap(_.elements().asScala.map(_.asText))
+    def byDir(field: String): Seq[(String, Int)] = rows(field).map(r => r(0).asText -> r(1).asInt)
+    val schemaList = Option(root.get("schemas")).toSeq.flatMap(_.elements().asScala)
+      .map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]).toIndexedSeq
+    Snapshot(root.get("version").asInt, strings("dirs"),
+      colStats = rows("colStats").groupBy(_(0).asText).map { case (d, es) =>
+        d -> es.map(e => e(1).asText -> ColBounds(e(3).asText, e(4).asText, e(2).asText)).toMap
+      },
+      lastBatch = Option(root.get("lastBatch")).map(_.asLong),
+      dataSeq = byDir("seqs").toMap,
+      deletes = byDir("deletes"),
+      deleteKeys = strings("deleteKeys"),
+      renames = rows("renames").map(r => r(0).asText -> r(1).asText),
+      sortOrders = rows("sortOrders").map { r =>
+        r(0).asText -> r(1).asText.split(",").toSeq.map { part =>
+          val Array(c, dir) = part.split(" ", 2)
+          (c, dir)
+        }
+      }.toMap,
+      schemas = byDir("schemaIds").map { case (d, i) => d -> schemaList(i) }.toMap)
   }
+
+  // manifests written by the earlier hand-rolled codec escaped only
+  // backslash and quote, so a bound string may hold raw control characters
+  private val manifestMapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .build()
 
   private def manifestName(v: Int): String = f"v$v%05d.json"
 

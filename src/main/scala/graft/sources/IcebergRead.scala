@@ -356,8 +356,8 @@ object IcebergRead {
     // field ids whose type differs across the schemas list: a PROMOTED
     // chain (int→long / float→double, spec Schema Evolution) — its data
     // files physically disagree on the column type, so the single
-    // mergeSchema read (which refuses int-vs-long merges) must give way to
-    // per-sequence reads widened to the snapshot schema (r15)
+    // declared-schema read must give way to per-sequence reads widened to
+    // the snapshot schema (r15)
     val promotedIds: Set[Int] = meta.schemas.values.flatten
       .groupBy(_._1).collect { case (id, fs) if fs.map(_._3).toSet.size > 1 => id }.toSet
     def project(df: DataFrame): DataFrame = {
@@ -390,7 +390,11 @@ object IcebergRead {
       }
     if (posDels.isEmpty && eqDels.isEmpty && meta.nameMapping.isEmpty &&
         promotedIds.isEmpty)
-      project(spark.read.option("mergeSchema", "true").parquet(datas.map(_.path): _*))
+      // the snapshot schema is metadata: read with it, no inference job
+      // (columns no file carries read as NULL, and project only reorders)
+      project(spark.read.schema(org.apache.spark.sql.types.StructType(outFields.map {
+        case (_, name, typ) => org.apache.spark.sql.types.StructField(name, sparkType(typ))
+      })).parquet(datas.map(_.path): _*))
     else {
       // per-sequence groups: a commit is wholly pre- or post-rename (and
       // pre- or post-promotion), so the mapping applies uniformly within a

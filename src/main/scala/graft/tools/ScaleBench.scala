@@ -610,14 +610,15 @@ object ScaleBench {
     }
 
     // ---- renamed-table read overhead (r13) ------------------------------
-    // A renamed table still reads as ONE multi-path mergeSchema scan: the
-    // alias columns fold with coalesce(newest..oldest) in a single
-    // projection (VersionedTable.coalesceAliases). The first cut here used
-    // a per-dir union instead and this row caught it: a FLAT ~1.5 s of
-    // per-dir plan overhead at 20 dirs (2.3/2.0/2.0 s vs 0.4 s plain at
-    // 1×/10×/30×) — constant in data, linear in dirs. After the coalesce
-    // rewrite the renamed read tracks the plain read at every factor
-    // (0.29/0.35/0.54 s vs 0.38/0.31/0.46 s).
+    // A renamed table still reads as ONE multi-path scan, under the fold of
+    // the dir schemas its manifest records: the alias columns fold with
+    // coalesce(newest..oldest) in a single projection
+    // (VersionedTable.coalesceAliases). The first cut here used a per-dir
+    // union instead and this row caught it: a FLAT ~1.5 s of per-dir plan
+    // overhead at 20 dirs (2.3/2.0/2.0 s vs 0.4 s plain at 1×/10×/30×) —
+    // constant in data, linear in dirs. With the schemas read from the
+    // manifest (no inference job), one run on 4 cores read renamed
+    // 0.27/0.28/0.29 s vs plain 0.42/0.29/0.40 s at 1×/10×/30×.
     if (earlyOnly.exists(_.contains("rename_read_scale"))) {
       val ordersBase = spark.read.parquet(s"$sfDir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"),

@@ -80,4 +80,26 @@ class JobBudgetSpec extends SparkSpec {
     assert(VersionedTable.read(spark, s"$base/table").count() == 10L)
     assert(jobs <= 1, s"one non-empty poll cycle launched $jobs jobs, budget 1")
   }
+
+  // The manifest records every dir's schema, so a read is built from
+  // metadata: one scan per side under the recorded schemas and no
+  // inference job. The plan that inferred each dir's schema launched one
+  // job per data and delete dir to BUILD the read (12 here) and 16 to count.
+  test("a merge-on-read table with a rename builds its read with no job") {
+    val p = freshTable("mor_read")
+    (0 until 6).foreach { i =>
+      val batch = rows.filter(col("id") % 6 === i)
+      VersionedTable.upsertMor(if (i < 3) batch else batch.withColumn("extra", col("ts") + 1),
+        p, Seq("id"))
+    }
+    VersionedTable.renameColumn(spark, p, "k", "kind")
+    val snap = VersionedTable.readManifestForTest(spark, p, VersionedTable.versions(spark, p).last)
+    assert(snap.dirs.size == 6 && snap.deletes.size == 6)
+    val build = jobsLaunchedBy(VersionedTable.read(spark, p))
+    assert(build == 0, s"building the read launched $build jobs")
+    var n = 0L
+    val count = jobsLaunchedBy { n = VersionedTable.read(spark, p).count() }
+    assert(n == 200L)
+    assert(count <= 4, s"counting the read launched $count jobs, budget 4")
+  }
 }

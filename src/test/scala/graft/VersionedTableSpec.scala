@@ -689,6 +689,7 @@ class VersionedTableSpec extends SparkSpec {
           assert(cur.colStats.get(d) == prev.colStats.get(d), s"$label changed the bounds of $d")
           assert(cur.sortOrders.get(d) == prev.sortOrders.get(d),
             s"$label changed the sort order of $d")
+          assert(cur.schemas.get(d) == prev.schemas.get(d), s"$label changed the schema of $d")
         }
         assert(cur.deletes.startsWith(prev.deletes), s"$label dropped deletes")
         if (prev.deleteKeys.nonEmpty)
@@ -738,5 +739,95 @@ class VersionedTableSpec extends SparkSpec {
     assert(latest.dirs.size == 5 && latest.colStats.isEmpty, latest.colStats)
     VersionedTable.deleteWhereKeys(row(1L), path, cols)
     assert(latest.deleteKeys == cols && latest.colStats.isEmpty, latest.colStats)
+  }
+
+  /** The Spark schema a dir's first parquet footer embeds, read directly. */
+  private def footerSchema(dir: String): org.apache.spark.sql.types.StructType = {
+    val f = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+    try org.apache.spark.sql.types.DataType.fromJson(r.getFooter.getFileMetaData
+      .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    finally r.close()
+  }
+
+  test("every write shape records each new dir's schema, equal to its footer's") {
+    val path = "/tmp/graft_tables/spec_vt_schemas"
+    val clone = "/tmp/graft_tables/spec_vt_schemas_clone"
+    Seq(path, clone).foreach(GraftTableWriter.drop(spark, _))
+    val keys = Seq("id")
+    // id and n are non-nullable, v nullable: the record keeps nullability
+    def rows(lo: Long, n: Int) =
+      (lo until lo + n).map(i => (i, s"s$i", i * 7 % 23)).toDF("id", "v", "n")
+    def checkLatest(label: String, p: String = path): Unit = {
+      val snap = VersionedTable.readManifestForTest(spark, p, VersionedTable.versions(spark, p).last)
+      (snap.dirs ++ snap.deletes.map(_._1)).foreach { d =>
+        val dir = if (d.startsWith("/")) d else s"$p/$d"
+        assert(snap.schemas.get(d).contains(footerSchema(dir)),
+          s"$label: dir $d records ${snap.schemas.get(d)}, footer ${footerSchema(dir)}")
+      }
+      assert(snap.schemas.keySet == (snap.dirs ++ snap.deletes.map(_._1)).toSet,
+        s"$label: schema entries for dirs the snapshot does not list")
+    }
+    VersionedTable.overwrite(rows(0, 4), path); checkLatest("overwrite")
+    VersionedTable.append(rows(10, 4), path); checkLatest("append")
+    VersionedTable.appendWithStats(rows(20, 4).withColumn("x", $"n" * 2), path, Seq("n"))
+    checkLatest("appendWithStats (added column)")
+    VersionedTable.appendSorted(rows(30, 4), path, Seq("n" -> "desc")); checkLatest("appendSorted")
+    VersionedTable.appendWithHiddenStats(rows(40, 4), path, "n_b", ($"n" / 5).cast("long"))
+    checkLatest("appendWithHiddenStats")
+    VersionedTable.appendWithBloom(rows(50, 4), path, "id"); checkLatest("appendWithBloom")
+    assert(VersionedTable.appendOnce(rows(60, 4), path, 1L)); checkLatest("appendOnce")
+    VersionedTable.upsert(rows(0, 2).withColumn("x", $"n" * 2), path, keys); checkLatest("upsert")
+    (0 until 3).foreach(i => VersionedTable.append(rows(100 + 10 * i, 2), path))
+    VersionedTable.compactSmall(spark, path, 5L, 100L); checkLatest("compactSmall")
+    VersionedTable.upsertMor(rows(1, 2), path, keys); checkLatest("upsertMor")
+    assert(VersionedTable.upsertMorOnce(rows(2, 2), path, keys, 2L)); checkLatest("upsertMorOnce")
+    assert(VersionedTable.applyCdcOnce(rows(3, 2), Seq(Tuple1(100L)).toDF("id"), path, keys, 3L))
+    checkLatest("applyCdcOnce")
+    VersionedTable.deleteWhereKeys(Seq(Tuple1(110L)).toDF("id"), path, keys)
+    checkLatest("deleteWhereKeys")
+    val beforeClone = VersionedTable.versions(spark, path).last
+    VersionedTable.cloneAt(spark, path, clone, beforeClone); checkLatest("cloneAt", clone)
+    VersionedTable.append(rows(200, 2), clone); checkLatest("append to the clone", clone)
+    VersionedTable.publish(spark, clone, path, beforeClone); checkLatest("publish")
+    VersionedTable.compact(spark, path, 100L); checkLatest("compact")
+    VersionedTable.renameColumn(spark, path, "v", "w"); checkLatest("renameColumn")
+    VersionedTable.rollback(spark, path, beforeClone); checkLatest("rollback")
+  }
+
+  test("a manifest without recorded schemas (a legacy table) reads the same rows and schema") {
+    val path = "/tmp/graft_tables/spec_vt_legacy"
+    GraftTableWriter.drop(spark, path)
+    val keys = Seq("id")
+    def rows(lo: Long, n: Int) =
+      (lo until lo + n).map(i => (i, s"s$i", i * 7 % 23)).toDF("id", "v", "n")
+    VersionedTable.append(rows(0, 6), path)
+    VersionedTable.upsertMor(rows(2, 3).withColumn("x", $"n" + 1), path, keys)
+    VersionedTable.renameColumn(spark, path, "v", "w")
+    VersionedTable.upsertMor(rows(4, 3).withColumnRenamed("v", "w"), path, keys)
+    VersionedTable.deleteWhereKeys(Seq(Tuple1(0L)).toDF("id"), path, keys)
+    val versions = VersionedTable.versions(spark, path)
+    def dump(v: Int) = {
+      val df = VersionedTable.readVersion(spark, path, v)
+      (df.schema, df.collect().map(_.toString).sorted.toSeq)
+    }
+    val before = versions.map(dump)
+    // strip the schema entries from every manifest, through the Hadoop
+    // filesystem so its checksum files stay consistent
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    versions.foreach { v =>
+      val p = new org.apache.hadoop.fs.Path(s"$path/_graft_meta", f"v$v%05d.json")
+      val in = fs.open(p)
+      val doc = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val at = doc.indexOf(",\"schemaIds\":[")
+      assert(at > 0, s"v$v records no schemas")
+      val out = fs.create(p, true)
+      try out.write((doc.substring(0, at) + "}").getBytes("UTF-8")) finally out.close()
+      assert(VersionedTable.readManifestForTest(spark, path, v).schemas.isEmpty)
+    }
+    assert(versions.map(dump) == before)
   }
 }
