@@ -736,10 +736,10 @@ object Ingestion {
         import s.implicits._
         // The SAME upsert as `upsert_merge`, but merge-on-read (Iceberg v2
         // equality deletes — what the reference's `.upsert(true)` sink
-        // actually writes): two MOR batches land as O(batch) data +
-        // key-delete dirs with NOTHING rewritten, deletes resolve by
-        // sequence at scan time, then compact materializes the merge and
-        // the result must STILL be identical. Read twice (pre- and
+        // actually writes): two MOR batches land as O(batch) data dirs,
+        // each deleting its own keys, with NOTHING rewritten; deletes
+        // resolve by sequence at scan time, then compact materializes the
+        // merge and the result must STILL be identical. Read twice (pre- and
         // post-compact) inside one plan via the version pin.
         val p = tmp("upsert_mor")
         GraftTableWriter.drop(s, p)
@@ -891,7 +891,7 @@ object Ingestion {
           .unionByName(o.filter($"o_orderkey" % 997 === 0)
             .select(($"o_orderkey" + 90000000L).as("o_orderkey"),
               $"o_custkey", $"price_c"))
-        VersionedTable.upsertMor(upd, p, Seq("o_orderkey")) // v2: data+delete seq 2
+        VersionedTable.upsertMor(upd, p, Seq("o_orderkey")) // v2: self-deleting data seq 2
         VersionedTable.deleteWhereKeys(
           o.filter($"o_orderkey" % 500 === 3).select($"o_orderkey"),
           p, Seq("o_orderkey")) // v3: delete seq 3
@@ -3055,7 +3055,7 @@ object Ingestion {
         VersionedTable.append(o.filter($"o_orderkey" % 2 === 0), p) // v1: seq 1
         val upd = o.filter($"o_orderkey" % 7 === 0)
           .withColumn("price_c", $"price_c" + 10000L)
-        VersionedTable.upsertMor(upd, p, Seq("o_orderkey")) // v2: data+delete seq 2
+        VersionedTable.upsertMor(upd, p, Seq("o_orderkey")) // v2: self-deleting data seq 2
         // v3: the odd keys not already inserted by the v2 upsert (an
         // equality delete at seq 2 cannot kill seq-3 duplicates)
         VersionedTable.append(

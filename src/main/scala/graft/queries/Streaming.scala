@@ -987,8 +987,8 @@ object Streaming {
         // c/u/d envelopes, parsed by the same pinned from_json projection
         // with the loud unknown-op guard, and applied as ONE atomic
         // exactly-once commit per batch (VersionedTable.applyCdcOnce: the
-        // batch's upserts land as the data dir, keys(upserts) ∪ delete
-        // keys as the delete dir — splitting into upsert + delete commits
+        // batch's upserts land as a data dir deleting its own keys, the
+        // delete keys as a key-only dir — splitting into upsert + delete commits
         // would let a crash between them replay into a half-applied
         // batch). Idempotence is asserted IN-ROW: a second AvailableNow
         // run over the same checkpoint+source replays batch ids the sink
@@ -1420,7 +1420,7 @@ object Streaming {
         // The reference's sink mechanism VERBATIM: a streaming upsert into
         // an Iceberg-v2 table is merge-on-read equality deletes guarded by
         // max-committed-checkpoint-id — here upsertMorOnce per micro-batch
-        // (data + key-delete dirs + batch id in ONE commit, O(batch)
+        // (one self-deleting data dir + batch id in ONE commit, O(batch)
         // written, nothing rewritten; streaming_upsert_pipeline is the same
         // topology on the copy-on-write path). Batches are staged
         // sequentially (slice k = event_id % 4) so MOR's last-writer-wins

@@ -48,6 +48,13 @@ import scala.jdk.CollectionConverters._
   * sequence — and data entries carry their dir's graft dataSeq, so the
   * spec's application rule (an equality delete applies to data files with a
   * STRICTLY LOWER data sequence) reproduces VersionedTable's read exactly.
+  * An upsert's data dir is its own equality-delete set
+  * ([[VersionedTable.upsertMor]]), so its parquet files are listed twice at
+  * one sequence: as data (content 0) and as equality deletes (content 2,
+  * no `sort_order_id`). The spec allows an equality-delete file to carry
+  * columns beyond its equality fields, and the strictly-lower rule keeps
+  * such a file from deleting its own rows; it deletes only older versions
+  * of its keys.
   *
   * Scope (loudly enforced): MONOTONE chains — every snapshot's dir and
   * delete lists must contain its predecessor's (append / upsertMor /
@@ -816,7 +823,7 @@ object IcebergExport {
         val prevDels = if (i == 0) Set.empty[(String, Int)] else snaps(i - 1).deletes.toSet
         if (snap.version <= resumeAfter) Nil // manifests already on disk
         else (snap.dirs.filterNot(prevDirs) ++
-          snap.deletes.filterNot(prevDels).map(_._1))
+          snap.deletes.filterNot(prevDels).map(_._1)).distinct
           .flatMap(d => parquetFiles(d).map(_.getPath.toString))
       }))
 

@@ -85,9 +85,10 @@ object VersionedTable {
     * via `equalityFieldColumns` + `upsert(true)`): every dir carries the
     * snapshot sequence that added it (absent → 0, pre-MOR legacy), `deletes`
     * lists equality-delete dirs as (dir, seq), and `deleteKeys` names the
-    * table's equality fields. The read-time rule is Iceberg's: a data row
-    * with sequence s is dropped iff some delete dir with sequence > s
-    * contains its key. */
+    * table's equality fields. A delete dir is either key-only or one of
+    * `dirs` itself (an [[upsertMor]] data dir deleting its own keys). The
+    * read-time rule is Iceberg's: a data row with sequence s is dropped iff
+    * some delete dir with sequence > s contains its key. */
   /** `renames` is the table's accumulated COLUMN-RENAME chain, in commit
     * order (Iceberg's rename-via-field-id semantics re-expressed): each
     * [[renameColumn]] commit appends one (from, to) pair, every later
@@ -132,23 +133,26 @@ object VersionedTable {
   /** Merge-on-read equality-field upsert (Iceberg v2 equality deletes — the
     * mechanism the reference's sink turns on with
     * `.equalityFieldColumns(keys).upsert(true)`,
-    * IcebergSinkBuilder.java:40-44): ONE commit adds the batch as a data dir
-    * plus the batch's key set as an equality-delete dir, both at this
-    * snapshot's sequence. Nothing old is rewritten — an upsert into a
-    * 100 TB table writes O(batch), not O(table) (the copy-on-write
-    * [[upsert]] rewrites the table). The cost moves to READ time: scans
-    * anti-join rows whose key a LATER delete covers, until [[compact]]
-    * materializes the merge and clears the delete list — exactly the
-    * Iceberg MOR/COW trade. Key columns are a table-level property; a
-    * mismatch with an earlier MOR commit fails loudly (mixed equality
-    * fields would silently mis-merge).
+    * IcebergSinkBuilder.java:40-44): ONE commit writes the batch as ONE data
+    * dir and lists that dir both as data and as an equality-delete set at
+    * this snapshot's sequence — an upsert's delete keys are exactly its
+    * rows' keys, so no key copy is written. Because a delete applies only
+    * to rows of a strictly lower sequence, the dir never deletes its own
+    * rows, and it deletes every older version of its keys. Nothing old is
+    * rewritten — an upsert into a 100 TB table writes O(batch), not
+    * O(table) (the copy-on-write [[upsert]] rewrites the table). The cost
+    * moves to READ time: scans drop rows whose key a LATER delete covers,
+    * until [[compact]] materializes the merge and clears the delete list —
+    * exactly the Iceberg MOR/COW trade. Key columns are a table-level
+    * property; a mismatch with an earlier MOR commit fails loudly (mixed
+    * equality fields would silently mis-merge).
     *
-    * `statsCols` attaches per-dir column metrics to the DATA dir (the
+    * `statsCols` attaches per-dir column metrics to the data dir (the
     * [[appendWithStats]] stats contract under merge-on-read), so
     * identity-partitioned MOR chains stay exportable
     * ([[graft.sinks.IcebergExport]] needs a degenerate partition bound per
-    * data dir) and [[readPruned]] can skip MOR data dirs too. The delete dir
-    * is key-only and carries no stats — equality deletes are
+    * data dir) and [[readPruned]] can skip MOR data dirs too. A pruned dir
+    * still deletes: [[readSnapshot]] reads its keys. Equality deletes are
     * partition-agnostic by construction.
     *
     * `pairCols = Some((c1, c2))` additionally records the batch's exact
@@ -159,17 +163,23 @@ object VersionedTable {
     * stats and no pair, no metrics job runs. */
   def upsertMor(df: DataFrame, path: String, keys: Seq[String],
       statsCols: Seq[String] = Nil, pairCols: Option[(String, String)] = None): Int =
-    morCommit(df, path, keys, None, statsCols, pairCols).get
+    morCommit(df, path, keys, None, statsCols, pairCols)._1.get
 
-  /** The body [[upsertMor]] and [[upsertMorOnce]] share: data dir with its
-    * observed metrics, key-set delete dir, one commit. */
+  /** The body [[upsertMor]] and [[upsertMorOnce]] share: one data dir with
+    * its observed metrics, deleting its own keys, one commit. Returns the
+    * committed version and the rows the write observed (None when the
+    * batch id was refused before any write ran). */
   private def morCommit(df: DataFrame, path: String, keys: Seq[String],
       batchId: Option[Long], statsCols: Seq[String],
-      pairCols: Option[(String, String)]): Option[Int] =
-    commitAdd(df.sparkSession, path, df.columns.toSeq, Some(keys), batchId) {
-      writeTracked(df, path, statsCols, pairCols.toSeq).withDelete(writeDataDir(
-        df.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path))
+      pairCols: Option[(String, String)]): (Option[Int], Option[Long]) = {
+    var seen: Option[Long] = None
+    val committed = commitAdd(df.sparkSession, path, df.columns.toSeq, Some(keys), batchId) {
+      val added = writeTracked(df, path, statsCols, pairCols.toSeq)
+      seen = added.data.map(_.rows)
+      added.copy(deletesOwnKeys = true)
     }
+    (committed, seen)
+  }
 
   /** The manifest key a composite (c1, c2) pair bound is stored under. The
     * `,` separator cannot appear in a parquet-writable column name, so
@@ -270,10 +280,10 @@ object VersionedTable {
     }
 
   /** [[upsertMor]] under the exactly-once batch-id contract (the
-    * [[appendOnce]] rule): the id commits atomically with the data+delete
-    * dirs, so an at-least-once foreachBatch redelivery is recognized and
-    * skipped. This is the reference's sink verbatim — a streaming upsert
-    * into an Iceberg-v2 table IS equality-delete MOR guarded by
+    * [[appendOnce]] rule): the id commits atomically with the data dir, so
+    * an at-least-once foreachBatch redelivery is recognized and skipped.
+    * This is the reference's sink verbatim — a streaming upsert into an
+    * Iceberg-v2 table IS equality-delete MOR guarded by
     * max-committed-checkpoint-id. Returns false on replay, and on an empty
     * batch, which commits nothing ([[appendOnce]]'s rule).
     *
@@ -283,27 +293,37 @@ object VersionedTable {
   def upsertMorOnce(df: DataFrame, path: String, keys: Seq[String], batchId: Long,
       statsCols: Seq[String] = Nil,
       pairCols: Option[(String, String)] = None): Boolean =
-    morCommit(df, path, keys, Some(batchId), statsCols, pairCols).isDefined
+    upsertMorOnceObserved(df, path, keys, batchId, statsCols, pairCols)._1
+
+  /** [[upsertMorOnce]] that also returns the rows its write observed, or
+    * None when the batch id was refused before any write ran (the
+    * [[appendOnceObserved]] shape). With it the CDC loop tells a refused
+    * replay (None), a quiescent cycle (Some(0), nothing committed) and a
+    * commit apart without a job of its own. */
+  private[graft] def upsertMorOnceObserved(df: DataFrame, path: String, keys: Seq[String],
+      batchId: Long, statsCols: Seq[String],
+      pairCols: Option[(String, String)]): (Boolean, Option[Long]) = {
+    val (committed, rows) = morCommit(df, path, keys, Some(batchId), statsCols, pairCols)
+    (committed.isDefined, rows)
+  }
 
   /** One CDC batch — upserts AND deletes — as a SINGLE exactly-once MOR
     * commit (r15, the Debezium-apply shape): the data dir carries the
-    * upserted AFTER images, the delete dir carries keys(upserts) ∪
-    * `deleteKeysDf` (the upsert keys' old versions die by the sequence
-    * rule exactly as in [[upsertMor]]; the delete keys die outright, no
-    * new image). Splitting the batch into upsertMorOnce + deleteWhereKeys
-    * would be TWO commits — a crash between them replays into a
-    * half-applied batch — so the whole batch is one atomic snapshot under
-    * the [[appendOnce]] batch-id contract. Returns false on replay, and when
-    * both sides are empty, which commits nothing ([[appendOnce]]'s rule). */
+    * upserted AFTER images and deletes its own keys' older versions, as in
+    * [[upsertMor]]; a key-only delete dir carries `deleteKeysDf` (those
+    * keys die outright, no new image). Either dir is left out of the
+    * commit when its write observed no rows. Splitting the batch into
+    * upsertMorOnce + deleteWhereKeys would be TWO commits — a crash between
+    * them replays into a half-applied batch — so the whole batch is one
+    * atomic snapshot under the [[appendOnce]] batch-id contract. Returns
+    * false on replay, and when both sides are empty, which commits nothing
+    * ([[appendOnce]]'s rule). */
   def applyCdcOnce(upserts: DataFrame, deleteKeysDf: DataFrame, path: String,
-      keys: Seq[String], batchId: Long): Boolean = {
-    val keyCols = keys.map(org.apache.spark.sql.functions.col)
+      keys: Seq[String], batchId: Long): Boolean =
     commitAdd(upserts.sparkSession, path, upserts.columns.toSeq, Some(keys), Some(batchId)) {
-      writeDataDir(upserts, path).added().withDelete(writeDataDir(
-        upserts.select(keyCols: _*)
-          .unionByName(deleteKeysDf.select(keyCols: _*)).distinct(), path))
+      writeDataDir(upserts, path).added().copy(deletesOwnKeys = true,
+        keyDelete = Some(writeKeys(deleteKeysDf, path, keys)))
     }.isDefined
-  }
 
   /** Equality DELETE as a merge-on-read commit: rows whose key is in
     * `keysDf` disappear from subsequent reads without touching any data
@@ -312,9 +332,15 @@ object VersionedTable {
   def deleteWhereKeys(keysDf: DataFrame, path: String, keys: Seq[String]): Int =
     // no data dir, so no column name for the renamed-away guard to check
     commitAdd(keysDf.sparkSession, path, Nil, Some(keys)) {
-      Added(None).withDelete(writeDataDir(
-        keysDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), path))
+      Added(None, keyDelete = Some(writeKeys(keysDf, path, keys)))
     }.get
+
+  /** A key-only equality-delete dir of `df`'s `keys`. Keys are not
+    * de-duplicated: under the max-sequence read rule a repeated key is
+    * harmless (Iceberg equality-delete files may repeat keys too), and
+    * `distinct` would cost a shuffle. */
+  private def writeKeys(df: DataFrame, path: String, keys: Seq[String]): Written =
+    writeDataDir(df.select(keys.map(org.apache.spark.sql.functions.col): _*), path)
 
   /** Rename a column as a METADATA-ONLY commit (Iceberg `ALTER TABLE …
     * RENAME COLUMN`, the operation field ids exist for): no data dir is
@@ -418,25 +444,22 @@ object VersionedTable {
   }
 
   /** What one additive commit adds: a data dir (with its per-column bounds
-    * and optional declared sort order) and/or an equality-delete dir, and
-    * the rows their writes observed. */
-  private final case class Added(data: Option[String],
+    * and optional declared sort order) that, with `deletesOwnKeys`, is also
+    * the equality-delete set of its own keys, and/or a key-only
+    * equality-delete dir. */
+  private final case class Added(data: Option[Written],
       bounds: Map[String, ColBounds] = Map.empty,
       sortOrder: Option[Seq[(String, String)]] = None,
-      delete: Option[String] = None,
-      rows: Long = 0L,
-      schemas: Map[String, StructType] = Map.empty) {
-    /** This commit plus `del` as its equality-delete dir. */
-    def withDelete(del: Written): Added =
-      copy(delete = Some(del.dir), rows = rows + del.rows, schemas = schemas ++ del.schemas)
-  }
+      deletesOwnKeys: Boolean = false,
+      keyDelete: Option[Written] = None)
 
   /** The one commit path of every ADDITIVE write shape (the appends,
     * [[upsertMor]], [[applyCdcOnce]], [[deleteWhereKeys]]): `write` stages
     * the new dirs, and the commit lays them on top of whatever snapshot is
     * current, carrying everything that snapshot records forward. The new
-    * data dir and the new delete dir both take this commit's sequence. Each
-    * safety check runs here and nowhere else:
+    * data dir and every new delete (a self-deleting data dir, a key-only
+    * dir) take this commit's sequence. Each safety check runs here and
+    * nowhere else:
     *  - `batchId` (the [[appendOnce]] contract): an obvious replay is
     *    skipped before `write` runs, and the guard re-runs inside the commit
     *    lock, so of two concurrent deliveries of one batch only the first
@@ -446,10 +469,11 @@ object VersionedTable {
     *    post-race snapshot is authoritative;
     *  - `columns` (the data dir's schema) may not re-use a renamed-away
     *    name ([[guardRenamedAway]]).
-    * A `batchId` commit whose staged dirs hold zero observed rows deletes
-    * them and commits nothing (an empty batch advances no batch id).
-    * Returns the committed version, or None when `batchId` was a replay or
-    * the batch was empty. */
+    * A `batchId` commit deletes each staged dir whose write observed zero
+    * rows and leaves it out; when no dir is left it commits nothing (an
+    * empty batch advances no batch id). So a pure-delete CDC batch commits
+    * its key dir alone. Returns the committed version, or None when
+    * `batchId` was a replay or the batch was empty. */
   private def commitAdd(spark: SparkSession, path: String, columns: Seq[String],
       keys: Option[Seq[String]] = None, batchId: Option[Long] = None)(
       write: => Added): Option[Int] = {
@@ -457,10 +481,13 @@ object VersionedTable {
     if (batchId.exists(replayed(pre, _))) return None
     keys.foreach(requireKeys(pre, _))
     val added = graft.core.trace("table.write")(write)
-    if (batchId.isDefined && added.rows == 0L) {
-      (added.data ++ added.delete).foreach(d => fs(spark, path).delete(new Path(path, d), true))
-      return None
-    }
+    val (empty, kept) = (added.data ++ added.keyDelete).toSeq
+      .partition(w => batchId.isDefined && w.rows == 0L)
+    empty.foreach(w => fs(spark, path).delete(new Path(path, w.dir), true))
+    if (batchId.isDefined && kept.isEmpty) return None
+    val data = added.data.filter(kept.contains).map(_.dir).toSeq
+    val deletes = (if (added.deletesOwnKeys) data else Nil) ++
+      added.keyDelete.filter(kept.contains).map(_.dir)
     try Some(graft.core.trace("table.commit")(commit(spark, path, { cur =>
       batchId.foreach(guardBatch(cur, _))
       guardRenamedAway(columns, cur)
@@ -468,14 +495,14 @@ object VersionedTable {
       val v = nextV(cur)
       val base = cur.getOrElse(Snapshot(0, Nil))
       base.copy(version = 0,
-        dirs = base.dirs ++ added.data,
-        colStats = base.colStats ++ added.data.map(_ -> added.bounds),
+        dirs = base.dirs ++ data,
+        colStats = base.colStats ++ data.map(_ -> added.bounds),
         lastBatch = batchId.orElse(base.lastBatch),
-        dataSeq = base.dataSeq ++ added.data.map(_ -> v),
-        deletes = base.deletes ++ added.delete.map(_ -> v),
+        dataSeq = base.dataSeq ++ data.map(_ -> v),
+        deletes = base.deletes ++ deletes.map(_ -> v),
         deleteKeys = keys.getOrElse(base.deleteKeys),
-        sortOrders = base.sortOrders ++ added.data.zip(added.sortOrder),
-        schemas = base.schemas ++ added.schemas)
+        sortOrders = base.sortOrders ++ data.zip(added.sortOrder),
+        schemas = base.schemas ++ kept.flatMap(_.schemas))
     })))
     catch { case _: CommitAborted => None }
   }
@@ -842,8 +869,9 @@ object VersionedTable {
         if (cur.map(_.version) != Some(snap.version))
           throw new CommitAborted(s"table advanced past v${snap.version} " +
             "during the rewrite")
-        Snapshot(0, w.data.toSeq, w.data.map(_ -> w.bounds).toMap,
-          lastBatch = cur.flatMap(_.lastBatch), schemas = w.schemas)
+        val d = w.data.get
+        Snapshot(0, Seq(d.dir), Map(d.dir -> w.bounds),
+          lastBatch = cur.flatMap(_.lastBatch), schemas = d.schemas)
       })
     }
   }
@@ -942,7 +970,10 @@ object VersionedTable {
   /** The table's commit history as a DataFrame — Iceberg's `snapshots`
     * metadata table / Delta's DESCRIBE HISTORY: one row per retained
     * snapshot with its data/delete dir counts and the streaming batch-id
-    * high-water mark. O(manifests) driver work; nothing scans data. */
+    * high-water mark. `n_delete_dirs` counts every dir listed as an
+    * equality delete: key-only dirs and the self-deleting data dirs of
+    * [[upsertMor]] (which `n_data_dirs` counts too). O(manifests) driver
+    * work; nothing scans data. */
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val filesystem = fs(spark, path)
@@ -1050,7 +1081,7 @@ object VersionedTable {
     val all = manifests(filesystem, path)
     val (drop, stay) = all.splitAt(math.max(all.size - keep, 0))
     if (drop.isEmpty) return
-    def allDirs(s: Snapshot): Seq[String] = s.dirs ++ s.deletes.map(_._1)
+    def allDirs(s: Snapshot): Seq[String] = (s.dirs ++ s.deletes.map(_._1)).distinct
     // A concurrent expire may delete a to-be-dropped manifest between our
     // listing and our read: treat a vanished manifest as already expired
     // (its dirs were handled by whoever deleted it) instead of failing.
@@ -1178,7 +1209,7 @@ object VersionedTable {
       schema: StructType) {
     def schemas: Map[String, StructType] = Map(dir -> schema)
     def added(bounds: Map[String, ColBounds] = Map.empty): Added =
-      Added(Some(dir), bounds, rows = rows, schemas = schemas)
+      Added(Some(this), bounds)
   }
 
   /** Write `df` as a fresh data dir — the one place a commit learns what a
@@ -1373,43 +1404,75 @@ object VersionedTable {
     * multi-path scan under the fold of their recorded schemas
     * ([[dirSchema]], [[foldSchemas]]), so building the read launches no
     * schema-inference job; the rename chain's physical aliases fold into
-    * logical columns ([[coalesceAliases]]). Merge-on-read: each row takes
-    * the sequence of its file's dir, the delete dirs are one key-schema
-    * scan collapsed to (key -> max delete sequence), and a row survives iff
-    * no strictly-later delete covers its key. ONE key-hash join at read
-    * time — the cost [[upsertMor]] deferred; [[compact]] materializes it
-    * away. */
+    * logical columns ([[coalesceAliases]]). A listed dir that holds no data
+    * file fails the read (checked against the scan's own file listing): the
+    * manifest lists dirs, not files, so files removed out of band would
+    * otherwise read as silently empty.
+    *
+    * Merge-on-read scans every file ONCE. Each data row takes `__seq`, the
+    * sequence of its file's dir, and `__own`, that dir's delete sequence
+    * when the dir is also listed in `deletes` (an upsert's self-deleting
+    * dir), else null. The delete dirs that are not scanned as data (key-only
+    * [[deleteWhereKeys]]/[[applyCdcOnce]] dirs, legacy upsert key dirs, and
+    * deleting dirs [[readPruned]] left out) join the scan as key rows that
+    * carry only `__own`. `max(__own)` over each key is the key's delete
+    * sequence, and a data row survives iff that is null or ≤ its `__seq`
+    * (Iceberg's rule: only a strictly later delete drops a row). One scan
+    * and one exchange by key — the cost [[upsertMor]] deferred;
+    * [[compact]] materializes it away. A row with a NULL key is never
+    * deleted, as no equality matches NULL. */
   private def readSnapshot(spark: SparkSession, path: String, snap: Snapshot): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{coalesce, col, concat, lit, max, raise_error,
-      regexp_replace, typedLit}
+      regexp_replace, typedLit, when}
     require(snap.dirs.nonEmpty, s"snapshot v${snap.version} is empty")
     val filesystem = fs(spark, path)
-    def scan(dirs: Seq[String]): DataFrame =
-      spark.read.schema(foldSchemas(dirs.map(dirSchema(filesystem, path, snap, _))))
-        .parquet(dirs.map(d => new Path(path, d).toString): _*)
-    // a row's sequence, looked up by the FULL path of its file's dir: a
-    // clone's borrowed absolute dirs and its local dirs share one name space.
-    // Scheme and authority are cut from both sides (the scan reports local
-    // files as file:/… while a qualified path prints file:///…)
-    def withSeq(df: DataFrame, name: String, seqs: Seq[(String, Int)]): DataFrame = {
-      val byDir = typedLit(seqs.map { case (d, sq) =>
-        filesystem.makeQualified(new Path(path, d)).toUri.getRawPath -> sq }.toMap)
-      val dir = regexp_replace(df.metadataColumn("_metadata").getField("file_path"),
-        "^[a-zA-Z][-a-zA-Z0-9+.]*:(//[^/]*)?|/[^/]*$", "")
-      df.withColumn(name, coalesce(byDir(dir),
-        raise_error(concat(lit("no sequence recorded for "), dir))))
+    // a dir's FULL path, the name space a file's dir is looked up in: a
+    // clone's borrowed absolute dirs and its local dirs share it. Scheme and
+    // authority are cut from both sides (the scan reports local files as
+    // file:/… while a qualified path prints file:///…)
+    def fullPath(d: String): String = filesystem.makeQualified(new Path(path, d)).toUri.getRawPath
+    def scan(dirs: Seq[String], schema: StructType): DataFrame = {
+      val df = spark.read.schema(schema).parquet(dirs.map(d => new Path(path, d).toString): _*)
+      val listed = df.inputFiles.map { f =>
+        val p = new java.net.URI(f).getRawPath; p.substring(0, p.lastIndexOf('/')) }.toSet
+      dirs.find(d => !listed(fullPath(d))).foreach(d => throw new IllegalStateException(
+        s"snapshot v${snap.version} of $path lists dir $d, which holds no data file"))
+      df
     }
-    if (snap.deletes.isEmpty) coalesceAliases(scan(snap.dirs), snap.renames)
-    else {
-      val data = coalesceAliases(withSeq(scan(snap.dirs), "__seq",
-        snap.dirs.map(d => d -> snap.dataSeq.getOrElse(d, 0))), snap.renames)
-      val delMax = withSeq(scan(snap.deletes.map(_._1)), "__dseq", snap.deletes)
-        .groupBy(snap.deleteKeys.map(col): _*)
-        .agg(max(col("__dseq")).as("__dseq"))
-      data.join(delMax, snap.deleteKeys, "left_outer")
-        .filter(col("__dseq").isNull || col("__dseq") <= col("__seq"))
-        .drop("__seq", "__dseq")
-    }
+    def schemaOf(dirs: Seq[String]): StructType =
+      foldSchemas(dirs.map(dirSchema(filesystem, path, snap, _)))
+    val data = scan(snap.dirs, schemaOf(snap.dirs))
+    if (snap.deletes.isEmpty) return coalesceAliases(data, snap.renames)
+    val keys = snap.deleteKeys.map(col)
+    def withDir(df: DataFrame): DataFrame = df.withColumn("__dir", regexp_replace(
+      df.metadataColumn("_metadata").getField("file_path"),
+      "^[a-zA-Z][-a-zA-Z0-9+.]*:(//[^/]*)?|/[^/]*$", ""))
+    def byDir(seqs: Seq[(String, Int)]): Column =
+      typedLit(seqs.map { case (d, sq) => fullPath(d) -> sq }.toMap).apply(col("__dir"))
+    def known(seq: Column): Column =
+      coalesce(seq, raise_error(concat(lit("no sequence recorded for "), col("__dir"))))
+    // a NULL key matches no delete, and deletes nothing
+    def ifKeyed(c: Column): Column = when(keys.map(_.isNotNull).reduce(_ && _), c)
+    val scanned = snap.dirs.toSet
+    val (own, keyOnly) = snap.deletes.partition(d => scanned(d._1))
+    val rows = coalesceAliases(withDir(data)
+      .withColumn("__seq", known(byDir(snap.dirs.map(d => d -> snap.dataSeq.getOrElse(d, 0)))))
+      .withColumn("__own", ifKeyed(byDir(own)))
+      .drop("__dir"), snap.renames)
+    val all =
+      if (keyOnly.isEmpty) rows
+      else {
+        val dirs = keyOnly.map(_._1)
+        val folded = schemaOf(dirs)
+        val keyRows = scan(dirs, StructType(snap.deleteKeys.map(folded(_))))
+        rows.unionByName(withDir(keyRows)
+          .select(keys :+ ifKeyed(known(byDir(keyOnly))).as("__own"): _*),
+          allowMissingColumns = true)
+      }
+    all.withColumn("__dseq", max(col("__own")).over(Window.partitionBy(keys: _*)))
+      .filter(col("__seq").isNotNull && (col("__dseq").isNull || col("__dseq") <= col("__seq")))
+      .drop("__seq", "__own", "__dseq")
   }
 
   /** The schema `dir` was written with: the snapshot's record, or, for a
@@ -1530,7 +1593,8 @@ object VersionedTable {
     rows("sortOrders", snap.sortOrders.toSeq.sortBy(_._1).map { case (d, o) =>
       Seq(d, o.map { case (c, dir) => s"$c $dir" }.mkString(","))
     })
-    val recorded = (snap.dirs ++ snap.deletes.map(_._1)).flatMap(d => snap.schemas.get(d).map(d -> _))
+    val recorded = (snap.dirs ++ snap.deletes.map(_._1)).distinct
+      .flatMap(d => snap.schemas.get(d).map(d -> _))
     val distinct = recorded.map(_._2).distinct
     val id = distinct.zipWithIndex.toMap
     rows("schemaIds", recorded.map { case (d, sc) => Seq(d, id(sc)) })

@@ -428,10 +428,12 @@ object IcebergRead {
               s"inconsistent equality_ids across delete files: $idSets")
             idSets.head.map(meta.fieldName)
           }
+          // only the equality fields of a delete file count: the spec lets
+          // it carry other columns (a data file listed as its own deletes)
           val delDf = eqDels.groupBy(_.sequenceNumber).toSeq.map { case (s, fs) =>
             widen(applyMapping(spark.read.parquet(fs.map(_.path): _*)))
-              .withColumn("__dseq", lit(s))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
+              .select(keyNames.map(col) :+ lit(s).as("__dseq"): _*)
+          }.reduce(_ unionByName _)
           val delMax = delDf.groupBy(keyNames.map(col): _*)
             .agg(max(col("__dseq")).as("__dseq"))
           dataDf.join(delMax, keyNames, "left_outer")

@@ -216,12 +216,13 @@ object JdbcPollStream {
     * mode running under ProcessingTime): every micro-batch pulls
     * `WHERE tsCol > hwm` (pushed into the database) and MOR-upserts the
     * delta by `keys` exactly-once ([[VersionedTable.upsertMorOnce]] —
-    * batch id atomic with the data+delete dirs). The high-watermark is
-    * DERIVED from the committed table (max(tsCol) of the merged MOR
-    * read) — same no-second-store discipline as the offset mode: crash
-    * after sink commit ⇒ replayed batch id refused, hwm re-derives;
-    * crash before ⇒ the redelivery re-pulls the same delta and commits
-    * once. In-place source updates are captured (the rank-paging mode
+    * batch id atomic with the delta's one data dir, which is also the
+    * equality-delete set of its keys). The high-watermark is DERIVED from
+    * the committed table (the data dirs' recorded bounds, else max(tsCol)
+    * of the merged MOR read) — same no-second-store discipline as the
+    * offset mode: crash after sink commit ⇒ replayed batch id refused, hwm
+    * re-derives; crash before ⇒ the redelivery re-pulls the same delta and
+    * commits once. In-place source updates are captured (the rank-paging mode
     * structurally cannot see them) provided the update clock `tsCol` is
     * monotone — and the production same-timestamp race (a row landing AT
     * the watermark timestamp after the poll read it) is solved by setting
@@ -229,7 +230,10 @@ object JdbcPollStream {
     * r14 "Next round" #4), whose watermark is the LEXICOGRAPHIC pair
     * (tsCol, incCol) and whose pushed-down predicate is Kafka Connect
     * JDBC's safe default:
-    * `ts > hwm OR (ts = hwm AND inc > hwm_inc)`. */
+    * `ts > hwm OR (ts = hwm AND inc > hwm_inc)`.
+    *
+    * @param afterCommit driver-side hook run after each commit with the
+    *        1-based number of commits this run has made. */
   final case class CdcConfig(
       url: String,
       table: String,
@@ -274,34 +278,42 @@ object JdbcPollStream {
     }
 
   /** Run the CDC stream until a cycle pulls zero rows (quiescent), with
-    * the same restart/exactly-once contract as [[runUntilDrained]]. */
+    * the same restart/exactly-once contract as [[runUntilDrained]]. A cycle
+    * is ONE Spark job: the delta is read once, by the write of its one data
+    * dir, which deletes its own keys' older versions
+    * ([[VersionedTable.upsertMorOnce]]). What that write observed tells the
+    * three outcomes apart — a replayed batch id is refused before any write
+    * (nothing observed; the next tick polls again), a quiescent cycle
+    * observes 0 rows (its staged dir is deleted and nothing commits), and
+    * anything else commits. Every dir in the commit and the hwm bounds the
+    * next cycle derives come from that one read of the live source. */
   def runCdcUntilDrained(spark: SparkSession, cfg: CdcConfig): Unit = {
     @volatile var cycles = 0L
     // delta schema resolved once per run (r16): same per-cycle fixed-cost
     // removal as [[runUntilDrained]]'s pageSchema
     val deltaSchema = ShardedIngest.tableSchema(spark, cfg.url, cfg.table)
     def pollCycle(batchId: Long): Boolean = {
-      val predicate = cfg.incCol match {
+      val predicate = graft.core.trace("cdc.hwm")(cfg.incCol match {
         case None =>
           val hwm = committedHwm(spark, cfg.tablePath, cfg.tsCol)
           s""""${cfg.tsCol}" > $hwm"""
         case Some(inc) =>
           val (hts, hid) = committedHwmInc(spark, cfg.tablePath, cfg.tsCol, inc)
           s""""${cfg.tsCol}" > $hts OR ("${cfg.tsCol}" = $hts AND "$inc" > $hid)"""
-      }
+      })
       val deltaSql = s"SELECT * FROM ${cfg.table} WHERE $predicate"
       val delta = ShardedIngest.jdbcScan(spark, cfg.url, Seq(deltaSql), deltaSchema)
-        .localCheckpoint(true) // pull once; feeds count + upsert
-      if (delta.isEmpty) return true // quiescent
       // track the watermark column(s) in the commit's manifest metrics so
       // the NEXT cycle's hwm derivation is metadata-only (no table scan)
-      if (VersionedTable.upsertMorOnce(delta, cfg.tablePath, cfg.keys, batchId,
+      val (committed, observed) = graft.core.trace("cdc.commit")(
+        VersionedTable.upsertMorOnceObserved(delta, cfg.tablePath, cfg.keys, batchId,
           statsCols = cfg.tsCol +: cfg.incCol.toSeq,
-          pairCols = cfg.incCol.map(i => (cfg.tsCol, i)))) {
+          pairCols = cfg.incCol.map(i => (cfg.tsCol, i))))
+      if (committed) {
         cycles += 1
         cfg.afterCommit(cycles)
-      }
-      false
+        false
+      } else observed.contains(0L) // quiescent; a refused replay polls again
     }
     runTickLoop(spark, cfg.checkpointDir, cfg.intervalMs, cfg.timeoutMs,
       cfg.maxRestarts, pollCycle, () => ())

@@ -74,9 +74,10 @@ object PlanDump {
         ("Delta-join IVM: the three delta joins (dA-B0, A0-dB, dA-dB) are all equi-joins on the " +
           "view key; maintenance cost tracks the change batch, never the base table."),
       "upsert_merge_on_read" ->
-        ("Merge-on-read scan: sequence-stamped data dirs union, delete dirs collapse to " +
-          "(key -> max seq), ONE key-hash left join resolves liveness - the read-time cost " +
-          "upsertMor deferred; the compacted side reads with no join at all."),
+        ("Merge-on-read scan: ONE scan stamps each row with its dir's data and delete " +
+          "sequence, key-only delete dirs union in, max(delete seq) over a key window resolves " +
+          "liveness - the read-time cost upsertMor deferred; the compacted side reads with no " +
+          "window at all."),
       "salted_join_agg" ->
         ("Skew-safe salted join: fact keyed by (key, __salt) against the explode-replicated " +
           "dim - the hot key spreads over numSalts reducers; partial aggregation before the " +

@@ -455,12 +455,14 @@ object ScaleBench {
     // reference's sink mechanism) run as a real Structured Streaming query
     // against a table seeded at K× base size, feeding a FIXED stream of 8
     // micro-batches × 2 000-key updates. The claim under test is the O(batch)
-    // commit contract: each commit writes one data dir + one key-delete dir +
-    // the manifest, never rewriting the table — so the timed chain must stay
-    // ~FLAT as the seeded table grows 1× → 30× (the growth_30x that matters
-    // at 100 TB, where an O(table) commit is a non-starter). Seeding is
-    // untimed (it IS O(table) by definition). MOR read-side cost is a
-    // separate, documented trade (VersionedTable.compact clears it).
+    // commit contract: each commit writes one data dir (which is also the
+    // equality-delete set of its keys) + the manifest, never rewriting the
+    // table — so the timed chain must stay ~FLAT as the seeded table grows
+    // 1× → 30× (the growth_30x that matters at 100 TB, where an O(table)
+    // commit is a non-starter). Seeding is untimed (it IS O(table) by
+    // definition). The read side is the MOR trade (VersionedTable.compact
+    // clears it): `read_sec` is the median of 3 timed merged-read counts of
+    // the final table, which grows with K.
     if (earlyOnly.exists(_.contains("streaming_mor_commit"))) {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -500,8 +502,11 @@ object ScaleBench {
         }
         q.stop(); q.awaitTermination()
         val versions = graft.sinks.VersionedTable.versions(spark, tbl).size
+        val reads = (1 to 3).map(_ => time(graft.sinks.VersionedTable.read(spark, tbl).count()))
+        val readSec = reads.map(_._1).sorted.apply(1)
         println(s"""{"query":"streaming_mor_commit","factor":$k,"sec":${f"$sec%.2f"},""" +
-          s""""batches":$batches,"batch_rows":$batchRows,"versions":$versions}""")
+          s""""batches":$batches,"batch_rows":$batchRows,"versions":$versions,""" +
+          s""""read_sec":${f"$readSec%.2f"},"read_rows":${reads.head._2}}""")
       }
     }
 

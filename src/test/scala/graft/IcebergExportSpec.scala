@@ -154,6 +154,42 @@ class IcebergExportSpec extends SparkSpec {
     assert(cur.size == 100 - 10 + 11)
   }
 
+  test("an upsert's data files are also its equality-delete files, at one sequence") {
+    val src = freshDir("selfdel_src"); val out = freshDir("selfdel_out")
+    VersionedTable.appendSorted((1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"), src,
+      Seq("id" -> "asc"))                                                          // v1
+    VersionedTable.upsertMor(((10L to 20L).map(i => (i, s"u$i")) :+ ((60L, "n60")))
+      .toDF("id", "v"), src, Seq("id"))                                            // v2
+    VersionedTable.deleteWhereKeys(Seq(1L, 15L).toDF("id"), src, Seq("id"))       // v3
+    VersionedTable.upsertMor(Seq((15L, "again"), (11L, "u11b")).toDF("id", "v"),
+      src, Seq("id"))                                                              // v4
+    val meta = IcebergRead.tableMeta(spark, IcebergExport.export(spark, src, out))
+    val idField = meta.schemaFields.find(_._2 == "id").get._1
+    val all = IcebergRead.allFiles(spark, meta, meta.currentSnapshotId)
+    for (v <- Seq(2, 4)) {
+      val snap = VersionedTable.readManifestForTest(spark, src, v)
+      val dir = snap.dirs.last
+      assert(snap.deletes.last == (dir -> v), s"v$v: ${snap.deletes}")
+      val files = all.filter(_.path.contains(s"/$dir/"))
+      val (data, dels) = (files.filter(_.content == 0), files.filter(_.content == 2))
+      assert(data.nonEmpty && files.size == 2 * data.size, s"v$v: $files")
+      assert(data.map(_.path).toSet == dels.map(_.path).toSet, s"v$v")
+      assert(files.forall(_.sequenceNumber == v), s"v$v: $files")
+      assert(dels.forall(f => f.equalityIds == Seq(idField) && f.sortOrderId.isEmpty), s"v$v")
+      assert(data.forall(f => f.equalityIds.isEmpty && f.sortOrderId.nonEmpty), s"v$v")
+    }
+    for (v <- 1 to 4) {
+      val viaIceberg = IcebergRead.readSnapshot(spark, meta, v.toLong)
+        .as[(Long, String)].collect().sorted.toSeq
+      val viaGraft = VersionedTable.readVersion(spark, src, v)
+        .as[(Long, String)].collect().sorted.toSeq
+      assert(viaIceberg == viaGraft, s"snapshot $v")
+    }
+    val cur = IcebergRead.read(spark, out).as[(Long, String)].collect().toMap
+    assert(cur(15L) == "again" && cur(11L) == "u11b" && cur(12L) == "u12" && !cur.contains(1L))
+    assert(cur.size == 50 - 1 + 1)
+  }
+
   test("per-file column bounds drive range pruning from the manifests alone") {
     // graft's per-dir stats export as spec lower/upper_bounds (field ids
     // 125/128, Appendix-D little-endian longs) — the file skipping any

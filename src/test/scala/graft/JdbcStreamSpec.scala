@@ -280,4 +280,71 @@ class JdbcStreamSpec extends SparkSpec {
     }
     assert(n == 0, s"absent-table hwm launched $n jobs")
   }
+
+  test("a quiescent CDC cycle leaves no staged dir and adds no version") {
+    val url = "jdbc:derby:memory:jps_quiet;create=true"
+    val (table, ck) = freshDirs("cdc_quiet")
+    (1 to 6).map(i => (i.toLong, i * 10L, i * 7L)).toDF("id", "ts", "v")
+      .write.format("jdbc").option("url", url).option("dbtable", "t")
+      .mode(SaveMode.Overwrite).save()
+    def cdc(): Unit = JdbcPollStream.runCdcUntilDrained(spark, JdbcPollStream.CdcConfig(
+      url = url, table = "t", keys = Seq("id"), tsCol = "ts", tablePath = table,
+      checkpointDir = ck))
+    def onDisk(): Set[String] =
+      new java.io.File(table).listFiles.map(_.getName).filter(_.startsWith("d-")).toSet
+    def latest = VersionedTable.readManifestForTest(spark, table,
+      VersionedTable.versions(spark, table).last)
+    cdc() // one commit, then a quiescent cycle drains the run
+    assert(VersionedTable.versions(spark, table) == Seq(1))
+    assert(latest.dirs.size == 1 && latest.deletes == Seq(latest.dirs.head -> 1),
+      "the commit must add one dir, listed as data and as its own deletes")
+    assert(onDisk() == latest.dirs.toSet, s"staged dirs left behind: ${onDisk()}")
+    cdc() // the same checkpoint: the first cycle is already quiescent
+    assert(VersionedTable.versions(spark, table) == Seq(1))
+    assert(onDisk() == latest.dirs.toSet, s"a quiescent cycle left a staged dir: ${onDisk()}")
+    // an in-place update lands as one more self-deleting dir
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().executeUpdate("""UPDATE t SET "ts" = 100, "v" = -1 WHERE "id" = 3""")
+    finally c.close()
+    cdc()
+    assert(VersionedTable.versions(spark, table) == Seq(1, 2))
+    assert(latest.dirs.size == 2 && latest.deletes.map(_._1) == latest.dirs)
+    assert(onDisk() == latest.dirs.toSet, s"staged dirs left behind: ${onDisk()}")
+    val got = VersionedTable.read(spark, table).select($"id", $"ts", $"v")
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(got == (1 to 6).map(i => if (i == 3) (3L, 100L, -1L) else (i.toLong, i * 10L, i * 7L)))
+  }
+
+  test("a task failure in upsertMorOnce's write leaves nothing visible; the redelivered batch commits once") {
+    val (table, _) = freshDirs("mor_task_fail")
+    def rows = VersionedTable.read(spark, table).select($"id", $"ts", $"v")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(VersionedTable.upsertMorOnce(Seq((1L, 10L, 1L), (2L, 20L, 2L)).toDF("id", "ts", "v"),
+      table, Seq("id"), 0L, statsCols = Seq("ts")))
+    val before = rows
+    val boom = udf { (id: Long) =>
+      if (JdbcStreamSpec.failWrites.get()) throw new IllegalStateException("injected task failure")
+      id
+    }
+    val batch = Seq((2L, 30L, 20L), (3L, 30L, 3L)).toDF("id", "ts", "v")
+      .withColumn("id", boom($"id"))
+    JdbcStreamSpec.failWrites.set(true)
+    try intercept[Exception](
+      VersionedTable.upsertMorOnce(batch, table, Seq("id"), 1L, statsCols = Seq("ts")))
+    finally JdbcStreamSpec.failWrites.set(false)
+    assert(VersionedTable.versions(spark, table) == Seq(1), "the failed write committed")
+    assert(rows == before)
+    assert(JdbcPollStream.committedHwm(spark, table, "ts") == 20L)
+    // the redelivery of batch 1 commits once; a second one is refused
+    assert(VersionedTable.upsertMorOnce(batch, table, Seq("id"), 1L, statsCols = Seq("ts")))
+    assert(!VersionedTable.upsertMorOnce(batch, table, Seq("id"), 1L, statsCols = Seq("ts")))
+    assert(VersionedTable.versions(spark, table) == Seq(1, 2))
+    assert(rows == Set((1L, 10L, 1L), (2L, 30L, 20L), (3L, 30L, 3L)))
+    assert(JdbcPollStream.committedHwm(spark, table, "ts") == 30L)
+  }
+}
+
+object JdbcStreamSpec {
+  /** Makes the injected UDF throw inside a write task while set. */
+  val failWrites = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

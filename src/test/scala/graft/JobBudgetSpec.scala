@@ -40,9 +40,10 @@ class JobBudgetSpec extends SparkSpec {
 
   // The stats-tracking writes take their bounds from the observation on the
   // data-dir write itself, so they launch only their dir writes: a plain
-  // append is 1 job, and a sorted write or an upsertMorOnce (data dir plus
-  // key-set delete dir) 3. The plans with a separate bounds aggregate took
-  // 2 more jobs each (3, 3, 5 and 5).
+  // append or an upsertMorOnce (one data dir, deleting its own keys) is 1
+  // job, and a sorted write 3. The plans with a separate bounds aggregate
+  // took 2 more jobs each (3, 3, 5 and 5), and the upsert's separate
+  // distinct key dir 2 more.
   test("stats-tracking writes launch no job besides their dir writes") {
     val stats = jobsLaunchedBy(
       VersionedTable.appendWithStats(rows, freshTable("stats"), Seq("ts", "k")))
@@ -55,7 +56,7 @@ class JobBudgetSpec extends SparkSpec {
     assert(sorted <= 3, s"appendSorted launched $sorted jobs, budget 3")
     val mor = jobsLaunchedBy(VersionedTable.upsertMorOnce(rows, freshTable("mor"),
       Seq("id"), 0L, statsCols = Seq("ts", "id"), pairCols = Some(("ts", "id"))))
-    assert(mor <= 3, s"upsertMorOnce with stats launched $mor jobs, budget 3")
+    assert(mor <= 1, s"upsertMorOnce with stats launched $mor jobs, budget 1")
   }
 
   test("one non-empty poll cycle: its page is read only by its write") {
@@ -81,10 +82,37 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= 1, s"one non-empty poll cycle launched $jobs jobs, budget 1")
   }
 
+  test("one non-empty CDC cycle: its delta is read only by its one write") {
+    // stopped at the first commit, as above. The plan that checkpointed the
+    // delta, tested it for emptiness and wrote a distinct key dir took 5.
+    val url = "jdbc:derby:memory:job_budget_cdc;create=true"
+    val base = "/tmp/graft_stream/job_budget_cdc"
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    (1 to 10).map(i => (i.toLong, i * 10L, i * 3L)).toDF("id", "ts", "v")
+      .write.format("jdbc").option("url", url).option("dbtable", "t")
+      .mode(SaveMode.Overwrite).save()
+    val jobs = jobsLaunchedBy {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        JdbcPollStream.runCdcUntilDrained(spark, JdbcPollStream.CdcConfig(
+          url = url, table = "t", keys = Seq("id"), tsCol = "ts", tablePath = s"$base/table",
+          checkpointDir = s"$base/ck", incCol = Some("id"), maxRestarts = 0,
+          afterCommit = _ => throw new RuntimeException("stop after the first commit")))
+      }
+    }
+    val snap = VersionedTable.readManifestForTest(spark, s"$base/table", 1)
+    assert(snap.dirs.size == 1 && snap.deletes == Seq(snap.dirs.head -> 1))
+    assert(VersionedTable.read(spark, s"$base/table").count() == 10L)
+    assert(jobs <= 1, s"one non-empty CDC cycle launched $jobs jobs, budget 1")
+  }
+
   // The manifest records every dir's schema, so a read is built from
-  // metadata: one scan per side under the recorded schemas and no
-  // inference job. The plan that inferred each dir's schema launched one
-  // job per data and delete dir to BUILD the read (12 here) and 16 to count.
+  // metadata: one scan under the recorded schemas and no inference job.
+  // Each upsert dir deletes its own keys, so that one scan also yields the
+  // delete sequences and counting takes one exchange. The plan that
+  // inferred each dir's schema launched one job per data and delete dir to
+  // BUILD the read (12 here) and 16 to count; the one that scanned separate
+  // key dirs and joined them counted in 4.
   test("a merge-on-read table with a rename builds its read with no job") {
     val p = freshTable("mor_read")
     (0 until 6).foreach { i =>
@@ -94,12 +122,12 @@ class JobBudgetSpec extends SparkSpec {
     }
     VersionedTable.renameColumn(spark, p, "k", "kind")
     val snap = VersionedTable.readManifestForTest(spark, p, VersionedTable.versions(spark, p).last)
-    assert(snap.dirs.size == 6 && snap.deletes.size == 6)
+    assert(snap.dirs.size == 6 && snap.deletes.map(_._1) == snap.dirs)
     val build = jobsLaunchedBy(VersionedTable.read(spark, p))
     assert(build == 0, s"building the read launched $build jobs")
     var n = 0L
     val count = jobsLaunchedBy { n = VersionedTable.read(spark, p).count() }
     assert(n == 200L)
-    assert(count <= 4, s"counting the read launched $count jobs, budget 4")
+    assert(count <= 3, s"counting the read launched $count jobs, budget 3")
   }
 }

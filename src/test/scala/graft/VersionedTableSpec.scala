@@ -419,8 +419,12 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.applyCdcOnce(empty, Seq(Tuple1(1L)).toDF("id"), path, Seq("id"), 1))
     assert(VersionedTable.read(spark, path).count() == 0L)
     assert(VersionedTable.versions(spark, path).size == 2)
-    // the append's dir, plus the CDC batch's (empty) data dir and delete dir
-    assert(dataDirs().size == 3, dataDirs().toString)
+    // the append's dir, plus the CDC batch's delete dir: its data dir
+    // observed no rows, so it was deleted and left out of the commit
+    assert(dataDirs().size == 2, dataDirs().toString)
+    val snap = VersionedTable.readManifestForTest(spark, path, 2)
+    assert(snap.dirs.size == 1 && snap.deletes.size == 1 &&
+      !snap.dirs.contains(snap.deletes.head._1), snap)
   }
 
   test("upsertMorOnce skips a replayed batch; the applied batch merges by sequence") {
@@ -829,5 +833,133 @@ class VersionedTableSpec extends SparkSpec {
       assert(VersionedTable.readManifestForTest(spark, path, v).schemas.isEmpty)
     }
     assert(versions.map(dump) == before)
+  }
+
+  test("a listed dir whose data files were removed out of band fails the read loudly") {
+    val path = "/tmp/graft_tables/spec_vt_lost_files"
+    GraftTableWriter.drop(spark, path)
+    VersionedTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
+    VersionedTable.upsertMor(Seq((2L, "B"), (3L, "c")).toDF("id", "v"), path, Seq("id"))
+    VersionedTable.deleteWhereKeys(Seq(Tuple1(1L)).toDF("id"), path, Seq("id"))
+    assert(VersionedTable.read(spark, path).count() == 2L)
+    val snap = VersionedTable.readManifestForTest(spark, path, 3)
+    // remove every data file of a dir; its dir, sidecar and checksums stay
+    def strip(d: String): Unit = new java.io.File(s"$path/$d").listFiles
+      .filter(_.getName.endsWith(".parquet")).foreach(f => assert(f.delete()))
+    val keyDir = snap.deletes.last._1
+    assert(!snap.dirs.contains(keyDir))
+    strip(keyDir)
+    val k = intercept[IllegalStateException](VersionedTable.read(spark, path))
+    assert(k.getMessage.contains(s"lists dir $keyDir, which holds no data file"), k.getMessage)
+    // v2 does not list the key dir; then its data dir loses its files too
+    assert(VersionedTable.readVersion(spark, path, 2).count() == 3L)
+    strip(snap.dirs(1))
+    val e = intercept[IllegalStateException](VersionedTable.readVersion(spark, path, 2))
+    assert(e.getMessage.contains(s"lists dir ${snap.dirs(1)}"), e.getMessage)
+    // an older snapshot that lists neither still reads
+    assert(VersionedTable.readVersion(spark, path, 1).count() == 2L)
+  }
+
+  test("an empty append still reads as empty, alone and beside other dirs") {
+    val path = "/tmp/graft_tables/spec_vt_empty_append"
+    GraftTableWriter.drop(spark, path)
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    VersionedTable.append(empty, path)
+    assert(VersionedTable.read(spark, path).count() == 0L)
+    VersionedTable.append(Seq((1L, "a")).toDF("id", "v"), path)
+    VersionedTable.append(empty.repartition(3), path)
+    VersionedTable.upsertMor(Seq((1L, "A")).toDF("id", "v"), path, Seq("id"))
+    assert(VersionedTable.read(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "A")))
+  }
+
+  test("self-deleting dirs, key-only deletes, a legacy key-dir upsert, an added column and a rename match a reference at every version") {
+    val path = "/tmp/graft_tables/spec_vt_mor_chain"
+    GraftTableWriter.drop(spark, path)
+    val keys = Seq("id")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    // the reference: id -> (value, n, x); x is the column added midway
+    type Ref = Map[Long, (String, Int, Option[Long])]
+    var ref: Ref = Map.empty
+    val refs = scala.collection.mutable.Map.empty[Int, Ref]
+    def latestV = VersionedTable.versions(spark, path).last
+    def record(): Unit = refs(latestV) = ref
+    var vCol = "v"
+    def batch(ids: Seq[Long], tag: String, withX: Boolean): org.apache.spark.sql.DataFrame = {
+      val df = ids.map(i => (i, s"$tag$i", (i * 7 % 5).toInt)).toDF("id", vCol, "n")
+      if (withX) df.withColumn("x", $"id" * 10) else df
+    }
+    def put(ids: Seq[Long], tag: String, withX: Boolean): Unit =
+      ref ++= ids.map(i => i -> ((s"$tag$i", (i * 7 % 5).toInt, if (withX) Some(i * 10) else None)))
+
+    VersionedTable.appendWithStats(batch(1L to 20L, "a", withX = false), path, Seq("n"))
+    put(1L to 20L, "a", withX = false); record()
+    VersionedTable.upsertMor(batch(5L to 10L, "b", withX = false), path, keys, statsCols = Seq("n"))
+    put(5L to 10L, "b", withX = false); record()
+    // a legacy upsert: the manifest lists a separate key-only delete dir
+    // (with no recorded schema) instead of the data dir deleting its keys
+    VersionedTable.upsertMor(batch(8L to 12L, "c", withX = false), path, keys, statsCols = Seq("n"))
+    put(8L to 12L, "c", withX = false)
+    val legacy = "d-legacy-keys"
+    (8L to 12L).toDF("id").write.parquet(s"$path/$legacy")
+    val mp = new org.apache.hadoop.fs.Path(s"$path/_graft_meta", f"v$latestV%05d.json")
+    val root = {
+      val in = fs.open(mp)
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode] finally in.close()
+    }
+    val dels = root.get("deletes").asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+    val own = dels.get(dels.size - 1).asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+    own.set(0, new com.fasterxml.jackson.databind.node.TextNode(legacy))
+    val out = fs.create(mp, true)
+    try out.write(root.toString.getBytes("UTF-8")) finally out.close()
+    val legacySnap = VersionedTable.readManifestForTest(spark, path, latestV)
+    assert(legacySnap.deletes.last._1 == legacy && !legacySnap.schemas.contains(legacy))
+    record()
+    VersionedTable.deleteWhereKeys(Seq(1L, 2L, 9L).toDF("id"), path, keys)
+    ref --= Seq(1L, 2L, 9L); record()
+    VersionedTable.upsertMor(batch(Seq(3L, 9L, 21L), "d", withX = true), path, keys,
+      statsCols = Seq("n"))
+    put(Seq(3L, 9L, 21L), "d", withX = true); record()
+    VersionedTable.renameColumn(spark, path, "v", "w"); vCol = "w"; record()
+    assert(VersionedTable.upsertMorOnce(batch(Seq(4L, 10L), "e", withX = true), path, keys, 1L,
+      statsCols = Seq("n")))
+    put(Seq(4L, 10L), "e", withX = true); record()
+    assert(VersionedTable.applyCdcOnce(batch(Seq(11L, 22L), "f", withX = true),
+      Seq(12L, 5L, 12L).toDF("id"), path, keys, 2L))
+    put(Seq(11L, 22L), "f", withX = true); ref --= Seq(12L, 5L); record()
+    // a plain append of a deleted key brings it back (a later sequence)
+    VersionedTable.append(batch(Seq(1L), "g", withX = true), path)
+    put(Seq(1L), "g", withX = true); record()
+
+    val last = VersionedTable.readManifestForTest(spark, path, latestV)
+    // each upsertMor/upsertMorOnce commit added ONE dir, listed in both lists
+    assert(last.dirs.size == 7, last.dirs)
+    assert(last.deletes.map(_._1).count(last.dirs.contains) == 4, last.deletes)
+    assert(last.deletes.size == 7, last.deletes)
+
+    def got(df: org.apache.spark.sql.DataFrame, name: String): Ref =
+      df.collect().map { r =>
+        val x = if (r.schema.fieldNames.contains("x") && !r.isNullAt(r.fieldIndex("x")))
+          Some(r.getAs[Long]("x")) else None
+        r.getAs[Long]("id") -> ((r.getAs[String](name), r.getAs[Int]("n"), x))
+      }.toMap
+    def check(label: String): Unit = refs.toSeq.sortBy(_._1).foreach { case (v, want) =>
+      val df = VersionedTable.readVersion(spark, path, v)
+      val name = if (df.columns.contains("w")) "w" else "v"
+      val rows = df.collect()
+      assert(rows.length == want.size, s"$label v$v: ${rows.length} rows, want ${want.size}")
+      assert(got(df, name) == want, s"$label v$v")
+    }
+    check("chain")
+    // pruned reads: a dir left out by its bounds still deletes its keys
+    for (n <- 0 to 4) {
+      val pruned = VersionedTable.readPruned(spark, path,
+        Seq(VersionedTable.LongRange("n", n.toLong, n.toLong))).filter($"n" === n)
+      assert(got(pruned, "w") == ref.filter(_._2._2 == n), s"readPruned n = $n")
+    }
+    VersionedTable.compact(spark, path, 100L)
+    assert(VersionedTable.readManifestForTest(spark, path, latestV).deletes.isEmpty)
+    assert(got(VersionedTable.read(spark, path), "w") == ref, "compact")
+    check("after compact")
   }
 }
