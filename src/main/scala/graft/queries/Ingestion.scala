@@ -220,24 +220,16 @@ object Ingestion {
           .write.format("jdbc").option("url", url).option("dbtable", jt)
           .option("createTableColumnTypes", "event_type VARCHAR(32)")
           .mode(SaveMode.Overwrite).save()
-        // hwm is manifest-derived (r16, VERDICT r15 weak #1): the tracking
+        // each cycle is the CDC stream's own tick (JdbcPollStream.cdcCycle):
+        // hwm is manifest-derived (r16, VERDICT r15 weak #1) — the tracking
         // upsert records per-dir [min,max] for updated_us, so each poll's
-        // watermark is O(dirs) metadata arithmetic — never a re-scan of
-        // the table this very loop grows. Scan fallback stays inside
-        // committedHwm for untracked dirs.
-        def hwm(): Long =
-          graft.streaming.JdbcPollStream.committedHwm(s, p, "updated_us")
-        def cycle(): Long = {
-          val delta = s.read.format("jdbc").option("url", url)
-            .option("query",
-              s"""SELECT * FROM $jt WHERE "updated_us" > ${hwm()}""")
-            .load()
-          val n = delta.count()
-          if (n > 0) VersionedTable.upsertMor(
-            delta, p, Seq("event_id"), Seq("updated_us"))
-          n
-        }
-        val n1 = cycle() // initial snapshot: all staged evens
+        // watermark is O(dirs) metadata arithmetic, never a re-scan of the
+        // table this very loop grows (scan fallback stays inside
+        // committedHwm for untracked dirs)
+        val schema = ShardedIngest.tableSchema(s, url, jt)
+        def cycle(batchId: Long): Long = graft.streaming.JdbcPollStream.cdcCycle(
+          s, url, jt, schema, Seq("event_id"), "updated_us", None, p, batchId)._2.getOrElse(0L)
+        val n1 = cycle(1L) // initial snapshot: all staged evens
         // live mutations: odd rows arrive; %100==0 rows update IN PLACE
         // (monotone update clock BEYOND any event epoch-micros ~1.7e15:
         // inserts at 3e15+id, updates at 4e15+id)
@@ -254,8 +246,8 @@ object Ingestion {
               |WHERE MOD("event_id", 100) = 0""".stripMargin)
           st.close()
         } finally stmtConn.close()
-        val n2 = cycle() // exactly the delta: odd inserts + updated evens
-        val n3 = cycle() // quiescent: nothing new
+        val n2 = cycle(2L) // exactly the delta: odd inserts + updated evens
+        val n3 = cycle(3L) // quiescent: nothing new
         require(n3 == 0L, s"quiescent cycle pulled $n3 rows")
         require(n1 > 0L && n2 > 0L, s"cycles pulled ($n1, $n2) rows")
         VersionedTable.read(s, p)
@@ -304,26 +296,17 @@ object Ingestion {
         ev.write.format("jdbc").option("url", url).option("dbtable", jt)
           .option("createTableColumnTypes", "event_type VARCHAR(32)")
           .mode(SaveMode.Overwrite).save()
-        // composite hwm from per-dir PAIR bounds (r16, VERDICT r15 weak
-        // #1): the tracking upsert records the batch's exact lexicographic
+        // each cycle is the CDC stream's own tick (JdbcPollStream.cdcCycle):
+        // composite hwm from per-dir PAIR bounds (r16, VERDICT r15 weak #1)
+        // — the tracking upsert records the batch's exact lexicographic
         // (updated_us, event_id) [min,max] in the manifest, so the
         // watermark never re-scans the growing table; max(struct) over the
-        // MOR read survives only as committedHwmInc's untracked fallback.
-        def hwm(): (Long, Long) =
-          graft.streaming.JdbcPollStream.committedHwmInc(
-            s, p, "updated_us", "event_id")
-        def cycle(): Long = {
-          val (hts, hid) = hwm()
-          val delta = s.read.format("jdbc").option("url", url)
-            .option("query", s"""SELECT * FROM $jt WHERE "updated_us" > $hts
-              OR ("updated_us" = $hts AND "event_id" > $hid)""")
-            .load()
-          val n = delta.count()
-          if (n > 0) VersionedTable.upsertMor(delta, p, Seq("event_id"),
-            Seq("updated_us"), pairCols = Some(("updated_us", "event_id")))
-          n
-        }
-        val n1 = cycle() // initial snapshot
+        // MOR read survives only as committedHwmInc's untracked fallback
+        val schema = ShardedIngest.tableSchema(s, url, jt)
+        def cycle(batchId: Long): Long = graft.streaming.JdbcPollStream.cdcCycle(
+          s, url, jt, schema, Seq("event_id"), "updated_us", Some("event_id"), p,
+          batchId)._2.getOrElse(0L)
+        val n1 = cycle(1L) // initial snapshot
         // the race: rows arriving AT the watermark timestamp, higher ids
         val maxTs = ev.agg(max($"updated_us")).head.getLong(0)
         ev.filter($"event_id" % 97 === 0)
@@ -331,8 +314,8 @@ object Ingestion {
             ($"value_e4" + 5550000L).as("value_e4"), lit(maxTs).as("updated_us"))
           .write.format("jdbc").option("url", url).option("dbtable", jt)
           .mode(SaveMode.Append).save()
-        val n2 = cycle() // exactly the raced rows — ts-only `>` sees zero
-        val n3 = cycle() // quiescent fixpoint
+        val n2 = cycle(2L) // exactly the raced rows — ts-only `>` sees zero
+        val n3 = cycle(3L) // quiescent fixpoint
         require(n3 == 0L, s"quiescent cycle pulled $n3 rows")
         require(n1 > 0L && n2 > 0L, s"cycles pulled ($n1, $n2) rows")
         VersionedTable.read(s, p)

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * failed swap rolls the original back — no window where the table is simply
   * deleted. [[upsertPartitioned]] confines the rewrite to the partitions the
   * update batch actually touches, the parquet analogue of Iceberg-v2 equality
-  * deletes touching only affected files.
+  * deletes touching only affected files. An unpartitioned table's upsert is
+  * [[VersionedTable.upsert]] (copy-on-write) or [[VersionedTable.upsertMor]]
+  * (merge-on-read), which commit snapshots instead of swapping dirs.
   */
 object GraftTableWriter {
 
@@ -27,26 +29,11 @@ object GraftTableWriter {
   def overwrite(df: DataFrame, path: String, partitions: Seq[String] = Nil): Unit =
     writer(df, partitions).mode(SaveMode.Overwrite).parquet(path)
 
-  /** Equality-field upsert into an existing table (creates it when absent).
-    * Rewrites the whole table — correct at any size but O(table) per batch;
-    * partitioned tables should use [[upsertPartitioned]], which is O(touched
-    * partitions).
-    */
-  def upsert(df: DataFrame, path: String, keys: Seq[String],
-      partitions: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    if (!exists(spark, path)) { overwrite(df, path, partitions); return }
-    val merged = Upsert.upsert(spark.read.parquet(path), df, keys)
-    val staging = new Path(path + "__staging")
-    writer(merged, partitions).mode(SaveMode.Overwrite).parquet(staging.toString)
-    swapDir(fs(spark, path), staging, new Path(path))
-  }
-
   /** Version-aware upsert: keep, per equality key, the row ranking first
     * under `ordering` across BOTH the existing table and the update batch.
-    * Unlike [[upsert]] (last-writer-wins), the result is independent of
-    * arrival order — the correct merge for CDC streams whose micro-batch
-    * ordering is not guaranteed.
+    * Unlike a last-writer-wins upsert ([[VersionedTable.upsert]]), the
+    * result is independent of arrival order — the correct merge for CDC
+    * streams whose micro-batch ordering is not guaranteed.
     */
   def upsertVersioned(df: DataFrame, path: String, keys: Seq[String],
       ordering: Seq[Column], partitions: Seq[String] = Nil): Unit = {
@@ -78,7 +65,8 @@ object GraftTableWriter {
   def upsertPartitioned(df: DataFrame, path: String, keys: Seq[String],
       partitions: Seq[String]): Unit = {
     require(partitions.nonEmpty,
-      "upsertPartitioned needs identity partition columns; use upsert() for unpartitioned tables")
+      "upsertPartitioned needs identity partition columns; use VersionedTable.upsert or " +
+        "upsertMor for unpartitioned tables")
     val spark = df.sparkSession
     if (!exists(spark, path)) { overwrite(df, path, partitions); return }
     // O(#touched partitions) driver-side values — the CDC batch's partition

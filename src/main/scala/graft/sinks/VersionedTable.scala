@@ -533,8 +533,8 @@ object VersionedTable {
     *
     * Returns true when the batch was applied, false when it was a replay
     * (`batchId <=` the manifest's `lastBatch`). Batch ids must be applied in
-    * ascending order — exactly what one streaming query produces; like
-    * [[upsert]], concurrent WRITERS must be externally serialized.
+    * ascending order — exactly what one streaming query produces, so
+    * concurrent batch-id WRITERS must be externally serialized.
     *
     * An EMPTY batch (its write observed zero rows) commits nothing and
     * returns false: its staged dir is deleted, and its batch id is not
@@ -561,32 +561,8 @@ object VersionedTable {
   /** Idempotent equality-field upsert keyed by batch id — [[appendOnce]]'s
     * contract for the CDC-upsert sink shape ([[upsert]] semantics under
     * at-least-once foreachBatch delivery). */
-  def upsertOnce(df: DataFrame, path: String, keys: Seq[String], batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    // a concurrent redelivery aborts the commit in-lock; its re-plan then
-    // sees the batch as replayed and returns false
-    replanning("upsertOnce", path) {
-      val planned = latest(spark, path)
-      !replayed(planned, batchId) && {
-        val merged = planned match {
-          case None => df
-          case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
-        }
-        val w = writeDataDir(merged, path)
-        // both guards re-run IN the lock: the exactly-once high-water mark
-        // (concurrent redelivery) and the COW snapshot validation
-        // (concurrent writer) — [[upsert]]'s protocol plus [[appendOnce]]'s
-        commit(spark, path, { cur =>
-          guardBatch(cur, batchId)
-          if (cur.map(_.version) != planned.map(_.version))
-            throw new CommitAborted("table advanced during the COW merge")
-          guardRenamedAway(df.columns.toSeq, cur)
-          Snapshot(0, Seq(w.dir), Map.empty, Some(batchId), schemas = w.schemas)
-        })
-        true
-      }
-    }
-  }
+  def upsertOnce(df: DataFrame, path: String, keys: Seq[String], batchId: Long): Boolean =
+    rewrite("upsertOnce", df.sparkSession, path, Some(batchId))(upserted(df, path, keys)).isDefined
 
   /** Append with per-dir column metrics (Iceberg's file-level min/max
     * stats, IcebergTableManager.java:22-25 metrics config): the write's own
@@ -756,43 +732,53 @@ object VersionedTable {
     readPruned(spark, path, Seq(LongRange(cols.head, lo, hi)))
   }
 
-  /** Equality-field upsert as a new snapshot (read latest, merge, commit).
-    * The merged data is computed against the snapshot current at call time;
-    * like the reference's single Flink sink, concurrent WRITERS of the same
-    * table must be externally serialized (concurrent readers are always
-    * safe) — a conflicting commit between read and commit would need the
-    * merge re-run, which this format surfaces by version-bumping, not by
-    * silently overwriting. */
-  /** Copy-on-write upsert with VALIDATED optimistic retry (the Iceberg
-    * copy-on-write MERGE protocol): the merge is computed against the
-    * snapshot read at planning time, and the commit callback re-checks —
-    * inside the table lock — that the table is STILL at that snapshot. A
-    * concurrent commit (append, MOR upsert, anything) aborts this attempt
-    * and the whole merge re-plans against the new state, so no concurrent
-    * writer's rows are ever silently overwritten; the abandoned data dir is
-    * ordinary [[removeOrphans]] debris. Bounded retries: at some contention
-    * level a COW rewrite should fail loudly rather than starve. */
-  def upsert(df: DataFrame, path: String, keys: Seq[String]): Int = {
-    val spark = df.sparkSession
-    replanning("upsert", path) {
-      val planned = latest(spark, path)
-      val merged = planned match {
-        case None => df
-        case Some(snap) => Upsert.upsert(readSnapshot(spark, path, snap), df, keys)
-      }
-      val w = writeDataDir(merged, path)
-      commit(spark, path, { cur =>
-        if (cur.map(_.version) != planned.map(_.version))
-          throw new CommitAborted(s"table advanced past " +
-            s"v${planned.map(_.version).getOrElse(0)} during the COW merge")
-        guardRenamedAway(df.columns.toSeq, cur)
-        Snapshot(0, Seq(w.dir), lastBatch = cur.flatMap(_.lastBatch), schemas = w.schemas)
-      })
-    }
-  }
+  /** Copy-on-write equality-field upsert: the table's rows with the batch
+    * merged in by `keys`, committed as one snapshot of one data dir through
+    * [[rewrite]] — a concurrent commit re-plans the merge, never loses its
+    * rows. */
+  def upsert(df: DataFrame, path: String, keys: Seq[String]): Int =
+    rewrite("upsert", df.sparkSession, path)(upserted(df, path, keys)).get
 
-  /** Run one planned attempt of a VALIDATED optimistic rewrite ([[upsert]],
-    * [[upsertOnce]], [[compact]]) and re-plan it when its commit aborts in
+  /** The [[upsert]] merge against a planned snapshot (`df` alone when the
+    * table has none). */
+  private def upserted(df: DataFrame, path: String, keys: Seq[String])(
+      planned: Option[Snapshot]): DataFrame =
+    planned.fold(df)(snap => Upsert.upsert(readSnapshot(df.sparkSession, path, snap), df, keys))
+
+  /** The VALIDATED copy-on-write body of [[upsert]], [[upsertOnce]] and
+    * [[applyChanges]] (the Iceberg copy-on-write MERGE protocol): `plan`
+    * computes the table's new contents from the snapshot read at planning
+    * time, they are written as one data dir, and the commit callback
+    * re-checks — inside the table lock — that the table is STILL at that
+    * snapshot. A concurrent commit (append, MOR upsert, anything) aborts the
+    * attempt and [[replanning]] re-plans against the new state, so no
+    * concurrent writer's rows are ever silently overwritten; the abandoned
+    * data dir is ordinary [[removeOrphans]] debris. With a `batchId` the
+    * exactly-once guard runs before planning and again in the lock, and the
+    * id commits with the rows (a concurrent redelivery's re-plan then sees
+    * the batch as replayed). Returns the committed version, or None when
+    * `batchId` was a replay. */
+  private def rewrite(op: String, spark: SparkSession, path: String,
+      batchId: Option[Long] = None)(plan: Option[Snapshot] => DataFrame): Option[Int] =
+    replanning(op, path) {
+      val planned = latest(spark, path)
+      if (batchId.exists(replayed(planned, _))) None
+      else {
+        val w = writeDataDir(plan(planned), path)
+        Some(commit(spark, path, { cur =>
+          batchId.foreach(guardBatch(cur, _))
+          if (cur.map(_.version) != planned.map(_.version))
+            throw new CommitAborted(s"table advanced past " +
+              s"v${planned.map(_.version).getOrElse(0)} during the $op rewrite")
+          guardRenamedAway(w.schema.fieldNames.toSeq, cur)
+          Snapshot(0, Seq(w.dir), lastBatch = batchId.orElse(cur.flatMap(_.lastBatch)),
+            schemas = w.schemas)
+        }))
+      }
+    }
+
+  /** Run one planned attempt of a VALIDATED optimistic rewrite ([[rewrite]],
+    * [[compact]]) and re-plan it when its commit aborts in
     * the lock (the table advanced past the planned snapshot) or its
     * planning read went stale. Bounded: at some contention level a rewrite
     * should fail loudly rather than starve. */
@@ -1038,15 +1024,17 @@ object VersionedTable {
     * CdcReplicationSpec). The replica is itself snapshot-versioned: each
     * applied batch is time-travelable, and an exactly-once variant under
     * at-least-once delivery is one [[appendOnce]]-style batch-id check away.
-    * At 100 TB the rewrite confines to touched identity partitions via the
-    * upsertPartitioned discipline; the join shuffles once by key like the
-    * upsert that produced the delta. */
+    * The rewrite commits through [[rewrite]], so a commit that lands on the
+    * replica meanwhile re-plans it instead of being overwritten. The join
+    * shuffles once by key like the upsert that produced the delta. */
   def applyChanges(ch: DataFrame, path: String, keys: Seq[String]): Int = {
-    val spark = ch.sparkSession
-    val cur = read(spark, path)
-    val touched = ch.select(keys.map(org.apache.spark.sql.functions.col): _*)
-    val ups = ch.filter(org.apache.spark.sql.functions.col("op").isin("I", "U")).drop("op")
-    overwrite(cur.join(touched, keys, "left_anti").unionByName(ups), path)
+    import org.apache.spark.sql.functions.col
+    val touched = ch.select(keys.map(col): _*)
+    val ups = ch.filter(col("op").isin("I", "U")).drop("op")
+    rewrite("applyChanges", ch.sparkSession, path) { planned =>
+      val snap = planned.getOrElse(throw new IllegalStateException(s"no snapshots at $path"))
+      readSnapshot(ch.sparkSession, path, snap).join(touched, keys, "left_anti").unionByName(ups)
+    }.get
   }
 
   /** Latest snapshot contents. */

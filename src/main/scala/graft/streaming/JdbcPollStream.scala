@@ -5,6 +5,7 @@ import graft.sources.ShardedIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** The reference pipeline running AS a stream: a ProcessingTime Structured
   * Streaming query whose every micro-batch executes one live JDBC poll cycle
@@ -17,18 +18,19 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * State design (the kill/restart contract): the per-shard offset map is NOT
   * a second durable store that could diverge from the data — the COMMITTED
-  * TABLE IS the offset state. Each page appends through
-  * [[VersionedTable.appendOnce]] (batch id committed atomically with the
-  * rows), and a shard's offset is, by construction, the number of its rows
-  * already committed. In steady state the driver advances an in-memory map
-  * by `+= rowCount` after each commit, the count observed on the rows that
-  * commit wrote (the reference's ValueState update,
-  * SnowflakeProcessFunction.java:113); at (re)start — and whenever a
-  * replayed batch id is detected — the map is re-derived from the committed
-  * table with one per-shard count aggregate. So:
+  * TABLE IS the offset state. Each cycle's pages are read by the write that
+  * commits them ([[VersionedTable.appendOnceObserved]]: batch id committed
+  * atomically with the rows), and a shard's offset is, by construction, the
+  * number of its rows already committed. In steady state the driver
+  * advances an in-memory map by `+= rowCount` after each commit, the
+  * per-shard counts that write observed on the rows it committed (the
+  * reference's ValueState update, SnowflakeProcessFunction.java:113); at
+  * (re)start — and whenever a replayed batch id is detected — the map and
+  * the cycle counter are re-derived from the committed table with one
+  * per-shard aggregate. So:
   *
   *  - crash AFTER the sink commit, BEFORE the checkpoint commit: the batch
-  *    id is redelivered, `appendOnce` refuses it, offsets re-derive from
+  *    id is redelivered, the append refuses it, offsets re-derive from
   *    committed data — no duplicate, no gap;
   *  - crash BEFORE the sink commit: the redelivered batch re-polls the same
   *    offsets (derived, not remembered) and commits once;
@@ -86,16 +88,20 @@ object JdbcPollStream {
     * One aggregate; O(shards) rows back. */
   def committedOffsets(spark: SparkSession, tablePath: String,
       shardCol: String): Map[String, Long] =
-    if (VersionedTable.versions(spark, tablePath).isEmpty) Map.empty
-    else VersionedTable.read(spark, tablePath)
-      .groupBy(col(shardCol)).agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    committedState(spark, tablePath, shardCol)._1
 
-  /** Highest committed cycle number (0 when the table is empty). */
-  private def committedCycle(spark: SparkSession, tablePath: String): Long =
-    if (VersionedTable.versions(spark, tablePath).isEmpty) 0L
-    else VersionedTable.read(spark, tablePath)
-      .agg(coalesce(max(col("cycle")), lit(0L))).head().getLong(0)
+  /** The poll loop's recovered state: [[committedOffsets]] and the highest
+    * committed cycle number (0 when the table is empty), from one
+    * `groupBy(shard).agg(count, max(cycle))` scan of the committed table. */
+  private def committedState(spark: SparkSession, tablePath: String,
+      shardCol: String): (Map[String, Long], Long) =
+    if (VersionedTable.versions(spark, tablePath).isEmpty) (Map.empty, 0L)
+    else {
+      val rows = VersionedTable.read(spark, tablePath)
+        .groupBy(col(shardCol)).agg(count(lit(1)), max(col("cycle"))).collect()
+      (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
+        rows.map(_.getLong(2)).foldLeft(0L)(math.max))
+    }
 
   /** The shared ProcessingTime tick loop: a rate-source ticker (rows
     * ignored; each micro-batch = one poll cycle, the checkpoint gives
@@ -161,10 +167,8 @@ object JdbcPollStream {
     val pageSchema = ShardedIngest.tableSchema(spark, cfg.url, cfg.table)
 
     def pollCycle(batchId: Long): Boolean = {
-      val (offsets, lastCycle) = graft.core.trace("poll.state")(state.getOrElse {
-        (committedOffsets(spark, cfg.tablePath, cfg.shardCol),
-          committedCycle(spark, cfg.tablePath))
-      })
+      val (offsets, lastCycle) = graft.core.trace("poll.state")(
+        state.getOrElse(committedState(spark, cfg.tablePath, cfg.shardCol)))
       // continuous re-discovery: shards that appeared since the last cycle
       // enter at offset 0 (ColumnSource re-polls DISTINCT forever)
       val shards = graft.core.trace("poll.discover")(ShardedIngest.discoverShardsJdbc(
@@ -277,38 +281,51 @@ object JdbcPollStream {
       (r.getLong(0), r.getLong(1))
     }
 
-  /** Run the CDC stream until a cycle pulls zero rows (quiescent), with
-    * the same restart/exactly-once contract as [[runUntilDrained]]. A cycle
+  /** One CDC cycle: derive the high-watermark from the committed table
+    * (`tsCol`, or the (tsCol, incCol) pair when `incCol` is set), pull the
+    * delta past it from the live source through [[ShardedIngest.jdbcScan]]
+    * under `schema`, and MOR-upsert it by `keys` under `batchId`. The cycle
     * is ONE Spark job: the delta is read once, by the write of its one data
     * dir, which deletes its own keys' older versions
-    * ([[VersionedTable.upsertMorOnce]]). What that write observed tells the
-    * three outcomes apart — a replayed batch id is refused before any write
-    * (nothing observed; the next tick polls again), a quiescent cycle
-    * observes 0 rows (its staged dir is deleted and nothing commits), and
-    * anything else commits. Every dir in the commit and the hwm bounds the
-    * next cycle derives come from that one read of the live source. */
+    * ([[VersionedTable.upsertMorOnce]]). Returns whether it committed and
+    * the rows that write observed — None when `batchId` was a replay,
+    * refused before any write; Some(0) when the cycle was quiescent (its
+    * staged dir is deleted and nothing commits). Every dir in the commit
+    * and the hwm bounds the next cycle derives come from that one read of
+    * the live source. */
+  def cdcCycle(spark: SparkSession, url: String, table: String, schema: StructType,
+      keys: Seq[String], tsCol: String, incCol: Option[String], tablePath: String,
+      batchId: Long): (Boolean, Option[Long]) = {
+    val predicate = graft.core.trace("cdc.hwm")(incCol match {
+      case None =>
+        val hwm = committedHwm(spark, tablePath, tsCol)
+        s""""$tsCol" > $hwm"""
+      case Some(inc) =>
+        val (hts, hid) = committedHwmInc(spark, tablePath, tsCol, inc)
+        s""""$tsCol" > $hts OR ("$tsCol" = $hts AND "$inc" > $hid)"""
+    })
+    val delta = ShardedIngest.jdbcScan(spark, url,
+      Seq(s"SELECT * FROM $table WHERE $predicate"), schema)
+    // track the watermark column(s) in the commit's manifest metrics so
+    // the NEXT cycle's hwm derivation is metadata-only (no table scan)
+    graft.core.trace("cdc.commit")(
+      VersionedTable.upsertMorOnceObserved(delta, tablePath, keys, batchId,
+        statsCols = tsCol +: incCol.toSeq, pairCols = incCol.map(i => (tsCol, i))))
+  }
+
+  /** Run the CDC stream until a cycle pulls zero rows (quiescent), with
+    * the same restart/exactly-once contract as [[runUntilDrained]]: each
+    * tick is one [[cdcCycle]], whose observed rows tell the three outcomes
+    * apart — a refused replay polls again on the next tick, a quiescent
+    * cycle drains, and anything else commits. */
   def runCdcUntilDrained(spark: SparkSession, cfg: CdcConfig): Unit = {
     @volatile var cycles = 0L
     // delta schema resolved once per run (r16): same per-cycle fixed-cost
     // removal as [[runUntilDrained]]'s pageSchema
     val deltaSchema = ShardedIngest.tableSchema(spark, cfg.url, cfg.table)
     def pollCycle(batchId: Long): Boolean = {
-      val predicate = graft.core.trace("cdc.hwm")(cfg.incCol match {
-        case None =>
-          val hwm = committedHwm(spark, cfg.tablePath, cfg.tsCol)
-          s""""${cfg.tsCol}" > $hwm"""
-        case Some(inc) =>
-          val (hts, hid) = committedHwmInc(spark, cfg.tablePath, cfg.tsCol, inc)
-          s""""${cfg.tsCol}" > $hts OR ("${cfg.tsCol}" = $hts AND "$inc" > $hid)"""
-      })
-      val deltaSql = s"SELECT * FROM ${cfg.table} WHERE $predicate"
-      val delta = ShardedIngest.jdbcScan(spark, cfg.url, Seq(deltaSql), deltaSchema)
-      // track the watermark column(s) in the commit's manifest metrics so
-      // the NEXT cycle's hwm derivation is metadata-only (no table scan)
-      val (committed, observed) = graft.core.trace("cdc.commit")(
-        VersionedTable.upsertMorOnceObserved(delta, cfg.tablePath, cfg.keys, batchId,
-          statsCols = cfg.tsCol +: cfg.incCol.toSeq,
-          pairCols = cfg.incCol.map(i => (cfg.tsCol, i))))
+      val (committed, observed) = cdcCycle(spark, cfg.url, cfg.table, deltaSchema,
+        cfg.keys, cfg.tsCol, cfg.incCol, cfg.tablePath, batchId)
       if (committed) {
         cycles += 1
         cfg.afterCommit(cycles)

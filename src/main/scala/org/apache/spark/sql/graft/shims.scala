@@ -23,6 +23,25 @@ object shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over rows already in `schema`'s Catalyst format
+    * (`internalCreateDataFrame` is `private[sql]` in the classic module):
+    * no external-Row encoder is built and no row is converted. */
+  def internalCreateDataFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
+  /** Spark's JDBC row converter, the one the generic JDBC source's scan
+    * runs (`resultSetToSparkInternalRows` is not public): `rs`'s rows in
+    * `schema`'s Catalyst format, one mutable row refilled per row. */
+  def jdbcInternalRows(rs: java.sql.ResultSet, dialect: org.apache.spark.sql.jdbc.JdbcDialect,
+      schema: org.apache.spark.sql.types.StructType,
+      metrics: org.apache.spark.executor.InputMetrics)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] =
+    org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+      .resultSetToSparkInternalRows(rs, dialect, schema, metrics)
+
   /** Idempotently add a planner strategy to the session's experimental list
     * (`experimental` lives on the classic session only). */
   def ensureStrategy(spark: org.apache.spark.sql.SparkSession,

@@ -112,7 +112,7 @@ class JdbcSpec extends SparkSpec {
     // the pruned Snowflake-dialect emission, byte-pinned: quoted-uppercase
     // projection list, residual AND-ed under the shard equality, the
     // reference's exact page clause
-    val sf = ShardedIngest.pageSqlPruned("CUSTOMERS", "shard", Seq("ts", "id"),
+    val sf = ShardedIngest.pageSql("CUSTOMERS", "shard", Seq("ts", "id"),
       "vi'ew", offset = 40L, pageSize = 20L, PagingDialect.Snowflake,
       columns = Seq("id", "shard", "ts"), residual = Some(""""AMT" > 100"""))
     assert(sf ==
@@ -120,7 +120,7 @@ class JdbcSpec extends SparkSpec {
         |ORDER BY "TS", "ID"
         |LIMIT 20 OFFSET 40""".stripMargin, sf)
     // no columns + no residual reproduces the reference emission EXACTLY
-    assert(ShardedIngest.pageSqlPruned("t", "shard", Seq("ts"), "x", 0L, 10L,
+    assert(ShardedIngest.pageSql("t", "shard", Seq("ts"), "x", 0L, 10L,
       PagingDialect.Snowflake, Nil, None) ==
       ShardedIngest.pageSql("t", "shard", Seq("ts"), "x", 0L, 10L,
         PagingDialect.Snowflake))
@@ -133,6 +133,85 @@ class JdbcSpec extends SparkSpec {
     assert(pruned.columns.toSeq == Seq("event_id", "event_type"))
     val ids = pruned.select("event_id").as[Long].collect().toSeq.sorted
     assert(ids.forall(_ > 3L) && ids.size <= 5)
+  }
+
+  /** The old per-shard generic JDBC relations, unioned: the reference
+    * reading each page through Spark's own JDBC source. */
+  private def generic(sqls: Seq[String]) = sqls.map(q =>
+    spark.read.format("jdbc").option("url", url).option("query", q).load())
+    .reduce(_ unionByName _)
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame,
+      key: String = "event_id"): Seq[org.apache.spark.sql.Row] =
+    df.collect().toSeq.sortBy(_.getAs[Long](key))
+
+  test("viaJdbc and viaJdbcResolved read what the generic JDBC source reads, default and pruned") {
+    import ShardedIngest.PagingDialect.OffsetFetch
+    val shards = ShardedIngest.discoverShardsJdbc(spark, url, "events_spec", "event_type")
+    val offsets = Map("click" -> 11L, "view" -> 40L)
+    def sqls(columns: Seq[String], residual: Option[String]) = shards.map(sh =>
+      ShardedIngest.pageSql("events_spec", "event_type", Seq("tsu", "event_id"), sh,
+        offsets.getOrElse(sh, 0L), 60L, OffsetFetch, columns, residual))
+    // default page: SELECT *
+    val via = ShardedIngest.viaJdbc(spark, url, "events_spec", "event_type",
+      Seq("tsu", "event_id"), offsets, 60L, shards)
+    val resolved = ShardedIngest.viaJdbcResolved(spark, url, "events_spec", "event_type",
+      Seq("tsu", "event_id"), offsets, 60L, shards, OffsetFetch, via.schema)
+    val ref = generic(sqls(Nil, None))
+    assert(via.schema == ref.schema && resolved.schema == ref.schema)
+    assert(sortedRows(via).nonEmpty)
+    assert(sortedRows(via) == sortedRows(ref) && sortedRows(resolved) == sortedRows(ref))
+    // pruned page: projection + residual, read under the probed schema
+    val cols = Seq("event_id", "tsu")
+    val res = Some(""""event_id" > 40""")
+    val pruned = ShardedIngest.viaJdbc(spark, url, "events_spec", "event_type",
+      Seq("tsu", "event_id"), offsets, 60L, shards, columns = cols, residual = res)
+    val prunedResolved = ShardedIngest.jdbcScan(spark, url, sqls(cols, res), pruned.schema)
+    val prunedRef = generic(sqls(cols, res))
+    assert(pruned.columns.toSeq == cols && pruned.schema == prunedRef.schema)
+    assert(sortedRows(pruned).nonEmpty)
+    assert(sortedRows(pruned) == sortedRows(prunedRef) &&
+      sortedRows(prunedResolved) == sortedRows(prunedRef))
+  }
+
+  test("jdbcScan converts every column type the generic JDBC source reads") {
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      c.createStatement().executeUpdate(
+        """CREATE TABLE typed_spec (shard VARCHAR(8), id BIGINT, i INT, si SMALLINT,
+          |d DECIMAL(12, 3), x DOUBLE, r REAL, ok BOOLEAN, dt DATE, ts TIMESTAMP,
+          |b VARCHAR(16) FOR BIT DATA, txt CLOB)""".stripMargin)
+      val ins = c.prepareStatement(
+        "INSERT INTO typed_spec VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?, ?, ?)")
+      for (k <- 1 to 12) {
+        ins.setString(1, if (k % 2 == 0) "even" else "odd")
+        ins.setLong(2, k.toLong)
+        if (k % 4 == 0) {
+          import java.sql.Types._
+          Seq(INTEGER, SMALLINT, DECIMAL, DOUBLE, REAL, BOOLEAN, DATE, TIMESTAMP,
+            VARBINARY, CLOB).zipWithIndex.foreach { case (t, j) => ins.setNull(j + 3, t) }
+        } else {
+          ins.setInt(3, k * 1000); ins.setShort(4, k.toShort)
+          ins.setBigDecimal(5, new java.math.BigDecimal(s"$k.125"))
+          ins.setDouble(6, k / 3.0); ins.setFloat(7, k / 7.0f)
+          ins.setBoolean(8, k % 3 == 0)
+          ins.setDate(9, java.sql.Date.valueOf(s"2024-01-${10 + k}"))
+          ins.setTimestamp(10, java.sql.Timestamp.valueOf(s"2024-02-03 04:05:${10 + k}.123456"))
+          ins.setBytes(11, Array.tabulate(k)(j => (k * 17 + j).toByte))
+          ins.setString(12, s"row $k")
+        }
+        ins.executeUpdate()
+      }
+    } finally c.close()
+    val shards = ShardedIngest.discoverShardsJdbc(spark, url, "typed_spec", "SHARD")
+    val via = ShardedIngest.viaJdbc(spark, url, "typed_spec", "SHARD", Seq("ID"),
+      Map("odd" -> 1L), 4L, shards)
+    val ref = generic(shards.map(sh => ShardedIngest.pageSql("typed_spec", "SHARD", Seq("ID"),
+      sh, if (sh == "odd") 1L else 0L, 4L, ShardedIngest.PagingDialect.OffsetFetch)))
+    assert(via.schema == ref.schema)
+    assert(via.schema.map(_.dataType).contains(org.apache.spark.sql.types.BinaryType))
+    val got = sortedRows(via, "ID")
+    assert(got.size == 8 && got == sortedRows(ref, "ID"))
   }
 
   test("viaJdbc offset advance replays the incremental contract") {

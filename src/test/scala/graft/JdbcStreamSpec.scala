@@ -85,6 +85,35 @@ class JdbcStreamSpec extends SparkSpec {
       Map("a" -> 25L, "b" -> 25L))
   }
 
+  test("a binary (FOR BIT DATA) column drains exactly once") {
+    // every page reads through Spark's own JDBC row converter, so a column
+    // type outside the poll loop's usual scalars pages like any other
+    val url = "jdbc:derby:memory:jps_binary;create=true"
+    val (table, ck) = freshDirs("binary")
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      c.createStatement().executeUpdate(
+        """CREATE TABLE t ("shard" VARCHAR(32), "ord" BIGINT,
+          |"payload" VARCHAR(16) FOR BIT DATA)""".stripMargin)
+      val ins = c.prepareStatement("INSERT INTO t VALUES (?, ?, ?)")
+      for { sh <- Seq("a", "b"); i <- 1 to 25 } {
+        ins.setString(1, sh); ins.setLong(2, i.toLong)
+        if (i % 5 == 0) ins.setNull(3, java.sql.Types.VARBINARY)
+        else ins.setBytes(3, Array.tabulate(i % 7 + 1)(j => (i * 31 + j).toByte))
+        ins.executeUpdate()
+      }
+    } finally c.close()
+    JdbcPollStream.runUntilDrained(spark, cfg(url, table, ck).copy(maxRestarts = 0))
+    val got = VersionedTable.read(spark, table).select($"shard", $"ord", $"payload", $"cycle")
+      .collect().map(r => (r.getString(0), r.getLong(1),
+        Option(r.getAs[Array[Byte]](2)).map(_.toSeq), r.getLong(3))).sortBy(r => (r._1, r._2)).toSeq
+    val want = for { sh <- Seq("a", "b"); i <- 1 to 25 } yield (sh, i.toLong,
+      if (i % 5 == 0) None else Some(Array.tabulate(i % 7 + 1)(j => (i * 31 + j).toByte).toSeq),
+      ((i - 1) / 10 + 1).toLong)
+    assert(got == want)
+    assert(VersionedTable.versions(spark, table).size == 3)
+  }
+
   test("crash BEFORE the sink commit: redelivery re-polls the same offsets, commits once") {
     val url = "jdbc:derby:memory:jps_precrash;create=true"
     val (table, ck) = freshDirs("precrash")
