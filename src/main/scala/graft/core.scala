@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** A named engine query plus (optionally) the equivalent DuckDB SQL oracle.
   *
@@ -103,6 +104,30 @@ object core {
       val t0 = System.nanoTime(); val r = f
       System.err.println(f"[trace] $name ${(System.nanoTime() - t0) / 1e6}%.1f ms")
       r
+    }
+
+  /** The one cache-ownership rule for operators: persist `df` for the
+    * duration of `f` and release it when `f` returns or throws.
+    *
+    * An operator persists a frame that two or more consumers read (both
+    * sides of a self-join, a seeding action plus each loop iteration):
+    * Spark does not deduplicate common subtrees, so without the persist the
+    * frame's whole upstream plan (scan, tokenize, hash kernels) runs once
+    * per consumer (r16, guide §5). MEMORY_AND_DISK spills, never OOMs.
+    *
+    * The release is BLOCKING: the bench interleaves runs back to back, and
+    * asynchronous releases from consecutive rounds piled cached blocks into
+    * the execution-memory headroom of the next query (SURVEY §4
+    * `pq_unpersist_blocking`). Nothing `f` returns may hold the block: a
+    * returned frame that reads `df` is either materialized inside `f`
+    * (`localCheckpoint()` — checkpoint blocks are ContextCleaner-managed,
+    * cache entries are not) or left lazy, recomputing its upstream once.
+    * A frame the caller already cached is used as is and left cached. */
+  def withPersisted[T](df: DataFrame)(f: DataFrame => T): T =
+    if (df.storageLevel != StorageLevel.NONE) f(df)
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      try f(p) finally p.unpersist(blocking = true)
     }
 
   /** Spread a kernel input across the cluster when the SCAN cannot: a

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.withPersisted
 import graft.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -139,17 +140,17 @@ object Ann {
         posexplode(array((0 until numTables).map(t =>
           srp(col("embedding"), numBits, 2000 + t)): _*)))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
-      // both sides of the bucket self-join read this frame; persist or the
-      // SRP hashing runs twice (r16, guide §5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bucketed.as("a").join(bucketed.as("b"), Seq("tbl", "bucket"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        col("a.embedding").as("va"), col("b.embedding").as("vb"))
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), cosine_sim(col("va"), col("vb")).as("cosine"))
-      .filter(col("cosine") >= minCosine)
-      .orderBy("id_a", "id_b")
+    withPersisted(bucketed) { bucketed =>
+      bucketed.as("a").join(bucketed.as("b"), Seq("tbl", "bucket"))
+        .filter(col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+          col("a.embedding").as("va"), col("b.embedding").as("vb"))
+        .dropDuplicates("id_a", "id_b")
+        .select(col("id_a"), col("id_b"), cosine_sim(col("va"), col("vb")).as("cosine"))
+        .filter(col("cosine") >= minCosine)
+        .orderBy("id_a", "id_b")
+        .localCheckpoint()
+    }
   }
 
   /** Exact k-nearest-neighbor GRAPH: the top-k cosine neighbors of EVERY
@@ -187,20 +188,21 @@ object Ann {
         posexplode(array((0 until numTables).map(t =>
           srp(col("embedding"), numBits, 3000 + t)): _*)))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
-      // both sides of the bucket self-join read this frame (r16, guide §5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = bucketed.as("a").join(bucketed.as("b"), Seq("tbl", "bucket"))
-      .filter(col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        col("a.embedding").as("qv"), col("b.embedding").as("cv"))
-      .dropDuplicates("query_id", "neighbor_id")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.select(col("query_id"), col("neighbor_id"),
-        cosine_sim(col("qv"), col("cv")).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      .orderBy("query_id", "rank")
+    withPersisted(bucketed) { bucketed =>
+      bucketed.as("a").join(bucketed.as("b"), Seq("tbl", "bucket"))
+        .filter(col("a.vec_id") =!= col("b.vec_id"))
+        .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
+          col("a.embedding").as("qv"), col("b.embedding").as("cv"))
+        .dropDuplicates("query_id", "neighbor_id")
+        .select(col("query_id"), col("neighbor_id"),
+          cosine_sim(col("qv"), col("cv")).as("cosine"))
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+        .orderBy("query_id", "rank")
+        .localCheckpoint()
+    }
   }
 
   /** Seed base for the secondary SRP banding inside oversized SemDeDup
@@ -224,7 +226,6 @@ object Ann {
     * fitted codebook (the same kernel and centroids as lloyd's own final
     * assignment) and materialized, so the cluster sizes, both pair sides and
     * the final anti-join read it instead of re-running the upstream plan.
-    * Neither persist outlives the call.
     *
     * A skewed codebook is not allowed to re-create the N² problem: clusters
     * above `maxClusterSize` are sub-split by a secondary SRP banding
@@ -234,14 +235,13 @@ object Ann {
   def semanticDedup(vectors: DataFrame, minCosine: Double,
       k: Int = 8, iters: Int = 3, maxClusterSize: Int = 4096,
       subTables: Int = 8, subBits: Int = 4): DataFrame = {
-    val in = vectors.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r = KMeans.lloyd(in, "vec_id", "embedding", k, iters,
-      trackInertia = false)
-    val av = in.withColumn("cluster",
-        nearest_centroid(col("embedding"), r.centroids).getField("cluster"))
-      .localCheckpoint()
-    in.unpersist(false)
+    val av = withPersisted(vectors.select(col("vec_id"), col("embedding"))) { in =>
+      val r = KMeans.lloyd(in, "vec_id", "embedding", k, iters,
+        trackInertia = false)
+      in.withColumn("cluster",
+          nearest_centroid(col("embedding"), r.centroids).getField("cluster"))
+        .localCheckpoint()
+    }
     val pairs = clusterPairs(av, minCosine, maxClusterSize, subTables, subBits)
     val dropped = NearDup.connectedComponents(pairs)
       .filter(col("doc_id") =!= col("component_id"))
@@ -283,46 +283,40 @@ object Ann {
     val q = vectors.select(col("vec_id"),
       transform(col("embedding").cast("array<double>"),
         x => floor(x * scale + 0.5).cast("long")).as("v"))
-    // persisted: the skew guard below plus the pair build and the survivor
-    // anti-join all read this frame — lloydQuantized returns its
-    // assignments UNPERSISTED, so without this each consumer would re-run
-    // the full assignment scan
-    val av = r.assignments.select(col("id").as("vec_id"), col("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // this exact-pair variant is deliberately sub-split-free (the oracle
-    // replays the identical pair space) — so a skewed codebook must fail
-    // LOUDLY before one hot cluster quietly re-creates the N² straggler
-    // the production float path's SRP sub-split exists to prevent
-    val biggest = av.groupBy(col("cluster")).count()
-      .agg(coalesce(max(col("count")), lit(0L))).head.getLong(0)
-    require(biggest <= maxClusterSize,
-      s"semanticDedupQuantized: cluster of $biggest members exceeds " +
-        s"maxClusterSize $maxClusterSize — use the SRP-sub-split " +
-        "semanticDedup for skewed codebooks (its pair space stays bounded)")
-    val withV = av.join(q, "vec_id")
-    val a = withV.select(col("cluster"), col("vec_id").as("id_a"), col("v").as("va"))
-    val b = withV.select(col("cluster"), col("vec_id").as("id_b"), col("v").as("vb"))
-    val pairs = a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
-      .withColumn("dot",
-        aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
-          lit(0L), (acc, t) => acc + t))
-      .withColumn("na2", aggregate(col("va"), lit(0L), (acc, x) => acc + x * x))
-      .withColumn("nb2", aggregate(col("vb"), lit(0L), (acc, x) => acc + x * x))
-      .filter(col("dot") > 0 &&
-        col("dot").cast(d38) * col("dot").cast(d38) * lit(tauDenSq).cast(d38) >=
-          lit(tauNumSq).cast(d38) * col("na2").cast(d38) * col("nb2").cast(d38))
-      .select(col("id_a"), col("id_b"))
-    // connectedComponents materializes its edges eagerly (checkpointed), so
-    // the cached av has served every consumer by here; non-blocking release
-    // (the lloyd house pattern — the lazy final join re-reads or recomputes)
-    val dropped = NearDup.connectedComponents(pairs)
-      .filter(col("doc_id") =!= col("component_id"))
-      .select(col("doc_id").as("vec_id"))
-    val out = av.join(dropped, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cluster"))
-      .orderBy("vec_id")
-    av.unpersist(false)
-    out
+    // the skew guard below plus the pair build and the survivor anti-join
+    // all read the assignments, which lloydQuantized returns lazy
+    withPersisted(r.assignments.select(col("id").as("vec_id"), col("cluster"))) { av =>
+      // this exact-pair variant is deliberately sub-split-free (the oracle
+      // replays the identical pair space) — so a skewed codebook must fail
+      // LOUDLY before one hot cluster quietly re-creates the N² straggler
+      // the production float path's SRP sub-split exists to prevent
+      val biggest = av.groupBy(col("cluster")).count()
+        .agg(coalesce(max(col("count")), lit(0L))).head.getLong(0)
+      require(biggest <= maxClusterSize,
+        s"semanticDedupQuantized: cluster of $biggest members exceeds " +
+          s"maxClusterSize $maxClusterSize — use the SRP-sub-split " +
+          "semanticDedup for skewed codebooks (its pair space stays bounded)")
+      val withV = av.join(q, "vec_id")
+      val a = withV.select(col("cluster"), col("vec_id").as("id_a"), col("v").as("va"))
+      val b = withV.select(col("cluster"), col("vec_id").as("id_b"), col("v").as("vb"))
+      val pairs = a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
+        .withColumn("dot",
+          aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
+            lit(0L), (acc, t) => acc + t))
+        .withColumn("na2", aggregate(col("va"), lit(0L), (acc, x) => acc + x * x))
+        .withColumn("nb2", aggregate(col("vb"), lit(0L), (acc, x) => acc + x * x))
+        .filter(col("dot") > 0 &&
+          col("dot").cast(d38) * col("dot").cast(d38) * lit(tauDenSq).cast(d38) >=
+            lit(tauNumSq).cast(d38) * col("na2").cast(d38) * col("nb2").cast(d38))
+        .select(col("id_a"), col("id_b"))
+        val dropped = NearDup.connectedComponents(pairs)
+        .filter(col("doc_id") =!= col("component_id"))
+        .select(col("doc_id").as("vec_id"))
+      av.join(dropped, Seq("vec_id"), "left_anti")
+        .select(col("vec_id"), col("cluster"))
+        .orderBy("vec_id")
+        .localCheckpoint()
+    }
   }
 
   /** Within-cluster cosine ≥ τ pairs with a bounded pair space. Clusters at
@@ -431,8 +425,7 @@ object Ann {
         l2sqQ(col("qv"), col("cv")).as("d2q"))
       .withColumn("srank", row_number().over(wSl))
       .filter(col("srank") <= shortlist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPersisted(sl) { sl =>
       // pairwise integer L2² within each query's shortlist: O(shortlist²)
       // per query — tiny, but its min-join re-enters every greedy round,
       // so truncate it once (the rounds then read blocks, not the corpus)
@@ -469,7 +462,7 @@ object Ann {
         ckpt.retire(prev)
       }
       selected.orderBy("query_id", "round")
-    } finally sl.unpersist(blocking = true) // see ivfPq's finally
+    }
   }
 
   /** Per-dimension mean vector per `label` — the deterministic stand-in for a

@@ -76,21 +76,19 @@ final class Checkpointer(dir: Option[String]) extends Serializable {
     * 4-iteration chain; the r16 pre-sort was dead weight for this reason).
     * Materializing this one query with AQE off makes the executed plan the
     * plain physical plan, whose root partitioning/ordering IS the staging
-    * layout, and the checkpoint carries it. AQE stays on for everything
-    * else, including the loop queries that read the checkpoint (they still
+    * layout, and the checkpoint carries it. AQE is switched off in a conf
+    * scoped to the calling thread, so the session's conf never changes: AQE
+    * stays on for every other query, concurrent ones included, and for the
+    * loop queries that read the checkpoint (they still
     * coalesce/skew-split/broadcast their OWN shuffles at runtime).
     *
     * Must be called on a frame that has not been planned yet (the AQE flag
     * is read at physical-planning time); operators construct and stage in
     * one expression, which satisfies that.
     */
-  def staged(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.adaptive.enabled"
-    val prev = conf.get(key)
-    conf.set(key, "false")
-    try apply(df) finally conf.set(key, prev)
-  }
+  def staged(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.shims.withThreadConf(df.sparkSession,
+      "spark.sql.adaptive.enabled", "false")(apply(df))
 
   /** Truncate `df`'s lineage eagerly under the chosen strategy. */
   def apply(df: DataFrame): DataFrame = dir match {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.withPersisted
 import graft.functions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -48,7 +49,7 @@ object Dbscan {
     * directions present): core rule → min-label components of the
     * core-core subgraph → min-cluster border assignment → noise. The
     * output is materialized eagerly (localCheckpoint) so callers can
-    * unpersist the neighbor list without a recompute hazard.
+    * release the neighbor list without a recompute hazard.
     */
   private def label(nbr: DataFrame, allIds: DataFrame, minPts: Int): DataFrame = {
     val core = nbr.groupBy(col("id_a")).agg(count(lit(1)).as("deg"))
@@ -80,9 +81,6 @@ object Dbscan {
         coalesce(col("cluster"), col("bcluster"), lit(-1L)).as("cluster"),
         coalesce(col("is_core"), lit(false)).as("is_core"))
       .orderBy(col("vec_id"))
-      // eager: cuts lineage off the cached neighbor list so it can be
-      // unpersisted here instead of leaking for the session lifetime
-      // (checkpoint blocks are ContextCleaner-managed, cache entries are not)
       .localCheckpoint(true)
   }
 
@@ -108,10 +106,8 @@ object Dbscan {
     val b = q.select(col("vec_id").as("id_b"), col("v").as("vb"))
     // symmetric ε-neighbor list (both directions — degree and border
     // assignment read it per id_a); integer L2², no floats
-    val nbr = intL2Filter(a.join(b, col("id_a") =!= col("id_b")), epsSq)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try label(nbr, vectors.select(col("vec_id")), minPts)
-    finally nbr.unpersist()
+    withPersisted(intL2Filter(a.join(b, col("id_a") =!= col("id_b")), epsSq))(
+      label(_, vectors.select(col("vec_id")), minPts))
   }
 
   /** SRP-banded variant — the scale path: candidate pairs are the
@@ -125,37 +121,36 @@ object Dbscan {
     */
   def dbscanBanded(vectors: DataFrame, epsSq: Long, minPts: Int,
       scale: Long = 1000L, numTables: Int = 8, numBits: Int = 4,
-      seedBase: Int = 5000): DataFrame = {
-    val nbr = bandedNeighbors(vectors, epsSq, scale, numTables, numBits, seedBase)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try label(nbr, vectors.select(col("vec_id")), minPts)
-    finally nbr.unpersist()
-  }
+      seedBase: Int = 5000): DataFrame =
+    bandedNeighbors(vectors, epsSq, scale, numTables, numBits, seedBase) { nbr =>
+      withPersisted(nbr)(label(_, vectors.select(col("vec_id")), minPts))
+    }
 
-  /** The banded symmetric ε-neighbor list on its own (lazy, unpersisted) —
+  /** Runs `f` on the banded symmetric ε-neighbor list (lazy) while the
+    * bucket table both sides of its candidate self-join read is persisted —
     * exposed so DbscanSpec can audit the candidate join's physical plan
     * (no cartesian) pre-checkpoint. */
-  private[graft] def bandedNeighbors(vectors: DataFrame, epsSq: Long,
-      scale: Long, numTables: Int, numBits: Int, seedBase: Int): DataFrame = {
+  private[graft] def bandedNeighbors[T](vectors: DataFrame, epsSq: Long,
+      scale: Long, numTables: Int, numBits: Int, seedBase: Int)(f: DataFrame => T): T = {
     val bucketed = vectors.select(col("vec_id"),
         posexplode(array((0 until numTables).map(t =>
           sign_random_projection_poly(col("embedding"), numBits, seedBase + t)): _*)))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
-      // both sides of the bucket self-join read this frame (r16, guide §5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a ≠ b keeps BOTH directions of every collision → symmetric list.
-    // Dedup on the BARE id pair first — the multi-table dedup shuffle moves
-    // O(collisions) id pairs, not O(collisions × dim) quantized longs — then
-    // re-attach the vectors by id for the ε-verify (two narrow equi-joins
-    // AQE can broadcast when the id×vector table is small).
-    val cand = bucketed.as("a").join(bucketed.as("b"), Seq("tbl", "bucket"))
-      .filter(col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val q = quantized(vectors, scale)
-    val wide = cand
-      .join(q.select(col("vec_id").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(q.select(col("vec_id").as("id_b"), col("v").as("vb")), Seq("id_b"))
-    intL2Filter(wide, epsSq)
+    withPersisted(bucketed) { bucketed =>
+      // a ≠ b keeps BOTH directions of every collision → symmetric list.
+      // Dedup on the BARE id pair first — the multi-table dedup shuffle moves
+      // O(collisions) id pairs, not O(collisions × dim) quantized longs — then
+      // re-attach the vectors by id for the ε-verify (two narrow equi-joins
+      // AQE can broadcast when the id×vector table is small).
+      val cand = bucketed.as("a").join(bucketed.as("b"), Seq("tbl", "bucket"))
+        .filter(col("a.vec_id") =!= col("b.vec_id"))
+        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
+        .dropDuplicates("id_a", "id_b")
+      val q = quantized(vectors, scale)
+      val wide = cand
+        .join(q.select(col("vec_id").as("id_a"), col("v").as("va")), Seq("id_a"))
+        .join(q.select(col("vec_id").as("id_b"), col("v").as("vb")), Seq("id_b"))
+      f(intL2Filter(wide, epsSq))
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.withPersisted
 import graft.functions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -70,37 +71,33 @@ object ExactSubstr {
     // corpus-wide gram multiplicity; > 1 means the window text exists twice
     // somewhere (another doc OR another offset of the same doc).
     // The gram table feeds BOTH the multiplicity aggregate and the
-    // position-join probe side; without a persist Spark re-runs the whole
-    // scan → tokenize → window-explode → hash pipeline for each consumer
-    // (common subtrees are not deduplicated), doubling the most expensive
-    // pass (r16, guide §5: the narrow (doc_id, p, h1, h2) projection is a
-    // fraction of the input bytes and strictly cheaper to hold than to
-    // recompute). MEMORY_AND_DISK: spills, never OOMs.
-    val hits = {
-      val grams = windows.select(col("doc_id"), col("pg.p").as("p"),
-          xxhash64(col("pg.garr")).as("h1"),
-          xxhash64(lit(Seed2), col("pg.garr")).as("h2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // position-join probe side; the narrow (doc_id, p, h1, h2) projection is
+    // a fraction of the input bytes.
+    val grams = windows.select(col("doc_id"), col("pg.p").as("p"),
+        xxhash64(col("pg.garr")).as("h1"),
+        xxhash64(lit(Seed2), col("pg.garr")).as("h2"))
+    withPersisted(grams) { grams =>
       val dup = grams.groupBy(col("h1"), col("h2")).agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") > 1).select("h1", "h2")
-      grams.join(dup, Seq("h1", "h2"))
+      val hits = grams.join(dup, Seq("h1", "h2"))
         .select(col("doc_id"), col("p"), (col("p") + (n - 1)).as("e"))
-    }
 
-    // gaps-and-islands span merge: a hit starting at or before the running
-    // max end + 1 extends the current span (overlap OR adjacency); the
-    // running max — not lag(e) — is what makes a long span swallow short
-    // hits nested inside it
-    val byDoc = Window.partitionBy("doc_id").orderBy("p")
-    val prevMax = max(col("e")).over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
-    hits
-      .withColumn("brk", when(col("p") <= prevMax + 1, 0).otherwise(1)) // null prevMax -> 1
-      .withColumn("island", sum(col("brk")).over(byDoc.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("doc_id"), col("island"))
-      .agg(min(col("p")).cast("long").as("span_start"),
-        max(col("e")).cast("long").as("span_end"),
-        count(lit(1)).as("n_dup_grams"))
-      .select("doc_id", "span_start", "span_end", "n_dup_grams")
+      // gaps-and-islands span merge: a hit starting at or before the running
+      // max end + 1 extends the current span (overlap OR adjacency); the
+      // running max — not lag(e) — is what makes a long span swallow short
+      // hits nested inside it
+      val byDoc = Window.partitionBy("doc_id").orderBy("p")
+      val prevMax = max(col("e")).over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
+      hits
+        .withColumn("brk", when(col("p") <= prevMax + 1, 0).otherwise(1)) // null prevMax -> 1
+        .withColumn("island", sum(col("brk")).over(byDoc.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy(col("doc_id"), col("island"))
+        .agg(min(col("p")).cast("long").as("span_start"),
+          max(col("e")).cast("long").as("span_end"),
+          count(lit(1)).as("n_dup_grams"))
+        .select("doc_id", "span_start", "span_end", "n_dup_grams")
+        .localCheckpoint()
+    }
   }
 
   /** Per-document scrub accounting over the WHOLE corpus (every doc gets a

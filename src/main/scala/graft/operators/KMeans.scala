@@ -38,19 +38,25 @@ object KMeans {
     // to reliable storage: iterations re-read the checkpoint instead of
     // re-running the upstream plan (and an executor loss costs a file
     // re-read, not an upstream recompute). Without one, the projected input
-    // is cached (memory, spilling to disk) for the duration of the loop so
-    // the seeding action and each iteration's update read the materialized
-    // rows instead of re-running the upstream scan. Bit-identical every way.
+    // is persisted for the duration of the loop ([[graft.core.withPersisted]])
+    // so the seeding action and each iteration's update read the
+    // materialized rows. Bit-identical every way.
     // `trackInertia = false` skips the per-iteration inertia aggregate — one
     // fewer job per iteration for callers that only want the codebook
     // ([[Pq]]'s coarse quantizer); `Result.inertia` is then empty.
-    val cached = checkpointDir.isEmpty
-    val embP = new Checkpointer(checkpointDir) match {
-      case ck if checkpointDir.isDefined => ck(emb.select(col(idCol), col(vecCol)))
-      case _ => emb.select(col(idCol), col(vecCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val proj = emb.select(col(idCol), col(vecCol))
+    checkpointDir match {
+      case Some(_) => fit(new Checkpointer(checkpointDir)(proj), idCol, vecCol, k, iters, trackInertia)
+      case None => graft.core.withPersisted(proj)(fit(_, idCol, vecCol, k, iters, trackInertia))
     }
-    val spark = emb.sparkSession
+  }
+
+  /** [[lloyd]]'s loop over its materialized input. The returned assignments
+    * are lazy: once the caller releases `embP`, evaluating them re-scans
+    * the source once, exactly as an uncached final pass would. */
+  private def fit(embP: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
+      trackInertia: Boolean): Result = {
+    val spark = embP.sparkSession
     import spark.implicits._
 
     // deterministic seeding: the k lowest-id vectors
@@ -86,10 +92,6 @@ object KMeans {
       }
       centroids = updated
     }
-    // The returned assignments are lazy: unpersist now (non-blocking) so the
-    // loop's cache doesn't outlive the call — evaluating the result re-scans
-    // the source once, exactly as an uncached final pass would.
-    if (cached) embP.unpersist(false)
     Result(assigned().drop("vec"), centroids, inertias.toSeq)
   }
 
@@ -115,38 +117,36 @@ object KMeans {
     require(k >= 1 && iters >= 1, "k and iters must be positive")
     val spark = emb.sparkSession
     import spark.implicits._
-    val q = emb.select(col(idCol),
+    graft.core.withPersisted(emb.select(col(idCol),
         transform(col(vecCol).cast("array<double>"),
-          x => floor(x * scale + 0.5).cast("double")).as("vec")) // floor → LONG; kernel wants doubles
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          x => floor(x * scale + 0.5).cast("double")).as("vec"))) { q => // floor → LONG; kernel wants doubles
+      var centroids: Array[Array[Double]] = q
+        .orderBy(col(idCol)).limit(k)
+        .select(col("vec")).as[Seq[Double]]
+        .collect().map(_.toArray)
 
-    var centroids: Array[Array[Double]] = q
-      .orderBy(col(idCol)).limit(k)
-      .select(col("vec")).as[Seq[Double]]
-      .collect().map(_.toArray)
-
-    def assigned(): DataFrame = {
-      val best = nearest_centroid(col("vec"), centroids)
-      q.select(col(idCol).as("id"), col("vec"), best.as("best"))
-        .select($"id", $"vec", $"best.cluster".as("cluster"), $"best.dist_sq".as("dist_sq"))
-    }
-
-    for (_ <- 1 to iters) {
-      // ONE shuffle: (cluster, dim) integer sums + counts; the truncating
-      // mean happens on the driver over the O(k·d) collected sufficient
-      // statistics — never on floats
-      val next = assigned()
-        .select($"cluster", posexplode($"vec").as(Seq("dim", "x")))
-        .groupBy($"cluster", $"dim")
-        .agg(sum($"x").cast("long").as("s"), count(lit(1)).as("n"))
-        .as[(Int, Int, Long, Long)].collect()
-      val updated = centroids.map(_.clone())
-      next.groupBy(_._1).foreach { case (c, sn) =>
-        updated(c) = sn.sortBy(_._2).map { case (_, _, s, n) => (s / n).toDouble } // trunc ≡ DuckDB //
+      def assigned(): DataFrame = {
+        val best = nearest_centroid(col("vec"), centroids)
+        q.select(col(idCol).as("id"), col("vec"), best.as("best"))
+          .select($"id", $"vec", $"best.cluster".as("cluster"), $"best.dist_sq".as("dist_sq"))
       }
-      centroids = updated
+
+      for (_ <- 1 to iters) {
+        // ONE shuffle: (cluster, dim) integer sums + counts; the truncating
+        // mean happens on the driver over the O(k·d) collected sufficient
+        // statistics — never on floats
+        val next = assigned()
+          .select($"cluster", posexplode($"vec").as(Seq("dim", "x")))
+          .groupBy($"cluster", $"dim")
+          .agg(sum($"x").cast("long").as("s"), count(lit(1)).as("n"))
+          .as[(Int, Int, Long, Long)].collect()
+        val updated = centroids.map(_.clone())
+        next.groupBy(_._1).foreach { case (c, sn) =>
+          updated(c) = sn.sortBy(_._2).map { case (_, _, s, n) => (s / n).toDouble } // trunc ≡ DuckDB //
+        }
+        centroids = updated
+      }
+      Result(assigned().drop("vec"), centroids, Seq.empty)
     }
-    q.unpersist(false)
-    Result(assigned().drop("vec"), centroids, Seq.empty)
   }
 }

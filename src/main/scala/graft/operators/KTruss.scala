@@ -51,11 +51,11 @@ object KTruss {
       rounds += 1
       require(rounds <= maxRounds,
         s"k-truss did not converge in $maxRounds peeling rounds")
-      val (support, oriented) = edgeSupport(e)
-      val next = ckpt(e.join(support, Seq("u", "v"))
-        .filter(col("cnt") >= (k - 2).toLong)
-        .select(col("u"), col("v")))
-      oriented.unpersist(false) // next is materialized; the round's wedges are done
+      val next = Triangles.withTriangles(e) { tri =>
+        ckpt(e.join(support(tri), Seq("u", "v"))
+          .filter(col("cnt") >= (k - 2).toLong)
+          .select(col("u"), col("v")))
+      }
       val n2 = next.count()
       ckpt.retire(e)
       converged = n2 == n || n2 == 0
@@ -65,37 +65,14 @@ object KTruss {
     (e.orderBy("u", "v"), rounds)
   }
 
-  /** Per-edge triangle support over canonical edges (u < v): the
-    * degree-ordered wedge join, each triangle exploding to its three
-    * canonical edges, counted. Only edges with support ≥ 1 appear. Also
-    * returns the persisted oriented-edge frame both wedge sides read; the
-    * caller releases it once the support is materialized. */
-  private def edgeSupport(e: DataFrame): (DataFrame, DataFrame) = {
-    val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val oriented = e
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-      .select(when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("s"), col("v").as("t")))
-        .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"))
-      // both sides of the wedge self-join read this frame (r16, guide §5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wedges = oriented.as("a")
-      .join(oriented.as("b"),
-        col("a.s") === col("b.s") && col("a.t") < col("b.t"))
-      .select(col("a.s").as("c"),
-        least(col("a.t"), col("b.t")).as("u"),
-        greatest(col("a.t"), col("b.t")).as("v"))
-    val tri = wedges.join(e, Seq("u", "v"))
-    val support = tri.select(explode(array(
+  /** Per-edge triangle support over canonical edges (u < v): each
+    * triangle of [[Triangles.withTriangles]] explodes to its three canonical
+    * edges, counted. Only edges with support ≥ 1 appear. */
+  private def support(tri: DataFrame): DataFrame =
+    tri.select(explode(array(
         struct(least(col("c"), col("u")).as("u"), greatest(col("c"), col("u")).as("v")),
         struct(least(col("c"), col("v")).as("u"), greatest(col("c"), col("v")).as("v")),
         struct(col("u").as("u"), col("v").as("v")))).as("ed"))
       .select(col("ed.u").as("u"), col("ed.v").as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
-    (support, oriented)
-  }
 }

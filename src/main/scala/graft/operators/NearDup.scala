@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.withPersisted
 import graft.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -66,55 +67,51 @@ object NearDup {
     * prefixes). One shuffle by
     * shingle for candidates, one by doc for the prefix ranks.
     */
-  def exactJaccardPairs(docs: DataFrame, minJaccard: Double): DataFrame = {
+  def exactJaccardPairs(docs: DataFrame, minJaccard: Double): DataFrame =
     // `sets` feeds the inverted index AND both sides of the verify join;
-    // `prefix` feeds both sides of the candidate self-join. Neither reuse is
-    // visible to Spark (common subtrees are not deduplicated), so without
-    // persists the scan + shingle kernel ran ~5× and the df-rank window 2×
-    // per action (r16, guide §5). Both frames are narrow projections —
-    // strictly cheaper to hold (spillable) than to recompute.
-    val sets = shingled(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inv = sets.select(col("doc_id"), size(col("shingles")).as("n_sh"),
-      explode(col("shingles")).as("shingle"))
-    val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("df", "shingle")
-    // No broadcast hint on dfreq: it has one row per DISTINCT shingle —
-    // O(corpus vocabulary), billions of rows at 100 TB — so forcing a
-    // broadcast OOMs the driver at scale. Both sides of this join are
-    // already hash-partitioned by `shingle` (dfreq by its groupBy, inv by
-    // the join), so the unhinted plan is a single co-partitioned shuffle
-    // join; AQE still auto-broadcasts when the measured size is under
-    // spark.sql.autoBroadcastJoinThreshold, which is the size guard.
-    val prefix = inv.join(dfreq, "shingle")
-      .withColumn("rk", row_number().over(wDoc))
-      .filter(col("rk") <= col("n_sh") - ceil(col("n_sh") * minJaccard) + 1)
-      .select(col("doc_id"), col("n_sh"), col("shingle"), col("rk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Position filter (PPJoin): J ≥ τ needs overlap o ≥ ⌈τ/(1+τ)·(na+nb)⌉.
-    // The df-order is one global total order, so the *minimal* common shingle
-    // e* of a qualifying pair sits in both prefixes (prefix lemma) and every
-    // other common shingle ranks after e* in BOTH docs. Hence, with
-    // (pa, pb) = min match ranks over the prefix join,
-    //   overlap ≤ 1 + min(na − pa, nb − pb),
-    // and pairs whose bound can't reach o are pruned (310 k grouped pairs →
-    // 125 k candidates at sf0.1; only those 125 k reach the array-intersect
-    // verify, vs 12.5 M all-pairs).
-    val tauOverlap = minJaccard / (1 + minJaccard)
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.shingle") === col("b.shingle")
-          && col("a.doc_id") < col("b.doc_id")
-          && col("b.n_sh") * minJaccard <= col("a.n_sh")
-          && col("a.n_sh") * minJaccard <= col("b.n_sh"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(min(col("a.rk")).as("pa"), min(col("b.rk")).as("pb"),
-        first(col("a.n_sh")).as("na"), first(col("b.n_sh")).as("nb"))
-      .filter(lit(1) + least(col("na") - col("pa"), col("nb") - col("pb"))
-        >= ceil((col("na") + col("nb")) * tauOverlap))
-      .select(col("id_a"), col("id_b"))
-    jaccardOfCandidates(cand, sets, minJaccard)
-  }
+    // `prefix` feeds both sides of the candidate self-join
+    withPersisted(shingled(docs)) { sets =>
+      val inv = sets.select(col("doc_id"), size(col("shingles")).as("n_sh"),
+        explode(col("shingles")).as("shingle"))
+      val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("df"))
+      val wDoc = org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy("df", "shingle")
+      // No broadcast hint on dfreq: it has one row per DISTINCT shingle —
+      // O(corpus vocabulary), billions of rows at 100 TB — so forcing a
+      // broadcast OOMs the driver at scale. Both sides of this join are
+      // already hash-partitioned by `shingle` (dfreq by its groupBy, inv by
+      // the join), so the unhinted plan is a single co-partitioned shuffle
+      // join; AQE still auto-broadcasts when the measured size is under
+      // spark.sql.autoBroadcastJoinThreshold, which is the size guard.
+      val prefix = inv.join(dfreq, "shingle")
+        .withColumn("rk", row_number().over(wDoc))
+        .filter(col("rk") <= col("n_sh") - ceil(col("n_sh") * minJaccard) + 1)
+        .select(col("doc_id"), col("n_sh"), col("shingle"), col("rk"))
+      withPersisted(prefix) { prefix =>
+        // Position filter (PPJoin): J ≥ τ needs overlap o ≥ ⌈τ/(1+τ)·(na+nb)⌉.
+        // The df-order is one global total order, so the *minimal* common shingle
+        // e* of a qualifying pair sits in both prefixes (prefix lemma) and every
+        // other common shingle ranks after e* in BOTH docs. Hence, with
+        // (pa, pb) = min match ranks over the prefix join,
+        //   overlap ≤ 1 + min(na − pa, nb − pb),
+        // and pairs whose bound can't reach o are pruned (310 k grouped pairs →
+        // 125 k candidates at sf0.1; only those 125 k reach the array-intersect
+        // verify, vs 12.5 M all-pairs).
+        val tauOverlap = minJaccard / (1 + minJaccard)
+        val cand = prefix.as("a").join(prefix.as("b"),
+            col("a.shingle") === col("b.shingle")
+              && col("a.doc_id") < col("b.doc_id")
+              && col("b.n_sh") * minJaccard <= col("a.n_sh")
+              && col("a.n_sh") * minJaccard <= col("b.n_sh"))
+          .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+          .agg(min(col("a.rk")).as("pa"), min(col("b.rk")).as("pb"),
+            first(col("a.n_sh")).as("na"), first(col("b.n_sh")).as("nb"))
+          .filter(lit(1) + least(col("na") - col("pa"), col("nb") - col("pb"))
+            >= ceil((col("na") + col("nb")) * tauOverlap))
+          .select(col("id_a"), col("id_b"))
+        jaccardOfCandidates(cand, sets, minJaccard).localCheckpoint()
+      }
+    }
 
   /** Exact ordered-pair shingle CONTAINMENT join: every (A, B), A ≠ B, with
     * c(A→B) = |S(A) ∩ S(B)| / |S(A)| ≥ τ — the asymmetric cousin of
@@ -176,23 +173,18 @@ object NearDup {
     * probability while only bucket-colliding pairs are ever scored.
     */
   def minhashLshPairs(docs: DataFrame, minJaccard: Double,
-      numPerms: Int = 64, bands: Int = 16): DataFrame = {
+      numPerms: Int = 64, bands: Int = 16): DataFrame =
     // sets feeds the band table AND both verify sides; banded feeds both
-    // sides of the bucket self-join — persist both or the shingle + minhash
-    // kernels re-run per consumer (r16, guide §5; same rationale as
-    // [[exactJaccardPairs]]).
-    val sets = shingled(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sets.select(col("doc_id"),
-        posexplode(minhash_bands(col("shingles"), numPerms, bands)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    jaccardOfCandidates(cand, sets, minJaccard)
-  }
+    // sides of the bucket self-join
+    withPersisted(shingled(docs)) { sets =>
+      withPersisted(bandTable(sets, numPerms, bands)) { banded =>
+        val cand = banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
+          .filter(col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+          .distinct()
+        jaccardOfCandidates(cand, sets, minJaccard).localCheckpoint()
+      }
+    }
 
   /** Incremental dedup: drop NEW batch docs that near-duplicate the EXISTING
     * corpus. Candidates come from joining the batch's MinHash band table
@@ -373,17 +365,17 @@ object NearDup {
     val banded = withChunks.select(col("doc_id"), col("cs"),
         posexplode(col("cs")))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "chunk"))
-      // both sides of the chunk self-join read this frame; persist or the
-      // simhash kernel runs twice (r16, guide §5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    banded.as("a").join(banded.as("b"), Seq("band", "chunk"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        aggregate(zip_with(col("a.cs"), col("b.cs"),
-            (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-          lit(0L), (acc, v) => acc + v).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("id_a", "id_b")
+    withPersisted(banded) { banded =>
+      banded.as("a").join(banded.as("b"), Seq("band", "chunk"))
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+          aggregate(zip_with(col("a.cs"), col("b.cs"),
+              (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
+            lit(0L), (acc, v) => acc + v).as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxHamming)
+        .orderBy("id_a", "id_b")
+        .localCheckpoint()
+    }
   }
 }

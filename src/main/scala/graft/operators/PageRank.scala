@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.withPersisted
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,39 +48,38 @@ object PageRank {
     val shufflePartitions = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     // Setup frames: only the two the LOOP re-reads (eDeg, base) are
-    // checkpointed; `e` is a lazily-persisted intermediate the two
-    // materializations share, dropped before the loop starts. (r11: the r10
+    // checkpointed; `e` is a persisted intermediate the two
+    // materializations share, released before the loop starts. (r11: the r10
     // shape checkpointed e/nodes/eDeg/ranks separately — 4 eager
     // materializations whose job-scheduling overhead, not shuffle volume,
     // dominated the sf0.1 bench.)
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // (src, dst, deg) staged once — iterations re-scan it, never re-join it.
-    // Pre-partitioned BY THE JOIN KEY and pre-sorted within partitions, and
-    // checkpointed through [[Checkpointer.staged]] (r17): under AQE a plain
-    // checkpoint records UnknownPartitioning(0), so r16's plan still
-    // exchanged AND sorted this side in EVERY iteration
-    // (plans/r16/graph_pagerank_after.txt). With the layout actually carried
-    // into the LogicalRDD, the edge table (the big side at 100 TB) is
-    // shuffled and sorted once per RUN, not once per iteration.
-    val eDeg = ckpt.staged(e.join(deg, "src")
-      .repartition(shufflePartitions, col("src"))
-      .sortWithinPartitions("src"))
-    // Static per-node frame (node, is_dang): every iteration's update join
-    // reads THIS — not the previous iterate — so the iterate is referenced
-    // exactly once per round (see the loop). Partitioned by node: both the
-    // scatter join (src = node) and the update join (node = dst) find it
-    // pre-distributed.
-    val base = ckpt.staged(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(deg.select(col("src").as("node"), lit(1).as("has_out")), Seq("node"), "left")
-      .select(col("node"), col("has_out").isNull.as("is_dang"))
-      .repartition(shufflePartitions, col("node"))
-      .sortWithinPartitions("node")) // pre-sorted for the update join, as eDeg
-    e.unpersist()
+    val (eDeg, base) = withPersisted(edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst")).distinct()) { e =>
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      // (src, dst, deg) staged once — iterations re-scan it, never re-join it.
+      // Pre-partitioned BY THE JOIN KEY and pre-sorted within partitions, and
+      // checkpointed through [[Checkpointer.staged]] (r17): under AQE a plain
+      // checkpoint records UnknownPartitioning(0), so r16's plan still
+      // exchanged AND sorted this side in EVERY iteration
+      // (plans/r16/graph_pagerank_after.txt). With the layout actually carried
+      // into the LogicalRDD, the edge table (the big side at 100 TB) is
+      // shuffled and sorted once per RUN, not once per iteration.
+      val eDeg = ckpt.staged(e.join(deg, "src")
+        .repartition(shufflePartitions, col("src"))
+        .sortWithinPartitions("src"))
+      // Static per-node frame (node, is_dang): every iteration's update join
+      // reads THIS — not the previous iterate — so the iterate is referenced
+      // exactly once per round (see the loop). Partitioned by node: both the
+      // scatter join (src = node) and the update join (node = dst) find it
+      // pre-distributed.
+      val base = ckpt.staged(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .join(deg.select(col("src").as("node"), lit(1).as("has_out")), Seq("node"), "left")
+        .select(col("node"), col("has_out").isNull.as("is_dang"))
+        .repartition(shufflePartitions, col("node"))
+        .sortWithinPartitions("node")) // pre-sorted for the update join, as eDeg
+      (eDeg, base)
+    }
     // Dangling-freeness is a STATIC graph property (the dangling set never
     // changes across iterations), so decide it ONCE: a graph where every
     // node has an out-edge (e.g. any symmetric graph) carries zero dangling

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.withPersisted
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +28,19 @@ object Triangles {
     * canonical edges (`u` < `v`, distinct). Returns (node, n_triangles) for
     * every node in at least one triangle.
     */
-  def perNode(edges: DataFrame): DataFrame = {
+  def perNode(edges: DataFrame): DataFrame =
+    withTriangles(edges) { triangles =>
+      triangles
+        .select(explode(array(col("c"), col("u"), col("v"))).as("node"))
+        .groupBy(col("node"))
+        .agg(count(lit(1)).as("n_triangles"))
+        .localCheckpoint()
+    }
+
+  /** Runs `f` on the triangles of canonical `edges`, one (c, u, v) row per
+    * triangle with `c` its order-minimal vertex and u < v. The oriented
+    * edge frame both wedge sides read is persisted while `f` runs. */
+  private[operators] def withTriangles[T](edges: DataFrame)(f: DataFrame => T): T = {
     val deg = edges.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
@@ -40,25 +53,18 @@ object Triangles {
           struct(col("u").as("s"), col("v").as("t")))
         .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"))
-      // both sides of the wedge self-join read this frame; persist or the
-      // degree joins re-run per side (r16, guide §5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // wedges from out-edge pairs at a common center; t1 < t2 dedups the pair
-    val wedges = oriented.as("a")
-      .join(oriented.as("b"),
-        col("a.s") === col("b.s") && col("a.t") < col("b.t"))
-      .select(col("a.s").as("c"),
-        least(col("a.t"), col("b.t")).as("u"),
-        greatest(col("a.t"), col("b.t")).as("v"))
-
-    // close against the CANONICAL edges (equi-join — an OR-of-orientations
-    // join would degrade to nested-loop)
-    val triangles = wedges.join(edges, Seq("u", "v"))
-
-    triangles
-      .select(explode(array(col("c"), col("u"), col("v"))).as("node"))
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("n_triangles"))
+    withPersisted(oriented) { oriented =>
+      // wedges from out-edge pairs at a common center; t1 < t2 dedups the pair
+      val wedges = oriented.as("a")
+        .join(oriented.as("b"),
+          col("a.s") === col("b.s") && col("a.t") < col("b.t"))
+        .select(col("a.s").as("c"),
+          least(col("a.t"), col("b.t")).as("u"),
+          greatest(col("a.t"), col("b.t")).as("v"))
+      // close against the CANONICAL edges (equi-join — an OR-of-orientations
+      // join would degrade to nested-loop)
+      f(wedges.join(edges, Seq("u", "v")))
+    }
   }
 }

@@ -1756,12 +1756,9 @@ object TrainingData {
 
     "pipeline_training_data" -> Q(
       (s, d) => {
-        // base feeds BOTH the dedup groupBy and the kept join; persist the
-        // narrow projection or the normalize/tokenize/BPE-regex pass over
-        // every document runs twice (r16, guide §5 — common subtrees are
-        // not deduplicated). `text` is dropped before the persist: nothing
-        // downstream reads it, so the cached frame is a fraction of the
-        // corpus bytes.
+        // base feeds BOTH the dedup groupBy and the kept join. `text` is
+        // dropped before the persist: nothing downstream reads it, so the
+        // cached frame is a fraction of the corpus bytes.
         val base = docs(s, d)
           .withColumn("norm", normalize_text(col("text")))
           .withColumn("n_words", size(ascii_tokens(col("text"))).cast("long"))
@@ -1769,17 +1766,19 @@ object TrainingData {
             size(regexp_extract_all(col("text"), lit(bpeIshPattern), lit(0))).cast("long"))
           .filter(col("n_words") >= 10)
           .select(col("doc_id"), col("lang"), col("norm"), col("bpe"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keep = base.groupBy(col("norm")).agg(min(col("doc_id")).as("keep_id"))
-        val kept = base.join(keep, base("doc_id") === keep("keep_id")).drop("keep_id")
-        val emb = table(s, d, "embeddings").select(col("vec_id"))
-        kept.join(emb, kept("doc_id") === emb("vec_id"), "left")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("bpe")).cast("long").as("sum_bpe_tokens"),
-            count(col("vec_id")).as("n_embedded"),
-            min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-          .orderBy("lang")
+        withPersisted(base) { base =>
+          val keep = base.groupBy(col("norm")).agg(min(col("doc_id")).as("keep_id"))
+          val kept = base.join(keep, base("doc_id") === keep("keep_id")).drop("keep_id")
+          val emb = table(s, d, "embeddings").select(col("vec_id"))
+          kept.join(emb, kept("doc_id") === emb("vec_id"), "left")
+            .groupBy(col("lang"))
+            .agg(count(lit(1)).as("n_docs"),
+              sum(col("bpe")).cast("long").as("sum_bpe_tokens"),
+              count(col("vec_id")).as("n_embedded"),
+              min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
+            .orderBy("lang")
+            .localCheckpoint()
+        }
       },
       Some(s"""WITH base AS (SELECT doc_id, lang, $normSql AS norm,
           len(regexp_extract_all(lower(text), '[a-z]+')) AS n_words,

@@ -37,15 +37,12 @@ object ConstrainedWrite {
   def appendOnce(df: DataFrame, path: String, quarantinePath: String,
       batchId: Long, constraints: Seq[(String, Column)]): Unit = {
     require(constraints.nonEmpty, "constraints must be non-empty")
-    val tagged = df.withColumn("_violated", violationTag(constraints))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val clean = tagged.filter(col("_violated").isNull).drop("_violated")
-      val dirty = tagged.filter(col("_violated").isNotNull)
-      VersionedTable.appendOnce(clean, path, batchId)
-      dirty.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
-      ()
-    } finally { tagged.unpersist(); () }
+    graft.core.withPersisted(df.withColumn("_violated", violationTag(constraints))) { tagged =>
+      VersionedTable.appendOnce(tagged.filter(col("_violated").isNull).drop("_violated"),
+        path, batchId)
+      tagged.filter(col("_violated").isNotNull)
+        .write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
+    }
   }
 
   /** Append `df` to `path` under the constraints; violators (tagged with
@@ -54,14 +51,12 @@ object ConstrainedWrite {
   def append(df: DataFrame, path: String, quarantinePath: String,
       constraints: Seq[(String, Column)]): (Long, Long) = {
     require(constraints.nonEmpty, "constraints must be non-empty")
-    val tagged = df.withColumn("_violated", violationTag(constraints))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.withPersisted(df.withColumn("_violated", violationTag(constraints))) { tagged =>
       val clean = tagged.filter(col("_violated").isNull).drop("_violated")
       val dirty = tagged.filter(col("_violated").isNotNull)
       VersionedTable.append(clean, path)
       dirty.write.mode("append").parquet(quarantinePath)
       (clean.count(), dirty.count())
-    } finally { tagged.unpersist(); () }
+    }
   }
 }

@@ -42,6 +42,17 @@ object shims {
     org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
       .resultSetToSparkInternalRows(rs, dialect, schema, metrics)
 
+  /** Runs `f` with `spark`'s SQL conf plus `key = value` as the conf that
+    * `SQLConf.get` returns on THIS thread (planning reads it there); the
+    * session's conf, and every other thread's queries, are untouched. */
+  def withThreadConf[T](spark: org.apache.spark.sql.SparkSession,
+      key: String, value: String)(f: => T): T = {
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.clone()
+    conf.setConfString(key, value)
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(conf)(f)
+  }
+
   /** Idempotently add a planner strategy to the session's experimental list
     * (`experimental` lives on the classic session only). */
   def ensureStrategy(spark: org.apache.spark.sql.SparkSession,

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * plus exactness/determinism properties of the brute-force baseline. */
 class AnnSpec extends SparkSpec {
   import spark.implicits._
+  import AnnSpec._
 
   private lazy val emb = core.table(spark, sf("sf0.01"), "embeddings")
   private lazy val queries = emb.filter($"vec_id" < 10)
@@ -140,39 +141,14 @@ class AnnSpec extends SparkSpec {
     val assigns = graft.operators.KMeans.lloyd(emb, "vec_id", "embedding", 8, 3)
       .assignments.select($"id", $"cluster").as[(Long, Int)].collect().toMap
     val vecs = emb.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().toMap
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0
-      var i = 0; val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; nx += x * x; ny += y * y; i += 1
-      }
-      val denom = math.sqrt(nx) * math.sqrt(ny)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    val ids = vecs.keys.toSeq.sorted
-    for (i <- ids.indices; j <- i + 1 until ids.length) {
-      val (a, b) = (ids(i), ids(j))
-      if (assigns(a) == assigns(b) && cos(vecs(a), vecs(b)) >= 0.45) {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-    }
-    val expectedKept = ids.filter(id => find(id) == id).toSet
-    assert(kept.keySet == expectedKept)
-    assert(kept.size < ids.size, "the sf0.01 corpus has near-dup pairs; some drops expected")
+    assert(kept.keySet == keptByReplay(assigns, vecs)(cosine(_, _) >= 0.45))
+    assert(kept.size < vecs.size, "the sf0.01 corpus has near-dup pairs; some drops expected")
     kept.foreach { case (id, cl) => assert(assigns(id) == cl) }
   }
 
   test("semantic dedup leaves no cached frame behind for the caller") {
     // its input persist and lloyd's own cache are both released by the
     // time the result is collected
-    spark.sharedState.cacheManager.clearCache()
     val kept = Ann.semanticDedup(emb, 0.45, k = 8, iters = 3).collect()
     assert(kept.nonEmpty)
     assert(spark.sharedState.cacheManager.isEmpty,
@@ -190,34 +166,8 @@ class AnnSpec extends SparkSpec {
       .lloydQuantized(emb, "vec_id", "embedding", 8, 3)
       .assignments.select($"id", $"cluster").as[(Long, Int)].collect().toMap
     val vecs = emb.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().toMap
-    def qz(a: Seq[Float]): Array[Long] =
-      a.map(x => math.floor(x.toDouble * 1000L + 0.5).toLong).toArray
-    def admit(a: Array[Long], b: Array[Long]): Boolean = {
-      var dot = BigInt(0); var na2 = BigInt(0); var nb2 = BigInt(0)
-      var i = 0
-      while (i < a.length) {
-        dot += BigInt(a(i)) * b(i); na2 += BigInt(a(i)) * a(i)
-        nb2 += BigInt(b(i)) * b(i); i += 1
-      }
-      dot > 0 && dot * dot * 10000 >= 2025 * na2 * nb2
-    }
-    val qvecs = vecs.map { case (id, v) => id -> qz(v) }
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    val ids = vecs.keys.toSeq.sorted
-    for (i <- ids.indices; j <- i + 1 until ids.length) {
-      val (a, b) = (ids(i), ids(j))
-      if (assigns(a) == assigns(b) && admit(qvecs(a), qvecs(b))) {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-    }
-    val expectedKept = ids.filter(id => find(id) == id).toSet
-    assert(kept.keySet == expectedKept)
-    assert(kept.size < ids.size, "the corpus has near-dup pairs; some drops expected")
+    assert(kept.keySet == keptByReplay(assigns, vecs)(admitQuantized(_, _, 2025L, 10000L)))
+    assert(kept.size < vecs.size, "the corpus has near-dup pairs; some drops expected")
     kept.foreach { case (id, cl) => assert(assigns(id) == cl) }
   }
 
@@ -315,5 +265,48 @@ class AnnSpec extends SparkSpec {
     }.sortBy(r => (r._1, r._4))
     assert(got.toSeq == want)
     assert(got.nonEmpty && got.map(_._1).distinct.length > 1)
+  }
+}
+
+object AnnSpec {
+  /** Fixed-order float cosine, as the engine's kernel computes it. */
+  def cosine(a: Seq[Float], b: Seq[Float]): Double = {
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0; val n = math.min(a.length, b.length)
+    while (i < n) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; nx += x * x; ny += y * y; i += 1
+    }
+    val denom = math.sqrt(nx) * math.sqrt(ny)
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  /** The quantized admission test, cos ≥ τ with τ² = tauNumSq/tauDenSq, in
+    * BigInt arithmetic on the e3 grid. */
+  def admitQuantized(a: Seq[Float], b: Seq[Float], tauNumSq: Long, tauDenSq: Long): Boolean = {
+    def qz(v: Seq[Float]): Seq[BigInt] = v.map(x => BigInt(math.floor(x.toDouble * 1000L + 0.5).toLong))
+    val (qa, qb) = (qz(a), qz(b))
+    val dot = qa.zip(qb).map { case (x, y) => x * y }.sum
+    dot > 0 && dot * dot * tauDenSq >= tauNumSq * qa.map(x => x * x).sum * qb.map(x => x * x).sum
+  }
+
+  /** Semantic-dedup replay: union-find over the same-cluster pairs that
+    * `linked` admits; each component keeps its minimum id. */
+  def keptByReplay(assigns: Map[Long, Int], vecs: Map[Long, Seq[Float]])(
+      linked: (Seq[Float], Seq[Float]) => Boolean): Set[Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    val ids = vecs.keys.toSeq.sorted
+    for (i <- ids.indices; j <- i + 1 until ids.length) {
+      val (a, b) = (ids(i), ids(j))
+      if (assigns(a) == assigns(b) && linked(vecs(a), vecs(b))) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    ids.filter(id => find(id) == id).toSet
   }
 }

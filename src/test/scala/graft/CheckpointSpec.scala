@@ -142,4 +142,21 @@ class CheckpointSpec extends SparkSpec {
       reliable.assignments.as[(Long, Int, Double)].collect().sortBy(_._1).toSeq)
     assert(filesUnder(dir) > 0)
   }
+
+  test("staging a layout never switches AQE off for a concurrent reader of the session") {
+    // Checkpointer.staged plans its frame with AQE off; that must stay a
+    // conf of the staging thread, not a session-wide flip another query sees
+    val key = "spark.sql.adaptive.enabled"
+    val sawOff = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var staging = true
+    val reader = new Thread(() =>
+      while (staging) if (spark.conf.get(key) == "false") sawOff.set(true))
+    reader.start()
+    try {
+      val edges = Seq[(Long, Long)]((1, 2), (2, 3), (3, 1), (3, 4)).toDF("src", "dst")
+      for (_ <- 1 to 3) PageRank.run(edges, 2).collect()
+    } finally { staging = false; reader.join() }
+    assert(spark.conf.get(key) == "true")
+    assert(!sawOff.get, s"a concurrent reader saw $key=false while PageRank staged")
+  }
 }

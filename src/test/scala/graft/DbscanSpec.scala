@@ -7,53 +7,8 @@ import graft.operators.Dbscan
   * min-cluster border assignment), plus the DBSCAN semantic invariants.
   */
 class DbscanSpec extends SparkSpec {
+  import DbscanSpec._
   import spark.implicits._
-
-  private def localReplay(vecs: Seq[(Long, Seq[Float])], epsSq: Long,
-      minPts: Int, scale: Long): Map[Long, (Long, Boolean)] = {
-    val q = vecs.map { case (id, v) =>
-      id -> v.map(x => math.floor(x.toDouble * scale + 0.5).toLong)
-    }.toMap
-    def d2(a: Long, b: Long): Long =
-      q(a).zip(q(b)).map { case (x, y) => (x - y) * (x - y) }.sum
-    val ids = vecs.map(_._1)
-    val nbrs = ids.map(a => a -> ids.filter(b => b != a && d2(a, b) <= epsSq)).toMap
-    val core = ids.filter(a => nbrs(a).size >= minPts).toSet
-    // union-find over core-core edges
-    val parent = scala.collection.mutable.Map(core.toSeq.map(c => c -> c): _*)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      r
-    }
-    for (a <- core; b <- nbrs(a) if core(b)) {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val comp = core.map(c => c -> find(c)).toMap
-    // min-label canonicalization: find() roots are already the min of each
-    // tree because union always points the larger root at the smaller
-    ids.map { a =>
-      if (core(a)) a -> (comp(a), true)
-      else {
-        val coreNbrs = nbrs(a).filter(core)
-        if (coreNbrs.nonEmpty) a -> (coreNbrs.map(comp).min, false)
-        else a -> (-1L, false)
-      }
-    }.toMap
-  }
-
-  private def mkVecs(n: Int, dim: Int, seed: Int): Seq[(Long, Seq[Float])] = {
-    val rnd = new scala.util.Random(seed)
-    // a few dense blobs + uniform noise, the shape DBSCAN is for
-    val centers = Seq.fill(3)(Seq.fill(dim)(rnd.nextFloat() * 2 - 1))
-    (0 until n).map { i =>
-      val v =
-        if (i % 4 == 3) Seq.fill(dim)(rnd.nextFloat() * 2 - 1) // noise-ish
-        else centers(i % 3).map(c => (c + (rnd.nextFloat() - 0.5f) * 0.1f))
-      (i.toLong, v.map(_.toFloat))
-    }
-  }
 
   test("distributed DBSCAN equals the sequential union-find replay") {
     for (seed <- Seq(11, 23)) {
@@ -91,17 +46,6 @@ class DbscanSpec extends SparkSpec {
     * intra-blob with a small ANGLE (SRP is an angular hash — L2-close pairs
     * with near-origin norms can straddle hyperplanes, which is exactly the
     * recall trade the demote-only test below covers on the noisy corpus). */
-  private def mkBlobs(n: Int, dim: Int, seed: Int): Seq[(Long, Seq[Float])] = {
-    val rnd = new scala.util.Random(seed)
-    val centers = Seq.fill(3) {
-      val c = Seq.fill(dim)(rnd.nextFloat() * 2 - 1)
-      val norm = math.sqrt(c.map(x => x * x).sum)
-      c.map(x => (x / norm * 1.5).toFloat)
-    }
-    (0 until n).map { i =>
-      (i.toLong, centers(i % 3).map(c => c + (rnd.nextFloat() - 0.5f) * 0.06f))
-    }
-  }
 
   test("banded DBSCAN equals exact on the dense-blob corpus") {
     // tight blobs → intra-blob directions nearly identical → every ε-pair
@@ -138,9 +82,69 @@ class DbscanSpec extends SparkSpec {
 
   test("banded candidate join is a hash join on (table, bucket), no cartesian") {
     val df = mkVecs(60, 8, 3).toDF("vec_id", "embedding")
-    val plan = Dbscan.bandedNeighbors(df, 40000L, 1000L, 8, 4, 5000)
-      .queryExecution.executedPlan.toString
+    val plan = Dbscan.bandedNeighbors(df, 40000L, 1000L, 8, 4, 5000)(
+      _.queryExecution.executedPlan.toString)
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+  }
+}
+
+object DbscanSpec {
+  def localReplay(vecs: Seq[(Long, Seq[Float])], epsSq: Long,
+      minPts: Int, scale: Long): Map[Long, (Long, Boolean)] = {
+    val q = vecs.map { case (id, v) =>
+      id -> v.map(x => math.floor(x.toDouble * scale + 0.5).toLong)
+    }.toMap
+    def d2(a: Long, b: Long): Long =
+      q(a).zip(q(b)).map { case (x, y) => (x - y) * (x - y) }.sum
+    val ids = vecs.map(_._1)
+    val nbrs = ids.map(a => a -> ids.filter(b => b != a && d2(a, b) <= epsSq)).toMap
+    val core = ids.filter(a => nbrs(a).size >= minPts).toSet
+    // union-find over core-core edges
+    val parent = scala.collection.mutable.Map(core.toSeq.map(c => c -> c): _*)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      r
+    }
+    for (a <- core; b <- nbrs(a) if core(b)) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val comp = core.map(c => c -> find(c)).toMap
+    // min-label canonicalization: find() roots are already the min of each
+    // tree because union always points the larger root at the smaller
+    ids.map { a =>
+      if (core(a)) a -> (comp(a), true)
+      else {
+        val coreNbrs = nbrs(a).filter(core)
+        if (coreNbrs.nonEmpty) a -> (coreNbrs.map(comp).min, false)
+        else a -> (-1L, false)
+      }
+    }.toMap
+  }
+
+  def mkVecs(n: Int, dim: Int, seed: Int): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    // a few dense blobs + uniform noise, the shape DBSCAN is for
+    val centers = Seq.fill(3)(Seq.fill(dim)(rnd.nextFloat() * 2 - 1))
+    (0 until n).map { i =>
+      val v =
+        if (i % 4 == 3) Seq.fill(dim)(rnd.nextFloat() * 2 - 1) // noise-ish
+        else centers(i % 3).map(c => (c + (rnd.nextFloat() - 0.5f) * 0.1f))
+      (i.toLong, v.map(_.toFloat))
+    }
+  }
+
+  def mkBlobs(n: Int, dim: Int, seed: Int): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    val centers = Seq.fill(3) {
+      val c = Seq.fill(dim)(rnd.nextFloat() * 2 - 1)
+      val norm = math.sqrt(c.map(x => x * x).sum)
+      c.map(x => (x / norm * 1.5).toFloat)
+    }
+    (0 until n).map { i =>
+      (i.toLong, centers(i % 3).map(c => c + (rnd.nextFloat() - 0.5f) * 0.06f))
+    }
   }
 }

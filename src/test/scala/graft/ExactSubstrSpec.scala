@@ -8,32 +8,11 @@ import org.apache.spark.sql.DataFrame
   * adjacency, within-doc repetition, and sub-threshold docs.
   */
 class ExactSubstrSpec extends SparkSpec {
+  import ExactSubstrSpec._
 
   private def df(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
-  }
-
-  /** Sequential reference: same positional-n-gram formulation, computed with
-    * plain Scala collections (corpus gram multiset -> per-doc hit positions
-    * -> linear maximal-span sweep). */
-  private def reference(rows: Seq[(Long, String)], n: Int): Seq[(Long, Long, Long, Long)] = {
-    val toks = rows.map { case (id, t) => id -> "[a-z]+".r.findAllIn(t.toLowerCase).toVector }
-    val gramCount = scala.collection.mutable.Map.empty[String, Int]
-    for ((_, w) <- toks; i <- 0 to w.length - n)
-      gramCount.updateWith(w.slice(i, i + n).mkString(" "))(c => Some(c.getOrElse(0) + 1))
-    toks.flatMap { case (id, w) =>
-      val hits = (0 to w.length - n)
-        .filter(i => gramCount(w.slice(i, i + n).mkString(" ")) > 1)
-        .map(i => (i + 1, i + n)) // 1-based inclusive
-      val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-      for ((p, e) <- hits) {
-        if (spans.nonEmpty && p <= spans.last._2 + 1)
-          spans(spans.length - 1) = (spans.last._1, math.max(spans.last._2, e), spans.last._3 + 1)
-        else spans += ((p, e, 1))
-      }
-      spans.map { case (s0, e0, g) => (id, s0.toLong, e0.toLong, g.toLong) }
-    }.sortBy(r => (r._1, r._2))
   }
 
   private def run(rows: Seq[(Long, String)], n: Int): Seq[(Long, Long, Long, Long)] =
@@ -106,5 +85,29 @@ class ExactSubstrSpec extends SparkSpec {
     val fromScrub = scrub.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(fromScrub.filter(_._2 > 0) == fromSpans)
     assert(fromScrub.values.forall(_ >= 0))
+  }
+}
+
+object ExactSubstrSpec {
+  /** Sequential reference: same positional-n-gram formulation, computed with
+    * plain Scala collections (corpus gram multiset -> per-doc hit positions
+    * -> linear maximal-span sweep). */
+  def reference(rows: Seq[(Long, String)], n: Int): Seq[(Long, Long, Long, Long)] = {
+    val toks = rows.map { case (id, t) => id -> "[a-z]+".r.findAllIn(t.toLowerCase).toVector }
+    val gramCount = scala.collection.mutable.Map.empty[String, Int]
+    for ((_, w) <- toks; i <- 0 to w.length - n)
+      gramCount.updateWith(w.slice(i, i + n).mkString(" "))(c => Some(c.getOrElse(0) + 1))
+    toks.flatMap { case (id, w) =>
+      val hits = (0 to w.length - n)
+        .filter(i => gramCount(w.slice(i, i + n).mkString(" ")) > 1)
+        .map(i => (i + 1, i + n)) // 1-based inclusive
+      val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+      for ((p, e) <- hits) {
+        if (spans.nonEmpty && p <= spans.last._2 + 1)
+          spans(spans.length - 1) = (spans.last._1, math.max(spans.last._2, e), spans.last._3 + 1)
+        else spans += ((p, e, 1))
+      }
+      spans.map { case (s0, e0, g) => (id, s0.toLong, e0.toLong, g.toLong) }
+    }.sortBy(r => (r._1, r._2))
   }
 }

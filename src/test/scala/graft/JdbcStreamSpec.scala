@@ -143,7 +143,6 @@ class JdbcStreamSpec extends SparkSpec {
     val url = "jdbc:derby:memory:jps_grow;create=true"
     val (table, ck) = freshDirs("grow")
     stage(url)
-    spark.sharedState.cacheManager.clearCache() // earlier suites share the session
     val tail = (26 to 28).map(i => ("a", i.toLong))
     @volatile var injected = false
     JdbcPollStream.runUntilDrained(spark, cfg(url, table, ck).copy(

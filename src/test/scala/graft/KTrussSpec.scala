@@ -7,21 +7,7 @@ import graft.operators.KTruss
   * and randomized graphs. The truss is orientation/duplicate-insensitive.
   */
 class KTrussSpec extends SparkSpec {
-
-  private def reference(edges: Seq[(Long, Long)], k: Int): Set[(Long, Long)] = {
-    var cur = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .filter(e => e._1 != e._2).toSet
-    var done = false
-    while (!done) {
-      val adj = (cur.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) })
-        .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
-        .withDefaultValue(Set.empty[Long])
-      val next = cur.filter { case (a, b) => (adj(a) & adj(b)).size >= k - 2 }
-      done = next == cur
-      cur = next
-    }
-    cur
-  }
+  import KTrussSpec._
 
   private def run(edges: Seq[(Long, Long)], k: Int): Set[(Long, Long)] = {
     import spark.implicits._
@@ -81,5 +67,22 @@ class KTrussSpec extends SparkSpec {
       assert(rounds <= 6, s"$dir: k-truss took $rounds rounds; the SQL oracle " +
         "unrolls only 6 — raise the oracle's rounds parameter in queries/Graph.scala")
     }
+  }
+}
+
+object KTrussSpec {
+  def reference(edges: Seq[(Long, Long)], k: Int): Set[(Long, Long)] = {
+    var cur = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .filter(e => e._1 != e._2).toSet
+    var done = false
+    while (!done) {
+      val adj = (cur.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) })
+        .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
+        .withDefaultValue(Set.empty[Long])
+      val next = cur.filter { case (a, b) => (adj(a) & adj(b)).size >= k - 2 }
+      done = next == cur
+      cur = next
+    }
+    cur
   }
 }

@@ -67,8 +67,8 @@ class KmvSpec extends SparkSpec {
     val d = sf("sf0.001")
     val out = graft.queries.Relational.approxDistinctIntersectionNative(spark, d).collect()
     assert(out.nonEmpty)
-    val ev = core.eventsTable(spark, d).select($"event_type", $"user_id").distinct().cache()
-    val exact = ev.collect().groupBy(_.getString(0))
+    val exact = core.eventsTable(spark, d).select($"event_type", $"user_id").distinct()
+      .collect().groupBy(_.getString(0))
       .map { case (t, rs) => t -> rs.map(_.getLong(1)).toSet }
     out.foreach { r =>
       val (ta, tb) = (r.getString(0), r.getString(1))
@@ -81,15 +81,14 @@ class KmvSpec extends SparkSpec {
       ok(r.getLong(4), (sa ++ sb).size, "est_union")
       ok(r.getLong(5), (sa & sb).size, "est_inter")
     }
-    ev.unpersist()
   }
 
   test("driver query: estimates within 35% of exact on events, deterministic") {
     val d = sf("sf0.001")
     val out = SparkEntry.queries("approx_distinct_intersection")(spark, d).collect()
     assert(out.nonEmpty)
-    val ev = core.eventsTable(spark, d).select($"event_type", $"user_id").distinct().cache()
-    val exact = ev.collect().groupBy(_.getString(0))
+    val exact = core.eventsTable(spark, d).select($"event_type", $"user_id").distinct()
+      .collect().groupBy(_.getString(0))
       .map { case (t, rs) => t -> rs.map(_.getLong(1)).toSet }
     out.foreach { r =>
       val (ta, tb) = (r.getString(0), r.getString(1))
@@ -104,7 +103,6 @@ class KmvSpec extends SparkSpec {
     }
     val again = SparkEntry.queries("approx_distinct_intersection")(spark, d).collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, "estimates must be deterministic")
-    ev.unpersist()
   }
 
   test("the LCG oracle twin tracks ground truth like the xxhash production row (r13)") {

@@ -9,45 +9,8 @@ import org.apache.spark.sql.functions._
   * relevance.
   */
 class MmrSpec extends SparkSpec {
+  import MmrSpec._
   import spark.implicits._
-
-  private val lamNum = 7L; private val lamDen = 10L; private val scale = 1000L
-
-  private def quant(v: Seq[Float]): Seq[Long] =
-    v.map(x => math.floor(x.toDouble * scale + 0.5).toLong)
-
-  private def d2(a: Seq[Long], b: Seq[Long]): Long =
-    a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-
-  /** Sequential greedy replay of the operator's contract. */
-  private def replay(queries: Seq[(Long, Seq[Float])],
-      cands: Seq[(Long, Seq[Float])], shortlist: Int, k: Int)
-      : Seq[(Long, Long, Long, Long, Option[Long], Option[Long])] =
-    queries.flatMap { case (qid, qv) =>
-      val q = quant(qv)
-      val sl = cands.map { case (cid, cv) => (cid, quant(cv)) }
-        .map { case (cid, cv) => (cid, cv, d2(q, cv)) }
-        .sortBy { case (cid, _, dd) => (dd, cid) }
-        .take(shortlist)
-      var selected = Vector((sl.head._1, sl.head._2, sl.head._3, Option.empty[Long], Option.empty[Long]))
-      for (_ <- 2 to k) {
-        val rem = sl.filterNot(c => selected.exists(_._1 == c._1))
-        val scored = rem.map { case (cid, cv, dq) =>
-          val div = selected.map(s => d2(cv, s._2)).min
-          (cid, cv, dq, div, (lamDen - lamNum) * div - lamNum * dq)
-        }
-        val pick = scored.minBy { case (cid, _, _, _, sc) => (-sc, cid) }
-        selected = selected :+ ((pick._1, pick._2, pick._3, Some(pick._4), Some(pick._5)))
-      }
-      selected.zipWithIndex.map { case ((cid, _, dq, div, sc), i) =>
-        (qid, i + 1L, cid, dq, div, sc)
-      }
-    }
-
-  private def vecs(seed: Int, n: Int, dim: Int): Seq[(Long, Seq[Float])] = {
-    val rnd = new scala.util.Random(seed)
-    (0 until n).map(i => (i.toLong, Seq.fill(dim)(rnd.nextFloat() * 2f - 1f)))
-  }
 
   test("unrolled greedy equals the sequential per-query replay") {
     val all = vecs(7, 40, 6)
@@ -112,5 +75,45 @@ class MmrSpec extends SparkSpec {
       Ann.mmrDiversifiedTopK(q, c, shortlist = 4, k = 2, lamNum = 1L, lamDen = 0L))
     intercept[IllegalArgumentException](
       Ann.mmrDiversifiedTopK(q, c, shortlist = 4, k = 2, lamNum = -1L, lamDen = 10L))
+  }
+}
+
+object MmrSpec {
+  val lamNum = 7L; private val lamDen = 10L; private val scale = 1000L
+
+  def quant(v: Seq[Float]): Seq[Long] =
+    v.map(x => math.floor(x.toDouble * scale + 0.5).toLong)
+
+  def d2(a: Seq[Long], b: Seq[Long]): Long =
+    a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+
+  /** Sequential greedy replay of the operator's contract. */
+  def replay(queries: Seq[(Long, Seq[Float])],
+      cands: Seq[(Long, Seq[Float])], shortlist: Int, k: Int)
+      : Seq[(Long, Long, Long, Long, Option[Long], Option[Long])] =
+    queries.flatMap { case (qid, qv) =>
+      val q = quant(qv)
+      val sl = cands.map { case (cid, cv) => (cid, quant(cv)) }
+        .map { case (cid, cv) => (cid, cv, d2(q, cv)) }
+        .sortBy { case (cid, _, dd) => (dd, cid) }
+        .take(shortlist)
+      var selected = Vector((sl.head._1, sl.head._2, sl.head._3, Option.empty[Long], Option.empty[Long]))
+      for (_ <- 2 to k) {
+        val rem = sl.filterNot(c => selected.exists(_._1 == c._1))
+        val scored = rem.map { case (cid, cv, dq) =>
+          val div = selected.map(s => d2(cv, s._2)).min
+          (cid, cv, dq, div, (lamDen - lamNum) * div - lamNum * dq)
+        }
+        val pick = scored.minBy { case (cid, _, _, _, sc) => (-sc, cid) }
+        selected = selected :+ ((pick._1, pick._2, pick._3, Some(pick._4), Some(pick._5)))
+      }
+      selected.zipWithIndex.map { case ((cid, _, dq, div, sc), i) =>
+        (qid, i + 1L, cid, dq, div, sc)
+      }
+    }
+
+  def vecs(seed: Int, n: Int, dim: Int): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map(i => (i.toLong, Seq.fill(dim)(rnd.nextFloat() * 2f - 1f)))
   }
 }

@@ -15,18 +15,7 @@ class NearDupSpec extends SparkSpec {
 
   private lazy val docs = core.table(spark, sf("sf0.001"), "documents")
 
-  /** O(N²) reference: cross-join + exact set Jaccard. */
-  private def bruteJaccard(minJ: Double): Set[(Long, Long)] = {
-    val sets = NearDup.shingled(docs)
-    val a = sets.select($"doc_id".as("id_a"), $"shingles".as("sa"))
-    val b = sets.select($"doc_id".as("id_b"), $"shingles".as("sb"))
-    a.crossJoin(b).filter($"id_a" < $"id_b")
-      .select($"id_a", $"id_b",
-        size(array_intersect($"sa", $"sb")).cast("double").as("c"),
-        (size($"sa") + size($"sb")).cast("double").as("t"))
-      .filter($"c" / ($"t" - $"c") >= minJ)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-  }
+  private def bruteJaccard(minJ: Double): Set[(Long, Long)] = NearDupSpec.bruteJaccard(docs, minJ)
 
   private def pairsOf(df: DataFrame): Set[(Long, Long)] =
     df.select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
@@ -58,16 +47,7 @@ class NearDupSpec extends SparkSpec {
       val corpus = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       for (tau <- Seq(0.34, 0.5, 0.72)) {
-        val sets = NearDup.shingled(corpus)
-        val a = sets.select($"doc_id".as("id_a"), $"shingles".as("sa"))
-        val b = sets.select($"doc_id".as("id_b"), $"shingles".as("sb"))
-        val brute = a.crossJoin(b).filter($"id_a" < $"id_b")
-          .select($"id_a", $"id_b",
-            size(array_intersect($"sa", $"sb")).cast("double").as("c"),
-            (size($"sa") + size($"sb")).cast("double").as("t"))
-          .filter($"c" / ($"t" - $"c") >= tau)
-          .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-        assert(pairsOf(NearDup.exactJaccardPairs(corpus, tau)) == brute,
+        assert(pairsOf(NearDup.exactJaccardPairs(corpus, tau)) == NearDupSpec.bruteJaccard(corpus, tau),
           s"round=$round tau=$tau")
       }
     }
@@ -95,5 +75,20 @@ class NearDupSpec extends SparkSpec {
     rows.foreach { case (c, u, j) =>
       assert(j == c.toDouble / u && j >= 0.5 && c <= u)
     }
+  }
+}
+
+object NearDupSpec {
+  /** O(N²) reference: cross-join + exact set Jaccard. */
+  def bruteJaccard(docs: DataFrame, minJ: Double): Set[(Long, Long)] = {
+    val sets = NearDup.shingled(docs)
+    val a = sets.select(col("doc_id").as("id_a"), col("shingles").as("sa"))
+    val b = sets.select(col("doc_id").as("id_b"), col("shingles").as("sb"))
+    a.crossJoin(b).filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sa"), col("sb"))).cast("double").as("c"),
+        (size(col("sa")) + size(col("sb"))).cast("double").as("t"))
+      .filter(col("c") / (col("t") - col("c")) >= minJ)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 }

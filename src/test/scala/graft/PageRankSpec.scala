@@ -9,27 +9,8 @@ import org.apache.spark.sql.functions._
   * reruns are bit-identical.
   */
 class PageRankSpec extends SparkSpec {
+  import PageRankSpec._
   import spark.implicits._
-
-  private val Scale = 1000000000000L
-
-  /** The same recurrence, sequentially: ranks in a Map, integer ops only. */
-  private def replay(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
-    val e = edges.distinct
-    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
-    val n = nodes.size.toLong
-    val deg = e.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
-    var r: Map[Long, Long] = nodes.map(_ -> Scale / n).toMap
-    val base = (15L * (Scale / n)) / 100L
-    for (_ <- 1 to iters) {
-      val dang = nodes.filterNot(deg.contains).map(r).sum
-      val infl = e.groupBy(_._2).map { case (d, in) =>
-        d -> in.map { case (s, _) => r(s) / deg(s) }.sum
-      }
-      r = nodes.map(v => v -> (base + (85L * (infl.getOrElse(v, 0L) + dang / n)) / 100L)).toMap
-    }
-    r
-  }
 
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
     PageRank.run(edges.toDF("src", "dst"), iters, Scale)
@@ -126,5 +107,27 @@ class PageRankSpec extends SparkSpec {
     assert(r == replayPpr(c1 ++ c2, Seq(1L), iters))
     assert(Seq(10L, 11L, 12L).forall(r(_) == 0L), s"leaked mass: $r")
     assert(r(1L) > r(2L), "seed should outrank its downstream neighbor at convergence")
+  }
+}
+
+object PageRankSpec {
+  val Scale = 1000000000000L
+
+  /** The same recurrence, sequentially: ranks in a Map, integer ops only. */
+  def replay(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val e = edges.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
+    val n = nodes.size.toLong
+    val deg = e.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
+    var r: Map[Long, Long] = nodes.map(_ -> Scale / n).toMap
+    val base = (15L * (Scale / n)) / 100L
+    for (_ <- 1 to iters) {
+      val dang = nodes.filterNot(deg.contains).map(r).sum
+      val infl = e.groupBy(_._2).map { case (d, in) =>
+        d -> in.map { case (s, _) => r(s) / deg(s) }.sum
+      }
+      r = nodes.map(v => v -> (base + (85L * (infl.getOrElse(v, 0L) + dang / n)) / 100L)).toMap
+    }
+    r
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import graft.operators.Ann
+import graft.operators.{Ann, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,6 +13,35 @@ class PlanAuditSpec extends SparkSpec {
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The executed plans of EVERY SQL execution `body` runs, captured by a
+    * QueryExecutionListener once the listener bus has drained. An operator
+    * that materializes its result internally (localCheckpoint, iterate
+    * checkpoints) runs its joins in those executions, not in the plan of
+    * the frame it returns. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.graft.TestShims.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Whether some plan runs a hash or sort-merge join whose first equi-join
+    * key is the column `key`. */
+  private def joinsOn(plans: Seq[String], key: String): Boolean = {
+    val join = s"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[$key#".r
+    plans.exists(join.findFirstIn(_).nonEmpty)
+  }
 
   private def q(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sf("sf0.001"))
@@ -93,11 +122,17 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("near-dup joins never degrade to cartesian products") {
-    for (name <- Seq("ngram_jaccard_pairs", "dedup_minhash_lsh", "dedup_simhash",
-        "dedup_incremental", "semantic_dedup")) {
-      val plan = planOf(q(name))
-      assert(!plan.contains("CartesianProduct"), s"$name has a cartesian product")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
+    // each query's candidate join, by its first key: the shingle prefix
+    // join, the (band, bucket|chunk) bucket joins, and the cluster self-join
+    for ((name, key) <- Seq("ngram_jaccard_pairs" -> "shingle", "dedup_minhash_lsh" -> "band",
+        "dedup_simhash" -> "band", "dedup_incremental" -> "band", "semantic_dedup" -> "cluster")) {
+      val plans = executedPlans(q(name).collect())
+      assert(joinsOn(plans, key), s"$name: no hash or sort-merge join on $key in " +
+        s"${plans.size} executions")
+      for (plan <- plans) {
+        assert(!plan.contains("CartesianProduct"), s"$name has a cartesian product")
+        assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
+      }
     }
   }
 
@@ -111,19 +146,13 @@ class PlanAuditSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // drop caches from earlier tests: the operator persists (r16) embed
-      // their ORIGINAL build plan inside InMemoryRelation, and a cache
-      // materialized under the default threshold legitimately contains an
-      // AQE auto-broadcast — this test asserts no FORCED hint, so the
-      // cached frames must be rebuilt under the -1 threshold it sets
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      val df = q("ngram_jaccard_pairs")
-      df.collect() // AQE-final plan
-      val plan = planOf(df)
-      assert(!plan.contains("BroadcastHashJoin"),
-        "forced broadcast survives autoBroadcastJoinThreshold=-1:\n" + plan.take(3000))
-      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
+      val plans = executedPlans(q("ngram_jaccard_pairs").collect()) // AQE-final plans
+      assert(joinsOn(plans, "shingle"), s"no dfreq/prefix join in ${plans.size} executions")
+      for (plan <- plans) {
+        assert(!plan.contains("BroadcastHashJoin"),
+          "forced broadcast survives autoBroadcastJoinThreshold=-1:\n" + plan.take(3000))
+        assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -272,12 +301,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("exact-substring dedup joins by gram only — no cartesian, no nested loop") {
-    val plan = planOf(q("exact_substring_spans"))
-    assert(!plan.contains("CartesianProduct"), plan.take(3000))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    val plans = executedPlans(q("exact_substring_spans").collect())
+    for (plan <- plans) {
+      assert(!plan.contains("CartesianProduct"), plan.take(3000))
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    }
     // r15: the one corpus-sized shuffle is keyed by the 128-bit gram HASH
     // (two xxhash64 lanes), not the n-token gram string — 16-byte wire keys
-    assert(plan.contains("xxhash64"), plan.take(3000))
+    assert(joinsOn(plans, "h1"), s"no gram-hash join in ${plans.size} executions")
+    assert(plans.exists(_.contains("xxhash64")), plans.mkString("\n").take(3000))
   }
 
   test("real-codec decode rows are pure projections: no shuffle before the output sort (r15)") {
@@ -293,9 +325,45 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("triangle counting is equi-joins only (an OR-of-orientations close would be a nested loop)") {
-    val plan = planOf(q("graph_triangles"))
-    assert(!plan.contains("CartesianProduct"), plan.take(3000))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    val plans = executedPlans(q("graph_triangles").collect())
+    assert(joinsOn(plans, "s"), s"no wedge join in ${plans.size} executions")
+    for (plan <- plans) {
+      assert(!plan.contains("CartesianProduct"), plan.take(3000))
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    }
+  }
+
+  test("PageRank's staged edge side is exchanged and sorted once per run, not per iteration") {
+    // eDeg is staged partitioned + sorted by src (Checkpointer.staged); if
+    // the checkpoint lost that layout, every iteration's sort-merge scatter
+    // join would add an Exchange and a Sort above the edge scan
+    import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    val ring = (0L until 40L).flatMap(i => Seq((i, (i + 1) % 40), (i, (i + 7) % 40)))
+      .toDF("src", "dst") // every node has out-edges: the lazy dangling-free loop
+    def edgeScan(p: SparkPlan): Boolean = p match {
+      case s: RDDScanExec => s.output.exists(_.name == "deg")
+      case _: ShuffleExchangeExec | _: SortExec => false
+      case o => o.children.size == 1 && edgeScan(o.children.head)
+    }
+    def edgeSide(iters: Int): (Int, String) = {
+      val plan = PageRank.run(ring, iters).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      (plan.collect { case x @ (_: ShuffleExchangeExec | _: SortExec) if edgeScan(x.children.head) => x }
+        .size, plan.toString)
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // sort-merge joins
+      val (two, plan2) = edgeSide(2)
+      val (four, _) = edgeSide(4)
+      assert(plan2.contains("SortMergeJoin"), plan2.take(3000))
+      assert(four == two, s"edge-side Exchange/Sort: $two at iters=2, $four at iters=4")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("partitioned readback prunes partitions at the source") {

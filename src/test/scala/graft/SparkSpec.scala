@@ -9,6 +9,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  /** Suite-wide cache-ownership guard: a test that starts with an empty
+    * cache manager fails if it ends with an entry (operators release what
+    * they persist, `core.withPersisted`). The leaked entries are dropped so
+    * the tests after it stay guarded. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val cache = spark.sharedState.cacheManager
+    val startedEmpty = cache.isEmpty
+    val outcome = super.withFixture(test)
+    if (!startedEmpty || cache.isEmpty) outcome
+    else {
+      cache.clearCache()
+      if (!outcome.isSucceeded) outcome
+      else org.scalatest.Failed(s"'${test.name}' left a cached frame in the session's cache manager")
+    }
+  }
+
   /** Counts the Spark jobs `body` launches. Non-marker job starts are
     * counted, then one marker job serves as an ordering barrier: listener
     * delivery is in-order, so once the marker's start has been observed

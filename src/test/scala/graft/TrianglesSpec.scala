@@ -18,17 +18,8 @@ class TrianglesSpec extends SparkSpec {
   private def count(df: DataFrame): Map[Long, Long] =
     Triangles.perNode(df).as[(Long, Long)].collect().toMap
 
-  /** Brute force: enumerate all vertex triples over the collected edge set. */
-  private def reference(df: DataFrame): Map[Long, Long] = {
-    val es = df.as[(Long, Long)].collect().map { case (a, b) => Set(a, b) }.toSet
-    val nodes = es.flatten.toSeq.sorted
-    val tri = for {
-      i <- nodes.indices; j <- i + 1 until nodes.size; k <- j + 1 until nodes.size
-      (a, b, c) = (nodes(i), nodes(j), nodes(k))
-      if es(Set(a, b)) && es(Set(b, c)) && es(Set(a, c))
-    } yield Seq(a, b, c)
-    tri.flatten.groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
-  }
+  private def reference(df: DataFrame): Map[Long, Long] =
+    TrianglesSpec.reference(df.as[(Long, Long)].collect().toSeq)
 
   test("K4: four triangles, every node in three") {
     val k4 = edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
@@ -78,5 +69,19 @@ class TrianglesSpec extends SparkSpec {
     val got = count(e)
     assert(got == reference(e))
     assert(got.nonEmpty, "co-purchase graph should contain triangles")
+  }
+}
+
+object TrianglesSpec {
+  /** Brute force: enumerate all vertex triples over the collected edge set. */
+  def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val es = edges.map { case (a, b) => Set(a, b) }.toSet
+    val nodes = es.flatten.toSeq.sorted
+    val tri = for {
+      i <- nodes.indices; j <- i + 1 until nodes.size; k <- j + 1 until nodes.size
+      (a, b, c) = (nodes(i), nodes(j), nodes(k))
+      if es(Set(a, b)) && es(Set(b, c)) && es(Set(a, c))
+    } yield Seq(a, b, c)
+    tri.flatten.groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
   }
 }

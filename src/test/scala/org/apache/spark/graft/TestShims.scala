@@ -12,4 +12,8 @@ import org.apache.spark.{SparkConf, SparkContext}
   */
 object TestShims {
   def liveConf(sc: SparkContext): SparkConf = sc.conf
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
