@@ -2022,11 +2022,10 @@ object Ingestion {
     "metadata_count" -> Q(
       (s, d) => {
         import s.implicits._
-        // Iceberg's COUNT(*) aggregate pushdown: every data dir carries a
-        // _rowcount sidecar holding the row count its write observed (in
-        // the write job itself, no extra Spark job), so the count of a
-        // 100 TB table is answered from O(dirs) tiny files — no data
-        // pages, no executors.
+        // Iceberg's COUNT(*) aggregate pushdown: the manifest records each
+        // data dir's row count as its write observed it (in the write job
+        // itself, no extra Spark job), so the count of a 100 TB table is
+        // answered from the one manifest — no data pages, no executors.
         // VersionedTableSpec proves the no-data-read claim by physically
         // moving the data dirs away and counting anyway, and that
         // outstanding MOR deletes refuse the metadata path (row liveness
@@ -2040,15 +2039,15 @@ object Ingestion {
           .getOrElse(sys.error("metadata count unavailable"))).toDF("n_rows")
       },
       Some("SELECT count(*) AS n_rows FROM orders"),
-      "Metadata-only COUNT(*): per-dir _rowcount sidecars counted by each write, " +
-        "O(dirs) driver I/O, zero data files opened."),
+      "Metadata-only COUNT(*): per-dir row counts each write records in the " +
+        "manifest, one manifest read, zero data files opened."),
 
     "table_files" -> Q(
       (s, d) => {
         import s.implicits._
         // The `files` metadata table (Iceberg table$files): one row per live
         // data dir — ordinal, commit sequence, record count from the
-        // sidecar, bounds-column count. Dir names are wall-clock-uniqued so
+        // manifest, bounds-column count. Dir names are wall-clock-uniqued so
         // ordinals (not names) are exposed.
         val p = tmp("files_meta")
         GraftTableWriter.drop(s, p)
@@ -2066,7 +2065,7 @@ object Ingestion {
         UNION ALL SELECT 3, 3,
           (SELECT count(*) FROM orders WHERE o_orderkey % 3 = 2), 0
         ORDER BY file_ordinal"""),
-      "files metadata table: per-dir commit sequence, sidecar record count, " +
+      "files metadata table: per-dir commit sequence, recorded row count, " +
         "stats-column count — table introspection without scanning data."),
 
     "metadata_minmax" -> Q(

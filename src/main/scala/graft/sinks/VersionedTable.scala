@@ -101,7 +101,10 @@ object VersionedTable {
     * held (`df.schema`, which equals the schema the writer embeds in the
     * dir's parquet footers). Like `renames` and `sortOrders` it is carried
     * centrally in the commit path. A dir committed before schemas were
-    * recorded has no entry; [[dirSchema]] falls back to its footer. */
+    * recorded has no entry; [[dirSchema]] falls back to its footer.
+    * `rowCounts` maps each data and delete dir to the rows its write
+    * observed (Iceberg's `record_count`), carried the same way; a dir
+    * committed before counts were recorded has none. */
   final case class Snapshot(version: Int, dirs: Seq[String],
       colStats: Map[String, Map[String, ColBounds]] = Map.empty,
       lastBatch: Option[Long] = None,
@@ -110,7 +113,8 @@ object VersionedTable {
       deleteKeys: Seq[String] = Nil,
       renames: Seq[(String, String)] = Nil,
       sortOrders: Map[String, Seq[(String, String)]] = Map.empty,
-      schemas: Map[String, StructType] = Map.empty)
+      schemas: Map[String, StructType] = Map.empty,
+      rowCounts: Map[String, Long] = Map.empty)
 
   /** Create version 1 or replace the visible contents with a new snapshot
     * (prior snapshots stay readable via [[readVersion]] until expired). */
@@ -118,7 +122,7 @@ object VersionedTable {
     val w = writeDataDir(df, path)
     commit(df.sparkSession, path, cur => {
       guardRenamedAway(df.columns.toSeq, cur)
-      Snapshot(0, Seq(w.dir), schemas = w.schemas)
+      w.into(Snapshot(0, Seq(w.dir)))
     })
   }
 
@@ -243,7 +247,7 @@ object VersionedTable {
     * the CDC no-second-store watermark ([[graft.streaming.JdbcPollStream]]):
     * the poll loop's per-cycle `max(tsCol)` must not pay a full scan of the
     * very table it grows. Returns None when any data dir lacks a long-typed
-    * `tsCol` bound (untracked legacy dir, post-[[compact]] dir) — the caller
+    * `tsCol` bound (a dir written without tracking it) — the caller
     * falls back to the scan, correctness never depends on the metadata.
     *
     * MOR deletes don't undercut the bound: the watermark contract is "the
@@ -494,15 +498,14 @@ object VersionedTable {
       keys.foreach(requireKeys(cur, _))
       val v = nextV(cur)
       val base = cur.getOrElse(Snapshot(0, Nil))
-      base.copy(version = 0,
+      kept.foldLeft(base.copy(version = 0,
         dirs = base.dirs ++ data,
         colStats = base.colStats ++ data.map(_ -> added.bounds),
         lastBatch = batchId.orElse(base.lastBatch),
         dataSeq = base.dataSeq ++ data.map(_ -> v),
         deletes = base.deletes ++ deletes.map(_ -> v),
         deleteKeys = keys.getOrElse(base.deleteKeys),
-        sortOrders = base.sortOrders ++ data.zip(added.sortOrder),
-        schemas = base.schemas ++ kept.flatMap(_.schemas))
+        sortOrders = base.sortOrders ++ data.zip(added.sortOrder)))((s, w) => w.into(s))
     })))
     catch { case _: CommitAborted => None }
   }
@@ -771,17 +774,16 @@ object VersionedTable {
             throw new CommitAborted(s"table advanced past " +
               s"v${planned.map(_.version).getOrElse(0)} during the $op rewrite")
           guardRenamedAway(w.schema.fieldNames.toSeq, cur)
-          Snapshot(0, Seq(w.dir), lastBatch = batchId.orElse(cur.flatMap(_.lastBatch)),
-            schemas = w.schemas)
+          w.into(Snapshot(0, Seq(w.dir), lastBatch = batchId.orElse(cur.flatMap(_.lastBatch))))
         }))
       }
     }
 
   /** Run one planned attempt of a VALIDATED optimistic rewrite ([[rewrite]],
-    * [[compact]]) and re-plan it when its commit aborts in
-    * the lock (the table advanced past the planned snapshot) or its
-    * planning read went stale. Bounded: at some contention level a rewrite
-    * should fail loudly rather than starve. */
+    * [[rewriteDirs]]) and re-plan it when its commit aborts in the lock (a
+    * commit its in-lock check refuses landed after the planning read) or
+    * its planning read went stale. Bounded: at some contention level a
+    * rewrite should fail loudly rather than starve. */
   private def replanning[T](op: String, path: String)(attempt: => T): T = {
     var attempts = 0
     while (true) {
@@ -817,118 +819,111 @@ object VersionedTable {
   }
 
   /** Small-file compaction (Iceberg's rewrite_data_files / OPTIMIZE): rewrite
-    * the latest snapshot's accumulated data dirs into one dir of right-sized
-    * files and commit that as a new snapshot. The DATA is unchanged — only
-    * the file layout — and prior snapshots keep referencing the small files
+    * every data dir of the latest snapshot into one dir of right-sized files
+    * and commit that as a new snapshot. The DATA is unchanged — only the
+    * file layout — and prior snapshots keep referencing the small files
     * until [[expire]] reclaims them. `targetRowsPerFile` is the local
     * analogue of Iceberg's write.target-file-size-bytes: the streaming-ingest
     * maintenance op that keeps scan task counts bounded after thousands of
-    * tiny micro-batch appends. Like [[upsert]], the rewrite is computed
-    * against the snapshot current at call time and committed under
-    * VALIDATED optimistic retry — a concurrent commit aborts the attempt
-    * in-lock and the rewrite re-plans, so nothing is silently dropped. The
-    * rewritten dir's write re-records the bounds of every column and
-    * [[pairStatsKey]] pair the replaced snapshot tracked that it can
-    * recompute (the column is still in the data, under that name), so
-    * [[manifestHwm]]/[[manifestHwmPair]] stay metadata-only afterwards. */
+    * tiny micro-batch appends. It materializes every outstanding equality
+    * delete, so on a table nothing wrote to meanwhile the delete list ends
+    * empty. [[rewriteDirs]] is the body, shared with [[compactSmall]]: it
+    * commits beside concurrent appends and upserts, and re-records the
+    * tracked bounds, so [[manifestHwm]]/[[manifestHwmPair]] stay
+    * metadata-only afterwards. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    replanning("compact", path) {
-      val snap = latest(spark, path).getOrElse(
-        throw new IllegalStateException(s"no snapshots at $path"))
-      val data = readSnapshot(spark, path, snap)
-      val parts = math.max(1L, (data.count() + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      // re-record every bound the replaced snapshot tracked that the
-      // rewrite can recompute (a pair key only matches as a pair)
-      val tracked = snap.colStats.values.flatMap(_.keys).toSeq.distinct.sorted
-      def kind(c: String) = if (data.columns.contains(c)) boundKind(data, c) else None
-      val pairs = tracked.map(_.split(',')).collect {
-        case Array(a, b) if kind(a).contains("long") && kind(b).contains("long") => (a, b)
-      }
-      val w = writeTracked(data.repartition(parts), path,
-        tracked.filter(kind(_).isDefined), pairs)
-      // full rewrite replaces every dir and materializes every delete —
-      // valid only against the EXACT snapshot it read. A concurrent
-      // commit (whose dirs/deletes the rewrite doesn't contain) aborts
-      // this attempt; the rewrite re-plans against the new state.
-      commit(spark, path, { cur =>
-        if (cur.map(_.version) != Some(snap.version))
-          throw new CommitAborted(s"table advanced past v${snap.version} " +
-            "during the rewrite")
-        val d = w.data.get
-        Snapshot(0, Seq(d.dir), Map(d.dir -> w.bounds),
-          lastBatch = cur.flatMap(_.lastBatch), schemas = d.schemas)
-      })
-    }
+    rewriteDirs("compact", spark, path, targetRowsPerFile)(_.map(_._1))
   }
 
   /** Selective small-file compaction (Iceberg's binpack
     * `rewrite_data_files`): only dirs below `smallThresholdRows` are
-    * rewritten — binpacked into dirs of ~`targetRowsPerFile` — while every
-    * healthy dir is carried into the new snapshot untouched, stats and all.
-    * This is the compaction a 100 TB table actually runs: streaming sinks
-    * deposit one small dir per micro-batch, and collecting that debris must
-    * cost O(debris), never an O(table) rewrite ([[compact]] is the full
-    * rewrite). Row counts come from the dirs' `_rowcount` sidecars, so
-    * planning launches no Spark job (a dir without one is counted by a
-    * count-only read of that dir). No-op — current version returned, no
-    * commit — when fewer than two dirs qualify. Refuses MOR tables:
-    * outstanding equality deletes change row liveness per-dir, so
-    * [[compact]] must materialize them first. Dirs appended concurrently
-    * between planning and commit survive (the commit keeps every dir it
-    * didn't explicitly rewrite). */
+    * rewritten — binpacked into one dir of ~`targetRowsPerFile`-row files —
+    * while every healthy dir is carried into the new snapshot untouched,
+    * stats and all. This is the compaction a 100 TB table actually runs:
+    * streaming sinks deposit one small dir per micro-batch, and collecting
+    * that debris must cost O(debris), never an O(table) rewrite ([[compact]]
+    * is the full rewrite). Works on merge-on-read tables: the rewrite
+    * applies the deletes that cover the small dirs, and a rewritten upsert
+    * dir stays listed as a key-only delete while an older dir still holds
+    * keys it supersedes. No-op — current version returned, no commit — when
+    * fewer than two dirs qualify. Body: [[rewriteDirs]]. */
   def compactSmall(spark: SparkSession, path: String, smallThresholdRows: Long,
       targetRowsPerFile: Long): Int = {
     require(smallThresholdRows > 0 && targetRowsPerFile > 0,
       "thresholds must be positive")
-    val snap = latest(spark, path).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $path"))
-    require(snap.deletes.isEmpty,
-      s"compactSmall on a MOR table with outstanding deletes: run compact() first")
-    val filesystem = fs(spark, path)
-    val counts = snap.dirs.map(d => d -> readRowCountSidecar(filesystem, path, d).getOrElse(
-      readSnapshot(spark, path, snap.copy(dirs = Seq(d))).count()))
-    val small = counts.filter(_._2 < smallThresholdRows).map(_._1)
-    if (small.size < 2) return snap.version
-    val smallSet = small.toSet
-    val total = counts.collect { case (d, n) if smallSet(d) => n }.sum
-    val parts = math.max(1L, (total + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    // Read through readSnapshot so the rename chain is folded BEFORE
-    // writing: small dirs spanning a rename carry BOTH aliases of a field,
-    // and writing that two-alias frame would produce a single file
-    // physically carrying both names — graft reads stay correct (per row
-    // only one alias is non-null) but IcebergExport would map both columns
-    // of one file to the same field id and the exported table becomes
-    // unreadable. Compacted files carry only logical names.
-    val w = writeDataDir(
-      readSnapshot(spark, path, snap.copy(dirs = small)).repartition(parts), path)
-    val d = w.dir
-    try {
-      commit(spark, path, { cur =>
-        val c = cur.getOrElse(snap)
-        // In-lock revalidation: an equality delete committed between
-        // planning and commit would change row liveness — the rewritten
-        // dir would take a NEWER sequence than the delete and resurrect
-        // rows the delete killed. Compaction must never change liveness,
-        // so it steps aside (no-op) and lets the caller re-plan.
-        if (c.deletes.nonEmpty)
-          throw new CommitAborted("MOR deletes landed mid-compaction")
-        // ... and every dir this rewrite replaces must STILL be in the
-        // current snapshot: if a concurrent full rewrite (compact/COW
-        // upsert) already absorbed them, committing the binpacked copy
-        // would append a second, stale copy of those rows
-        if (!small.forall(c.dirs.contains))
-          throw new CommitAborted("planned dirs were rewritten concurrently")
-        Snapshot(0, c.dirs.filterNot(smallSet) :+ d,
-          c.colStats.filter { case (dir, _) => !smallSet(dir) },
-          c.lastBatch,
-          c.dataSeq.filter { case (dir, _) => !smallSet(dir) } + (d -> nextV(cur)),
-          c.deletes, c.deleteKeys, schemas = w.schemas)
-      })
-    } catch { case _: CommitAborted =>
-      latest(spark, path).map(_.version).getOrElse(snap.version)
+    rewriteDirs("compactSmall", spark, path, targetRowsPerFile) { counts =>
+      val small = counts.collect { case (d, n) if n < smallThresholdRows => d }
+      if (small.size < 2) Nil else small
     }
   }
+
+  /** The one rewrite body of [[compact]] and [[compactSmall]], Iceberg's
+    * `rewrite_data_files` with `use-starting-sequence-number`:
+    *  1. Read snapshot S and let `choose` pick the dirs to rewrite from
+    *     every data dir's row count — the manifest's record, or a count of
+    *     that dir for a legacy dir without one. Nothing chosen: no commit,
+    *     S's version is returned.
+    *  2. Read the chosen dirs under S's deletes ([[readSnapshot]], which
+    *     also folds the rename chain, so the new files carry only logical
+    *     names) and write them through [[writeTracked]], re-recording every
+    *     bound and pair S tracked that the rows still carry.
+    *  3. Commit the new dir AT SEQUENCE S. The in-lock check is that every
+    *     data dir and delete of S is still listed at its sequence and that
+    *     everything else the table lists is newer than S. Stream commits
+    *     take sequences above S, so they never abort the rewrite, and their
+    *     deletes apply to the rewritten rows as they did to the originals.
+    *     An overwrite, a copy-on-write rewrite, a rollback, a publish or a
+    *     second compaction aborts it, and [[replanning]] plans it again.
+    *  4. A delete stays listed iff some remaining data dir has a lower
+    *     sequence; a rewritten upsert dir may stay as a key-only delete. */
+  private def rewriteDirs(op: String, spark: SparkSession, path: String,
+      targetRowsPerFile: Long)(choose: Seq[(String, Long)] => Seq[String]): Int =
+    replanning(op, path) {
+      val snap = latest(spark, path).getOrElse(
+        throw new IllegalStateException(s"no snapshots at $path"))
+      val counts = snap.dirs.map(d => d -> snap.rowCounts.getOrElse(d,
+        readSnapshot(spark, path, snap.copy(dirs = Seq(d), deletes = Nil)).count()))
+      val chosen = choose(counts)
+      if (chosen.isEmpty) snap.version
+      else {
+        val s = snap.version
+        val gone = chosen.toSet
+        def seq(x: Snapshot, d: String): Int = x.dataSeq.getOrElse(d, 0)
+        // a delete no newer than the oldest chosen dir drops none of its rows
+        val oldest = chosen.map(seq(snap, _)).min
+        val data = readSnapshot(spark, path,
+          snap.copy(dirs = chosen, deletes = snap.deletes.filter(_._2 > oldest)))
+        val total = counts.collect { case (d, n) if gone(d) => n }.sum
+        val parts = math.max(1L, (total + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        // re-record every bound S tracked that the rows still carry (a pair
+        // key only matches as a pair)
+        val tracked = snap.colStats.values.flatMap(_.keys).toSeq.distinct.sorted
+        def kind(c: String) = if (data.columns.contains(c)) boundKind(data, c) else None
+        val pairs = tracked.map(_.split(',')).collect {
+          case Array(a, b) if kind(a).contains("long") && kind(b).contains("long") => (a, b)
+        }
+        val added = writeTracked(data.repartition(parts), path,
+          tracked.filter(kind(_).isDefined), pairs)
+        val w = added.data.get
+        def entries(x: Snapshot): Seq[Set[(String, Int)]] =
+          Seq(x.dirs.map(d => d -> seq(x, d)).toSet, x.deletes.toSet)
+        commit(spark, path, { cur =>
+          val c = cur.getOrElse(Snapshot(0, Nil))
+          val onlyNewer = entries(snap).zip(entries(c)).forall { case (was, now) =>
+            was.subsetOf(now) && (now -- was).forall(_._2 > s) }
+          if (!onlyNewer) throw new CommitAborted(
+            s"a commit at or below sequence $s replaced dirs during the $op rewrite")
+          val (before, after) = c.dirs.span(!gone(_))
+          val dirs = before ++ (w.dir +: after.filterNot(gone))
+          val dataSeq = c.dataSeq -- chosen + (w.dir -> s)
+          val seqs = dirs.map(dataSeq.getOrElse(_, 0))
+          w.into(c.copy(version = 0, dirs = dirs,
+            colStats = c.colStats -- chosen + (w.dir -> added.bounds), dataSeq = dataSeq,
+            deletes = c.deletes.filter { case (_, x) => seqs.exists(_ < x) }))
+        })
+      }
+    }
 
   /** The newest version whose manifest was committed at or before
     * `tsMillis` — Delta's `TIMESTAMP AS OF` / Iceberg's as-of-timestamp
@@ -1117,16 +1112,16 @@ object VersionedTable {
 
   /** `snap` of the table at `path` as another table commits it: every dir
     * referenced by ABSOLUTE path (no data moves), with its bounds,
-    * sequences, deletes and schema, and `snap`'s rename chain — the
-    * borrowed dirs' physical names need the chain of the table that wrote
-    * them. Shared by [[cloneAt]] and [[publish]]. */
+    * sequences, deletes, schema and row count, and `snap`'s rename chain —
+    * the borrowed dirs' physical names need the chain of the table that
+    * wrote them. Shared by [[cloneAt]] and [[publish]]. */
   private def borrowed(spark: SparkSession, path: String, snap: Snapshot): Snapshot = {
     val pathAbs = fs(spark, path).makeQualified(new Path(path)).toUri.getPath
     def abs(d: String): String = if (d.startsWith("/")) d else s"$pathAbs/$d"
     def byAbs[V](m: Map[String, V]): Map[String, V] = m.map { case (d, x) => abs(d) -> x }
     Snapshot(0, snap.dirs.map(abs), byAbs(snap.colStats), None, byAbs(snap.dataSeq),
       snap.deletes.map { case (d, s) => abs(d) -> s }, snap.deleteKeys, snap.renames,
-      schemas = byAbs(snap.schemas))
+      schemas = byAbs(snap.schemas), rowCounts = byAbs(snap.rowCounts))
   }
 
   /** Write-audit-publish fast-forward (Iceberg's WAP / `fast_forward`
@@ -1195,7 +1190,9 @@ object VersionedTable {
     * the schema the write held. */
   private final case class Written(dir: String, rows: Long, observed: Row,
       schema: StructType) {
-    def schemas: Map[String, StructType] = Map(dir -> schema)
+    /** `s` with this dir's schema and row count recorded. */
+    def into(s: Snapshot): Snapshot =
+      s.copy(schemas = s.schemas + (dir -> schema), rowCounts = s.rowCounts + (dir -> rows))
     def added(bounds: Map[String, ColBounds] = Map.empty): Added =
       Added(Some(this), bounds)
   }
@@ -1204,10 +1201,11 @@ object VersionedTable {
     * dir holds. One `Observation` directly above the write counts the rows
     * and evaluates `observe` in the write job's result stage, so the numbers
     * are those of the committed files (a failed task attempt contributes
-    * nothing) and no second pass over the input runs. The count becomes the
-    * dir's `_rowcount` sidecar (Iceberg's `record_count`, read by
-    * [[countFromMetadata]]); failing to write it is non-fatal. The
-    * written schema is `df.schema`, which the commit records. */
+    * nothing) and no second pass over the input runs. The commit records
+    * the count (Iceberg's `record_count`, read by [[countFromMetadata]],
+    * [[filesMetadata]] and compaction planning) and the written schema,
+    * `df.schema`, in the manifest ([[Written.into]]); no file is written
+    * beside the data. */
   private def writeDataDir(df: DataFrame, path: String,
       observe: Seq[Column] = Nil): Written = {
     import org.apache.spark.sql.functions.{count, lit}
@@ -1217,53 +1215,27 @@ object VersionedTable {
     graft.core.trace("table.write.parquet")(df.observe(obs, metrics.head, metrics.tail: _*)
       .write.parquet(new Path(path, d).toString))
     val got = obs.get
-    val rows = got("m0").asInstanceOf[Long]
-    graft.core.trace("table.write.sidecar")(try {
-      val out = fs(df.sparkSession, path).create(new Path(new Path(path, d), RowCountFile), true)
-      try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
-    } catch { case _: Exception => () })
-    Written(d, rows, Row.fromSeq(observe.indices.map(i => got(s"m${i + 1}"))), df.schema)
+    Written(d, got("m0").asInstanceOf[Long],
+      Row.fromSeq(observe.indices.map(i => got(s"m${i + 1}"))), df.schema)
   }
 
-  private val RowCountFile = "_rowcount"
-
-  /** The dir's sidecar count, if recorded. */
-  private def readRowCountSidecar(filesystem: FileSystem, path: String, dir: String): Option[Long] =
-    try {
-      // Path(parent, child) resolves absolute children to themselves — the
-      // same mechanism readSnapshot uses for clone-borrowed absolute dirs
-      val p = new Path(new Path(path, dir), RowCountFile)
-      if (!filesystem.exists(p)) None
-      else {
-        val in = filesystem.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        Some(s.trim.toLong)
-      }
-    } catch { case _: Exception => None }
-
   /** Metadata-only `COUNT(*)` — Iceberg's aggregate pushdown: answered by
-    * summing the per-dir `_rowcount` sidecars of the (current or
-    * time-traveled) snapshot, without opening ANY data file. Returns None
+    * summing the manifest's per-dir row counts of the (current or
+    * time-traveled) snapshot, without opening ANY file. Returns None
     * when metadata alone cannot be exact:
     *  - outstanding equality deletes (merge-on-read: row liveness depends
     *    on data until [[compact]] materializes the merge), or
-    *  - any dir lacking a sidecar (written by an older build).
+    *  - any dir without a recorded count (committed by an older build).
     * Callers fall back to `read(...).count()` — same contract as Iceberg
     * falling off the metadata path when a file lacks metrics. */
   def countFromMetadata(spark: SparkSession, path: String,
       version: Option[Int] = None): Option[Long] = {
-    val filesystem = fs(spark, path)
     val snap = version match {
       case Some(v) => snapshot(spark, path, v)
       case None    => latest(spark, path)
     }
-    snap.flatMap { sn =>
-      if (sn.deletes.nonEmpty) None
-      else {
-        val counts = sn.dirs.map(d => readRowCountSidecar(filesystem, path, d))
-        if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
-      }
-    }
+    snap.filter(sn => sn.deletes.isEmpty && sn.dirs.forall(sn.rowCounts.contains))
+      .map(sn => sn.dirs.map(sn.rowCounts).sum)
   }
 
   /** Metadata-only MIN/MAX of a stats-tracked column (the aggregate-pushdown
@@ -1314,17 +1286,17 @@ object VersionedTable {
 
   /** The `files` metadata table (Iceberg's `table$files`): one row per live
     * data dir of the current snapshot — commit sequence, record count (−1
-    * when no sidecar), and how many columns carry manifest bounds. Ordinal
-    * is the position in the snapshot's dir list (dir names themselves are
-    * uniqued by wall clock, deliberately not exposed in query results). */
+    * when the manifest records none), and how many columns carry manifest
+    * bounds — all from the manifest, no file opened. Ordinal is the
+    * position in the snapshot's dir list (dir names themselves are uniqued
+    * by wall clock, deliberately not exposed in query results). */
   def filesMetadata(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val filesystem = fs(spark, path)
     latest(spark, path).map { sn =>
       sn.dirs.zipWithIndex.map { case (d, i) =>
         ((i + 1).toLong,
           sn.dataSeq.get(d).map(_.toLong).getOrElse(0L),
-          readRowCountSidecar(filesystem, path, d).getOrElse(-1L),
+          sn.rowCounts.getOrElse(d, -1L),
           sn.colStats.get(d).map(_.size.toLong).getOrElse(0L))
       }.toDF("file_ordinal", "commit_seq", "n_rows", "n_stat_cols")
     }.getOrElse(Seq.empty[(Long, Long, Long, Long)]
@@ -1343,10 +1315,11 @@ object VersionedTable {
 
   /** Thrown by a commit callback to abandon the commit while holding the
     * table lock — the in-lock guard path for ops whose precondition must be
-    * re-validated against the CURRENT snapshot (exactly-once batch ids,
-    * compaction vs. concurrent MOR deletes). Callers catch it and map it to
-    * their no-op result; no manifest is written, and the op's staged data
-    * dir becomes ordinary [[removeOrphans]] debris. */
+    * re-validated against the CURRENT snapshot (exactly-once batch ids, a
+    * rewrite whose planned dirs a concurrent commit replaced). Callers map
+    * it to their no-op result or re-plan ([[replanning]]); no manifest is
+    * written, and the op's staged data dir becomes ordinary
+    * [[removeOrphans]] debris. */
   private final class CommitAborted(val why: String) extends RuntimeException(why)
 
   private def commitLocked(spark: SparkSession, path: String,
@@ -1370,16 +1343,16 @@ object VersionedTable {
       val withRenames = if (built.renames.isEmpty)
         built.copy(renames = cur.map(_.renames).getOrElse(Nil))
       else built
-      // per-dir SORT ORDERS (r16) and SCHEMAS are carried centrally too:
-      // every commit keeps the recorded layout and schema of the dirs it
-      // retains — a write shape that doesn't know about them cannot
-      // silently strip them from existing dirs (each shape adds only its
-      // new dirs' entries)
+      // per-dir SORT ORDERS (r16), SCHEMAS and ROW COUNTS are carried
+      // centrally too: every commit keeps the recorded layout, schema and
+      // count of the dirs it retains — a write shape that doesn't know
+      // about them cannot silently strip them from existing dirs (each
+      // shape adds only its new dirs' entries)
       val live = (built.dirs ++ built.deletes.map(_._1)).toSet
       def carried[V](f: Snapshot => Map[String, V]): Map[String, V] =
         (cur.map(f).getOrElse(Map.empty) ++ f(built)).filter { case (d, _) => live(d) }
       val snap = withRenames.copy(sortOrders = carried(_.sortOrders),
-        schemas = carried(_.schemas))
+        schemas = carried(_.schemas), rowCounts = carried(_.rowCounts))
       if (catalog.commitTable(spark, path, v - 1, manifestJson(v, snap)))
         return v
       attempt += 1
@@ -1546,20 +1519,27 @@ object VersionedTable {
     *   "lastBatch":7,"seqs":[["d-...",2],...],
     *   "deletes":[["d-...",3],...],"deleteKeys":["id"],
     *   "renames":[["from","to"],...],"sortOrders":[["d-...","c1 asc,c2 desc"],...],
-    *   "schemaIds":[["d-...",0],...],"schemas":[{"type":"struct",...},...]}`
+    *   "schemaIds":[["d-...",0],...],"schemas":[{"type":"struct",...},...],
+    *   "rowCounts":[["d-...",1200],...]}`
     * Every field after dirs is optional; bound values are strings compared
     * per their recorded type at read time. `schemas` lists each distinct
     * dir schema once, as Spark's schema JSON, and `schemaIds` gives each
     * data and delete dir its index in that list — Iceberg's `schemas` +
-    * schema-id shape, O(dirs) small entries. */
+    * schema-id shape, O(dirs) small entries. `rowCounts` gives each data
+    * and delete dir the rows its write observed (Iceberg's `record_count`);
+    * a manifest without it is a legacy table, whose dirs have no count. */
   private def manifestJson(v: Int, snap: Snapshot): String = {
     val root = manifestMapper.createObjectNode().put("version", v)
-    // an array of rows of strings and ints, omitted when empty
+    // an array of rows of strings and numbers, omitted when empty
     def rows(field: String, rs: Seq[Seq[Any]]): Unit = if (rs.nonEmpty) {
       val arr = root.putArray(field)
       rs.foreach { r =>
         val row = arr.addArray()
-        r.foreach { case i: Int => row.add(i); case x => row.add(x.toString) }
+        r.foreach {
+          case i: Int  => row.add(i)
+          case n: Long => row.add(n)
+          case x       => row.add(x.toString)
+        }
       }
     }
     val dirs = root.putArray("dirs")
@@ -1581,8 +1561,8 @@ object VersionedTable {
     rows("sortOrders", snap.sortOrders.toSeq.sortBy(_._1).map { case (d, o) =>
       Seq(d, o.map { case (c, dir) => s"$c $dir" }.mkString(","))
     })
-    val recorded = (snap.dirs ++ snap.deletes.map(_._1)).distinct
-      .flatMap(d => snap.schemas.get(d).map(d -> _))
+    val listed = (snap.dirs ++ snap.deletes.map(_._1)).distinct
+    val recorded = listed.flatMap(d => snap.schemas.get(d).map(d -> _))
     val distinct = recorded.map(_._2).distinct
     val id = distinct.zipWithIndex.toMap
     rows("schemaIds", recorded.map { case (d, sc) => Seq(d, id(sc)) })
@@ -1590,6 +1570,7 @@ object VersionedTable {
       val schemas = root.putArray("schemas")
       distinct.foreach(sc => schemas.add(manifestMapper.readTree(sc.json)))
     }
+    rows("rowCounts", listed.flatMap(d => snap.rowCounts.get(d).map(Seq(d, _))))
     manifestMapper.writeValueAsString(root)
   }
 
@@ -1620,7 +1601,8 @@ object VersionedTable {
           (c, dir)
         }
       }.toMap,
-      schemas = byDir("schemaIds").map { case (d, i) => d -> schemaList(i) }.toMap)
+      schemas = byDir("schemaIds").map { case (d, i) => d -> schemaList(i) }.toMap,
+      rowCounts = rows("rowCounts").map(r => r(0).asText -> r(1).asLong).toMap)
   }
 
   // manifests written by the earlier hand-rolled codec escaped only

@@ -43,7 +43,8 @@ import org.apache.spark.sql.types.StructType
   * re-derivation is one count-per-shard aggregate over the ingested table —
   * restart-only, never in the steady-state loop. Nothing here is sized by
   * the table: a 100 TB ingested history costs the restart aggregate (itself
-  * prunable to metadata via per-dir row-count sidecars) and nothing else.
+  * prunable to metadata via the manifest's per-dir row counts) and nothing
+  * else.
   *
   * `stopWhenDrained` is the bounded-test affordance: a poll cycle in which
   * EVERY shard's page comes back empty sets the drained flag and the driver
@@ -259,8 +260,8 @@ object JdbcPollStream {
     * `max(tsCol)` over the FULL committed table — re-scanned the one thing
     * the loop grows on every 50 ms poll tick, a scale-killer at 100 TB; it
     * survives only as the fallback for tables with untracked dirs (legacy
-    * writers, post-compaction), where correctness must not depend on
-    * metadata that isn't there. */
+    * writers), where correctness must not depend on metadata that isn't
+    * there. */
   def committedHwm(spark: SparkSession, tablePath: String, tsCol: String): Long =
     VersionedTable.manifestHwm(spark, tablePath, tsCol).getOrElse {
       VersionedTable.read(spark, tablePath)

@@ -283,6 +283,31 @@ class JdbcStreamSpec extends SparkSpec {
     assert(hp == ((r.getLong(0), r.getLong(1))) && hp == ((30L, 3L)))
   }
 
+  test("compactSmall keeps the watermark bounds: hwm derivation stays metadata-only") {
+    val (table, _) = freshDirs("hwm_compact_small")
+    assert(VersionedTable.upsertMorOnce(
+      Seq((1L, 10L, 1L), (2L, 20L, 2L)).toDF("id", "ts", "v"), table, Seq("id"), 0L,
+      statsCols = Seq("ts", "id"), pairCols = Some(("ts", "id"))))
+    assert(VersionedTable.upsertMorOnce(
+      Seq((3L, 30L, 3L), (9L, 25L, 9L), (2L, 26L, 5L)).toDF("id", "ts", "v"),
+      table, Seq("id"), 1L, statsCols = Seq("ts", "id"), pairCols = Some(("ts", "id"))))
+    assert(VersionedTable.compactSmall(spark, table, smallThresholdRows = 1000L,
+      targetRowsPerFile = 1000L) == 3)
+    import org.apache.spark.sql.functions.{max, struct}
+    val merged = VersionedTable.read(spark, table)
+    val scanTs = merged.agg(max($"ts")).head.getLong(0)
+    val r = merged.agg(max(struct($"ts", $"id"))).head.getStruct(0)
+    var h = 0L
+    var hp = (0L, 0L)
+    val n = jobsLaunchedBy {
+      h = JdbcPollStream.committedHwm(spark, table, "ts")
+      hp = JdbcPollStream.committedHwmInc(spark, table, "ts", "id")
+    }
+    assert(n == 0, s"hwm derivation after compactSmall launched $n Spark jobs")
+    assert(h == scanTs && h == 30L)
+    assert(hp == ((r.getLong(0), r.getLong(1))) && hp == ((30L, 3L)))
+  }
+
   test("hwm falls back to the scan when a dir is untracked, and stays correct") {
     val (table, _) = freshDirs("hwm_fallback")
     assert(VersionedTable.upsertMorOnce(

@@ -59,6 +59,18 @@ class JobBudgetSpec extends SparkSpec {
     assert(mor <= 1, s"upsertMorOnce with stats launched $mor jobs, budget 1")
   }
 
+  // compact plans from the row counts the manifest records, so it launches
+  // only its rewrite's jobs: the repartition's map stage and the write. The
+  // plan that counted the table's rows first took 4.
+  test("compact launches only its write's jobs") {
+    val p = freshTable("compact")
+    (0 until 4).foreach(i => VersionedTable.appendWithStats(rows.filter(col("id") % 4 === i),
+      p, Seq("ts")))
+    val jobs = jobsLaunchedBy(VersionedTable.compact(spark, p, 1000L))
+    assert(VersionedTable.read(spark, p).count() == 200L)
+    assert(jobs <= 2, s"compact launched $jobs jobs, budget 2")
+  }
+
   test("one non-empty poll cycle: its page is read only by its write") {
     // the run stops at the first commit (a throw in afterCommit with no
     // restart allowed), so exactly one non-empty cycle is counted. The plan

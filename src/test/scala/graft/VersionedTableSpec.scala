@@ -514,36 +514,50 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.countFromMetadata(spark, path) == Some(100L))
     assert(VersionedTable.countFromMetadata(spark, path, Some(1)) == Some(40L),
       "time-traveled metadata count must see only v1's dirs")
-    // THE no-data-read proof: move every parquet file away; the sidecars
-    // stay; the metadata count still answers while a scan would now fail
+    // THE no-data-read proof: move every parquet file away; the manifest
+    // stays; the metadata count still answers while a scan would now fail
     val root = java.nio.file.Paths.get(path)
     java.nio.file.Files.walk(root).forEach { p =>
       if (java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
         java.nio.file.Files.move(p, p.resolveSibling(p.getFileName.toString + ".hidden"))
     }
     assert(VersionedTable.countFromMetadata(spark, path) == Some(100L),
-      "count must come from sidecars alone, not from data files")
+      "count must come from the manifest alone, not from data files")
   }
 
-  test("compactSmall plans from the _rowcount sidecars: no count job per dir") {
+  /** Strip the recorded row counts from manifest `v` (a legacy table's
+    * manifest), through the Hadoop filesystem so its checksum file stays
+    * consistent. The counts are the manifest's last field. */
+  private def stripRowCounts(path: String, v: Int): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_meta", f"v$v%05d.json")
+    val in = fs.open(p)
+    val doc = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val at = doc.indexOf(",\"rowCounts\":[")
+    assert(at > 0, s"v$v records no row counts")
+    val out = fs.create(p, true)
+    try out.write((doc.substring(0, at) + "}").getBytes("UTF-8")) finally out.close()
+    assert(VersionedTable.readManifestForTest(spark, path, v).rowCounts.isEmpty)
+  }
+
+  test("compactSmall plans from the recorded row counts: no count job per dir") {
     val path = "/tmp/graft_tables/spec_compact_small_plan"
     GraftTableWriter.drop(spark, path)
     for (i <- 0 until 6)
       VersionedTable.append(spark.range(i * 50L, i * 50L + 50L).toDF("id"), path)
     val v = VersionedTable.versions(spark, path).max
     // no dir is below the threshold: planning alone decides, and it reads
-    // only the sidecars
+    // only the manifest
     var got = 0
     val n = jobsLaunchedBy {
       got = VersionedTable.compactSmall(spark, path, smallThresholdRows = 10, targetRowsPerFile = 1000)
     }
     assert(got == v)
     assert(n == 0, s"planning a 6-dir table launched $n jobs")
-    // a dir without a sidecar falls back to a count scan
-    val anyDir = VersionedTable.readManifestForTest(spark, path, v).dirs.head
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, anyDir, "_rowcount"))
+    // a legacy manifest (no recorded counts) falls back to a count scan
+    stripRowCounts(path, v)
     val m = jobsLaunchedBy(VersionedTable.compactSmall(spark, path, 10, 1000))
-    assert(m >= 1, "a sidecar-less dir must be counted from its data")
+    assert(m >= 1, "a dir without a recorded count must be counted from its data")
     // every dir below the threshold: the rewrite binpacks them into one
     assert(VersionedTable.compactSmall(spark, path, 100, 1000) == v + 1)
     assert(VersionedTable.readManifestForTest(spark, path, v + 1).dirs.size == 1)
@@ -564,16 +578,18 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, path).count() == 50L)
   }
 
-  test("countFromMetadata degrades to None when a dir lacks its sidecar") {
+  test("countFromMetadata degrades to None when a dir has no recorded count") {
     val path = "/tmp/graft_tables/spec_meta_count_nosc"
     GraftTableWriter.drop(spark, path)
     VersionedTable.overwrite((1L to 30L).toDF("id"), path)
-    val root = java.nio.file.Paths.get(path)
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.getFileName.toString == "_rowcount") java.nio.file.Files.delete(p)
-    }
+    assert(VersionedTable.countFromMetadata(spark, path) == Some(30L))
+    stripRowCounts(path, 1)
     assert(VersionedTable.countFromMetadata(spark, path).isEmpty,
-      "a sidecar-less dir (older build) must fall off the metadata path, not guess")
+      "a dir without a count (older build) must fall off the metadata path, not guess")
+    assert(VersionedTable.filesMetadata(spark, path).select("n_rows").as[Long]
+      .collect().toSeq == Seq(-1L))
+    assert(new java.io.File(path).listFiles.filter(_.isDirectory)
+      .forall(d => !d.list().exists(_.contains("rowcount"))), "a write left a count file")
   }
 
   test("minMaxFromMetadata folds manifest bounds; refuses on stats-less dirs and MOR deletes") {
@@ -643,8 +659,9 @@ class VersionedTableSpec extends SparkSpec {
       .orderBy($"file_ordinal")
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
     assert(rows == Seq((1L, 30L), (2L, 30L), (3L, 30L)), rows.toString)
-    // a zero-copy clone references the same dirs absolutely — the sidecars
-    // ride along and the clone's metadata count works immediately
+    // a zero-copy clone references the same dirs absolutely — their
+    // recorded counts ride along and the clone's metadata count works
+    // immediately
     val clonePath = "/tmp/graft_tables/spec_files_meta_clone"
     GraftTableWriter.drop(spark, clonePath)
     VersionedTable.cloneAt(spark, path, clonePath,

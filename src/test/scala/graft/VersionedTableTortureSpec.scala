@@ -17,9 +17,10 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, T
   *  - appendOnce/upsertMorOnce: one delivery of a batch id lands, every
   *    concurrent duplicate reports false — even when both pass the
   *    pre-check before either commits.
-  *  - compactSmall: either commits a liveness-preserving rewrite or no-ops
-  *    when an equality delete lands mid-plan (it must never resurrect
-  *    deleted rows by re-sequencing them above the delete).
+  *  - compactSmall: commits a liveness-preserving rewrite at the sequence
+  *    it read, so upserts landing mid-plan still delete its rows, and
+  *    re-plans when a rewrite or publish replaced its dirs; it must never
+  *    resurrect deleted rows or add a second copy of rewritten ones.
   *  - publish: fast-forwards main to the branch state iff main is still at
   *    the version the branch was cut from; otherwise it throws and main is
   *    untouched.
@@ -96,15 +97,8 @@ class VersionedTableTortureSpec extends SparkSpec {
           val v = VT.upsertMor(rows.toDF("id", "v"), main, Seq("id"))
           committed.add(v -> Upserted(rows)); ()
         },
-        () => {
-          // compactSmall may refuse (documented) when MOR deletes are
-          // outstanding at planning time; a refusal or in-lock no-op is a
-          // legal serializable outcome (layout-only op, state unchanged)
-          try VT.compactSmall(spark, main, 1000000L, 1000000L)
-          catch { case e: IllegalArgumentException
-            if e.getMessage.contains("MOR") => () }
-          ()
-        },
+        // layout only: a commit or a no-op leaves the state unchanged
+        () => { VT.compactSmall(spark, main, 1000000L, 1000000L); () },
         // keep=8 honors the retention-≥-operation-duration contract for the
         // racing COW rewrites (Iceberg's same rule for VACUUM vs readers)
         // while still dropping the v1-era manifests whose dirs a successful
