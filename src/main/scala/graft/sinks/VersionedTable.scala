@@ -83,12 +83,13 @@ object VersionedTable {
   /** `dataSeq` and `deletes` are the merge-on-read state (Iceberg v2
     * equality deletes, the mechanism the reference's upsert sink configures
     * via `equalityFieldColumns` + `upsert(true)`): every dir carries the
-    * snapshot sequence that added it (absent → 0, pre-MOR legacy), `deletes`
-    * lists equality-delete dirs as (dir, seq), and `deleteKeys` names the
-    * table's equality fields. A delete dir is either key-only or one of
-    * `dirs` itself (an [[upsertMor]] data dir deleting its own keys). The
-    * read-time rule is Iceberg's: a data row with sequence s is dropped iff
-    * some delete dir with sequence > s contains its key. */
+    * commit sequence that added it ([[nextSeq]]; absent → 0, pre-MOR
+    * legacy), `deletes` lists equality-delete dirs as (dir, seq), and
+    * `deleteKeys` names the table's equality fields. A delete dir is
+    * either key-only or one of `dirs` itself (an [[upsertMor]] data dir
+    * deleting its own keys). The read-time rule is Iceberg's: a data row
+    * with sequence s is dropped iff some delete dir with sequence > s
+    * contains its key. */
   /** `renames` is the table's accumulated COLUMN-RENAME chain, in commit
     * order (Iceberg's rename-via-field-id semantics re-expressed): each
     * [[renameColumn]] commit appends one (from, to) pair, every later
@@ -433,7 +434,18 @@ object VersionedTable {
     df.select(cols: _*)
   }
 
-  private def nextV(cur: Option[Snapshot]): Int = cur.map(_.version).getOrElse(0) + 1
+  /** The highest sequence `s` lists over its data dirs and deletes (0 when
+    * none). A borrowed snapshot ([[cloneAt]], [[publish]]) keeps its
+    * source's sequences, so this can exceed `s.version`. */
+  private def lastSeq(s: Snapshot): Int =
+    (s.dirs.map(s.dataSeq.getOrElse(_, 0)) ++ s.deletes.map(_._2)).foldLeft(0)(math.max)
+
+  /** The sequence a new commit's dirs and deletes take: above the current
+    * version and above every sequence the current snapshot lists (Iceberg's
+    * `last-sequence-number` + 1), so a commit after a clone or publish is
+    * never older than a borrowed delete. */
+  private def nextSeq(cur: Option[Snapshot]): Int =
+    cur.map(c => math.max(c.version, lastSeq(c))).getOrElse(0) + 1
 
   /** Roll the table back to snapshot `toVersion` AS A NEW COMMIT (Iceberg's
     * rollback_to_snapshot): history is preserved — the bad snapshots stay
@@ -496,14 +508,14 @@ object VersionedTable {
       batchId.foreach(guardBatch(cur, _))
       guardRenamedAway(columns, cur)
       keys.foreach(requireKeys(cur, _))
-      val v = nextV(cur)
+      val sq = nextSeq(cur)
       val base = cur.getOrElse(Snapshot(0, Nil))
       kept.foldLeft(base.copy(version = 0,
         dirs = base.dirs ++ data,
         colStats = base.colStats ++ data.map(_ -> added.bounds),
         lastBatch = batchId.orElse(base.lastBatch),
-        dataSeq = base.dataSeq ++ data.map(_ -> v),
-        deletes = base.deletes ++ deletes.map(_ -> v),
+        dataSeq = base.dataSeq ++ data.map(_ -> sq),
+        deletes = base.deletes ++ deletes.map(_ -> sq),
         deleteKeys = keys.getOrElse(base.deleteKeys),
         sortOrders = base.sortOrders ++ data.zip(added.sortOrder)))((s, w) => w.into(s))
     })))
@@ -833,7 +845,7 @@ object VersionedTable {
     * metadata-only afterwards. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    rewriteDirs("compact", spark, path, targetRowsPerFile)(_.map(_._1))
+    rewriteDirs("compact", spark, path, targetRowsPerFile)((dirs, _) => dirs)
   }
 
   /** Selective small-file compaction (Iceberg's binpack
@@ -852,8 +864,8 @@ object VersionedTable {
       targetRowsPerFile: Long): Int = {
     require(smallThresholdRows > 0 && targetRowsPerFile > 0,
       "thresholds must be positive")
-    rewriteDirs("compactSmall", spark, path, targetRowsPerFile) { counts =>
-      val small = counts.collect { case (d, n) if n < smallThresholdRows => d }
+    rewriteDirs("compactSmall", spark, path, targetRowsPerFile) { (dirs, rows) =>
+      val small = dirs.filter(rows(_) < smallThresholdRows)
       if (small.size < 2) Nil else small
     }
   }
@@ -861,40 +873,44 @@ object VersionedTable {
   /** The one rewrite body of [[compact]] and [[compactSmall]], Iceberg's
     * `rewrite_data_files` with `use-starting-sequence-number`:
     *  1. Read snapshot S and let `choose` pick the dirs to rewrite from
-    *     every data dir's row count — the manifest's record, or a count of
-    *     that dir for a legacy dir without one. Nothing chosen: no commit,
-    *     S's version is returned.
+    *     S's data dirs and their row counts — the manifest's record, or a
+    *     count of that dir for a legacy dir without one, taken only when
+    *     `choose` asks. Nothing chosen: no commit, S's version is returned.
     *  2. Read the chosen dirs under S's deletes ([[readSnapshot]], which
     *     also folds the rename chain, so the new files carry only logical
     *     names) and write them through [[writeTracked]], re-recording every
     *     bound and pair S tracked that the rows still carry.
-    *  3. Commit the new dir AT SEQUENCE S. The in-lock check is that every
-    *     data dir and delete of S is still listed at its sequence and that
-    *     everything else the table lists is newer than S. Stream commits
-    *     take sequences above S, so they never abort the rewrite, and their
-    *     deletes apply to the rewritten rows as they did to the originals.
+    *  3. Commit the new dir at S's sequence: the highest sequence S lists
+    *     ([[lastSeq]]; a borrowed snapshot can hold it above its version),
+    *     so no delete S lists applies to the rewritten rows. The in-lock
+    *     check is that every data dir and delete of S is still listed at
+    *     its sequence and that everything else the table lists is newer
+    *     than S's sequence. Stream commits take sequences above it
+    *     ([[nextSeq]]), so they never abort the rewrite, and their deletes
+    *     apply to the rewritten rows as they did to the originals.
     *     An overwrite, a copy-on-write rewrite, a rollback, a publish or a
     *     second compaction aborts it, and [[replanning]] plans it again.
     *  4. A delete stays listed iff some remaining data dir has a lower
     *     sequence; a rewritten upsert dir may stay as a key-only delete. */
   private def rewriteDirs(op: String, spark: SparkSession, path: String,
-      targetRowsPerFile: Long)(choose: Seq[(String, Long)] => Seq[String]): Int =
+      targetRowsPerFile: Long)(choose: (Seq[String], String => Long) => Seq[String]): Int =
     replanning(op, path) {
       val snap = latest(spark, path).getOrElse(
         throw new IllegalStateException(s"no snapshots at $path"))
-      val counts = snap.dirs.map(d => d -> snap.rowCounts.getOrElse(d,
+      val counts = scala.collection.mutable.Map(snap.rowCounts.toSeq: _*)
+      val chosen = choose(snap.dirs, d => counts.getOrElseUpdate(d,
         readSnapshot(spark, path, snap.copy(dirs = Seq(d), deletes = Nil)).count()))
-      val chosen = choose(counts)
       if (chosen.isEmpty) snap.version
       else {
-        val s = snap.version
+        val s = lastSeq(snap)
         val gone = chosen.toSet
         def seq(x: Snapshot, d: String): Int = x.dataSeq.getOrElse(d, 0)
         // a delete no newer than the oldest chosen dir drops none of its rows
         val oldest = chosen.map(seq(snap, _)).min
         val data = readSnapshot(spark, path,
           snap.copy(dirs = chosen, deletes = snap.deletes.filter(_._2 > oldest)))
-        val total = counts.collect { case (d, n) if gone(d) => n }.sum
+        // a legacy dir without a count sizes the rewrite by one count job
+        val total = if (chosen.forall(counts.contains)) chosen.map(counts).sum else data.count()
         val parts = math.max(1L, (total + targetRowsPerFile - 1) / targetRowsPerFile).toInt
         // re-record every bound S tracked that the rows still carry (a pair
         // key only matches as a pair)

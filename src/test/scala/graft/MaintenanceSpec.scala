@@ -126,6 +126,40 @@ class MaintenanceSpec extends SparkSpec {
     assert(VersionedTable.countFromMetadata(spark, p) == Some(want(8).size.toLong))
   }
 
+  test("compaction after a publish or a clone reads the same: borrowed sequences stay ordered") {
+    val keys = Seq("id")
+    val Seq(main, branch, clone) = Seq("main", "branch", "clone")
+      .map(n => s"/tmp/graft_tables/spec_compact_borrowed_$n")
+    Seq(main, branch, clone).foreach(GraftTableWriter.drop(spark, _))
+    def upsert(p: String, rows: (Long, String)*): Int =
+      VersionedTable.upsertMor(rows.toDF("id", "v"), p, keys)
+    upsert(main, (1L, "a"), (2L, "a"), (3L, "a"))
+    VersionedTable.cloneAt(spark, main, branch, 1)
+    upsert(branch, (1L, "b")); upsert(branch, (1L, "c"), (2L, "c")); upsert(branch, (1L, "d"))
+    // main v2 lists the branch's sequences 2-4 above its own version
+    assert(VersionedTable.publish(spark, branch, main, 1) == 2)
+    val published = Seq((1L, "d"), (2L, "c"), (3L, "a"))
+    assert(dump(main, 2) == published)
+    assert(VersionedTable.compactSmall(spark, main, 100, 1000) == 3)
+    assert(dump(main, 3) == published)
+    // a commit after the publish supersedes the borrowed rows of its keys
+    assert(upsert(main, (1L, "e"), (3L, "e")) == 4)
+    val updated = Seq((1L, "e"), (2L, "c"), (3L, "e"))
+    assert(dump(main, 4) == updated)
+    assert(VersionedTable.compact(spark, main, 1000L) == 5)
+    assert(dump(main, 5) == updated)
+    assert(VersionedTable.readManifestForTest(spark, main, 5).deletes.isEmpty)
+    assert(upsert(main, (2L, "f")) == 6)
+    assert(dump(main, 6) == Seq((1L, "e"), (2L, "f"), (3L, "e")))
+    // a clone's v1 borrows the branch's v4, sequences 1-4
+    VersionedTable.cloneAt(spark, branch, clone, 4)
+    assert(VersionedTable.compact(spark, clone, 1000L) == 2)
+    assert(dump(clone, 2) == published)
+    upsert(clone, (2L, "g")); upsert(clone, (3L, "h"))
+    assert(VersionedTable.compactSmall(spark, clone, 100, 1000) == 5)
+    for (v <- 4 to 5) assert(dump(clone, v) == Seq((1L, "d"), (2L, "g"), (3L, "h")), s"v$v")
+  }
+
   test("compact and compactSmall commit beside a stream of merge-on-read upserts") {
     val p = "/tmp/graft_tables/spec_compact_beside_stream"
     GraftTableWriter.drop(spark, p)

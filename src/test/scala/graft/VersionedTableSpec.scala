@@ -565,6 +565,24 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.countFromMetadata(spark, path) == Some(300L))
   }
 
+  test("compact of a legacy manifest counts the rows it rewrites once, not once per dir") {
+    val Seq(recorded, legacy) = Seq("recorded", "legacy")
+      .map(n => s"/tmp/graft_tables/spec_compact_legacy_$n")
+    val jobs = Seq(recorded, legacy).map { path =>
+      GraftTableWriter.drop(spark, path)
+      for (i <- 0 until 6)
+        VersionedTable.append(spark.range(i * 50L, i * 50L + 50L).toDF("id"), path)
+      if (path == legacy) stripRowCounts(path, 6)
+      val n = jobsLaunchedBy(assert(VersionedTable.compact(spark, path, 100) == 7))
+      assert(VersionedTable.readManifestForTest(spark, path, 7).dirs.size == 1)
+      assert(VersionedTable.read(spark, path).count() == 300L)
+      n
+    }
+    // one count (its scan and its final aggregate under AQE); a count per
+    // dir would add at least 6
+    assert(jobs(1) <= jobs(0) + 2, s"recorded counts: ${jobs(0)} jobs, legacy: ${jobs(1)}")
+  }
+
   test("countFromMetadata refuses while MOR deletes are outstanding, answers after compact") {
     val path = "/tmp/graft_tables/spec_meta_count_mor"
     GraftTableWriter.drop(spark, path)

@@ -97,8 +97,10 @@ class VersionedTableTortureSpec extends SparkSpec {
           val v = VT.upsertMor(rows.toDF("id", "v"), main, Seq("id"))
           committed.add(v -> Upserted(rows)); ()
         },
-        // layout only: a commit or a no-op leaves the state unchanged
-        () => { VT.compactSmall(spark, main, 1000000L, 1000000L); () },
+        // layout only: a commit or a no-op leaves the state unchanged. The
+        // threshold sits at the base dir's 10 rows, so only the full compact
+        // stops main referencing the v1 dir the branch borrows
+        () => { VT.compactSmall(spark, main, base.size.toLong, 1000000L); () },
         // keep=8 honors the retention-≥-operation-duration contract for the
         // racing COW rewrites (Iceberg's same rule for VACUUM vs readers)
         // while still dropping the v1-era manifests whose dirs a successful
